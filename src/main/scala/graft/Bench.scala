@@ -397,9 +397,10 @@ object Bench {
     // the queries keys restore their driver-parseable "q" prefix, and
     // the ~167 B that costs is paid by precision, not by evidence
     // fields). fqAt(v, t2) renders two decimals below t2, one decimal
-    // below 10 s, whole seconds past that; the RUNG (t2 ∈ {10, 2.5, 1,
-    // 0}) is chosen at assembly as the widest whose fully-rendered line
-    // fits the budget with iso slack — so a clean run keeps 2-decimal
+    // below 10 s, whole seconds past that; the RUNG (t2 tried in
+    // {10, 2.5, 1, 0.5}, with 0 as the untried fallback) is chosen at
+    // assembly as the widest whose fully-rendered line fits the budget
+    // with iso slack — so a clean run keeps 2-decimal
     // floor-query precision and only an all-slow pathological run
     // degrades to the guaranteed-fit 1-decimal rung (≤3-char widths,
     // pinned by BenchContractSpec). Full 3-decimal per-rep detail is on
@@ -661,9 +662,8 @@ object Bench {
       // regression movers (r17 verdict #1: q49's regression shot was
       // shed by a flat 500 s cutoff in the exact degraded run that
       // needed it; a stall flag already carries its best rep + diag as
-      // evidence, so it yields first). A wall-shed shot renders as an
-      // explicit `"id":null` — "flagged, NOT exonerated" — so the
-      // artifact is self-describing about what was never re-measured.
+      // evidence, so it yields first). A wall-shed shot is reported on
+      // stderr only and renders nothing in the line (see below).
       // per-entry worst width: quote+id+quote+colon+value+comma with the
       // value at fc's 3-char worst ("NN":9.9, — iso values render
       // through fc since r15: exoneration compares against 2×

@@ -61,17 +61,40 @@ object PlanDump {
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     }
-    if (allJobs) spark.listenerManager.register(listener)
+    // the count the captured plans are checked against: named SQL
+    // executions that ended (each one is owed a listener callback), and
+    // the Spark jobs they ran
+    val namedExecutions = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case end: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+            if org.apache.spark.sql.graftx.Bridge.executionName(end).isDefined =>
+          namedExecutions.incrementAndGet()
+        case _ => ()
+      }
+    }
+    if (allJobs) {
+      spark.listenerManager.register(listener)
+      spark.sparkContext.addSparkListener(counter)
+    }
     sel.foreach { case (name, fn) =>
       try {
         captured.clear()
+        namedExecutions.set(0)
+        jobs.set(0)
         val df = fn(spark, sfDir)
         val txt =
           if (!allJobs) df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           else {
             df.write.format("noop").mode("overwrite").save()
-            Thread.sleep(2000) // the execution-listener bus is async
+            // the execution-listener bus is async: wait until every event
+            // posted so far has been delivered, so no late plan is missed
+            // or attributed to the next query
+            org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
             val sb = new StringBuilder
             var i = 0
             val it = captured.iterator()
@@ -80,6 +103,9 @@ object PlanDump {
               i += 1
               sb.append(s"=== job $i ($fn0) ===\n").append(plan).append("\n\n")
             }
+            val expected = namedExecutions.get()
+            System.err.println(s"[plandump] $name: expected $expected plans, " +
+              s"captured $i (${jobs.get()} Spark jobs)" + (if (i != expected) " MISMATCH" else ""))
             sb.append(s"=== total jobs captured: $i ===\n").toString
           }
         val p = java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt")

@@ -2299,11 +2299,6 @@ object ScaleProbe {
           spark.conf.set("spark.sql.catalog.insb.url", url)
           spark.conf.set("spark.sql.catalog.insb.batchsize",
             sys.env.getOrElse("SPARK_GRAFT_BATCH", "1000"))
-          // rows-per-INSERT A/B (SPARK_GRAFT_INSERTROWS): measures
-          // whether a dialect benefits from multi-row VALUES before
-          // changing its multiRowInsertBatch default
-          sys.env.get("SPARK_GRAFT_INSERTROWS").foreach(n =>
-            spark.conf.set("spark.sql.catalog.insb.insertrows", n))
           spark.sql("CREATE NAMESPACE IF NOT EXISTS insb.app")
           val t = s"insb.app.t${System.nanoTime()}"
           val rows = factor.toLong * 100000L

@@ -57,6 +57,9 @@ object ConnectionPool {
       */
     @volatile var retired = false
 
+    /** Connections borrowed and not yet released. */
+    def checkedOut: Int = key.max - permits.availablePermits()
+
     /** Close all idle connections now; report whether every permit is
       * home (nothing checked out).
       */
@@ -203,6 +206,12 @@ object ConnectionPool {
     */
   private[jdbc] def physicalOpens(o: JdbcOptions): Long =
     pools.get(keyOf(o)).map(_.opened.get()).getOrElse(0L)
+
+  /** Connections of this identity currently borrowed (test hook: a
+    * finished job, failed or not, must have returned every one).
+    */
+  private[jdbc] def checkedOut(o: JdbcOptions): Int =
+    pools.get(keyOf(o)).map(_.checkedOut).getOrElse(0)
 
   /** Retire every pool of `url` and wait (bounded) for full drain.
     *

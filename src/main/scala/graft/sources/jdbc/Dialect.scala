@@ -117,20 +117,25 @@ trait Dialect extends Serializable {
     * 14,73-106`) instead of DO UPDATE.
     */
   def upsertStatement(table: String, cols: Seq[String], keys: Seq[String],
-      doNothing: Boolean = false, placeholders: Seq[String] = null): String = {
+      doNothing: Boolean = false, placeholders: Seq[String] = null): String =
+    s"INSERT INTO $table (${cols.map(quote).mkString(", ")}) " +
+      s"VALUES (${valuesPlaceholders(cols, placeholders).mkString(", ")})" +
+      onConflictClause(cols, keys, doNothing)
+
+  /** The ` ON CONFLICT …` tail of [[upsertStatement]], also appended to
+    * the staged write's set-based `INSERT … SELECT` move.
+    */
+  def onConflictClause(cols: Seq[String], keys: Seq[String], doNothing: Boolean): String = {
     // Empty keys = the reference's DoNothingAll: a target-less
     // ON CONFLICT DO NOTHING (any constraint violation skips the row,
     // `on_conflict.rs:32`).
     val target = if (keys.isEmpty) "" else s" (${keys.map(quote).mkString(", ")})"
-    val insert =
-      s"INSERT INTO $table (${cols.map(quote).mkString(", ")}) " +
-        s"VALUES (${valuesPlaceholders(cols, placeholders).mkString(", ")}) " +
-        s"ON CONFLICT$target"
     val non = cols.filterNot(c => keys.exists(_.equalsIgnoreCase(c)))
     // All columns in the conflict target leaves nothing to update — the
     // reference degrades that upsert to DO NOTHING (`on_conflict.rs:53-59`).
-    if (doNothing || non.isEmpty) s"$insert DO NOTHING"
-    else s"$insert DO UPDATE SET ${non.map(c => s"${quote(c)} = EXCLUDED.${quote(c)}").mkString(", ")}"
+    if (doNothing || non.isEmpty) s" ON CONFLICT$target DO NOTHING"
+    else s" ON CONFLICT$target DO UPDATE SET " +
+      non.map(c => s"${quote(c)} = EXCLUDED.${quote(c)}").mkString(", ")
   }
 
   /** Statement refreshing the remote optimizer's statistics after a
@@ -200,28 +205,22 @@ trait Dialect extends Serializable {
   /** Render one VALUES placeholder for a column of `dt` in generated
     * INSERT statements — plain `?` everywhere by default. Engines whose
     * JDBC driver cannot bind a native array (DuckDB throws
-    * NotSupported on `createArrayOf` — live-wire finding) override to
-    * wrap the array placeholder in a remote cast over a TEXT bind.
+    * NotSupported on `createArrayOf` — live-wire finding) override
+    * [[insertValueSql]] to wrap it in a remote cast over a TEXT bind.
     */
-  def insertPlaceholder(dt: DataType): String = "?"
+  def insertPlaceholder(dt: DataType): String = insertValueSql(dt, "?")
+
+  /** The value a column of `dt` inserts from `operand`: the bind `?`,
+    * or a staged TEXT column that the staged write's move selects
+    * through the same remote cast.
+    */
+  def insertValueSql(dt: DataType, operand: String): String = operand
 
   /** Whether native-array columns bind as the engine's list-literal
     * TEXT (paired with [[insertPlaceholder]]'s cast) instead of
     * `Connection.createArrayOf`.
     */
   def arrayBindAsText: Boolean = false
-
-  /** Rows per INSERT statement on the append path: engines whose JDBC
-    * batch machinery degenerates to row-at-a-time execution get
-    * multi-row `VALUES (…),(…),…` statements instead. 1 = the plain
-    * single-row prepared batch. DuckDB overrides: measured 31×
-    * (200 k rows, 47.5 s single-row batch → 1.5 s at 100 rows/stmt).
-    * Derby measured the other way (round-9 A/B, BASELINE.md): 100-row
-    * VALUES is 2.16 s vs 2.07 s for its real batch at 200 k rows — its
-    * executeBatch already saturates, so it stays at 1. `insertrows=`
-    * overrides per table either way.
-    */
-  def multiRowInsertBatch: Int = 1
 
   /** Table rename DDL. ANSI-ish `ALTER TABLE … RENAME TO` is what
     * Postgres / DuckDB / SQLite accept; Derby and MySQL override with
@@ -440,13 +439,10 @@ object DuckDbDialect extends Dialect {
     * while the JSON route round-trips every element exactly.
     */
   override def arrayBindAsText: Boolean = true
-  /** The driver's executeBatch runs its prepared statement once per
-    * row internally — multi-row VALUES is the measured 31× fix. */
-  override def multiRowInsertBatch: Int = 100
-  override def insertPlaceholder(dt: DataType): String = dt match {
+  override def insertValueSql(dt: DataType, operand: String): String = dt match {
     case ArrayType(et, _) if Dialect.isNativeArrayElement(et) =>
-      s"CAST(CAST(? AS JSON) AS ${typeName(dt)})"
-    case _ => "?"
+      s"CAST(CAST($operand AS JSON) AS ${typeName(dt)})"
+    case _ => operand
   }
   /** The reference's attachment recipe verbatim-in-semantics
     * (`crates/duckdb/src/conn.rs:225-236`): read-only ATTACH per file,

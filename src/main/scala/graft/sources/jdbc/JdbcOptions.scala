@@ -30,18 +30,9 @@ final case class JdbcOptions(map: Map[String, String]) extends Serializable {
   /** Rows per fetch from the remote cursor (reference streams 4000-row
     * chunks, `crates/postgres/src/conn.rs:443`). */
   val fetchSize: Int = map.getOrElse("fetchsize", "4000").toInt
-  /** Rows per INSERT batch on the write path. */
+  /** Rows per INSERT batch on the write path (rows per Appender flush
+    * on DuckDB's staged writes). */
   val batchSize: Int = map.getOrElse("batchsize", "1000").toInt
-
-  /** Rows per INSERT statement on the append path (multi-row VALUES);
-    * defaults to the dialect's measured sweet spot
-    * ([[Dialect.multiRowInsertBatch]]). 1 = plain single-row batches.
-    */
-  val insertRows: Int = {
-    val v = map.get("insertrows").map(_.toInt).getOrElse(dialect.multiRowInsertBatch)
-    if (v < 1) throw new IllegalArgumentException(s"insertrows must be >= 1, got $v")
-    v
-  }
 
   /** Range-partitioned parallel scan (our scale improvement over the
     * reference's always-1-partition SQL scans, `mod.rs:313`). */

@@ -6,12 +6,12 @@ import org.apache.spark.sql.connector.distributions.{Distribution, Distributions
 import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 import java.sql.Connection
 
 /** DSv2 write path for external JDBC tables: append, ATOMIC staged
-  * overwrite, and keyed upsert, with per-partition transactions.
+  * overwrite, and keyed upsert.
   *
   * Re-expresses the reference's `DataSink` trio (`PostgresDataSink`
   * `crates/postgres/src/write.rs:106-218`, `SqliteDataSink`,
@@ -31,12 +31,20 @@ import java.sql.Connection
   * `constraints.rs:28-95`): the Write REQUIRES a hash-clustered
   * distribution on the upsert keys, so one key lands in exactly one
   * partition transaction, and each writer validates per-chunk key
-  * uniqueness before executing its batch.
+  * uniqueness before executing its batch. DuckDB's staged upserts need
+  * no shuffle: the move checks uniqueness across the whole stage.
   *
   * Scale: rows bind into JDBC `PreparedStatement` batches of
   * `batchSize` (prepared-path throughput is the one performance result
   * the reference publishes — `benches/sqlite_insert_benchmark.rs`), and
   * N partitions write concurrently, which the reference cannot do.
+  *
+  * DuckDB writes of every kind (append, upsert, staged overwrite,
+  * fileswap build) bulk-load through the driver's Appender instead
+  * ([[DuckDbAppendWriter]]) into one task-tagged stage per job, and the
+  * job commit moves the committed tasks' rows in one transaction — so
+  * DuckDB appends and upserts are atomic across partitions, while the
+  * other dialects' appends and upserts commit per partition.
   */
 final class JdbcWriteBuilder(options: JdbcOptions, schema: StructType)
   extends WriteBuilder with SupportsOverwriteV2 {
@@ -63,6 +71,13 @@ final class JdbcWriteBuilder(options: JdbcOptions, schema: StructType)
 
 object JdbcWrite {
   private[jdbc] val QuotedPair = "\"(.*)\"\\.\"(.*)\"".r
+
+  /** Stage column holding the Spark task id that appended each row. */
+  private[jdbc] val TaskColumn = "__task"
+
+  /** Writes that bulk-load through [[DuckDbAppendWriter]] into a
+    * task-tagged stage, whatever their kind. */
+  private[jdbc] def appenderStaged(o: JdbcOptions): Boolean = o.dialect == DuckDbDialect
 }
 
 final class JdbcWrite(options: JdbcOptions, schema: StructType,
@@ -71,9 +86,10 @@ final class JdbcWrite(options: JdbcOptions, schema: StructType,
 
   // One upsert key -> one partition transaction: the precondition the
   // reference's constraint validation protects is guaranteed by Spark's
-  // shuffle instead of hoped for.
+  // shuffle instead of hoped for. Appender-staged upserts need no
+  // shuffle: their move checks key uniqueness across the whole stage.
   override def requiredDistribution(): Distribution =
-    if (options.upsertKeys.nonEmpty)
+    if (options.upsertKeys.nonEmpty && !JdbcWrite.appenderStaged(options))
       Distributions.clustered(options.upsertKeys.map(k => Expressions.column(k)).toArray)
     else if (options.upsertActive && options.dialect.singleWriterUpserts)
       // do_nothing_all has no explicit keys, but Spark rejects a partition
@@ -100,12 +116,17 @@ final class JdbcWrite(options: JdbcOptions, schema: StructType,
 
 /** `overwrite`: None = append; Some(conds) = atomic replace of the rows
   * matching `conds` (everything when empty) via the staged swap.
+  * Appender-staged (DuckDB) writes stage every kind, append and upsert
+  * included, and move only the committed tasks' rows.
   */
 final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
     overwrite: Option[Seq[String]])
   extends BatchWrite with Logging {
 
   private def truncate: Boolean = overwrite.isDefined
+  private def appenderStaged: Boolean = JdbcWrite.appenderStaged(options)
+  /** Partition writers fill [[stageTable]] instead of the target. */
+  private def staged: Boolean = truncate || appenderStaged
 
   /** W5: this overwrite rebuilds the whole database FILE and swaps it
     * over the live path ([[FileSwap]]) instead of staging a table inside
@@ -133,7 +154,7 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
   /** `"ns"."t"` → `"ns"."t__stage_<millisHex>_<nanoHex>"` (suffix inside
     * the final quote). The per-write unique id (reference stages into
     * `__data_<ts>`, `creator.rs:220-520`) keeps two concurrent
-    * overwrites of the same table from clobbering each other's stage;
+    * writes of the same table from clobbering each other's stage;
     * the id is fixed per BatchWrite instance so factory, commit and
     * abort all address the same stage. The leading wall-clock segment is
     * what [[dropStaleStages]] reads to GC only ABANDONED generations.
@@ -162,7 +183,7 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
     * but only those older than [[JdbcBatchWrite.StaleStageAgeMs]], read
     * from the wall-clock segment of the suffix. Sweeping every stage at
     * factory creation would delete the LIVE stage of a concurrent
-    * overwrite of the same table, which the per-write unique suffix
+    * write of the same table, which the per-write unique suffix
     * exists to protect; an in-flight write is always far younger than
     * the threshold. Unparseable suffixes (pre-timestamp format) are
     * treated as abandoned.
@@ -200,6 +221,29 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
       pk.sortBy(_._1).map(_._2).toSeq
     } catch { case _: java.sql.SQLException => Nil }
 
+  /** Stage DDL. Appender stages add the task column, and keep native
+    * LIST columns as the JSON text the move casts
+    * ([[Dialect.insertValueSql]]); constraints are left to the target.
+    */
+  private def createStage(c: Connection): Unit = {
+    val d = options.dialect
+    val cols =
+      if (!appenderStaged) d.columnDefs(schema)
+      else {
+        if (schema.fields.exists(_.name.equalsIgnoreCase(JdbcWrite.TaskColumn)))
+          throw new IllegalArgumentException(
+            s"column name '${JdbcWrite.TaskColumn}' is reserved for DuckDB write staging")
+        (schema.fields.map { f =>
+          val t = f.dataType match {
+            case _: ArrayType => d.stringType
+            case other => d.typeName(other)
+          }
+          s"${d.quote(f.name)} $t"
+        } :+ s"${d.quote(JdbcWrite.TaskColumn)} BIGINT").mkString(", ")
+      }
+    exec(c, s"CREATE TABLE $stageTable ($cols)")
+  }
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     if (fileswap) {
       // stage into a FRESH database file: namespace + table shell first
@@ -219,24 +263,73 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
           case _ => ()
         }
         exec(c, s"CREATE TABLE ${options.table} (${d.columnDefs(schema)}$pkClause)")
+        createStage(c)
       } finally c.close()
-      return JdbcWriterFactory(stagingOpts, schema)
+      return JdbcWriterFactory(stagingOpts.withTable(stageTable), schema)
     }
-    if (truncate) withConn { c =>
+    if (staged) withConn { c =>
       dropStaleStages(c)
-      exec(c, s"CREATE TABLE $stageTable (${options.dialect.columnDefs(schema)})")
+      createStage(c)
     }
-    val target = if (truncate) options.withTable(stageTable) else options
+    val target = if (staged) options.withTable(stageTable) else options
     JdbcWriterFactory(target, schema)
   }
 
+  /** The staged commit, inside one remote transaction on `c`: replace
+    * the rows matching `deleteWhere` (when given), move the stage's rows
+    * into `options.table` and drop the stage. An appender stage moves
+    * only the rows of the committed `tasks`, an upsert through the
+    * dialect's ON CONFLICT after a uniqueness check of its keys across
+    * the whole stage.
+    */
+  private def moveStaged(c: Connection, tasks: Seq[Long], deleteWhere: Option[String]): Unit = {
+    val d = options.dialect
+    val fromStage = s"FROM $stageTable" + (if (!appenderStaged) ""
+      else s" WHERE ${d.quote(JdbcWrite.TaskColumn)} IN ${tasks.mkString("(", ", ", ")")}")
+    val upsert = options.upsertActive && !truncate
+    c.setAutoCommit(false)
+    deleteWhere.foreach(w => exec(c, s"DELETE FROM ${options.table}$w"))
+    if (!appenderStaged || tasks.nonEmpty) {
+      if (upsert && options.upsertKeys.nonEmpty) assertUniqueStagedKeys(c, fromStage)
+      val cols = schema.fields.map(f => d.quote(f.name)).mkString(", ")
+      val values = schema.fields.map(f => d.insertValueSql(f.dataType, d.quote(f.name)))
+      exec(c, s"INSERT INTO ${options.table} ($cols) SELECT ${values.mkString(", ")} $fromStage" +
+        (if (upsert) d.onConflictClause(schema.fields.map(_.name).toSeq, options.upsertKeys,
+          doNothing = options.upsertMode != "update") else ""))
+    }
+    exec(c, s"DROP TABLE $stageTable")
+    c.commit()
+  }
+
+  /** One key per upsert write: duplicates would make the outcome
+    * order-dependent (the reference validates uniqueness before writing,
+    * `constraints.rs:28-95`; the Derby writer checks per chunk). */
+  private def assertUniqueStagedKeys(c: Connection, fromStage: String): Unit = {
+    val keys = options.upsertKeys
+    val ks = keys.map(options.dialect.quote).mkString(", ")
+    val st = c.createStatement()
+    try {
+      val rs = st.executeQuery(s"SELECT $ks $fromStage GROUP BY $ks HAVING COUNT(*) > 1 LIMIT 1")
+      if (rs.next()) {
+        val dup = keys.indices.map(i => keys(i) -> rs.getObject(i + 1)).toMap
+        throw new IllegalStateException(
+          s"duplicate upsert key $dup within one write " +
+            "(reference enforces pre-write uniqueness; fix the input or drop duplicates)")
+      }
+    } finally st.close()
+  }
+
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val rows = messages.collect { case JdbcCommit(n) => n }.sum
+    val rows = messages.collect { case JdbcCommit(n, _) => n }.sum
+    val tasks = messages.toSeq.collect { case JdbcCommit(_, Some(t)) => t }
     if (fileswap) {
       val (ns, t) = options.table match {
         case QuotedPair(n0, t0) => (n0, t0)
         case bare => ("main", bare.toString)
       }
+      // the refreshed table takes the committed tasks' staged rows first
+      val c = stagingOpts.connect()
+      try moveStaged(c, tasks, None) finally c.close()
       // predicate overwrite under fileswap: the rows the predicate does
       // NOT match ride from the live file into the refreshed table, so
       // the swap is still a complete database. IS NOT TRUE, not NOT(…):
@@ -252,18 +345,12 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
         options.url, livePath, liveIdentity, ns, t,
         preserveWhere = preserve,
         targetCols = schema.fields.map(f => options.dialect.quote(f.name)).toSeq)
-    } else if (truncate) withConn { c =>
+    } else if (staged) withConn { c =>
       // the atomic swap: matching rows are replaced in ONE remote txn
-      c.setAutoCommit(false)
-      val cols = schema.fields.map(f => options.dialect.quote(f.name)).mkString(", ")
-      val whereClause = overwrite.get match {
+      moveStaged(c, tasks, overwrite.map {
         case Nil => ""
         case conds => conds.mkString(" WHERE ", " AND ", "")
-      }
-      exec(c, s"DELETE FROM ${options.table}$whereClause")
-      exec(c, s"INSERT INTO ${options.table} ($cols) SELECT $cols FROM $stageTable")
-      exec(c, s"DROP TABLE $stageTable")
-      c.commit()
+      })
     }
     logInfo(s"graft-jdbc write committed: $rows rows into ${options.table}")
     // Post-write statistics refresh (reference duckdb/write.rs:990):
@@ -283,23 +370,26 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     if (fileswap) FileSwap.discardStaging(stagingUrl, buildingPath)
-    else if (truncate) withConn { c =>
+    else if (staged) withConn { c =>
       try exec(c, s"DROP TABLE $stageTable") catch { case _: java.sql.SQLException => }
     }
 }
 
 object JdbcBatchWrite {
-  /** Stages older than this are abandoned (no overwrite runs for an
+  /** Stages older than this are abandoned (no write runs for an
     * hour); younger ones may belong to a live concurrent write. */
   private[jdbc] val StaleStageAgeMs: Long = 60L * 60 * 1000
 }
 
-final case class JdbcCommit(rows: Long) extends WriterCommitMessage
+/** One task's committed row count; appender-staged tasks also name
+  * the task id their staged rows carry. */
+final case class JdbcCommit(rows: Long, taskId: Option[Long] = None) extends WriterCommitMessage
 
 final case class JdbcWriterFactory(options: JdbcOptions, schema: StructType)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    if (options.upsertActive && options.dialect == DerbyDialect)
+    if (JdbcWrite.appenderStaged(options)) new DuckDbAppendWriter(options, schema, taskId)
+    else if (options.upsertActive && options.dialect == DerbyDialect)
       new DerbyUpsertWriter(options, schema)
     else new JdbcRowWriter(options, schema)
 }
@@ -327,62 +417,21 @@ class JdbcRowWriter(options: JdbcOptions, schema: StructType)
   private var inBatch = 0
   private var total = 0L
 
-  /** Multi-row VALUES append (plain inserts only — upserts keep the
-    * single-row conflict statement): K rows buffered, bound at K×cols
-    * parameter offsets, executed as ONE statement. DuckDB's JDBC
-    * executeBatch runs row-at-a-time internally; this path measured
-    * 31× faster there ([[Dialect.multiRowInsertBatch]]).
-    */
-  private val multiK: Int = if (options.upsertActive) 1 else options.insertRows
-  private val multiPs =
-    if (multiK <= 1) None
-    else {
-      val cols = schema.fields.map(f => d.quote(f.name)).mkString(", ")
-      val oneRow = schema.fields.map(f => d.insertPlaceholder(f.dataType)).mkString("(", ", ", ")")
-      Some(conn.prepareStatement(
-        s"INSERT INTO ${options.table} ($cols) VALUES " +
-          Seq.fill(multiK)(oneRow).mkString(", ")))
-    }
-  private val buf = new scala.collection.mutable.ArrayBuffer[InternalRow](multiK)
-
-  private def bindAt(stmt: java.sql.PreparedStatement, row: InternalRow, base: Int): Unit = {
+  override def write(row: InternalRow): Unit = {
     var i = 0
     while (i < setters.length) {
-      if (row.isNullAt(i)) stmt.setNull(base + i + 1, sqlTypes(i))
-      else setters(i)(stmt, row, i, base + i + 1)
+      if (row.isNullAt(i)) ps.setNull(i + 1, sqlTypes(i))
+      else setters(i)(ps, row, i, i + 1)
       i += 1
     }
-  }
-
-  override def write(row: InternalRow): Unit = {
+    ps.addBatch()
     total += 1
-    multiPs match {
-      case Some(mp) =>
-        buf += row.copy()
-        if (buf.length == multiK) {
-          var r = 0
-          while (r < multiK) { bindAt(mp, buf(r), r * setters.length); r += 1 }
-          mp.execute()
-          buf.clear()
-        }
-      case None =>
-        bindAt(ps, row, 0)
-        ps.addBatch()
-        inBatch += 1
-        if (inBatch >= options.batchSize) flush()
-    }
+    inBatch += 1
+    if (inBatch >= options.batchSize) flush()
   }
 
-  protected def flush(): Unit = {
+  protected def flush(): Unit =
     if (inBatch > 0) { ps.executeBatch(); inBatch = 0 }
-    // multi-row remainder (fewer than K rows) drains through the
-    // single-row statement
-    if (buf.nonEmpty) {
-      buf.foreach { r => bindAt(ps, r, 0); ps.addBatch() }
-      buf.clear()
-      ps.executeBatch()
-    }
-  }
 
   override def commit(): WriterCommitMessage = {
     flush()
@@ -393,7 +442,7 @@ class JdbcRowWriter(options: JdbcOptions, schema: StructType)
   override def abort(): Unit = conn.rollback()
 
   override def close(): Unit = {
-    try { multiPs.foreach(_.close()); ps.close() } finally conn.close()
+    try ps.close() finally conn.close()
   }
 }
 

@@ -182,15 +182,7 @@ object TypeMapping {
       if (v == null) null else Decimal(v, d.precision, d.scale)
     }
     case StringType => (rs, i) => UTF8String.fromString(rs.getString(i))
-    case BinaryType => (rs, i) =>
-      // getBytes first; DuckDB's JDBC driver throws NotSupported on it
-      // (live-wire finding) and serves binary only through a Blob
-      try rs.getBytes(i)
-      catch {
-        case _: java.sql.SQLFeatureNotSupportedException =>
-          val b = rs.getBlob(i)
-          if (b == null) null else b.getBytes(1, b.length().toInt)
-      }
+    case BinaryType => new BinaryGetter
     case DateType => (rs, i) => {
       val v = rs.getDate(i)
       if (v == null) null else DateTimeUtils.fromJavaDate(v)
@@ -224,6 +216,28 @@ object TypeMapping {
       else parseComposite(s, st)
     }
     case other => throw new IllegalArgumentException(s"unsupported read type $other")
+  }
+
+  /** `getBytes`, unless the driver serves binary only through a Blob:
+    * DuckDB's JDBC driver throws NotSupported on `getBytes` (live-wire
+    * finding). The choice is made on the column's first value and kept,
+    * so a BLOB scan does not throw and catch once per value.
+    */
+  private final class BinaryGetter extends Getter {
+    private var viaBlob = false
+    private def blobBytes(rs: ResultSet, i: Int): Array[Byte] = {
+      val b = rs.getBlob(i)
+      if (b == null) null else b.getBytes(1, b.length().toInt)
+    }
+    override def apply(rs: ResultSet, i: Int): Any =
+      if (viaBlob) blobBytes(rs, i)
+      else
+        try rs.getBytes(i)
+        catch {
+          case _: java.sql.SQLFeatureNotSupportedException =>
+            viaBlob = true
+            blobBytes(rs, i)
+        }
   }
 
   /** Split a pg composite/range body on top-level commas, honoring

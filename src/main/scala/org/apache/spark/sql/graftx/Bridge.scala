@@ -10,7 +10,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Expression-level conversions behind `private[sql]`
   * (`org.apache.spark.sql.classic.ExpressionUtils`). This object lives in
   * a subpackage of `org.apache.spark.sql` solely to re-export those two
-  * conversions to graft code; it contains no logic of its own.
+  * conversions, and a few other `private[sql]`/`private[spark]` members,
+  * to graft code; it contains no logic of its own.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -22,4 +23,16 @@ object Bridge {
   def v2Literal(value: Any, dataType: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.connector.expressions.Literal[_] =
     org.apache.spark.sql.connector.expressions.LiteralValue(value, dataType)
+
+  /** Block until every event posted so far reached every listener
+    * (`LiveListenerBus.waitUntilEmpty`; throws on its 10 s timeout).
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** The name an execution's QueryExecutionListener callback reports,
+    * when it has one. */
+  def executionName(
+      e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd): Option[String] =
+    e.executionName
 }

@@ -8,8 +8,18 @@ import org.scalatest.{BeforeAndAfterAll, Suite}
   */
 trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = SparkFixture.builder("local[4]").getOrCreate()
+
+  override def afterAll(): Unit = {
+    // session is JVM-shared across suites; don't stop it here
+    super.afterAll()
+  }
+}
+
+object SparkFixture {
+  /** The specs' session settings under the given master. */
+  def builder(master: String): SparkSession.Builder = SparkSession.builder()
+    .master(master)
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
@@ -19,16 +29,8 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
       java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
     .config("spark.ui.enabled", "false")
     .config("spark.sql.catalog.ext", "graft.sources.jdbc.GraftCatalog")
-    .config("spark.sql.catalog.ext.url", SparkFixture.derbyUrl)
-    .getOrCreate()
+    .config("spark.sql.catalog.ext.url", derbyUrl)
 
-  override def afterAll(): Unit = {
-    // session is JVM-shared across suites; don't stop it here
-    super.afterAll()
-  }
-}
-
-object SparkFixture {
   /** One embedded Derby database per test JVM. */
   lazy val derbyUrl: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_derby").toString

@@ -377,6 +377,102 @@ class DuckDbWireSpec extends AnyFunSuite with SparkFixture {
     val rows = joined.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
     assert(rows == Seq(("one", 18.0), ("two", 22.5), ("zero", 13.5)), rows.mkString(","))
   }
+  test("BLOB columns: a few thousand rows round-trip, getBytes is tried once per column") {
+    init()
+    spark.sql("DROP TABLE IF EXISTS duck.app.blobs")
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val in = (0 until 3000).map { i =>
+      (i.toLong, if (i % 97 == 0) null else Array.fill(i % 40)(rnd.nextInt(256).toByte))
+    }
+    in.toDF("k", "b").writeTo("duck.app.blobs").create()
+    val back = spark.table("duck.app.blobs").collect()
+      .map(r => r.getLong(0) -> Option(r.getAs[Array[Byte]](1)).map(_.toSeq)).toMap
+    assert(back == in.map { case (k, b) => k -> Option(b).map(_.toSeq) }.toMap)
+
+    // DuckDB's getBytes throws NotSupported: the getter learns that on
+    // the first value and reads every later one through getBlob
+    var getBytesCalls = 0
+    val blobOnly = java.lang.reflect.Proxy.newProxyInstance(getClass.getClassLoader,
+      Array[Class[_]](classOf[java.sql.ResultSet]),
+      (_: AnyRef, m: java.lang.reflect.Method, _: Array[AnyRef]) => m.getName match {
+        case "getBytes" =>
+          getBytesCalls += 1
+          throw new java.sql.SQLFeatureNotSupportedException("getBytes")
+        case "getBlob" => new javax.sql.rowset.serial.SerialBlob(Array[Byte](1, 2))
+        case other => throw new UnsupportedOperationException(other)
+      }).asInstanceOf[java.sql.ResultSet]
+    val g = TypeMapping.getter(org.apache.spark.sql.types.BinaryType)
+    (1 to 5).foreach(_ => assert(g(blobOnly, 1).asInstanceOf[Array[Byte]].toSeq == Seq[Byte](1, 2)))
+    assert(getBytesCalls == 1)
+  }
+
+  test("Appender-staged writes store every type exactly as prepared binds do") {
+    init()
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("bo", BooleanType),
+      StructField("by", ByteType), StructField("sh", ShortType),
+      StructField("i", IntegerType), StructField("f", FloatType),
+      StructField("d", DoubleType), StructField("dec", DecimalType(18, 2)),
+      StructField("wide", DecimalType(38, 10)), StructField("s", StringType),
+      StructField("bin", BinaryType), StructField("dt", DateType),
+      StructField("ts", TimestampType), StructField("ntz", TimestampNTZType),
+      StructField("ai", ArrayType(IntegerType)), StructField("as", ArrayType(StringType)),
+      StructField("m", MapType(StringType, IntegerType)),
+      StructField("st", StructType(Seq(StructField("a", IntegerType), StructField("b", StringType)))),
+      StructField("iv", DayTimeIntervalType())))
+    def dec(s: String) = new java.math.BigDecimal(s)
+    def day(s: String) = java.time.LocalDate.parse(s)
+    def inst(s: String) = java.time.Instant.parse(s)
+    def ldt(s: String) = java.time.LocalDateTime.parse(s)
+    val rows = Seq(
+      Row(1L, true, 7.toByte, 300.toShort, 42, 1.5f, 2.25, dec("12.34"),
+        dec("1.0000000001"), "plain", Array[Byte](1, 2, 3), day("2024-02-29"),
+        inst("2024-01-02T03:04:05.123456Z"), ldt("2024-01-02T03:04:05.123456"),
+        Seq(1, 2, 3), Seq("a", "b"), Map("x" -> 1), Row(1, "s"),
+        java.time.Duration.ofSeconds(90)),
+      Row(2L, false, Byte.MinValue, Short.MaxValue, Int.MinValue, Float.MaxValue,
+        Double.MinPositiveValue, dec("-9999999999999999.99"),
+        dec("1234567890123456789012345678.0123456789"),
+        "quote ' \" back\\slash, comma\nnew line \u00e9\u4e2d\uD83D\uDE00",
+        (0 until 256).map(_.toByte).toArray, day("0001-01-01"),
+        inst("1900-01-01T00:00:00.000001Z"), ldt("1969-12-31T23:59:59.999999"),
+        Seq(null, -1), Seq("a,b", "\"q\"", null, ""), Map("k" -> null, "j" -> 2),
+        Row(null, "x,y"), java.time.Duration.ofMillis(-1)),
+      Row(3L, true, 0.toByte, 0.toShort, 0, -0.5f, 1e300, dec("0.00"), dec("0E-10"),
+        "", Array.emptyByteArray, day("1582-10-10"), inst("2262-04-11T23:47:16.854775Z"),
+        ldt("9999-12-31T23:59:59.999999"), Seq.empty[Int], Seq.empty[String],
+        Map.empty[String, Int], Row(0, ""), java.time.Duration.ZERO),
+      Row(4L +: Seq.fill(schema.length - 1)(null): _*))
+    val df = spark.createDataFrame(rows.asJava, schema)
+    spark.sql("DROP TABLE IF EXISTS duck.app.types_a")
+    spark.sql("DROP TABLE IF EXISTS duck.app.types_p")
+    df.writeTo("duck.app.types_a").create()
+    df.limit(0).writeTo("duck.app.types_p").create()
+    // the reference: the same rows bound through prepared parameters
+    val w = new JdbcRowWriter(JdbcOptions(Map("url" -> s"jdbc:duckdb:$dbPath",
+      "dbtable" -> "\"app\".\"types_p\"")), schema)
+    try {
+      df.queryExecution.toRdd.map(_.copy()).collect().foreach(w.write)
+      w.commit()
+    } finally w.close()
+
+    val c = JdbcOptions(Map("url" -> s"jdbc:duckdb:$dbPath")).connect()
+    try {
+      def count(sql: String): Long = {
+        val rs = c.createStatement().executeQuery(sql)
+        rs.next(); rs.getLong(1)
+      }
+      assert(count("SELECT COUNT(*) FROM app.types_a") == rows.size)
+      assert(count("SELECT COUNT(*) FROM (SELECT * FROM app.types_a " +
+        "EXCEPT ALL SELECT * FROM app.types_p)") == 0)
+      assert(count("SELECT COUNT(*) FROM (SELECT * FROM app.types_p " +
+        "EXCEPT ALL SELECT * FROM app.types_a)") == 0)
+    } finally c.close()
+  }
 }
 
 object DuckDbWireSpec {

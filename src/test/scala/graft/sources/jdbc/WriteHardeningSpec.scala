@@ -79,6 +79,28 @@ class WriteHardeningSpec extends AnyFunSuite with SparkFixture {
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("duplicate upsert key")), messages(e).mkString(" | "))
+
+    // DuckDB checks the keys across the whole stage at the move, so
+    // duplicates in DIFFERENT partitions are caught too, and nothing lands
+    if (DuckDbWireSpec.driverPresent) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_whduck").toString
+      spark.conf.set("spark.sql.catalog.whduck", "graft.sources.jdbc.GraftCatalog")
+      spark.conf.set("spark.sql.catalog.whduck.url", s"jdbc:duckdb:$dir/dup.duckdb")
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS whduck.wh")
+      spark.sql("CREATE TABLE whduck.wh.t3 (k BIGINT NOT NULL, v STRING) " +
+        "TBLPROPERTIES ('primarykeys'='k')")
+      Seq((1L, "a")).toDF("k", "v").writeTo("whduck.wh.t3").append()
+      val spread = spark.createDataFrame(spark.sparkContext.parallelize(
+        Seq((7L, "x"), (8L, "z"), (7L, "y")), 3)).toDF("k", "v")
+      val e2 = intercept[Exception] {
+        spread.writeTo("whduck.wh.t3").option("upsertkeys", "k").append()
+      }
+      assert(messages(e2).exists(_.contains("duplicate upsert key")), messages(e2).mkString(" | "))
+      assert(spark.table("whduck.wh.t3").collect().map(r => (r.getLong(0), r.getString(1)))
+        .toSeq == Seq((1L, "a")))
+      val left = spark.sql("SHOW TABLES IN whduck.wh").collect().map(_.getString(1))
+      assert(!left.exists(_.contains("__stage_")), left.mkString(","))
+    }
   }
 
   test("do-nothing upsert keeps existing rows untouched, inserts only new keys") {
