@@ -122,12 +122,6 @@ object Cluster extends org.apache.spark.internal.Logging {
     } finally GraftCache.release(cached)
   }
 
-  /** Superstep count of the most recent distributed closure — a probe
-    * tap (the O(diameter) convergence claim is only checkable if the
-    * round count is observable), not part of the operator contract. */
-  private[graft] val lastDistributedRounds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Alternating star contraction (Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC'14): each round runs
     * large-star (every neighbor LARGER than u re-attaches to
@@ -192,21 +186,22 @@ object Cluster extends org.apache.spark.internal.Logging {
         col("v") === col("pv"), "left_semi").isEmpty
       e = next
     }
-    lastDistributedRounds.set(it)
     val roots = e.select(col("v").as("u"), col("v"))
     val labeled = e.union(roots).distinct()
       .select(col("u").as("v"), col("v").as("cluster"))
     // A vertex appearing ONLY in self-loop pairs never enters the star
     // loop (the u≠v filter drops it) but the driver union-find tier DOES
     // label it — and the two tiers must produce the identical labeling
-    // (ScaleProbe's cluster A/B asserts it). Everything touching
-    // pairsLong materializes EAGERLY here, while the caller's persist is
-    // still alive (the returned plan must not reference the input — the
-    // caller unpersists it on return, and a lazy branch would silently
-    // recompute the whole pair-proposal pipeline); and the singleton set
-    // is derived WITHOUT joining against the O(V) labeled frame — the
-    // tiny self-vertex frame broadcasts INTO one edge scan instead, so
-    // no full-vertex build side exists at any corpus size.
+    // (AlgorithmPropertySpec checks both tiers against a reference
+    // union-find; OperatorApiSpec pins the self-loop case). Everything
+    // touching pairsLong materializes EAGERLY here, while the caller's
+    // persist is still alive (the returned plan must not reference the
+    // input — the caller unpersists it on return, and a lazy branch
+    // would silently recompute the whole pair-proposal pipeline); and
+    // the singleton set is derived WITHOUT joining against the O(V)
+    // labeled frame — the tiny self-vertex frame broadcasts INTO one
+    // edge scan instead, so no full-vertex build side exists at any
+    // corpus size.
     val sv = pairsLong.filter(col("d1") === col("d2"))
       .select(col("d1").as("v")).distinct().localCheckpoint(true)
     if (sv.isEmpty) labeled // the normal case: one cheap filter job

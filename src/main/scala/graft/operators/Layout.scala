@@ -177,9 +177,9 @@ object Layout extends org.apache.spark.internal.Logging {
 
   /** Columns of one parquet file that carry a bloom filter in ANY row
     * group (footer read only — manifest-cost, no page I/O). A file with
-    * zero row groups yields the empty set. Shared by ZOrderSpec's
-    * regime-boundary pin and ScaleProbe's per-file census so the
-    * footer-reading quirks live in one place.
+    * zero row groups yields the empty set. ZOrderSpec's regime-boundary
+    * pin reads footers through it, so the footer-reading quirks live in
+    * one place.
     */
   def bloomColumns(spark: SparkSession, file: java.io.File): Set[String] = {
     val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(

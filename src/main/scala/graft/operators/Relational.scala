@@ -320,9 +320,9 @@ object Relational {
       val o2 = o.join(broadcast(dims), col("o_custkey") === col("c_custkey"), "left_semi")
         .select("o_orderkey", "o_custkey")
       // The fact join stays declarative: at bench SFs and (with the
-      // deployment-sized broadcast threshold ScaleProbe documents) at
-      // 100×, Catalyst broadcasts the survivor set and lineitem runs
-      // scan → probe → partial agg in ONE whole-stage pipeline — no
+      // deployment-sized broadcast threshold ScaleProbe's relational op
+      // sets) at 100×, Catalyst broadcasts the survivor set and lineitem
+      // runs scan → probe → partial agg in ONE whole-stage pipeline — no
       // fact shuffle, measured 6.1 s cold / 2.5 s warm at 100× vs 8.9 s
       // for the unreduced SMJ. Past broadcast reach (≫10⁸ surviving
       // orders) the planner falls back to a shuffle join of the

@@ -575,8 +575,9 @@ object Similarity {
   /** Coarse L2 cell assignment (vec_id, cell, q, cq): centroids
     * broadcast, argmin folds map-side, ties to the smaller cid (q/cq
     * ride the struct — constant per group, so they never influence the
-    * (d, cid) min). Shared by [[ivfAdc]] and the scanned-pair census
-    * ScaleProbe's sweep reports, so the two cannot drift.
+    * (d, cid) min). Shared by [[ivfAdc]], centroid training, SemDeDup
+    * and the streaming index maintenance, so their cell assignments
+    * cannot drift.
     */
   private[graft] def ivfAssign(n: DataFrame, cents: DataFrame): DataFrame =
     n.crossJoin(broadcast(cents))

@@ -22,6 +22,15 @@ final case class JdbcOptions(map: Map[String, String]) extends Serializable {
   private def req(k: String): String = map.getOrElse(k,
     throw new IllegalArgumentException(s"missing option '$k'"))
 
+  /** A bounded integer option, checked here so a bad value fails on the
+    * driver when the options are parsed, not later inside a task. */
+  private def intAtLeast(k: String, default: Int, min: Int): Int = {
+    val v = map.get(k).map(_.toInt).getOrElse(default)
+    if (v < min)
+      throw new IllegalArgumentException(s"$k must be >= $min, got $v")
+    v
+  }
+
   val url: String = req("url")
   val table: String = map.getOrElse("dbtable", map.getOrElse("table", ""))
   val dialect: Dialect =
@@ -29,10 +38,10 @@ final case class JdbcOptions(map: Map[String, String]) extends Serializable {
 
   /** Rows per fetch from the remote cursor (reference streams 4000-row
     * chunks, `crates/postgres/src/conn.rs:443`). */
-  val fetchSize: Int = map.getOrElse("fetchsize", "4000").toInt
+  val fetchSize: Int = intAtLeast("fetchsize", 4000, 0)
   /** Rows per INSERT batch on the write path (rows per Appender flush
     * on DuckDB's staged writes). */
-  val batchSize: Int = map.getOrElse("batchsize", "1000").toInt
+  val batchSize: Int = intAtLeast("batchsize", 1000, 1)
 
   /** Range-partitioned parallel scan (our scale improvement over the
     * reference's always-1-partition SQL scans, `mod.rs:313`). */
@@ -156,7 +165,7 @@ final case class JdbcOptions(map: Map[String, String]) extends Serializable {
   /** Max pooled physical connections per executor JVM for this identity
     * (reference sizes its bb8/r2d2 pools the same way,
     * `db_connection_pool/mod.rs:59-64`). */
-  val poolMax: Int = map.getOrElse("poolmax", "8").toInt
+  val poolMax: Int = intAtLeast("poolmax", 8, 1)
 
   /** Planning-time statistics for the Spark optimizer: "none" (default)
     * leaves the relation unknown-size (Spark assumes huge and never

@@ -122,6 +122,7 @@ final class JdbcWrite(options: JdbcOptions, schema: StructType,
 final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
     overwrite: Option[Seq[String]])
   extends BatchWrite with Logging {
+  import JdbcWrite.QuotedPair
 
   private def truncate: Boolean = overwrite.isDefined
   private def appenderStaged: Boolean = JdbcWrite.appenderStaged(options)
@@ -175,8 +176,6 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
     val st = c.createStatement()
     try st.executeUpdate(sql) finally st.close()
   }
-
-  private val QuotedPair = "\"(.*)\"\\.\"(.*)\"".r
 
   /** GC stage generations left by CRASHED runs (reference GCs previous
     * `__data_<ts>` generations the same way, `creator.rs:220-520`) —

@@ -420,9 +420,9 @@ class OperatorApiSpec extends AnyFunSuite with SparkFixture {
   test("connectedComponents labels self-loop-only vertices in BOTH tiers") {
     import spark.implicits._
     // vertex 5 and 7 appear only as self-loops, 2 has a self-loop AND a
-    // real edge — every tier must emit the identical labeling (the
-    // cluster scale probe asserts tier agreement on arbitrary pair
-    // sources, so a self-loop row must not vanish from the star path)
+    // real edge — every tier must emit the identical labeling (tier
+    // agreement must hold on arbitrary pair sources, so a self-loop row
+    // must not vanish from the star path)
     val pairs = Seq((5L, 5L), (1L, 2L), (7L, 7L), (2L, 2L)).toDF("d1", "d2")
     val want = Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 7L -> 7L)
     val driver = Cluster.connectedComponents(pairs)

@@ -156,5 +156,18 @@ class ConnectionPoolSpec extends AnyFunSuite with SparkFixture {
     assert(ddb.attachInit.last == "SET search_path = 'corpus,sales'")
     // pool separation: attach statements join the connection-init key
     assert(o.connectionInit.startsWith(o.attachInit))
+    // numeric bounds reject at option-parse time, naming the option:
+    // batchsize=0 would divide by zero in a DuckDB write task, poolmax=0
+    // would block every connect for the full acquire timeout, and a
+    // negative fetchsize would only fail at setFetchSize on an executor
+    for ((k, v) <- Seq("batchsize" -> "0", "poolmax" -> "0", "fetchsize" -> "-1")) {
+      val e = intercept[IllegalArgumentException] {
+        JdbcOptions(Map("url" -> "jdbc:duckdb:/tmp/m.duckdb", k -> v))
+      }
+      assert(e.getMessage.contains(k), e.getMessage)
+    }
+    val lowest = JdbcOptions(Map("url" -> "jdbc:duckdb:/tmp/m.duckdb",
+      "batchsize" -> "1", "poolmax" -> "1", "fetchsize" -> "0"))
+    assert((lowest.batchSize, lowest.poolMax, lowest.fetchSize) == ((1, 1, 0)))
   }
 }
