@@ -1,11 +1,11 @@
 package graft
 
-import java.util.Locale
+import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line with per-query wall seconds.
+  * prints one JSON line ([[BenchRecord.render]]) with per-query wall seconds.
   *
   * Materialization is a full write to the no-op DSv2 sink — every column
   * is produced and every operator (including final sorts) executes, unlike
@@ -13,228 +13,190 @@ import org.apache.spark.sql.SparkSession
   * Failures are loud: the error lands on stderr, the query is listed in
   * `"failed"`, and the exit code is non-zero when anything failed.
   *
-  * Stall-proofing: this host exhibits intermittent multi-minute stalls
+  * Stall-proofing: this host shows intermittent multi-minute stalls
   * unrelated to the plans (BASELINE.md records 410.8 s vs 56.3 s
   * back-to-back on identical code), so each query is timed
-  * SPARK_GRAFT_REPS times (default 3) and the REPORTED number is the
-  * per-query MEDIAN.
+  * SPARK_GRAFT_REPS times (default 3) and the reported number is the
+  * per-query median. Reps are cold: the cache is cleared before each
+  * rep's timer starts, so persist()-using queries pay their
+  * materialization in every rep. Full per-rep wall/gc/cpu detail goes to
+  * stderr; the line carries what lets a reader tell a host stall from a
+  * plan regression without this machine:
+  *   - `"diag"`: for the ≤ 2 most suspicious queries, [best rep, worst
+  *     rep, GC % of wall, CPU cores busy] — a best rep near the isolated
+  *     median proves the slow reps were host phase, a high GC share proves
+  *     heap pressure, cores busy ≪ parallelism proves starvation;
+  *   - `"g"`/`"w"`: GC seconds in the timed phase (capped 9) and the
+  *     untimed warm pass (capped 99) — a slow warm pass flags a degraded
+  *     host before any timed rep. When cal is present they ride as its
+  *     elements 3 and 4 instead;
+  *   - `"iso"`: one cold isolated re-run at suite end for each query whose
+  *     median exceeds 2× its own best rep (the intra-run stall signature)
+  *     or 2× its median in the last committed BENCH_r*.json at the same sf
+  *     (a uniform slowdown leaves median ≈ best, so the first trigger
+  *     cannot catch it), both by > 0.5 s. An isolated number near the best
+  *     rep convicts the suite median as host phase; one near the median
+  *     convicts the plan. It is evidence beside the median, never a
+  *     replacement;
+  *   - `"cal"`: [start, end] host canary — the mean observed/floor ratio of
+  *     isolated cold shots of two code-frozen floor queries, right after
+  *     the warm pass and right after the timed suite. A uniform host phase
+  *     reads cal ≈ 1.2–1.5 with no per-query flag; a real regression
+  *     reads cal ≈ 1.0. sf0.1 only, where the floors are documented. A
+  *     degraded start is retried after waiting the phase out and the retry
+  *     count rides as element 5; a degraded end is re-probed after the iso
+  *     pass and the re-probe rides as element 6.
   *
-  * Self-diagnosis (round-9, per the r8 verdict): the artifact must let a
-  * reader DISTINGUISH a host/JVM stall from a plan regression without
-  * access to this machine. The `"diag"` map carries, for the ≤4 most
-  * suspicious queries (stall outliers first, then largest medians),
-  * `[best-rep sec, worst-rep sec, GC share of wall %, process-CPU
-  * cores busy]`: a best rep near the isolated median proves the slow
-  * reps were phase; a high GC share proves JVM heap pressure; CPU cores
-  * busy ≪ parallelism proves starvation (host phase), while ≈parallelism
-  * says the plan really burned that time. `"g"` (total JVM GC seconds in
-  * the timed phase, capped 99; "gcsec" through r12, "gc" in r13 —
-  * re-shortened in r14 with "warm"→"w" to buy line budget for
-  * q152/q153) and `"w"` (untimed warm-up pass duration — a slow
-  * warm-up flags a degraded host before any timed rep) complete the
-  * picture. Full per-rep wall/gc/cpu detail for EVERY query goes to
-  * stderr.
-  *
-  * Isolated re-measure (round-10, per the r9 verdict; extended round-12
-  * per the r11 verdict): a query is flagged for one cold isolated re-run
-  * after the whole suite finishes when EITHER (a) its suite median
-  * exceeds 2× its own best rep (and by > 0.5 s) — the intra-run stall
-  * signature — or (b) its median exceeds 2× the same query's median in
-  * the last committed BENCH_r*.json at the same sf (and by > 0.5 s) —
-  * the UNIFORM slowdown trigger (a) structurally cannot catch, because
-  * a host phase that slows all reps equally leaves median ≈ best. The
-  * `"iso"` map carries those single-shot seconds, stall flags first then
-  * regressions, as many as the ~1918 B collector-tail line budget fits
-  * (byte-costed at worst width before each shot — real-width medians
-  * leave room for ~15+ entries, the contract-spec worst case for 3): an
-  * isolated number near the best rep / previous round CONVICTS the suite
-  * median as host phase in the artifact itself; one near the median
-  * convicts the plan. The reported per-query median is NOT replaced —
-  * `iso` is evidence alongside it, not a substitute.
-  *
-  * Interaction with the cal-gated retry (ADVICE r18): the retry's
-  * sleeps + extra cold cal probes (up to ~90 s + 4 probes, on exactly
-  * the degraded hosts where wall is scarcest) spend from the same
-  * elapsed clock the iso deadlines cut against, so a retried cal can
-  * shed late stall-flag iso shots. That trade is deliberate — a clean
-  * cal bracket adjudicates the WHOLE suite while an iso shot
-  * adjudicates one query. Since r20 (VERDICT r19 #1) a shed shot is
-  * recorded on STDERR only, not as an in-line `"id":null` marker —
-  * r19's retried-cal run spent ~100 B of the line on nine nulls, bytes
-  * the driver-parseable "q"-prefixed queries keys now need.
-  *
-  * Driver parseability (r20, VERDICT r19 #1): the `queries` map keys
-  * are "qNN"-spelled again (r17–r19 stripped the prefix and
-  * PERF_r19.per_query came back empty), the line is printed to RAW
-  * stdout with no sbt logger prefix (build.sbt outputStrategy:
-  * `parsed` was null in every committed BENCH_r* wrapper including the
-  * q-prefixed r11–r16 ones, so the `[info] ` prefix — which breaks any
-  * parser that json-loads a line or anchors on a line STARTING with
-  * '{' — predates the key-spelling change as the other suspect), and
-  * the bytes are funded by the fqAt precision rung ladder + dropped
-  * iso nulls + 1-decimal cal. diag/iso keys stay bare so a "qNN":num
-  * regex can never read an iso shot as a median.
-  *
-  * Host-calibration canary (round-13, per the r12 verdict): `"cal"` is
-  * [start, end] — the mean observed/floor ratio of isolated cold shots
-  * of two code-frozen floor queries (q01, q08), measured right after
-  * the warm pass and again right after the timed suite. Since r18 a
-  * degraded START canary (> 1.3) is retried — the suite WAITS out the
-  * host phase, bounded at 3 × 30 s — and the retry count rides the cal
-  * array as a 5th element, so the artifact documents its own retry.
-  * Since r19 a degraded END canary is RE-PROBED after the iso pass
-  * (≤2 × 30 s waits, wall-gated): the first end probe stays at element
-  * 2 (it is what actually bracketed the suite) and the re-probe rides
-  * as element 6 (element 5 — the start-retry count — is then always
-  * rendered, even as 0, so position disambiguates) — a clean re-probe
-  * is in-artifact evidence the end degradation was a transient that
-  * postdated the timed suite, so a late phase can't sink the artifact
-  * by itself (VERDICT r18 #3). It is the
-  * drift normalizer the uniform-slowdown trigger structurally can't
-  * be: a host phase that inflates everything ~uniformly reads as
-  * cal≈1.2–1.5 with zero per-query flags, and the comparable total
-  * divides by cal to normalize; a true regression reads cal≈1.0.
-  * Emitted only at sf0.1, where the floors are documented.
-  *
-  * Reps are COLD with respect to caching: the cache is cleared before
-  * each rep's timer starts, so persist()-using queries (the LSH dedup /
-  * ANN paths) pay their materialization cost in every rep, and the median
-  * is a cold-run median, not a warm-cache one.
-  *
-  * Output-size note: the stdout JSON is deliberately compact (3-decimal
-  * values, stall map only for outliers) because the harness that collects
-  * it keeps only the tail of the process output — a full-precision dump of
-  * every rep would truncate the line and break parsing. The full per-rep
-  * detail goes to stderr for human diagnosis.
+  * Every wall guard below cuts against the driver's 590 s kill, so a
+  * degraded host costs reps, iso shots or cal points, never the line.
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
 
-  /** Iso-slot candidate order (unit-pinned by BenchContractSpec —
-    * this path fires only on degraded runs, so its guarantee must not
-    * wait for one): prev-round regressions FIRST, by RATIO vs the
-    * previous committed median descending — NOT by absolute median
-    * (r13 verdict item 1: the byte budget must land on a 4.8×
-    * inflation of a 0.5 s query before a 2× of a big one) — THEN
-    * stall-flagged queries. r14 verdict item 2 flipped the two groups:
-    * a stall flag already carries in-artifact exonerating evidence
-    * (its own best rep + diag context), while a uniform regression
-    * carries NONE without its iso shot — scarce slots go to the
-    * evidence-less entries first (r14's q129 stood unexonerated for a
-    * round because the old order spent its slots on stall flags).
+  /** Iso-slot candidate order (unit-pinned by BenchContractSpec — this
+    * path fires only on degraded runs): prev-round regressions first, by
+    * ratio to the previous committed median, so a 4.8× inflation of a
+    * 0.5 s query outranks a 2× of a big one; then stall-flagged queries.
+    * A stall flag already carries exonerating evidence (its best rep and
+    * diag), a uniform regression none without its iso shot.
     */
   def isoOrder(stallFlagged: Seq[String],
       regressed: Seq[(String, Double, Double)]): Seq[String] =
     (regressed.sortBy { case (_, med, prev) => -med / prev }
       .map(_._1) ++ stallFlagged).distinct
 
-  /** Iso wall deadlines, seconds since bench start (r18, r17 verdict
-    * #1): the wall budget is RESERVED for prev-round regression movers
-    * — they carry no exonerating evidence without their shot, so they
-    * keep shooting 45 s past the stall-flag cutoff (a stall flag
-    * already carries its best rep + diag context). Both sit under the
-    * driver's 590 s kill with the line print's margin.
+  /** Iso wall deadlines, seconds since bench start: regression movers
+    * keep shooting 45 s past the stall-flag cutoff, since they carry no
+    * evidence without their shot. Both sit under the driver's 590 s kill
+    * with the line print's margin.
     */
   val IsoDeadlineRegression = 550.0
   val IsoDeadlineStall = 505.0
 
+  /** The bench id: a query name's leading "qNN". */
+  def qid(name: String): String = name.takeWhile(_ != '_')
+
   /** Scan a committed artifact's `"queries":{…}` body into qNN-keyed
-    * medians. Accepts BOTH key spellings — "q157" (r≤16 artifacts) and
-    * the prefix-stripped "157" (r17+ line-budget lever) — normalizing to
-    * qNN, so the regression trigger stays armed across the transition
-    * (unit-pinned by BenchContractSpec).
+    * medians. Accepts both key spellings, "q157" and the prefix-less
+    * "157" of r17–r19 artifacts, normalizing to qNN, so the regression
+    * trigger stays armed against either (unit-pinned by BenchContractSpec).
     */
   private[graft] def scanMedians(body: String): Map[String, Double] =
     "\"q?(\\d+)\":([0-9.]+)".r.findAllMatchIn(body)
       .map(m => "q" + m.group(1) -> m.group(2).toDouble).toMap
 
-  def main(args: Array[String]): Unit = {
-    val benchStart = System.nanoTime()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    // Split parquet inputs so scan/sort stages use every core even at
-    // bench scale (sf0.1 lineitem is one 10.8 MB file — the default
-    // 128 MB split would serialize every lineitem stage onto one task).
-    // At cluster scale files exceed the split size and this is inert.
-    val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAXPART", (1 << 20).toString)
-    // Comma-separated names: run only the named queries (iteration aid).
-    // A pattern matches a query iff it equals the full name or the name's
-    // leading "qNN" id (so "q42" selects q42_minhash_lsh and nothing else;
-    // substring matching would make "q1" select q10..q19 too).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
-    def selected = {
-      val all = SparkEntry.queries.toSeq.sortBy(_._1)
-      only.fold(all)(pats => all.filter { case (n, _) =>
-        pats.exists(p => p == n || p == n.takeWhile(_ != '_'))
-      })
-    }
-    // Extra confs for A/B experiments: "k=v;k=v" (never set by the
-    // driver; the committed defaults below are the tuned configuration).
+  /** The committed local session, shared by Bench and PlanDump so dumped
+    * plans are the plans the bench times. SPARK_GRAFT_CPUS (local[N]),
+    * SPARK_GRAFT_SHUFFLE (shuffle partitions), SPARK_GRAFT_MAXPART (split
+    * bytes) and SPARK_GRAFT_CONF ("k=v;k=v" extra confs for A/B runs,
+    * e.g. `spark.sql.adaptive.enabled=true`) override the defaults.
+    */
+  def session(): SparkSession = {
     val extra = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(';')).map(_.split("=", 2)).collect { case Array(k, v) => (k, v) }
-    // Measured (round 6, sf0.1, 3-rep cold medians) on the 5-query
-    // multi-stage dedup subset: 32 partitions 15.1 s, 8 → 11.0 s,
-    // 4 → 8.2 s, 2 → 7.9 s but with floor-query regressions (q08
-    // 0.86 → 1.53 s). 4 is the knee: heavy −46% vs 32, floor flat — at
-    // this data scale per-task launch overhead dominates and AQE's
-    // coalescing only fixes post-shuffle stages, not the initial
-    // partition count. A real cluster sizes this to executors × cores
-    // (env-overridable; the operators never depend on it).
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "4")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
+    val base = SparkSession.builder()
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      // 4 is the measured knee at sf0.1 (round 6, 3-rep cold medians on
+      // the multi-stage dedup subset: 32 → 15.1 s, 8 → 11.0 s, 4 → 8.2 s,
+      // 2 → 7.9 s but with floor-query regressions): per-task launch
+      // overhead dominates at this scale. A cluster sizes this to
+      // executors × cores.
+      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "4"))
+      // 1 MB splits so scan and sort stages use every core at bench scale
+      // (sf0.1 lineitem is one 10.8 MB file); inert once files exceed it
+      .config("spark.sql.files.maxPartitionBytes",
+        sys.env.getOrElse("SPARK_GRAFT_MAXPART", (1 << 20).toString))
       .config("spark.sql.files.openCostInBytes", "65536")
-      // Single-JVM harness: shuffle blocks live in the page cache, so
-      // compressing them is pure CPU overhead, and locality waits are
-      // meaningless. Both belong ON for a real multi-node deployment.
+      // single JVM: shuffle blocks and persist() intermediates live in the
+      // page cache and local heap, so compressing them is pure CPU (A/B
+      // r11: comparable-41 15.99 → 15.62 s) and locality waits mean
+      // nothing. All three belong on for a multi-node deployment.
       .config("spark.shuffle.compress", "false")
       .config("spark.shuffle.spill.compress", "false")
-      // Same single-JVM argument for the COLUMNAR CACHE: the persist()
-      // intermediates the dedup/ANN chains rebuild in every cold rep
-      // live in local heap/page-cache, so compressing them is pure CPU
-      // on the cache-build path (A/B r11: comparable-41 15.99 → 15.62 s;
-      // no query regressed beyond noise). On a real cluster memory
-      // capacity is the scarce resource and compression belongs ON.
       .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
       .config("spark.locality.wait", "0s")
-      // AQE OFF for this single-JVM harness (round-6 re-measurement at 4
-      // initial shuffle partitions: the 11-query heavy/floor subset runs
-      // 13.0 s with AQE on vs 8.5 s off — q74 2.85→0.71 s — and even the
-      // broadcast-dependent subset is faster, 5.06 vs 4.52 s; the earlier
-      // "AQE off is 2× worse" held only at 32 initial partitions, where
-      // AQE's coalescing compensated for over-partitioning). On a real
-      // cluster AQE belongs ON: runtime SMJ→broadcast conversion, skew
-      // splitting and coalescing are core to the 100 TB story — this is a
-      // local-harness knob exactly like shuffle compression above.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      // The generated-class cache (static conf, default 100 entries) is
-      // sized to the APPLICATION: 167 queries × ~4–8 codegen units each
-      // cycle ~1000 distinct units through it, so at the default every
-      // warm-pass/cal/iso/rep-1 execution of a query re-pays Janino
-      // compilation for every stage (~10–50 ms each) — pure scheduling-
-      // floor waste the r19 verdict's item 3 names. Medians are mostly
-      // insulated (reps run back-to-back, reps 2–3 hit the cache), but
-      // the warm pass, the cal canary probes and every first rep burn
-      // wall the 590 s driver budget needs — the default-cache baseline
-      // run shed reps from the 95th query; the 4096-entry run kept 3
-      // reps to the 160th on a comparable host phase. Production
-      // translation: size the codegen cache to the workload's distinct
-      // plan count — this is that knob for a many-query application,
-      // not a local[32] trick.
+      // AQE off for this single-JVM harness: at 4 initial partitions the
+      // heavy/floor subset runs 13.0 s with AQE vs 8.5 s without, and the
+      // 48g re-probe agreed (BASELINE.md). On a cluster AQE belongs on.
+      .config("spark.sql.adaptive.enabled", "false")
+      // 167 queries cycle ~1000 distinct codegen units; at the default
+      // 100-entry cache every warm/cal/iso/first-rep execution re-pays
+      // Janino compilation (interleaved A/B: 555 → 498 s wall)
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    val spark = extra.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // JVM telemetry taps for the self-diagnosing artifact: cumulative GC
-    // wall-time across all collectors, and cumulative process CPU time
-    // (JDK built-ins; zero overhead between reads).
+    spark
+  }
+
+  /** Registered queries in name order, narrowed to `only` when given. A
+    * pattern matches a query iff it equals the full name or its qNN id,
+    * so "q1" selects q1_* only, never q10..q19.
+    */
+  def select(only: Option[Seq[String]]): Seq[(String, Query)] = {
+    val all = SparkEntry.queries.toSeq.sortBy(_._1)
+    only.fold(all)(pats => all.filter { case (n, _) => pats.exists(p => p == n || p == qid(n)) })
+  }
+
+  /** One cold materialization: wall seconds, GC seconds, process-CPU
+    * seconds, and the failure if it threw. */
+  private final case class Shot(wall: Double, gcSec: Double, cpuSec: Double, error: Option[Throwable])
+
+  /** Admit isolated shots in candidate order while the line still has
+    * room for each at its widest; `shoot` returns a shot's wall seconds,
+    * or None when it was shed or failed (a failed shot's time-to-failure
+    * would read as a fast isolated run). */
+  private[graft] def admitIso(r: BenchRecord, candidates: Seq[String])(
+      shoot: String => Option[Double]): BenchRecord =
+    candidates.foldLeft(r) { (r, name) =>
+      if (!BenchRecord.fits(r.copy(iso = r.iso :+ (name -> 9.9)))) {
+        System.err.println(s"[bench] $name isolated SKIPPED (line budget)")
+        r
+      } else shoot(name).fold(r)(wall => r.copy(iso = r.iso :+ (name -> wall)))
+    }
+
+  /** Previous-round medians: the newest committed BENCH_r*.json whose line
+    * ran at the same sf (a sf0.01 iteration run must never be "regressed"
+    * against a sf0.1 artifact). The driver wraps the line as an escaped
+    * JSON string, so quotes are unescaped before the scan.
+    */
+  private def prevMedians(dir: java.io.File, sfName: String): Map[String, Double] = {
+    val sf = sfName.stripPrefix("sf")
+    Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(_.getName.matches("BENCH_r\\d+\\.json"))
+      .sortBy(-_.getName.replaceAll("\\D", "").toInt)
+      .iterator.map { f =>
+        try {
+          val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+            .replace("\\\"", "\"")
+          val tag = "\"queries\":{"
+          val qs = txt.indexOf(tag)
+          // three sf spellings: "sf0.1" (r≤15), "0.1" (r16–r19) and a bare
+          // number closing the line (`"sf":0.1}` — the driver wrapper's own
+          // `"sf": 0.1` field has a space and cannot cross-match)
+          val sfMatch = txt.contains("\"sf\":\"" + sfName + "\"") ||
+            txt.contains("\"sf\":\"" + sf + "\"") || txt.contains("\"sf\":" + sf + "}")
+          if (qs < 0 || !sfMatch) None
+          else {
+            System.err.println(s"[bench] regression baseline: ${f.getName}")
+            Some(scanMedians(txt.substring(qs + tag.length, txt.indexOf('}', qs + tag.length))))
+          }
+        } catch { case _: Throwable => None }
+      }.collectFirst { case Some(m) => m }.getOrElse(Map.empty)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val benchStart = System.nanoTime()
+    def elapsed = (System.nanoTime() - benchStart) / 1e9
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfName = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
+    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
+    val spark = session()
+    val selected = select(only)
     import scala.jdk.CollectionConverters._
     def gcMillis(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(b => math.max(0L, b.getCollectionTime)).sum
@@ -243,510 +205,127 @@ object Bench {
       case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
       case _ => -1L
     }
-    // Cross-run hygiene (r19, optimization-round contract): the
-    // content-addressed ANN index artifacts (AnnIndex.ensure — the
-    // q158/q159/q161 read path) persist under $TMPDIR/graft_annidx and
-    // would otherwise survive from one bench invocation to the next,
-    // letting a later invocation skip the build a fresh environment
-    // would pay. Wipe the root BEFORE the warm pass: every invocation
-    // trains + builds from the parquet inputs within itself (the
-    // untimed warm pass pays the one-time build — the train-once/
-    // query-many cost shape the artifact exists for, VERDICT r18 #1),
-    // and nothing precomputed crosses invocation boundaries.
-    graft.operators.AnnIndex.wipePersistedRoot()
-    // Untimed warm-up pass: JIT, codegen caches, parquet footers and the
-    // page cache all reach steady state before anything is measured —
-    // the numbers then reflect the engine, not first-touch effects
-    // (this host also shows intermittent first-materialization stalls
-    // that would otherwise land inside one arbitrary timed query). Its
-    // DURATION is emitted (`warmsec`): a slow warm-up is host-phase
-    // evidence that predates every timed rep.
-    val warm0 = System.nanoTime()
-    selected.foreach { case (_, fn) =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () } // the timed pass reports failures
+    def shot(fn: Query): Shot = {
+      // release persisted intermediates BEFORE the timer, so every shot
+      // pays full materialization and persist() never accumulates into
+      // storage-memory eviction
       graft.operators.GraftCache.releaseAll()
       spark.catalog.clearCache()
+      val (gc0, cpu0, t0) = (gcMillis(), cpuNanos(), System.nanoTime())
+      val error =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+        catch { case e: Throwable => Some(e) }
+      val wall = (System.nanoTime() - t0) / 1e9
+      Shot(wall, (gcMillis() - gc0) / 1e3, (cpuNanos() - cpu0) / 1e9, error)
     }
+    // ANN index artifacts persist under $TMPDIR across invocations; wipe
+    // them so every run trains and builds from the parquet inputs itself
+    // (the untimed warm pass pays the build)
+    graft.operators.AnnIndex.wipePersistedRoot()
+    // untimed warm pass: JIT, codegen caches, parquet footers and the page
+    // cache reach steady state first; the timed pass reports failures
+    val warm0 = System.nanoTime()
+    selected.foreach { case (_, fn) => shot(fn) }
     val warmSec = (System.nanoTime() - warm0) / 1e9
-    // Host-calibration canary (r12 verdict item 1): the suite's one
-    // open adjudication gap was a UNIFORM host phase — it inflates every
-    // median equally, so neither the best-rep trigger nor the per-query
-    // prev-round trigger ever fires, and the artifact cannot exonerate
-    // its own total. The canary measures the HOST, inside the artifact:
-    // one isolated cold shot each of two floor queries whose code has
-    // not changed since r10 and whose isolated floors BASELINE.md
-    // documents (q01 0.54 s, q08 1.04 s at sf0.1), taken right after
-    // the warm pass and again after the timed suite. Each point is the
-    // mean observed/floor ratio — `"cal":[start,end]`. Reading: a
-    // uniform drift shows cal≈1.2–1.5 at both ends with zero per-query
-    // flags (divide the comparable total by cal to normalize); a
-    // genuine plan regression leaves cal≈1.0 beside a high total. Only
-    // meaningful at the driver's sf0.1 (the floors are sf0.1 numbers)
-    // — other scales emit no cal field rather than a false ratio.
+    // q01 and q08: code frozen since r10, isolated floors in BASELINE.md
     val calFloors = Seq("q01" -> 0.54, "q08" -> 1.04)
-    val calEnabled = sfDir.split('/').filter(_.nonEmpty).lastOption.contains("sf0.1")
-    def calPoint(): Option[Double] = if (!calEnabled) None else {
+    def calPoint(): Option[Double] = if (sfName != "sf0.1") None else {
       val ratios = calFloors.flatMap { case (id, floor) =>
-        selected.find(q => q._1.takeWhile(_ != '_') == id).flatMap { case (name, fn) =>
-          graft.operators.GraftCache.releaseAll()
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-            catch { case _: Throwable => false } // the timed pass reports failures
-          // a FAILED canary's time-to-failure is not a host measurement —
-          // emitting it (often fast) would fabricate a healthy-host verdict
-          if (!ok) { System.err.println(s"[bench] cal $name FAILED, dropped"); None }
+        selected.find(q => qid(q._1) == id).flatMap { case (name, fn) =>
+          val s = shot(fn)
+          if (s.error.nonEmpty) { System.err.println(s"[bench] cal $name FAILED, dropped"); None }
           else {
-            val r = ((System.nanoTime() - t0) / 1e9) / floor
-            System.err.println(f"[bench] cal $name ${r * floor}%.3f (ratio $r%.2f)")
-            Some(r)
+            System.err.println(f"[bench] cal $name ${s.wall}%.3f (ratio ${s.wall / floor}%.2f)")
+            Some(s.wall / floor)
           }
         }
       }
       if (ratios.isEmpty) None else Some(ratios.sum / ratios.size)
     }
-    // Cal-gated retry (r18, VERDICT r17 #1): the r17 canonical artifact
-    // was captured in a 1.65× host phase the cal instrument itself
-    // measured — and then had to be adjudicated from five out-of-band
-    // clean runs. When the start canary reads degraded, WAIT the phase
-    // out (bounded: ≤3 × 30 s, and never past 240 s elapsed — the rep-
-    // shedding guards below still own the 590 s kill budget) and
-    // re-probe; the retry count rides the cal array (5th element, only
-    // when > 0) so the artifact documents its own retry in-band.
+    // a degraded start canary waits the phase out: ≤ 3 × 30 s, never
+    // past 240 s elapsed
     var calStart = calPoint()
     var calRetries = 0
-    while (calRetries < 3 && calStart.exists(_ > 1.3) &&
-        (System.nanoTime() - benchStart) / 1e9 < 240.0) {
+    while (calRetries < 3 && calStart.exists(_ > BenchRecord.Degraded) && elapsed < 240.0) {
       System.err.println(f"[bench] cal-start ${calStart.get}%.2f > 1.3 — " +
         f"host phase; waiting 30 s before re-probe (retry ${calRetries + 1})")
       Thread.sleep(30000L)
       calRetries += 1
       calStart = calPoint()
     }
-    var failed = List.empty[String]
+    val failed = mutable.ArrayBuffer.empty[String]
     val gcTimed0 = gcMillis()
-    // name, median, min, max, gcPct (GC share of summed rep wall, %),
-    // cpuCores (process CPU seconds per wall second across reps)
-    val results = selected.map { case (name, fn) =>
-      // Wall-budget degradation (same survival logic as the iso pass):
-      // the driver kills the process at 590 s, and a 145-query suite on
-      // a stalled host can brush that with 3 reps + the warm pass. Past
-      // 420 s elapsed, later reps are shed (never the first — every
-      // query still gets one timed rep) so a degraded host costs rep
-      // confidence, not the whole artifact.
-      val repsHere = {
-        val elapsed = (System.nanoTime() - benchStart) / 1e9
-        if (elapsed > 480.0) 1.min(reps)
-        else if (elapsed > 420.0) 2.min(reps)
-        else reps
-      }
+    val stats = selected.map { case (name, fn) =>
+      // past 420 s / 480 s later reps are shed; every query keeps one
+      val repsHere =
+        if (elapsed > 480.0) 1.min(reps) else if (elapsed > 420.0) 2.min(reps) else reps
       if (repsHere < reps)
         System.err.println(s"[bench] $name reps degraded to $repsHere (wall budget)")
-      val reps3 = (1 to repsHere).map { _ =>
-        // Cold rep: drop any persisted intermediates BEFORE the timer so
-        // every rep pays full materialization (and so 53 queries × persist()
-        // never accumulate into storage-memory eviction thrash).
-        graft.operators.GraftCache.releaseAll()
-        spark.catalog.clearCache()
-        val (gc0, cpu0, t0) = (gcMillis(), cpuNanos(), System.nanoTime())
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          if (!failed.contains(name)) {
-            failed ::= name
-            System.err.println(s"[bench] $name FAILED: $e")
-            e.printStackTrace()
-          }
+      val shots = (1 to repsHere).map { _ =>
+        val s = shot(fn)
+        s.error.filterNot(_ => failed.contains(name)).foreach { e =>
+          failed += name
+          System.err.println(s"[bench] $name FAILED: $e")
+          e.printStackTrace()
         }
-        val wall = (System.nanoTime() - t0) / 1e9
-        (wall, (gcMillis() - gc0) / 1e3, (cpuNanos() - cpu0) / 1e9)
+        s
       }
       System.err.println(s"[bench] $name reps=" +
-        reps3.map(r => f"${r._1}%.3f").mkString(",") +
-        " gc=" + reps3.map(r => f"${r._2}%.2f").mkString(",") +
-        " cpu=" + reps3.map(r => f"${r._3}%.1f").mkString(","))
-      val sortedT = reps3.map(_._1).sorted
-      val wallSum = reps3.map(_._1).sum
-      // capped at 99: a 2-digit worst width (GC share past 99% of wall
-      // carries no extra diagnosis), part of the r14 line-budget trim
-      val gcPct = math.min(99L,
-        math.round(100.0 * reps3.map(_._2).sum / math.max(wallSum, 1e-9)))
-      val cpuCores =
-        if (reps3.exists(_._3 < 0)) -1.0 else reps3.map(_._3).sum / math.max(wallSum, 1e-9)
-      (name, sortedT(sortedT.length / 2), sortedT.head, sortedT.last, gcPct, cpuCores)
+        shots.map(s => f"${s.wall}%.3f").mkString(",") +
+        " gc=" + shots.map(s => f"${s.gcSec}%.2f").mkString(",") +
+        " cpu=" + shots.map(s => f"${s.cpuSec}%.1f").mkString(","))
+      val walls = shots.map(_.wall).sorted
+      val wallSum = math.max(walls.sum, 1e-9)
+      QueryStat(name, walls(walls.length / 2), walls.head, walls.last,
+        math.min(99L, math.round(100.0 * shots.map(_.gcSec).sum / wallSum)),
+        shots.map(_.cpuSec).sum / wallSum)
     }
     val gcTimedSec = (gcMillis() - gcTimed0) / 1e3
-    // end-of-suite calibration point: brackets the timed phase (the iso
-    // pass below has its own wall guard and is evidence, not a median).
-    // Skipped near the driver's 590 s kill — a one-point cal still says
-    // what the host looked like when the medians STARTED.
-    val calEnd =
-      if ((System.nanoTime() - benchStart) / 1e9 > 540.0) None else calPoint()
-    // END-canary re-probe (r19, VERDICT r18 #3): a degraded end canary
-    // is ambiguous — the suite may have run clean with a late host
-    // phase landing on the probe alone. The re-probe itself runs AFTER
-    // the iso pass (sleeping here would spend the iso-adjudication
-    // window — the ADVICE r18 budget interaction); what is decided NOW
-    // is only the line-byte RESERVE for its worst rendering (",0,9.9"),
-    // so iso admission can never fill the line past what the re-probed
-    // cal array needs.
-    val calReprobeReserve = if (calEnd.exists(_ > 1.3)) 6 else 0
-    var calEndReprobe: Option[Double] = None
-    // Per-query precision is ADAPTIVE twice over (r20, VERDICT r19 #1:
-    // the queries keys restore their driver-parseable "q" prefix, and
-    // the ~167 B that costs is paid by precision, not by evidence
-    // fields). fqAt(v, t2) renders two decimals below t2, one decimal
-    // below 10 s, whole seconds past that; the RUNG (t2 tried in
-    // {10, 2.5, 1, 0.5}, with 0 as the untried fallback) is chosen at
-    // assembly as the widest whose fully-rendered line fits the budget
-    // with iso slack — so a clean run keeps 2-decimal
-    // floor-query precision and only an all-slow pathological run
-    // degrades to the guaranteed-fit 1-decimal rung (≤3-char widths,
-    // pinned by BenchContractSpec). Full 3-decimal per-rep detail is on
-    // stderr above.
-    // tier by the RENDERED width, not the value: v in [9.995,10) rounds
-    // to "10.00" and [99.95,100) to "100.0" — 5 chars if tiered by v
-    // alone, breaking the width model BenchContractSpec pins
-    def fqAt(v: Double, t2: Double): String = {
-      var s =
-        if (v < t2) "%.2f".formatLocal(Locale.ROOT, v)
-        else "%.1f".formatLocal(Locale.ROOT, v)
-      if (s.length > 4) s = "%.1f".formatLocal(Locale.ROOT, v)
-      if (s.length > 4) s = "%.0f".formatLocal(Locale.ROOT, v)
-      // the guaranteed-fit rung's width model is ≤3 chars at EVERY
-      // magnitude ("9.9", "59", "171")
-      if (t2 == 0.0 && s.length > 3) s = "%.0f".formatLocal(Locale.ROOT, v)
-      // strip trailing zeros (and a bare trailing dot): "0.80" → "0.8",
-      // "1.00" → "1" — JSON-valid, precision-identical, and on a real
-      // 153-median line it returns ~100 B to the iso budget (the r13
-      // verdict's "ran out of line budget" failure mode). The worst-case
-      // width model is untouched: "9.99"/"9.9" have no trailing zero.
-      if (s.contains('.')) s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse
-      else s
-    }
-    // legacy 2-decimal renderer: diag best-rep values and anything not
-    // under the rung ladder
-    def fq(v: Double): String = fqAt(v, 10.0)
-    def f1(v: Double): String = "%.1f".formatLocal(Locale.ROOT, v)
-    // cores-busy: one decimal below 10 (sub-core starvation like 1.7 is
-    // the diagnostic), whole cores above (32.0 → 32 — r14 budget trim),
-    // width-capped at 3 chars by LENGTH, not by tier (ADVICE r14: f1
-    // renders 9.99 as "10.0" — 4 chars at the boundary — and 100+-core
-    // hosts hit "%.0f" 3 chars; cap 99 like gcPct so the
-    // BenchContractSpec width model's 2-char pin is ≤ the true worst+1)
-    def fc(v: Double): String = {
-      val s = if (v < 10) f1(v) else "%.0f".formatLocal(Locale.ROOT, v)
-      if (s.length <= 3) s
-      else "%.0f".formatLocal(Locale.ROOT, math.min(v, 99.0))
-    }
-    // position-stable (ADVICE r13): a lone point must say WHICH end it
-    // measured, so the missing end renders as an explicit null instead
-    // of an ambiguous one-element array
-    // cal values cap at 9.9 (3-char width, r15 line-budget trim): a
-    // host running ≥10× over its floor is equally damning at "9.9",
-    // and the letter arms divide by cal only in the ~1–2 range.
-    // Since r20 cal ratios render at ONE decimal always ("1.47"→"1.5"):
-    // the ratio is read against 1.3/2× thresholds where deciseconds are
-    // noise, and the byte pays for the q-prefix restoration. Exact cal
-    // shot times stay on stderr.
-    // r16 line-budget trim (the 158th gate needed 12 B): when cal is
-    // present its array CARRIES g and w as elements 3 and 4 —
-    // "cal":[start,end,gcSec,warmSec] — saving the two field headers
-    // (−8 B vs separate "g":/"w": fields). Nothing downstream parses
-    // g/w (BenchContractSpec is the only reader); they stay separate
-    // fields only on non-cal scales, where the line is far under
-    // budget anyway.
-    def calJson(g: Long, w: Long): String = (calStart, calEnd) match {
-      case (None, None) => ""
-      case (a, b) =>
-        // elements 5–6: start-retry count and the END RE-PROBE value.
-        // Positional disambiguation: the retry count is rendered (even
-        // as 0) whenever a re-probe follows, so element 6 is always the
-        // re-probe. The FIRST end probe stays at element 2 — honest
-        // about what actually bracketed the timed suite; the re-probe
-        // is evidence the phase did or did not pass.
-        "\"cal\":[" + a.fold("null")(v => fqAt(math.min(v, 9.9), 0.0)) + "," +
-          b.fold("null")(v => fqAt(math.min(v, 9.9), 0.0)) + s",$g,$w" +
-          (if (calRetries > 0 || calEndReprobe.nonEmpty) s",$calRetries" else "") +
-          calEndReprobe.fold("")(v => "," + fqAt(math.min(v, 9.9), 0.0)) + "],"
-    }
-    val calPresent = calStart.nonEmpty || calEnd.nonEmpty
-    // Keys are the leading qNN id (unique across the suite; full names are
-    // in BASELINE.md) — the full-name map alone is ~1.8 KB and the
-    // collecting harness keeps only ~2 KB of output tail.
-    def qid(name: String): String = name.takeWhile(_ != '_')
-    // r20 (VERDICT r19 #1): the QUERIES map keys restore the "q" prefix
-    // ("q157", the r≤16 spelling) — the driver's per-query scanner never
-    // consumed the r17+ prefix-stripped keys and PERF_r19.per_query came
-    // back empty; parseability outranks the −1 B/gate the r17 lever
-    // bought. The ~167 B cost is funded by the precision rung ladder
-    // (fqAt above), dropping the iso null markers (r19 spent ~100 B on
-    // nine of them), and 1-decimal cal ratios. diag/iso keys STAY bare
-    // ("157"): they are house evidence, not driver contract — and a
-    // driver regex scanning for "qNN":number keys can then never match
-    // an iso entry and mistake an isolated shot for a median.
-    def rid(name: String): String = qid(name).stripPrefix("q")
-    def mediansAt(t2: Double): String = results
-      .map(r => "\"" + qid(r._1) + "\":" + fqAt(r._2, t2)).mkString("{", ",", "}")
-    // Self-diagnosis map (replaces r≤8's "stalls"): [best rep, worst rep,
-    // GC % of wall, CPU cores busy] for the ≤2 most suspicious queries —
-    // stall outliers (worst > 2× median and > 2 s over it) first, then the
-    // largest medians ≥ 1 s. Bounded at 2 entries for the line budget
-    // (7 in r9, 4 through r11's 139th query, 3 through the 144th; the iso
-    // map carries the adjudicating evidence for flagged queries, so
-    // diag+iso together still cover r9's ground).
-    val isStall = (r: (String, Double, Double, Double, Long, Double)) =>
-      r._4 > 2 * r._2 && r._4 - r._2 > 2.0
-    val suspicious = (results.filter(isStall) ++
-      results.filterNot(isStall).filter(_._2 >= 1.0).sortBy(-_._2)).take(2)
-    // sf emits as its basename ("sf0.1") — the directory prefix spent
-    // 15 B of the collector-tail budget on information the harness
-    // already knows (it set SPARK_GRAFT_SF_DIR)
-    val sfName = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    // Previous-round medians (r11 verdict): the best-rep trigger below
-    // structurally cannot catch a UNIFORMLY slow query — all reps slow
-    // ⇒ median ≈ best ⇒ no flag ⇒ an inflated median stands
-    // unexonerated in the canonical artifact. Compare against the last
-    // committed BENCH_r*.json instead (same sf only; a sf0.01 iteration
-    // run must never be "regressed" against a sf0.1 artifact).
-    // Extraction is a hand-rolled scan of the `"queries":{…}` object —
-    // no JSON library rides the unmanaged classpath, and that map is
-    // the only brace-delimited object whose values are bare numbers.
-    val prevMedians: Map[String, Double] = {
-      val dir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_PREV_DIR", "."))
-      // NEWEST-FIRST over ALL committed artifacts, first sf MATCH wins
-      // (ADVICE r12): if the newest artifact is a different-sf run, an
-      // older same-sf baseline must still arm the trigger — lastOption
-      // alone silently disabled it in exactly that case
-      Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-        .sortBy(-_.getName.replaceAll("\\D", "").toInt)
-        .iterator.map { f =>
-          try {
-            // the driver wraps its collected tail as a JSON STRING field
-            // (quotes escaped, `parsed` may be null on a truncated line)
-            // — unescape before scanning so the embedded bench line's
-            // queries map is findable either way
-            val txt = new String(
-              java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-              .replace("\\\"", "\"")
-            val tag = "\"queries\":{"
-            val qs = txt.indexOf(tag)
-            // accept all three sf spellings: r≤15 artifacts carry
-            // "sf0.1", r16–r19 the prefix-stripped string "0.1", r20+ a
-            // bare number (`"sf":0.1}` — no space, always last, so the
-            // driver wrapper's own `"sf": 0.1` field can't cross-match)
-            val sfMatch = txt.contains("\"sf\":\"" + sfName + "\"") ||
-              txt.contains("\"sf\":\"" + sfName.stripPrefix("sf") + "\"") ||
-              txt.contains("\"sf\":" + sfName.stripPrefix("sf") + "}")
-            if (qs < 0 || !sfMatch) None
-            else {
-              val body = txt.substring(qs + tag.length,
-                txt.indexOf('}', qs + tag.length))
-              System.err.println(s"[bench] regression baseline: ${f.getName}")
-              Some(Bench.scanMedians(body))
-            }
-          } catch { case _: Throwable => None }
-        }.collectFirst { case Some(m) => m }.getOrElse(Map.empty)
-    }
-    // Isolated re-measure at suite end (see scaladoc): one cold single
-    // shot per flagged query, in a map keyed like `queries`. Runs AFTER
-    // the per-rep stderr dump so a crash here still leaves the full
-    // suite detail on stderr. Two triggers feed the candidate list,
-    // prev-round regressions first (median > 2× last committed artifact —
-    // no exonerating evidence without an iso shot), then stall-flagged
-    // (median > 2× own best — already evidence-carrying; see isoOrder).
-    val flaggedStall = results
-      .filter(r => r._2 > 2 * r._3 && r._2 - r._3 > 0.5).sortBy(-_._2)
-    val regressed = results.flatMap { r =>
-      prevMedians.get(qid(r._1)).collect {
-        case p if r._2 > 2 * p && r._2 - p > 0.5 => (r._1, r._2, p)
-      }
-    }
-    val isoCandidates = Bench.isoOrder(
-      flaggedStall.map(_._1), regressed)
-    // The iso entry count is BYTE-BUDGETED, not fixed: the collector
-    // keeps ~1918 B of line, and the rest of the line is fully known
-    // here — whatever headroom the REAL medians leave (typically ~800 B;
-    // the contract-spec worst case leaves room for 3) is spent on
-    // adjudication slots, so a round with 15 uniformly-inflated queries
-    // can exonerate them all inline instead of capping at 3. Each
-    // prospective entry is costed at its worst width (`"NNN":9.9,` —
-    // bare keys since r20) BEFORE measuring, so the line can never
-    // overflow after the fact.
-    val fails = if (failed.isEmpty) "" else
-      "\"failed\":" + failed.reverse.map("\"" + _ + "\"")
-        .mkString("[", ",", "],")
-    val onlyJson = only.fold("")(o =>
-      "\"only\":" + o.map("\"" + _ + "\"").mkString("[", ",", "]") + ",")
-    val total = results.map(_._2).sum
-    // r16 line-budget trims beside the cal fold: the metric value is
-    // "t" (the prompt contract elides the value — only the key is
-    // load-bearing; −4 B) and sf drops its redundant "sf" prefix
-    // ("sf0.1" → "0.1"; the prev-round matcher above accepts both
-    // spellings so r≤15 artifacts still arm the trigger; −2 B).
-    val sfShort = sfName.stripPrefix("sf")
-    // r20: sf renders as a bare JSON number when it is one ("sf":0.1 —
-    // the driver's own wrapper records sf as a number; −2 B), falling
-    // back to the quoted string for non-numeric directory basenames
-    val sfJson =
-      if (sfShort.matches("\\d+(\\.\\d+)?")) s""""sf":$sfShort"""
-      else s""""sf":"$sfShort""""
-    // r20 line-budget caps: g at 9 (GC past 9 s in the timed phase is
-    // already pathological — r15/r19 A/Bs measured ~1 s; full GC detail
-    // is on stderr) and w at 99 (a warm pass pinned at "99" reads as
-    // exactly the degraded-host flag r13's 188 s was). Both bytes fund
-    // the q-prefix restoration.
-    val gWorst = math.min(9, math.round(gcTimedSec))
-    val wWorst = math.min(99, math.round(warmSec))
-    def gwJson(g: Long, w: Long) =
-      if (calPresent) "" else s""""g":$g,"w":$w,"""
-    // Rung selection (see fqAt): the widest precision whose line — with
-    // worst-case cal and the iso-wrapper pad — fits the budget. The
-    // t2=0.5 rung exists because the driver's per-query ratios are most
-    // precision-sensitive on the sub-0.5 s floor majority (0.15 at one
-    // decimal reads 0.1 or 0.2 — a manufactured 2×); iso slots yield to
-    // median precision under byte pressure (shed shots live on stderr).
-    // The final rung (t2=0) is the BenchContractSpec-pinned guaranteed
-    // fit.
-    // the end-reprobe reserve is subtracted here too: a rung chosen at
-    // exactly the budget would otherwise overflow by the ",0,9.9" the
-    // re-probe appends to the cal array after the iso pass
-    val rung = Seq(10.0, 2.5, 1.0, 0.5).find { t2 =>
-      (s"""{"metric":"t","value":${fqAt(total, t2)},"unit":"sec",""" +
-        onlyJson + s""""queries":${mediansAt(t2)},""" + s""""iso":{},""" +
-        calJson(9, 99) + gwJson(9, 99) +
-        fails + sfJson + "}").length <= 1918 - calReprobeReserve
-    }.getOrElse(0.0)
-    if (rung != 10.0)
+    // skipped near the kill: a one-point cal still says what the host
+    // looked like when the medians started
+    val calEnd = if (elapsed > 540.0) None else calPoint()
+    val measured = BenchRecord(stats, failed.toSeq, only, calStart, calEnd, calRetries,
+      None, gcTimedSec, warmSec, sfName, Nil)
+    val prev = prevMedians(new java.io.File(sys.env.getOrElse("SPARK_GRAFT_PREV_DIR", ".")), sfName)
+    val flaggedStall = stats
+      .filter(q => q.median > 2 * q.best && q.median - q.best > 0.5).sortBy(-_.median)
+    val regressed = stats.flatMap(q => prev.get(qid(q.name)).collect {
+      case p if q.median > 2 * p && q.median - p > 0.5 => (q.name, q.median, p)
+    })
+    val rung = BenchRecord.rung(measured)
+    if (rung != BenchRecord.Rungs.head)
       System.err.println(s"[bench] medians precision rung t2=$rung (line budget)")
-    val medians = mediansAt(rung)
-    def lineLen(diagJson: String) =
-      (s"""{"metric":"t","value":${fqAt(total, rung)},"unit":"sec",""" +
-        onlyJson + s""""queries":$medians,""" + diagJson + s""""iso":{},""" +
-        calJson(9, 99) + gwJson(9, 99) +
-        fails + sfJson + "}").length
-    // worst-rep through fc (3-char: one decimal under 10, whole seconds
-    // capped above — r15 line-budget trim): the worst rep is stall
-    // MAGNITUDE evidence read against the best rep at 2× granularity,
-    // never a number anything divides by
-    def diagJson(n: Int) = {
-      val entries = suspicious.take(n)
-        .map(r => "\"" + rid(r._1) + "\":[" + fq(r._3) + "," + fc(r._4) + "," +
-          r._5 + "," + fc(r._6) + "]")
-      // an empty diag omits the KEY (r15, for q157's line budget): an
-      // absent field and zero entries read identically
-      if (entries.isEmpty) ""
-      else "\"diag\":" + entries.mkString("{", ",", "},")
-    }
-    // diag YIELDS to iso entirely during iso ADMISSION (r15, extending
-    // the r12 second-entry rule): iso carries the adjudicating evidence
-    // for EVIDENCE-LESS regressions (r14 verdict item 2 — the same
-    // priority isoOrder encodes), so the iso byte budget is computed
-    // against a diag-LESS line, guaranteeing ≥2 slots at any median
-    // width (the BenchContractSpec floor). diag is then RE-ADMITTED
-    // after the iso pass with exact rendered lengths — the first run of
-    // the r15 closing set showed the old pre-iso ladder dropping diag
-    // on worst-cost estimates while the final line left ~20 B unused.
-    val lineSansIso = lineLen("")
     val regressedNames = regressed.map(_._1).toSet
-    val medianByName = results.map(r => r._1 -> r._2).toMap
-    var isoBytes = 0
-    val iso = isoCandidates.take(16).flatMap { name =>
-      // The driver kills the process at 590 s. The iso pass triggers on
-      // hosts slow enough to FLAG queries — exactly when extra cold
-      // shots could push past the kill and lose the entire JSON line.
-      // Shots are shed once elapsed + the query's own predicted cost
-      // nears the budget, with the budget RESERVED for prev-round
-      // regression movers (r17 verdict #1: q49's regression shot was
-      // shed by a flat 500 s cutoff in the exact degraded run that
-      // needed it; a stall flag already carries its best rep + diag as
-      // evidence, so it yields first). A wall-shed shot is reported on
-      // stderr only and renders nothing in the line (see below).
-      // per-entry worst width: quote+id+quote+colon+value+comma with the
-      // value at fc's 3-char worst ("NN":9.9, — iso values render
-      // through fc since r15: exoneration compares against 2×
-      // thresholds, where one decimal is plenty; BASELINE carries
-      // full-precision isolated measures from SPARK_GRAFT_ONLY runs)
-      val entryCost = rid(name).length + 7
-      val deadline =
-        if (regressedNames(name)) Bench.IsoDeadlineRegression
-        else Bench.IsoDeadlineStall
-      val predicted = math.max(medianByName.getOrElse(name, 1.0), 1.0)
-      if ((System.nanoTime() - benchStart) / 1e9 + predicted > deadline) {
-        // r20 (VERDICT r19 #1): a wall-shed shot no longer rents line
-        // bytes as an explicit `"id":null` — r19's retried-cal run spent
-        // ~100 B on nine of them. "Flagged, NOT exonerated" is still
-        // self-describing: the stderr line below plus the query's
-        // presence in the flag conditions (median vs best/prev) say so.
+    val medianOf = stats.map(q => q.name -> q.median).toMap
+    val fnOf = selected.toMap
+    val withIso = admitIso(measured,
+        isoOrder(flaggedStall.map(_.name), regressed).take(16)) { name =>
+      val deadline = if (regressedNames(name)) IsoDeadlineRegression else IsoDeadlineStall
+      if (elapsed + math.max(medianOf(name), 1.0) > deadline) {
         System.err.println(s"[bench] $name isolated SKIPPED (wall budget)")
         None
-      } else if (lineSansIso + isoBytes + entryCost > 1918 - calReprobeReserve) {
-        System.err.println(s"[bench] $name isolated SKIPPED (line budget)")
-        None
       } else {
-      graft.operators.GraftCache.releaseAll()
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          true
-        } catch { case e: Throwable =>
-          // a query can fail HERE having passed every timed rep (e.g.
-          // transient gate-file contention at suite end) — emitting its
-          // time-to-failure would read as a fast isolated run and
-          // manufacture the exact wrong host-phase verdict; drop it
-          System.err.println(s"[bench] $name isolated FAILED: $e")
-          false
+        val s = shot(fnOf(name))
+        s.error match {
+          case Some(e) => System.err.println(s"[bench] $name isolated FAILED: $e"); None
+          case None => System.err.println(f"[bench] $name isolated=${s.wall}%.3f"); Some(s.wall)
         }
-      val wall = (System.nanoTime() - t0) / 1e9
-      if (ok) {
-        System.err.println(f"[bench] $name isolated=$wall%.3f")
-        isoBytes += entryCost
-        Some((name, wall))
-      } else None
       }
     }
-    val isoJson = if (iso.isEmpty) "" else
-      "\"iso\":" + iso.map(r => "\"" + rid(r._1) + "\":" + fc(r._2))
-        .mkString("{", ",", "},")
-    // END-canary re-probe (r19, VERDICT r18 #3), running last so its
-    // bounded sleeps spend only the line-print margin, never the iso
-    // window: while the latest end reading is degraded, wait 30 s and
-    // re-probe (≤2×, wall-gated well inside the 590 s kill). A clean
-    // re-probe says the end degradation was a transient that postdated
-    // the timed suite — a late phase no longer sinks the artifact by
-    // itself; a still-degraded re-probe confirms the phase was real.
+    // the end re-probe runs last, so its bounded sleeps spend only the
+    // line-print margin, never the iso window: a clean re-probe says the
+    // end degradation postdated the timed suite
+    var calEndReprobe: Option[Double] = None
     var endReprobes = 0
-    while (endReprobes < 2 &&
-        calEndReprobe.orElse(calEnd).exists(_ > 1.3) &&
-        (System.nanoTime() - benchStart) / 1e9 < 530.0) {
+    while (endReprobes < 2 && calEndReprobe.orElse(calEnd).exists(_ > BenchRecord.Degraded) &&
+        elapsed < 530.0) {
       System.err.println(f"[bench] cal-end ${calEndReprobe.orElse(calEnd).get}%.2f" +
         f" > 1.3 — re-probing after 30 s (end re-probe ${endReprobes + 1})")
       Thread.sleep(30000L)
       endReprobes += 1
       calEndReprobe = calPoint()
     }
-    // total through fq (4-char worst): the per-query medians carry the
-    // detail. Field renames, r14 line-budget trim for q152/q153: "gc" →
-    // "g" (now capped 99 — GC seconds past 99 in a 590 s window are
-    // already pathological) and "warm" → "w" (cap 999 kept: r13's real
-    // 188 s warm was signal). Same move as r13's gcsec/warmsec → gc/warm;
-    // nothing downstream parses these fields (BenchContractSpec is the
-    // only reader) — they are human/judge prose evidence.
-    // exact final assembly: the largest diag (2 → 1 → none) whose fully
-    // rendered line fits the 1918 B budget — no width models here, the
-    // string itself is the test
-    def fullLine(diagJ: String) =
-      s"""{"metric":"t","value":${fqAt(total, rung)},"unit":"sec",""" +
-        onlyJson + s""""queries":$medians,""" + diagJ + isoJson +
-        calJson(gWorst, wWorst) + gwJson(gWorst, wWorst) +
-        fails + sfJson + "}"
-    println(Seq(diagJson(2), diagJson(1), "").map(fullLine)
-      .find(_.length <= 1918).getOrElse(fullLine("")))
+    println(BenchRecord.render(withIso.copy(calEndReprobe = calEndReprobe)))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -1,56 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for declared queries to files — the
   * optimization-round evidence artifact (plans/rNN/<query>_<suffix>.txt).
   * Plan SHAPE is timing-independent, so this runs fine inside degraded
   * host phases where bench numbers are junk.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
-  * (no names = every declared query). The session mirrors Bench's
-  * committed local configuration so the captured plans are the plans
-  * the bench actually executes.
+  * (no names = every declared query; a name matches as in
+  * SPARK_GRAFT_ONLY). The session is Bench's, overrides included, so the
+  * captured plans are the plans the bench actually executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
-    val only: Option[Set[String]] =
-      if (args.length > 3) Some(args(3).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "4"))
-      .config("spark.sql.files.maxPartitionBytes", (1 << 20).toString)
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.locality.wait", "0s")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
-    val sel = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(p => p.contains(n) || p.contains(n.takeWhile(_ != '_')))
-    }
-    // ALL-JOBS capture (r20, VERDICT r19 #9): the final-plan dump hides
-    // eager sub-jobs (model builds, localCheckpoints, scalar subqueries
-    // executed during query CONSTRUCTION — the q162 "10 → 0 exchanges"
-    // claim was scoped to the scoring subplan because of exactly this).
-    // With SPARK_GRAFT_ALLJOBS=1 each query is EXECUTED (noop sink) with
-    // a QueryExecutionListener attached, and every job's formatted plan
-    // lands in one `<name>_<suffix>.txt` — so committed exchange counts
-    // match execution, not just the last job.
+    val sel = Bench.select(if (args.length > 3) Some(args(3).split(',').toSeq) else None)
+    // ALL-JOBS capture: the final-plan dump hides eager sub-jobs (model
+    // builds, localCheckpoints, scalar subqueries executed during query
+    // CONSTRUCTION). With SPARK_GRAFT_ALLJOBS=1 each query is EXECUTED
+    // (noop sink) with a QueryExecutionListener attached, and every job's
+    // formatted plan lands in one `<name>_<suffix>.txt` — so committed
+    // exchange counts match execution, not just the last job.
     val allJobs = sys.env.get("SPARK_GRAFT_ALLJOBS").contains("1")
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {

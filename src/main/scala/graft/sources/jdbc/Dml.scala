@@ -21,7 +21,27 @@ object Dml {
     * store backing the catalog table `name`; returns affected-row count.
     */
   def update(spark: SparkSession, name: String,
-      assignments: Seq[(String, Column)], where: Column): Long = {
+      assignments: Seq[(String, Column)], where: Column): Long =
+    remote(spark, name) { (t, sqlOf) =>
+      val sets = assignments
+        .map { case (col, v) => s"${t.options.dialect.quote(col)} = ${sqlOf(v)}" }.mkString(", ")
+      s"UPDATE ${t.options.table} SET $sets WHERE ${sqlOf(where)}"
+    }
+
+  /** Execute `DELETE FROM table WHERE where` remotely; returns the
+    * affected-row count (the reference's `CountExec` result for DML,
+    * `crates/common/src/util/count_exec.rs:14-70` — Spark SQL's
+    * `DELETE FROM` path cannot surface it, this API does).
+    */
+  def delete(spark: SparkSession, name: String, where: Column): Long =
+    remote(spark, name)((t, sqlOf) => s"DELETE FROM ${t.options.table} WHERE ${sqlOf(where)}")
+
+  /** Resolve catalog table `name` to its graft JDBC table, build one
+    * statement with `sqlOf` rendering Columns over that table in its
+    * dialect, and execute it remotely.
+    */
+  private def remote(spark: SparkSession, name: String)(
+      statement: (GraftJdbcTable, Column => String) => String): Long = {
     val df = spark.table(name)
     val rel = df.queryExecution.analyzed.collectFirst {
       case r: DataSourceV2Relation if r.table.isInstanceOf[GraftJdbcTable] => r
@@ -46,46 +66,16 @@ object Dml {
     def sqlOf(c: Column): String =
       unparser.expr(analyzed(c)).getOrElse(
         throw new IllegalArgumentException(s"expression not unparsable for ${d.name}: $c"))
+    executeUpdate(t.options, statement(t, sqlOf))
+  }
 
-    val sets = assignments
-      .map { case (col, v) => s"${d.quote(col)} = ${sqlOf(v)}" }.mkString(", ")
-    val sql = s"UPDATE ${t.options.table} SET $sets WHERE ${sqlOf(where)}"
-    val conn = t.options.connect()
+  /** Run one statement on a pooled connection; returns the affected-row
+    * count. */
+  private[jdbc] def executeUpdate(o: JdbcOptions, sql: String): Long = {
+    val conn = o.connect()
     try {
       val st = conn.createStatement()
       try st.executeUpdate(sql).toLong finally st.close()
-    } finally conn.close()
-  }
-
-  /** Execute `DELETE FROM table WHERE where` remotely; returns the
-    * affected-row count (the reference's `CountExec` result for DML,
-    * `crates/common/src/util/count_exec.rs:14-70` — Spark SQL's
-    * `DELETE FROM` path cannot surface it, this API does).
-    */
-  def delete(spark: SparkSession, name: String, where: Column): Long = {
-    val df = spark.table(name)
-    val rel = df.queryExecution.analyzed.collectFirst {
-      case r: DataSourceV2Relation if r.table.isInstanceOf[GraftJdbcTable] => r
-    }.getOrElse(throw new IllegalArgumentException(
-      s"$name is not a graft JDBC table"))
-    val t = rel.table.asInstanceOf[GraftJdbcTable]
-    val d = t.options.dialect
-    def analyzed(c: Column): Expression =
-      df.select(c).queryExecution.analyzed.collectFirst {
-        case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-          p.projectList.head match {
-            case a: org.apache.spark.sql.catalyst.expressions.Alias => a.child
-            case e => e
-          }
-      }.getOrElse(throw new IllegalArgumentException(s"cannot analyze $c"))
-    val unparser = new CatalystUnparser(d, rel.output.map(a => a.exprId -> d.quote(a.name)).toMap)
-    val cond = unparser.expr(analyzed(where)).getOrElse(
-      throw new IllegalArgumentException(s"predicate not unparsable for ${d.name}: $where"))
-    val conn = t.options.connect()
-    try {
-      val st = conn.createStatement()
-      try st.executeUpdate(s"DELETE FROM ${t.options.table} WHERE $cond").toLong
-      finally st.close()
     } finally conn.close()
   }
 }

@@ -67,13 +67,8 @@ final case class GraftJdbcTable(
   override def deleteWhere(predicates: Array[Predicate]): Unit = {
     val u = unparser
     val where = predicates.toSeq.map(p => u.expr(p).get)
-    val sql = s"DELETE FROM ${options.table}" +
-      (if (where.isEmpty) "" else where.mkString(" WHERE ", " AND ", ""))
-    val conn = options.connect()
-    try {
-      val st = conn.createStatement()
-      try st.executeUpdate(sql) finally st.close()
-    } finally conn.close()
+    Dml.executeUpdate(options, s"DELETE FROM ${options.table}" +
+      (if (where.isEmpty) "" else where.mkString(" WHERE ", " AND ", "")))
   }
 
   override def truncateTable(): Boolean = {

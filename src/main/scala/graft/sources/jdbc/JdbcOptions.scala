@@ -31,6 +31,13 @@ final case class JdbcOptions(map: Map[String, String]) extends Serializable {
     v
   }
 
+  /** A true/false option (default false), checked when the options are
+    * parsed for the same reason. */
+  private def bool(k: String): Boolean = map.get(k).exists { v =>
+    v.toBooleanOption.getOrElse(
+      throw new IllegalArgumentException(s"$k must be true or false, got '$v'"))
+  }
+
   val url: String = req("url")
   val table: String = map.getOrElse("dbtable", map.getOrElse("table", ""))
   val dialect: Dialect =
@@ -48,7 +55,16 @@ final case class JdbcOptions(map: Map[String, String]) extends Serializable {
   val partitionColumn: Option[String] = map.get("partitioncolumn")
   val lowerBound: Option[Long] = map.get("lowerbound").map(_.toLong)
   val upperBound: Option[Long] = map.get("upperbound").map(_.toLong)
-  val numPartitions: Int = map.getOrElse("numpartitions", "1").toInt
+  val numPartitions: Int = intAtLeast("numpartitions", 1, 1)
+  // a partial set would silently read one partition, and a one-partition
+  // scan still refuses aggregate pushdown and keeps TopN partial
+  if (numPartitions > 1) {
+    val missing = Seq("partitioncolumn", "lowerbound", "upperbound").filterNot(map.contains)
+    if (missing.nonEmpty) throw new IllegalArgumentException(
+      s"numpartitions=$numPartitions requires ${missing.mkString(", ")}")
+  }
+  for (lo <- lowerBound; hi <- upperBound if lo > hi)
+    throw new IllegalArgumentException(s"lowerbound $lo must be <= upperbound $hi")
 
   /** Incremental streaming: the monotonically increasing numeric column
     * whose max value is the micro-batch watermark ([[JdbcMicroBatchStream]]).
@@ -316,7 +332,10 @@ final case class JdbcOptions(map: Map[String, String]) extends Serializable {
   /** Opt-in connect-time validation ([[Preflight]] — the reference's
     * `ns_lookup.rs` analog): URL-shape check, file-path existence for
     * embedded engines, DNS + bounded TCP probe for servers. */
-  val preflight: Boolean = map.get("preflight").exists(_.toBoolean)
+  val preflight: Boolean = bool("preflight")
+
+  /** Refresh the remote table's statistics after a committed write. */
+  val analyzeAfterWrite: Boolean = bool("analyzeafterwrite")
 
   /** A pooled connection for this identity; `close()` returns it to the
     * per-JVM pool ([[ConnectionPool]]) instead of tearing it down.

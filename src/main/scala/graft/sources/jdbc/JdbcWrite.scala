@@ -354,7 +354,7 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
     logInfo(s"graft-jdbc write committed: $rows rows into ${options.table}")
     // Post-write statistics refresh (reference duckdb/write.rs:990):
     // opt-in, best-effort — a stats failure never fails a committed write.
-    if (options.map.get("analyzeafterwrite").exists(_.toBoolean))
+    if (options.analyzeAfterWrite)
       options.table match {
         case QuotedPair(ns, t) =>
           options.dialect.analyzeStatement(ns, t).foreach { sql =>

@@ -19,47 +19,38 @@ class BenchContractSpec extends AnyFunSuite {
   }
 
   test("worst-case bench JSON line fits the collector tail BESIDE sbt's trailer") {
-    // r20 model (VERDICT r19 #1 — re-derived BEFORE the renderer landed).
     // Budget: the collector keeps the LAST 2000 chars of output. After
     // the line: its own newline (1) + sbt's success trailer, worst
     // observed shape "[success] Total time: 1234 s (20:34), completed
     // Dec 28, 2026, 12:59:59 PM" + newline = 74. Before the line:
-    // nothing (r20: outputStrategy = StdoutOutput — the "[info] " logger
-    // prefix that used to ride ON the line is gone, returning its 7 B).
-    // True budget therefore 2000 − 75 = 1925; the renderer keeps
-    // admitting against the stricter legacy 1918 (margin for an exotic
-    // trailer).
-    // Worst line (the guaranteed-fit rung t2=0 — every fqAt value ≤3
-    // chars; iso/diag/failed/only all yield to zero; cal at its widest:
-    // start/end pinned 9.9, g capped 9, w capped 99, retry count 3, end
-    // re-probe 9.9):
-    //   {"metric":"t","value":590,"unit":"sec",   39
-    //   "queries":{...},                          10 + map + 1
-    //     map: 99 2-digit gates × 9 ("q01":9.9) + (gates−99) × 10
-    //          ("q101":9.9) + (gates−1) commas + 2 braces
-    //   "cal":[9.9,9.9,9,99,3,9.9],               27
-    //   "sf":0.1}                                 9
-    // At 167 gates: map = 99×9 + 68×10 + 166 + 2 = 1739 → line = 1825.
-    // Headroom: 93 B under the legacy 1918 admission budget, 100 B under
-    // the true 1925 — ~8 future gates at 11 B each before the next
-    // renderer trim is needed. The REAL line runs at rung t2=10 or 2.5
-    // (2-decimal floor queries) whenever, as in every committed round,
-    // actual medians are far narrower than the all-worst model.
+    // nothing (outputStrategy = StdoutOutput). True budget therefore
+    // 2000 − 75 = 1925; the renderer admits against the stricter
+    // BenchRecord.LineBudget 1918 (margin for an exotic trailer).
+    // Worst line: the guaranteed-fit rung renders every value in ≤ 3
+    // chars; iso, diag, failed and only all yield to zero; cal at its
+    // widest (start/end 9.9, g 9, w 99, retry count 3, end re-probe
+    // 9.9). Medians of 590/N s — the driver's 590 s kill bounds the
+    // total — render in 3 chars from the 2.5 rung down, so the renderer
+    // itself produces that line:
+    //   {"metric":"t","value":590,"unit":"sec",
+    //   "queries":{"q01":3.5,…,"q167":3.5},"cal":[9.9,9.9,9,99,3,9.9],"sf":0.1}
+    // 1825 B at 167 gates: 93 B under the 1918 admission budget, ~8
+    // future gates at 11 B each before the renderer needs another trim.
     val gates = SparkEntry.all.size
-    val worstMap = SparkEntry.all
-      .map(q => "\"" + qid(q.name) + "\":9.9").mkString("{", ",", "}")
-    val worstLine = s"""{"metric":"t","value":590,"unit":"sec",""" +
-      s""""queries":$worstMap,""" +
-      s""""cal":[9.9,9.9,9,99,3,9.9],""" + s""""sf":0.1}"""
-    val threeDigit = SparkEntry.all.count(q => qid(q.name).length > 3)
-    val model = 39 + 10 + (9 * (gates - threeDigit) + 10 * threeDigit +
-      (gates - 1) + 2) + 1 + 27 + 9
-    assert(worstLine.length == model,
-      s"worst-case line is ${worstLine.length} B, model says $model — " +
-        "the renderer/model drifted; re-derive before committing")
-    assert(worstLine.length <= 1918 - 90,
-      s"worst-case line ${worstLine.length} B leaves < 90 B headroom " +
+    val worst = BenchRecord(
+      SparkEntry.all.map(q => QueryStat(q.name, 590.0 / gates, 0, 0, 0, 0)),
+      Nil, None, Some(9.9), Some(9.9), 3, Some(9.9), 9, 99, "sf0.1", Nil)
+    val line = BenchRecord.line(worst, BenchRecord.rung(worst), diag = 0)
+    assert(line.contains("\"value\":590,") &&
+      line.endsWith("\"cal\":[9.9,9.9,9,99,3,9.9],\"sf\":0.1}"), line)
+    // 1825 B at 167 gates; each later gate adds `,"qNNN":3.5` = 11 B
+    assert(line.length == 1825 + 11 * (gates - 167),
+      s"worst-case line is ${line.length} B at $gates gates — the renderer " +
+        "changed; re-derive the worst case before committing")
+    assert(line.length <= BenchRecord.LineBudget - 90,
+      s"worst-case line ${line.length} B leaves < 90 B headroom " +
         "under the 1918 admission budget; trim the renderer before adding gates")
+    assert(BenchRecord.render(worst).length <= BenchRecord.LineBudget)
   }
 
   test("iso wall budget is reserved for regression movers (r17 verdict #1)") {

@@ -169,5 +169,25 @@ class ConnectionPoolSpec extends AnyFunSuite with SparkFixture {
     val lowest = JdbcOptions(Map("url" -> "jdbc:duckdb:/tmp/m.duckdb",
       "batchsize" -> "1", "poolmax" -> "1", "fetchsize" -> "0"))
     assert((lowest.batchSize, lowest.poolMax, lowest.fetchSize) == ((1, 1, 0)))
+    // booleans and the range-partition set reject at parse time too: a
+    // bad analyzeafterwrite used to throw only after the write had
+    // committed, and a partial range set silently read one partition
+    val base = Map("url" -> "jdbc:duckdb:/tmp/m.duckdb")
+    val range = Map("partitioncolumn" -> "k", "lowerbound" -> "1", "upperbound" -> "41",
+      "numpartitions" -> "4")
+    for ((bad, named) <- Seq(
+        Map("analyzeafterwrite" -> "yes") -> "analyzeafterwrite",
+        Map("preflight" -> "1") -> "preflight",
+        Map("numpartitions" -> "0") -> "numpartitions",
+        (range - "partitioncolumn") -> "partitioncolumn",
+        (range - "lowerbound" - "upperbound") -> "lowerbound, upperbound",
+        (range + ("lowerbound" -> "42")) -> "lowerbound 42 must be <= upperbound 41")) {
+      val e = intercept[IllegalArgumentException](JdbcOptions(base ++ bad))
+      assert(e.getMessage.contains(named), e.getMessage)
+    }
+    val legal = JdbcOptions(base ++ range + ("lowerbound" -> "41") +
+      ("analyzeafterwrite" -> "TRUE") + ("preflight" -> "false"))
+    assert((legal.numPartitions, legal.analyzeAfterWrite, legal.preflight) == ((4, true, false)))
+    assert(JdbcOptions(base + ("numpartitions" -> "1")).numPartitions == 1)
   }
 }

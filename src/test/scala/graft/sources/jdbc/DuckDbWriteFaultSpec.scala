@@ -133,6 +133,15 @@ class DuckDbWriteFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(stageTables().isEmpty, s"$kind: ${stageTables().mkString(",")}")
       assert(ConnectionPool.checkedOut(opts) == 0, kind)
     }
+    // a bad option fails when the options are parsed, before any task
+    // runs: no injected failure fired and nothing was staged or moved
+    DuckDbWriteFaultSpec.flushedBeforeFailure.set(-1)
+    val bad = intercept[IllegalArgumentException](
+      input(_ => true).writeTo("fd.app.fail").option("analyzeafterwrite", "yes").append())
+    assert(bad.getMessage.contains("analyzeafterwrite"), bad.getMessage)
+    assert(DuckDbWriteFaultSpec.flushedBeforeFailure.get() == -1)
+    assert(rows("fd.app.fail") == before)
+    assert(stageTables().isEmpty, stageTables().mkString(","))
   }
 }
 
