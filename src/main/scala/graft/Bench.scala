@@ -42,10 +42,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     isolated cold shots of two code-frozen floor queries, right after
   *     the warm pass and right after the timed suite. A uniform host phase
   *     reads cal ≈ 1.2–1.5 with no per-query flag; a real regression
-  *     reads cal ≈ 1.0. sf0.1 only, where the floors are documented. A
-  *     degraded start is retried after waiting the phase out and the retry
-  *     count rides as element 5; a degraded end is re-probed after the iso
-  *     pass and the re-probe rides as element 6.
+  *     reads cal ≈ 1.0. sf0.1 only, where the floors are documented, per
+  *     core count ([[calFloors]]); at a core count without floors cal is
+  *     the raw mean in seconds and is never retried. A degraded start is
+  *     retried after waiting the phase out and the retry count rides as
+  *     element 5; a degraded end is re-probed after the iso pass and the
+  *     re-probe rides as element 6.
   *
   * Every wall guard below cuts against the driver's 590 s kill, so a
   * degraded host costs reps, iso shots or cal points, never the line.
@@ -85,6 +87,15 @@ object Bench {
     "\"q?(\\d+)\":([0-9.]+)".r.findAllMatchIn(body)
       .map(m => "q" + m.group(1) -> m.group(2).toDouble).toMap
 
+  private def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** Isolated q01 and q08 medians at sf0.1 (BASELINE.md "Cal floors"),
+    * keyed by the session's local[N] core count.
+    */
+  val calFloors: Map[Int, Seq[(String, Double)]] = Map(
+    32 -> Seq("q01" -> 0.54, "q08" -> 1.04),
+    4 -> Seq("q01" -> 1.07, "q08" -> 1.81))
+
   /** The committed local session, shared by Bench and PlanDump so dumped
     * plans are the plans the bench times. SPARK_GRAFT_CPUS (local[N]),
     * SPARK_GRAFT_SHUFFLE (shuffle partitions), SPARK_GRAFT_MAXPART (split
@@ -95,7 +106,7 @@ object Bench {
     val extra = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(';')).map(_.split("=", 2)).collect { case Array(k, v) => (k, v) }
     val base = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[$cpus]")
       // 4 is the measured knee at sf0.1 (round 6, 3-rep cold medians on
       // the multi-stage dedup subset: 32 → 15.1 s, 8 → 11.0 s, 4 → 8.2 s,
       // 2 → 7.9 s but with floor-query regressions): per-task launch
@@ -227,10 +238,15 @@ object Bench {
     val warm0 = System.nanoTime()
     selected.foreach { case (_, fn) => shot(fn) }
     val warmSec = (System.nanoTime() - warm0) / 1e9
-    // q01 and q08: code frozen since r10, isolated floors in BASELINE.md
-    val calFloors = Seq("q01" -> 0.54, "q08" -> 1.04)
+    // q01 and q08: code frozen since r10. Their floors depend on the
+    // core count, so a host whose count has no floor reports the raw
+    // canary (mean seconds) and never retries.
+    val floors = calFloors.get(cpus)
+    if (floors.isEmpty && sfName == "sf0.1")
+      System.err.println(s"[bench] no cal floors for local[$cpus]: cal is raw seconds, no retries")
+    val canaries = floors.getOrElse(Seq("q01" -> 1.0, "q08" -> 1.0))
     def calPoint(): Option[Double] = if (sfName != "sf0.1") None else {
-      val ratios = calFloors.flatMap { case (id, floor) =>
+      val ratios = canaries.flatMap { case (id, floor) =>
         selected.find(q => qid(q._1) == id).flatMap { case (name, fn) =>
           val s = shot(fn)
           if (s.error.nonEmpty) { System.err.println(s"[bench] cal $name FAILED, dropped"); None }
@@ -242,12 +258,14 @@ object Bench {
       }
       if (ratios.isEmpty) None else Some(ratios.sum / ratios.size)
     }
+    def degraded(cal: Option[Double]): Boolean =
+      floors.isDefined && cal.exists(_ > BenchRecord.Degraded)
     // a degraded start canary waits the phase out: ≤ 3 × 30 s, never
     // past 240 s elapsed
     var calStart = calPoint()
     var calRetries = 0
-    while (calRetries < 3 && calStart.exists(_ > BenchRecord.Degraded) && elapsed < 240.0) {
-      System.err.println(f"[bench] cal-start ${calStart.get}%.2f > 1.3 — " +
+    while (calRetries < 3 && degraded(calStart) && elapsed < 240.0) {
+      System.err.println(f"[bench] cal-start ${calStart.get}%.2f > 1.3 - " +
         f"host phase; waiting 30 s before re-probe (retry ${calRetries + 1})")
       Thread.sleep(30000L)
       calRetries += 1
@@ -317,10 +335,9 @@ object Bench {
     // end degradation postdated the timed suite
     var calEndReprobe: Option[Double] = None
     var endReprobes = 0
-    while (endReprobes < 2 && calEndReprobe.orElse(calEnd).exists(_ > BenchRecord.Degraded) &&
-        elapsed < 530.0) {
+    while (endReprobes < 2 && degraded(calEndReprobe.orElse(calEnd)) && elapsed < 530.0) {
       System.err.println(f"[bench] cal-end ${calEndReprobe.orElse(calEnd).get}%.2f" +
-        f" > 1.3 — re-probing after 30 s (end re-probe ${endReprobes + 1})")
+        f" > 1.3 - re-probing after 30 s (end re-probe ${endReprobes + 1})")
       Thread.sleep(30000L)
       endReprobes += 1
       calEndReprobe = calPoint()

@@ -296,6 +296,15 @@ trait Dialect extends Serializable {
     * unprobed/unspecified — false.
     */
   def supportsSortedDerivedTable: Boolean = false
+
+  /** The statement a plain scan sends for `sql`, whose output columns
+    * are `cols`, and the output positions whose string values then
+    * arrive as a Blob of their UTF-8 bytes. `remoteType` gives a
+    * column's remote type name where the value may travel that way
+    * (None otherwise). Default: `sql` unchanged, no byte columns.
+    */
+  def utf8Wire(sql: String, cols: Seq[String],
+      remoteType: String => Option[String]): (String, Set[Int]) = (sql, Set.empty)
 }
 
 /** Apache Derby — the live embedded backend for tests and queries. */
@@ -454,6 +463,24 @@ object DuckDbDialect extends Dialect {
     else attachments.map { case (n, p) =>
       s"ATTACH IF NOT EXISTS ${stringLiteral(p)} AS ${quote(n)} (READ_ONLY)"
     } :+ s"SET search_path = ${stringLiteral((mainDb +: attachments.map(_._1)).mkString(","))}"
+  /** VARCHAR columns travel as `encode(..)` BLOBs: DuckDB's driver
+    * builds a Java String for every VARCHAR value inside its fetch,
+    * while a BLOB's bytes copy straight into the column vector (probed
+    * live, 250k rows: about 2× faster per string column). Only remote
+    * VARCHARs: `encode` has no overload for UUID, ENUM or JSON.
+    */
+  override def utf8Wire(sql: String, cols: Seq[String],
+      remoteType: String => Option[String]): (String, Set[Int]) = {
+    val utf8 = cols.indices
+      .filter(i => remoteType(cols(i)).exists(_.equalsIgnoreCase("VARCHAR"))).toSet
+    if (utf8.isEmpty) (sql, utf8)
+    else {
+      val sel = cols.zipWithIndex.map { case (c, i) =>
+        if (utf8(i)) s"encode(q.${quote(c)}) AS ${quote(c)}" else s"q.${quote(c)}"
+      }
+      (s"SELECT ${sel.mkString(", ")} FROM ($sql) AS q", utf8)
+    }
+  }
 }
 
 object SqliteDialect extends Dialect {

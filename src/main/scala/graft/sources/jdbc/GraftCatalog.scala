@@ -120,6 +120,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def introspect(ident: Identifier): StructType = withConn { c =>
     val ps = c.prepareStatement(s"SELECT * FROM ${qualified(ident)} WHERE 1=0")
     try {
+      JdbcScan.recordTypeNames(options.withTable(qualified(ident)), ps.getMetaData)
       val base = TypeMapping.schemaOf(ps.getMetaData,
         unsupportedAsString = options.readUnsupportedAsString)
       // catalog-level `customschema` (column-NAME-keyed, so it overlays

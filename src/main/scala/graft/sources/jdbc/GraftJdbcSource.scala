@@ -40,6 +40,7 @@ class GraftJdbcSource extends TableProvider {
     try {
       val ps = c.prepareStatement(s"SELECT * FROM ${o.fromClause} WHERE 1=0")
       try {
+        JdbcScan.recordTypeNames(o, ps.getMetaData)
         val base = TypeMapping.schemaOf(ps.getMetaData,
           unsupportedAsString = o.readUnsupportedAsString)
         val merged =

@@ -8,6 +8,8 @@ import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 
+import scala.collection.concurrent.TrieMap
+
 /** DSv2 scan over an external JDBC table with projection / predicate /
   * limit / TopK pushdown and optional range-partitioned parallelism.
   *
@@ -462,17 +464,48 @@ final case class JdbcScan(
             if (i == 0) s"($q < $hi2 OR $q IS NULL)"
             else if (i == n - 1) s"($q >= $lo2)"
             else s"($q >= $lo2 AND $q < $hi2)"
-          JdbcInputPartition(sqlFor(Some(pred)), i.toInt): InputPartition
+          partition(sqlFor(Some(pred)), i.toInt): InputPartition
         }.toArray
-      case _ => Array(JdbcInputPartition(sqlFor(None), 0))
+      case _ => Array(partition(sqlFor(None), 0))
     }
   }
 
+  /** A partition sends its statement through the dialect's string wire
+    * ([[Dialect.utf8Wire]]) when the scan is a plain projection: an
+    * aggregate or a pushed ORDER BY must stay the outermost statement,
+    * and the catch-all fold reads its columns by remote position. A
+    * federated derived table is skipped too: each literal set is a new
+    * FROM, so its type lookup would cost a remote round trip per query
+    * for a result of a few rows. [[sql]] and [[description]] stay the
+    * logical statement; the reader logs the one it sends.
+    */
+  private def partition(sql: String, idx: Int): JdbcInputPartition =
+    if (aggSelect.nonEmpty || orderBy.nonEmpty || catchAll.isDefined ||
+        options.map.contains("derivedalias")) JdbcInputPartition(sql, idx)
+    else {
+      val (wire, utf8) = options.dialect.utf8Wire(sql, schema.fieldNames.toSeq, remoteType)
+      JdbcInputPartition(wire, idx, utf8)
+    }
+
+  /** A column's remote type name, for string columns whose rendering
+    * the wire may change: not a ghost pin, not declared by `customschema`.
+    */
+  private lazy val remoteTypes: Map[String, String] = JdbcScan.remoteTypeNames(options)
+  private def remoteType(name: String): Option[String] =
+    if (ghostPins(name.toLowerCase) ||
+      !schema.fields.exists(f => f.name == name && f.dataType == StringType) ||
+      options.customSchema.exists(_.fields.exists(_.name.equalsIgnoreCase(name)))) None
+    else remoteTypes.get(name.toLowerCase)
+
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    if (JdbcReaderFactory.columnar(schema, catchAll)) Scan.ColumnarSupportMode.SUPPORTED
+    else Scan.ColumnarSupportMode.UNSUPPORTED
+
   override def createReaderFactory(): PartitionReaderFactory =
-    JdbcReaderFactory(options, schema, catchAll)
+    JdbcReaderFactory(options, schema, catchAll, limit)
 }
 
-object JdbcScan {
+object JdbcScan extends Logging {
   /** Driver-side remote COUNT(*) cache: every action plans a fresh scan,
     * so without this each action over the same (connection, FROM, WHERE)
     * re-issues a blocking remote count at planning time (ADVICE r6).
@@ -496,46 +529,73 @@ object JdbcScan {
 
   /** Test hook. */
   private[jdbc] def clearStatsCache(): Unit = statsCache.clear()
+
+  /** Remote column type names (lower-cased column name → the driver's
+    * type name) per compute context + FROM clause. Every catalog or
+    * source introspection of a table refreshes its entry; a scan of a
+    * table nobody introspected looks once. A failed lookup reads as no
+    * types, so the scan keeps the plain statement.
+    */
+  private val typeNames = TrieMap.empty[(String, String), Map[String, String]]
+
+  private[jdbc] def recordTypeNames(o: JdbcOptions, md: java.sql.ResultSetMetaData): Unit =
+    typeNames.put((o.computeContext, o.fromClause),
+      (1 to md.getColumnCount).map(i =>
+        md.getColumnLabel(i).toLowerCase -> md.getColumnTypeName(i)).toMap)
+
+  private[jdbc] def remoteTypeNames(o: JdbcOptions): Map[String, String] =
+    typeNames.getOrElse((o.computeContext, o.fromClause), try {
+      val c = o.connect()
+      try {
+        val ps = c.prepareStatement(s"SELECT * FROM ${o.fromClause} WHERE 1=0")
+        try recordTypeNames(o, ps.getMetaData) finally ps.close()
+      } finally c.close()
+      typeNames((o.computeContext, o.fromClause))
+    } catch {
+      case e: java.sql.SQLException =>
+        logInfo(s"graft-jdbc: type lookup failed, scanning without the string wire: $e")
+        Map.empty[String, String]
+    })
 }
 
-final case class JdbcInputPartition(sql: String, idx: Int) extends InputPartition
+/** One remote statement; `utf8` lists the output positions whose
+  * strings arrive as UTF-8 bytes ([[Dialect.utf8Wire]]). */
+final case class JdbcInputPartition(sql: String, idx: Int, utf8: Set[Int] = Set.empty)
+  extends InputPartition
 
-final case class JdbcReaderFactory(options: JdbcOptions, schema: StructType,
-    catchAll: Option[(String, StructType)] = None)
-  extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new JdbcPartitionReader(options, schema,
-      partition.asInstanceOf[JdbcInputPartition].sql, catchAll)
-}
-
-/** Executor-side cursor: streams `fetchSize`-row chunks from the remote
-  * statement (reference: Postgres 4000-row chunking, `conn.rs:443`).
-  *
-  * With a `catchAll` projection the physical cursor carries the pinned
-  * survivors followed by every folded remote column; `get()` re-shapes
-  * each physical row into the output schema, serializing the folded
-  * tail as one sorted-key JSON object string (the reference's
-  * `project_row`, `schema_projection.rs`). No folded columns at all →
-  * the catch-all reads as SQL NULL.
+/** Columnar when every column is in the vector-fill set and no
+  * catch-all folds rows; `limit` caps the first batch's allocation.
   */
-final class JdbcPartitionReader(options: JdbcOptions, schema: StructType, sql: String,
-    catchAll: Option[(String, StructType)] = None)
-  extends PartitionReader[InternalRow] with Logging {
+final case class JdbcReaderFactory(options: JdbcOptions, schema: StructType,
+    catchAll: Option[(String, StructType)] = None, limit: Option[Int] = None)
+  extends PartitionReaderFactory {
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    JdbcReaderFactory.columnar(schema, catchAll)
 
-  // physical result schema (what the rendered SQL actually selects)
-  private val physSchema: StructType = catchAll match {
-    case Some((ca, rest)) =>
-      StructType(schema.fields.filterNot(_.name.equalsIgnoreCase(ca)) ++ rest.fields)
-    case None => schema
-  }
-  // output index → physical index, -1 marking the catch-all slot
-  private val outIndex: Option[Array[Int]] = catchAll.map { case (ca, _) =>
-    var p = 0
-    schema.fields.map { f =>
-      if (f.name.equalsIgnoreCase(ca)) -1 else { val i = p; p += 1; i }
-    }
+  override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+    val p = partition.asInstanceOf[JdbcInputPartition]
+    new JdbcColumnarReader(schema, new JdbcCursor(options, p.sql), p.utf8,
+      JdbcColumnarReader.firstBatchRows(limit))
   }
 
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[JdbcInputPartition]
+    new JdbcPartitionReader(schema, new JdbcCursor(options, p.sql), catchAll, p.utf8)
+  }
+}
+
+object JdbcReaderFactory {
+  def columnar(schema: StructType, catchAll: Option[(String, StructType)]): Boolean =
+    catchAll.isEmpty && schema.fields.forall(f => TypeMapping.vectorizable(f.dataType))
+}
+
+/** One partition's remote statement, opened on first use: a reader
+  * that never asks for a row never executes it. `fetchSize`-row chunks
+  * stream from the remote (reference: Postgres 4000-row chunking,
+  * `conn.rs:443`).
+  */
+class JdbcCursor(options: JdbcOptions, sql: String) extends Logging {
   // per-resource open flags guard close(): forcing the lazies there
   // would EXECUTE the remote query for readers that never produced a
   // row — e.g. the N−1 tasks a satisfied LIMIT kills before their
@@ -553,37 +613,87 @@ final class JdbcPartitionReader(options: JdbcOptions, schema: StructType, sql: S
     s.setFetchSize(options.fetchSize)
     s
   }
-  private lazy val rs = {
+  lazy val rs: java.sql.ResultSet = {
     logInfo(s"graft-jdbc scan: $sql")
-    val r = stmt.executeQuery(sql)
+    JdbcCursor.executed.incrementAndGet()
+    val r = execute(stmt, sql)
     rsOpened = true
     r
   }
+
+  /** The one remote call; a spec overrides it to inject a failing ResultSet. */
+  protected def execute(stmt: java.sql.Statement, sql: String): java.sql.ResultSet =
+    stmt.executeQuery(sql)
+
+  def close(): Unit = {
+    try { if (rsOpened) rs.close() }
+    finally {
+      try { if (stmtOpened) stmt.close() }
+      finally { if (connOpened) conn.close() }
+    }
+  }
+}
+
+object JdbcCursor {
+  /** Test hook: scan statements executed in this JVM. */
+  private[jdbc] val executed = new java.util.concurrent.atomic.AtomicLong
+}
+
+/** Row reader for the schemas the columnar reader does not fill: a
+  * catch-all projection, array, struct, map and interval columns.
+  *
+  * With a `catchAll` projection the physical cursor carries the pinned
+  * survivors followed by every folded remote column; `get()` re-shapes
+  * each physical row into the output schema, serializing the folded
+  * tail as one sorted-key JSON object string (the reference's
+  * `project_row`, `schema_projection.rs`). No folded columns at all →
+  * the catch-all reads as SQL NULL.
+  */
+final class JdbcPartitionReader(schema: StructType, cursor: JdbcCursor,
+    catchAll: Option[(String, StructType)] = None, utf8: Set[Int] = Set.empty)
+  extends PartitionReader[InternalRow] {
+  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+
+  // physical result schema (what the rendered SQL actually selects)
+  private val physSchema: StructType = catchAll match {
+    case Some((ca, rest)) =>
+      StructType(schema.fields.filterNot(_.name.equalsIgnoreCase(ca)) ++ rest.fields)
+    case None => schema
+  }
+  private val physTypes = physSchema.fields.map(_.dataType)
+  // output index → physical index, -1 marking the catch-all slot
+  private val outIndex: Option[Array[Int]] = catchAll.map { case (ca, _) =>
+    var p = 0
+    schema.fields.map { f =>
+      if (f.name.equalsIgnoreCase(ca)) -1 else { val i = p; p += 1; i }
+    }
+  }
+  private val rest: StructType = catchAll.fold(new StructType())(_._2)
+  private val pinnedCount = outIndex.fold(0)(_.count(_ >= 0))
+
   // metadata-aware: TIME columns normalize to the epoch day regardless
   // of the driver's date-component convention
-  private lazy val getters = TypeMapping.getters(physSchema, rs.getMetaData)
+  private lazy val getters = TypeMapping.getters(physSchema, cursor.rs.getMetaData, utf8)
 
-  override def next(): Boolean = rs.next()
+  private def physGet(phys: InternalRow, p: Int): Any =
+    if (phys.isNullAt(p)) null else phys.get(p, physTypes(p))
+
+  override def next(): Boolean = cursor.rs.next()
   override def get(): InternalRow = {
-    val phys = TypeMapping.readRow(rs, getters)
+    val phys = TypeMapping.readRow(cursor.rs, getters)
     outIndex match {
       case None => phys
       case Some(idx) =>
-        val (_, rest) = catchAll.get
-        val pinnedCount = idx.count(_ >= 0)
-        def physGet(p: Int): Any =
-          if (phys.isNullAt(p)) null else phys.get(p, physSchema.fields(p).dataType)
-        val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(idx.length)
+        val out = new GenericInternalRow(idx.length)
         var i = 0
         while (i < idx.length) {
-          if (idx(i) >= 0) out.update(i, physGet(idx(i)))
+          if (idx(i) >= 0) out.update(i, physGet(phys, idx(i)))
           else if (rest.isEmpty) out.update(i, null)
           else {
-            val restRow =
-              new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(rest.length)
+            val restRow = new GenericInternalRow(rest.length)
             var j = 0
             while (j < rest.length) {
-              restRow.update(j, physGet(pinnedCount + j)); j += 1
+              restRow.update(j, physGet(phys, pinnedCount + j)); j += 1
             }
             out.update(i, org.apache.spark.unsafe.types.UTF8String.fromString(
               TypeMapping.toJson(rest, restRow)))
@@ -593,11 +703,5 @@ final class JdbcPartitionReader(options: JdbcOptions, schema: StructType, sql: S
         out
     }
   }
-  override def close(): Unit = {
-    try { if (rsOpened) rs.close() }
-    finally {
-      try { if (stmtOpened) stmt.close() }
-      finally { if (connOpened) conn.close() }
-    }
-  }
+  override def close(): Unit = cursor.close()
 }

@@ -3,6 +3,7 @@ package graft.sources.jdbc
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.vectorized.WritableColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -218,6 +219,12 @@ object TypeMapping {
     case other => throw new IllegalArgumentException(s"unsupported read type $other")
   }
 
+  /** A Blob column's bytes, null for SQL NULL. */
+  private def blobBytes(rs: ResultSet, i: Int): Array[Byte] = {
+    val b = rs.getBlob(i)
+    if (b == null) null else b.getBytes(1, b.length().toInt)
+  }
+
   /** `getBytes`, unless the driver serves binary only through a Blob:
     * DuckDB's JDBC driver throws NotSupported on `getBytes` (live-wire
     * finding). The choice is made on the column's first value and kept,
@@ -225,10 +232,6 @@ object TypeMapping {
     */
   private final class BinaryGetter extends Getter {
     private var viaBlob = false
-    private def blobBytes(rs: ResultSet, i: Int): Array[Byte] = {
-      val b = rs.getBlob(i)
-      if (b == null) null else b.getBytes(1, b.length().toInt)
-    }
     override def apply(rs: ResultSet, i: Int): Any =
       if (viaBlob) blobBytes(rs, i)
       else
@@ -350,22 +353,112 @@ object TypeMapping {
     row
   }
 
+  private def isTime(md: ResultSetMetaData, i: Int): Boolean =
+    md.getColumnType(i + 1) == Types.TIME
+
+  /** TIME on the epoch day: micros since midnight. */
+  private def microsOfDay(t: java.sql.Time): Long = t.toLocalTime.toNanoOfDay / 1000L
+
   /** Column getters for a result schema, refined by the LIVE ResultSet
     * metadata: a remote TIME column (mapped to TimestampType per the
     * documented §1.2 choice) reads `getTime` and lands on the EPOCH DAY
     * deterministically — JDBC drivers disagree on the date component of
-    * `getTimestamp` over TIME (Derby uses the current date).
+    * `getTimestamp` over TIME (Derby uses the current date). Positions in
+    * `utf8` hold string values that arrive as a Blob of their UTF-8 bytes
+    * ([[Dialect.utf8Wire]]).
     */
-  def getters(schema: StructType, md: ResultSetMetaData): Array[Getter] =
+  def getters(schema: StructType, md: ResultSetMetaData,
+      utf8: Set[Int] = Set.empty): Array[Getter] =
     schema.fields.zipWithIndex.map { case (f, i) =>
       f.dataType match {
-        case TimestampType | TimestampNTZType
-            if md.getColumnType(i + 1) == Types.TIME =>
-          (rs: ResultSet, p: Int) => {
-            val v = rs.getTime(p)
-            if (v == null) null else v.toLocalTime.toNanoOfDay / 1000L
-          }
+        case StringType if utf8(i) =>
+          (rs: ResultSet, p: Int) => UTF8String.fromBytes(blobBytes(rs, p))
+        case TimestampType | TimestampNTZType if isTime(md, i) => (rs: ResultSet, p: Int) => {
+          val v = rs.getTime(p)
+          if (v == null) null else microsOfDay(v)
+        }
         case dt => getter(dt)
+      }
+    }
+
+  /** The vector-fill set: types [[JdbcColumnarReader]] writes straight
+    * into a column vector. Schemas with anything else scan row-based.
+    */
+  def vectorizable(dt: DataType): Boolean = dt match {
+    case BooleanType | ByteType | ShortType | IntegerType | LongType | FloatType |
+         DoubleType | StringType | BinaryType | DateType | TimestampType |
+         TimestampNTZType => true
+    case _: DecimalType => true
+    case _ => false
+  }
+
+  /** One column fill: the current ResultSet row's value at position
+    * `p` into row `r` of a column vector.
+    */
+  trait Fill {
+    def apply(rs: ResultSet, p: Int, v: WritableColumnVector, r: Int): Unit
+  }
+
+  /** Column fills for a vectorizable result schema: the driver getters
+    * of [[getters]] (TIME over timestamp and UTF-8 Blob strings
+    * included), one typed fill per column, so a value reads the same
+    * through either reader. Primitive getters test `wasNull`; object
+    * getters test the returned reference.
+    */
+  def fills(schema: StructType, md: ResultSetMetaData,
+      utf8: Set[Int] = Set.empty): Array[Fill] =
+    schema.fields.zipWithIndex.map { case (f, i) =>
+      def bytes(read: (ResultSet, Int) => Array[Byte]): Fill = (rs, p, v, r) => {
+        val b = read(rs, p)
+        if (b == null) v.putNull(r) else v.putByteArray(r, b, 0, b.length)
+      }
+      f.dataType match {
+        case BooleanType => (rs, p, v, r) => {
+          val x = rs.getBoolean(p); if (rs.wasNull()) v.putNull(r) else v.putBoolean(r, x)
+        }
+        case ByteType => (rs, p, v, r) => {
+          val x = rs.getByte(p); if (rs.wasNull()) v.putNull(r) else v.putByte(r, x)
+        }
+        case ShortType => (rs, p, v, r) => {
+          val x = rs.getShort(p); if (rs.wasNull()) v.putNull(r) else v.putShort(r, x)
+        }
+        case IntegerType => (rs, p, v, r) => {
+          val x = rs.getInt(p); if (rs.wasNull()) v.putNull(r) else v.putInt(r, x)
+        }
+        case LongType => (rs, p, v, r) => {
+          val x = rs.getLong(p); if (rs.wasNull()) v.putNull(r) else v.putLong(r, x)
+        }
+        case FloatType => (rs, p, v, r) => {
+          val x = rs.getFloat(p); if (rs.wasNull()) v.putNull(r) else v.putFloat(r, x)
+        }
+        case DoubleType => (rs, p, v, r) => {
+          val x = rs.getDouble(p); if (rs.wasNull()) v.putNull(r) else v.putDouble(r, x)
+        }
+        case d: DecimalType => (rs, p, v, r) => {
+          val x = rs.getBigDecimal(p)
+          if (x == null) v.putNull(r) else v.putDecimal(r, Decimal(x, d.precision, d.scale), d.precision)
+        }
+        case StringType if utf8(i) => bytes(blobBytes)
+        case StringType => bytes((rs, p) => {
+          val s = rs.getString(p)
+          if (s == null) null else s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        })
+        case BinaryType =>
+          val g = new BinaryGetter
+          bytes((rs, p) => g(rs, p).asInstanceOf[Array[Byte]])
+        case DateType => (rs, p, v, r) => {
+          val x = rs.getDate(p)
+          if (x == null) v.putNull(r) else v.putInt(r, DateTimeUtils.fromJavaDate(x))
+        }
+        case TimestampType | TimestampNTZType if isTime(md, i) => (rs, p, v, r) => {
+          val x = rs.getTime(p)
+          if (x == null) v.putNull(r) else v.putLong(r, microsOfDay(x))
+        }
+        case TimestampType | TimestampNTZType => (rs, p, v, r) => {
+          val x = rs.getTimestamp(p)
+          if (x == null) v.putNull(r) else v.putLong(r, DateTimeUtils.fromJavaTimestamp(x))
+        }
+        case other => throw new IllegalArgumentException(s"non-vectorizable read type $other")
       }
     }
 
