@@ -298,13 +298,49 @@ trait Dialect extends Serializable {
   def supportsSortedDerivedTable: Boolean = false
 
   /** The statement a plain scan sends for `sql`, whose output columns
-    * are `cols`, and the output positions whose string values then
-    * arrive as a Blob of their UTF-8 bytes. `remoteType` gives a
-    * column's remote type name where the value may travel that way
-    * (None otherwise). Default: `sql` unchanged, no byte columns.
+    * are `cols`, and the output positions whose values then travel in
+    * another form ([[Wire]]). `remoteType` gives a column's remote type
+    * name where its value may travel another way (None otherwise).
+    * Default: `sql` unchanged, every value in its plain form.
     */
-  def utf8Wire(sql: String, cols: Seq[String],
-      remoteType: String => Option[String]): (String, Set[Int]) = (sql, Set.empty)
+  def columnWire(sql: String, cols: Seq[StructField],
+      remoteType: String => Option[String]): (String, Map[Int, Wire]) = (sql, Map.empty)
+
+  /** A statement reading the row count of the base table a scan's
+    * FROM clause `from` names from the remote catalog, without scanning
+    * the table. It returns one row per object `from` may resolve to:
+    * the count for a base table whose rows [[rowIdRange]] addresses,
+    * NULL for anything else; the count holds only as the sole row. None
+    * where `from` is no plain name (a table function, a derived table)
+    * and on dialects that keep no count (the default), so Spark plans
+    * those scans as before: one partition, unknown size.
+    */
+  def baseTableRowsSql(from: String): Option[String] = None
+
+  /** A predicate selecting the rows of a base table whose physical row
+    * id lies in [lo, hi), either bound open. Only asked for a table
+    * [[baseTableRowsSql]] counted.
+    */
+  def rowIdRange(lo: Option[Long], hi: Option[Long]): String =
+    throw new UnsupportedOperationException(s"$name: no row-id ranges")
+
+  /** A statement returning one row: the longest value in bytes of each
+    * of `cols` (string or binary columns of a base table
+    * [[baseTableRowsSql]] counted) from the remote engine's statistics,
+    * NULL where it keeps none. None (the default): no such statistics.
+    */
+  def maxValueBytesSql(from: String, cols: Seq[String]): Option[String] = None
+}
+
+/** How a column's values travel when [[Dialect.columnWire]] rewrites a
+  * scan's statement. */
+sealed trait Wire extends Serializable
+object Wire {
+  /** A string as a Blob of its UTF-8 bytes. */
+  case object Utf8 extends Wire
+  /** A date as its INTEGER day number since 1970-01-01 (proleptic
+    * Gregorian, Spark's own DateType value). */
+  case object EpochDay extends Wire
 }
 
 /** Apache Derby — the live embedded backend for tests and queries. */
@@ -468,18 +504,95 @@ object DuckDbDialect extends Dialect {
     * while a BLOB's bytes copy straight into the column vector (probed
     * live, 250k rows: about 2× faster per string column). Only remote
     * VARCHARs: `encode` has no overload for UUID, ENUM or JSON.
+    *
+    * DATE columns travel as their day number. `getDate` builds a
+    * `java.sql.Date` in the hybrid Julian calendar, which shifts dates
+    * before 1582-10-15 by up to ten days and turns `infinity` into a
+    * garbage date; the day number is exact (`infinity` reads as
+    * 2147483647, `-infinity` as -2147483647) and half the cost.
     */
-  override def utf8Wire(sql: String, cols: Seq[String],
-      remoteType: String => Option[String]): (String, Set[Int]) = {
-    val utf8 = cols.indices
-      .filter(i => remoteType(cols(i)).exists(_.equalsIgnoreCase("VARCHAR"))).toSet
-    if (utf8.isEmpty) (sql, utf8)
-    else {
-      val sel = cols.zipWithIndex.map { case (c, i) =>
-        if (utf8(i)) s"encode(q.${quote(c)}) AS ${quote(c)}" else s"q.${quote(c)}"
+  override def columnWire(sql: String, cols: Seq[StructField],
+      remoteType: String => Option[String]): (String, Map[Int, Wire]) = {
+    val wire: Map[Int, Wire] = cols.zipWithIndex.flatMap { case (f, i) =>
+      (remoteType(f.name).map(_.toUpperCase), f.dataType) match {
+        case (Some("VARCHAR"), StringType) => Some(i -> Wire.Utf8)
+        case (Some("DATE"), DateType) => Some(i -> Wire.EpochDay)
+        case _ => None
       }
-      (s"SELECT ${sel.mkString(", ")} FROM ($sql) AS q", utf8)
+    }.toMap
+    if (wire.isEmpty) (sql, wire)
+    else {
+      val sel = cols.zipWithIndex.map { case (f, i) =>
+        val c = s"q.${quote(f.name)}"
+        wire.get(i) match {
+          case Some(Wire.Utf8) => s"encode($c) AS ${quote(f.name)}"
+          case Some(Wire.EpochDay) =>
+            s"CAST($c - DATE '1970-01-01' AS INTEGER) AS ${quote(f.name)}"
+          case None => c
+        }
+      }
+      (s"SELECT ${sel.mkString(", ")} FROM ($sql) AS q", wire)
     }
+  }
+
+  /** `estimated_size` from `duckdb_tables()`, a catalog lookup where
+    * `COUNT(rowid)` would scan the row ids; it counts deleted rows until
+    * a checkpoint compacts them, so it is an upper bound. Every base
+    * table and view that `from` may name adds a row, read the way
+    * DuckDB may resolve the name (`a.t` as schema `a` or catalog `a`;
+    * attached catalogs are listed like the main one), so a view, or a
+    * name that also matches a view or a second table, yields no sole
+    * count. A table whose definition names a column `rowid` (which
+    * shadows the row id) counts as NULL. Listing the views costs most of
+    * the statement's 4 ms (DuckDB renders its ~120 internal views);
+    * `duckdb_tables()` alone takes 0.5 ms (probed, 250k-row table).
+    */
+  override def baseTableRowsSql(from: String): Option[String] =
+    nameParts(from).map { parts =>
+      def matches(name: String): String = {
+        def eq(col: String, v: String) = s"lower($col) = ${stringLiteral(v)}"
+        (parts match {
+          case Seq(t) => Seq(eq(name, t))
+          case Seq(s, t) =>
+            Seq(eq(name, t), s"(${eq("schema_name", s)} OR ${eq("database_name", s)})")
+          case Seq(d, s, t) => Seq(eq(name, t), eq("schema_name", s), eq("database_name", d))
+        }).mkString(" AND ")
+      }
+      "SELECT CASE WHEN regexp_matches(sql, '[(,]\\s*\"?rowid\"?\\s', 'i') THEN NULL " +
+        s"ELSE estimated_size END FROM duckdb_tables() WHERE ${matches("table_name")} " +
+        s"UNION ALL SELECT NULL FROM duckdb_views() WHERE ${matches("view_name")}"
+    }
+
+  override def rowIdRange(lo: Option[Long], hi: Option[Long]): String =
+    (lo.map(b => s"rowid >= $b") ++ hi.map(b => s"rowid < $b")).mkString("(", " AND ", ")")
+
+  /** `stats(c)` carries a string or blob column's `Max String Length`
+    * from the table's statistics; one `LIMIT 1` statement reads them
+    * all without scanning the table.
+    */
+  override def maxValueBytesSql(from: String, cols: Seq[String]): Option[String] =
+    Some(cols.map { c =>
+      val len = s"regexp_extract(stats(${quote(c)}), 'Max String Length: (\\d+)', 1)"
+      s"TRY_CAST(NULLIF($len, '') AS BIGINT)"
+    }.mkString("SELECT ", ", ", s" FROM $from LIMIT 1"))
+
+  /** `t`, `"s"."t"`, `c.s.t`: the lower-cased parts of a one- to
+    * three-part name, or None for anything else (a table function
+    * call, a derived table). DuckDB matches identifiers
+    * case-insensitively, quoted or not.
+    */
+  private[jdbc] def nameParts(from: String): Option[Seq[String]] = {
+    val Part = "\\s*(?:\"((?:[^\"]|\"\")+)\"|([A-Za-z_][A-Za-z0-9_$]*))\\s*(\\.|$)".r
+    @annotation.tailrec
+    def parse(rest: String, acc: Vector[String]): Option[Seq[String]] =
+      Part.findPrefixMatchOf(rest) match {
+        case Some(m) if acc.size < 3 =>
+          val part = Option(m.group(1)).map(_.replace("\"\"", "\""))
+            .getOrElse(m.group(2)).toLowerCase
+          if (m.group(3) == ".") parse(m.after.toString, acc :+ part) else Some(acc :+ part)
+        case _ => None
+      }
+    parse(from, Vector.empty)
   }
 }
 

@@ -22,10 +22,10 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 final class JdbcColumnarReader(
     schema: StructType,
     cursor: JdbcCursor,
-    utf8: Set[Int] = Set.empty,
+    wire: Map[Int, Wire] = Map.empty,
     firstBatchRows: Int = JdbcColumnarReader.BatchRows) extends PartitionReader[ColumnarBatch] {
 
-  private lazy val fills = TypeMapping.fills(schema, cursor.rs.getMetaData, utf8)
+  private lazy val fills = TypeMapping.fills(schema, cursor.rs.getMetaData, wire)
   private var vectors: Array[OnHeapColumnVector] = _
   private var batch: ColumnarBatch = _
   private var capacity = 0

@@ -27,7 +27,10 @@ import scala.collection.concurrent.TrieMap
   * Scale: the reference's SQL scans are always 1 partition
   * (`mod.rs:313`). Here `partitionColumn/lowerBound/upperBound/
   * numPartitions` splits the scan into range predicates executed by N
-  * executors concurrently — the improvement SURVEY §4.2 calls out.
+  * executors concurrently — the improvement SURVEY §4.2 calls out. On a
+  * dialect that counts base tables (DuckDB), a whole-table read splits
+  * by row id without any option, and the count sizes the scan for
+  * Spark's join planning ([[JdbcScan]]).
   */
 final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
   extends ScanBuilder
@@ -310,20 +313,62 @@ final case class JdbcScan(
 
   override def readSchema(): StructType = schema
 
-  /** Optimizer statistics (opt-in via `remotestats=count`): row count
-    * from one remote COUNT(*) over the SAME pushed predicates this scan
-    * carries, size estimated as rows × schema default width. Lazily
-    * computed once per planned scan; unknown (Spark's conservative
-    * default) when disabled, when an aggregate was pushed (base-row
-    * counts would overstate the grouped output), or on any remote error.
+  /** The remote row count of the base table this scan reads
+    * ([[Dialect.baseTableRowsSql]]): one catalog lookup per planned
+    * scan, made only when a split or Spark's statistics ask, and never
+    * cached across plans, so a table that grew is never planned on a
+    * stale count. None for anything but a plain base table, for an
+    * aggregate or catch-all scan (their rows are not the table's), and
+    * on any remote error.
+    */
+  private lazy val tableRows: Option[Long] =
+    if (aggSelect.nonEmpty || catchAll.isDefined) None
+    else options.dialect.baseTableRowsSql(options.fromClause).flatMap { sql =>
+      JdbcScan.remoteLongs(options, sql).toSeq match {
+        case Seq(Seq(n)) => n
+        case _ => None
+      }
+    }
+
+  /** Bytes per row of the output schema over a counted base table:
+    * Spark's 8-byte row header, each fixed-width column's default size,
+    * and each string or binary column's longest value plus 8 from the
+    * remote statistics ([[Dialect.maxValueBytesSql]]), so a table of
+    * long strings never looks small. None when any string width is
+    * unknown.
+    */
+  private def rowBytes: Option[Long] = {
+    val varying = schema.fields.filter(f =>
+      (f.dataType == StringType || f.dataType == BinaryType) && !ghostPins(f.name.toLowerCase))
+    val widths: Option[Seq[Long]] =
+      if (varying.isEmpty) Some(Nil)
+      else options.dialect.maxValueBytesSql(options.fromClause, varying.map(_.name).toSeq)
+        .flatMap(sql => JdbcScan.remoteLongs(options, sql).headOption)
+        .flatMap(row => if (row.forall(_.isDefined)) Some(row.flatten) else None)
+    widths.map(w => 8L + w.map(_ + 8L).sum + schema.fields.filterNot(varying.contains)
+      .map(_.dataType.defaultSize.toLong).sum)
+  }
+
+  /** Optimizer statistics. `remotestats=count` issues one remote
+    * COUNT(*) over the SAME pushed predicates this scan carries (exact,
+    * cached for a short TTL) and sizes rows at the schema's default
+    * width. Otherwise a counted base table ([[tableRows]]) reports its
+    * row count, an upper bound under a pushed filter, and rows ×
+    * [[rowBytes]] as its size, so a small remote table broadcasts and a
+    * table of long strings does not. Unknown (Spark's conservative
+    * default) when an aggregate was pushed (base-row counts would
+    * overstate the grouped output), for any scan that is not a counted
+    * base table, or on any remote error.
     */
   private lazy val stats: Statistics = {
-    def unknown = new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.empty()
-      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
+    def of(rows: Option[Long], size: Option[Long]): Statistics = new Statistics {
+      override def sizeInBytes(): java.util.OptionalLong =
+        size.fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
+      override def numRows(): java.util.OptionalLong =
+        rows.fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
     }
-    if (options.remoteStats != "count" || aggSelect.nonEmpty) unknown
-    else try {
+    if (aggSelect.nonEmpty) of(None, None)
+    else if (options.remoteStats == "count") try {
       val whereClause =
         if (where.isEmpty) "" else where.mkString(" WHERE ", " AND ", "")
       val countSql = s"SELECT COUNT(*) FROM ${options.fromClause}$whereClause"
@@ -340,16 +385,13 @@ final case class JdbcScan(
           } finally st.close()
         } finally c.close()
       }
-      val size = math.max(1L, n * schema.defaultSize)
-      new Statistics {
-        override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(size)
-        override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(n)
-      }
+      of(Some(n), Some(math.max(1L, n * schema.defaultSize)))
     } catch {
       case e: Exception =>
         logWarning(s"graft-jdbc stats failed, planning without: $e")
-        unknown
+        of(None, None)
     }
+    else of(tableRows, tableRows.flatMap(n => rowBytes.map(w => math.max(1L, n * w))))
   }
 
   override def estimateStatistics(): Statistics = stats
@@ -450,6 +492,29 @@ final case class JdbcScan(
     new JdbcMicroBatchStream(options, schema, where, wcol)
   }
 
+  /** Row-id ranges of a whole-table read ([[Dialect.rowIdRange]]): only
+    * without `numpartitions` or `partitioncolumn`, with nothing but the
+    * projection pushed at planning time (no WHERE, aggregate, ORDER BY,
+    * LIMIT or OFFSET), no catch-all fold, and a base table of at least
+    * two [[JdbcScan.RangeRows]] rows. k = min(default parallelism,
+    * rows / RangeRows) ranges; the first and last are open-ended, so
+    * every row id lands in exactly one range even when the count is
+    * stale or deletes left gaps. Each range reads in its own remote
+    * transaction, as an explicit `numpartitions` split does;
+    * `numpartitions=1` keeps one statement, one snapshot.
+    */
+  private def rowIdRanges: Option[Seq[String]] = {
+    val plain = !options.map.contains("numpartitions") && options.partitionColumn.isEmpty &&
+      where.isEmpty && orderBy.isEmpty && limit.isEmpty && pushedOffset.isEmpty
+    if (!plain) None
+    else tableRows.filter(_ >= 2L * JdbcScan.RangeRows).flatMap { n =>
+      val k = math.min(JdbcScan.defaultParallelism.toLong, n / JdbcScan.RangeRows).toInt
+      val edges = None +: (1 until k).map(i => Some(n * i / k)) :+ None
+      if (k < 2) None
+      else Some(edges.zip(edges.tail).map { case (lo, hi) => options.dialect.rowIdRange(lo, hi) })
+    }
+  }
+
   override def planInputPartitions(): Array[InputPartition] = {
     (options.partitionColumn, options.lowerBound, options.upperBound) match {
       case (Some(col), Some(lo), Some(hi)) if options.numPartitions > 1 =>
@@ -466,12 +531,17 @@ final case class JdbcScan(
             else s"($q >= $lo2 AND $q < $hi2)"
           partition(sqlFor(Some(pred)), i.toInt): InputPartition
         }.toArray
-      case _ => Array(partition(sqlFor(None), 0))
+      case _ => rowIdRanges match {
+        case Some(ranges) =>
+          ranges.zipWithIndex.map { case (r, i) => partition(sqlFor(Some(r)), i): InputPartition }
+            .toArray
+        case None => Array(partition(sqlFor(None), 0))
+      }
     }
   }
 
-  /** A partition sends its statement through the dialect's string wire
-    * ([[Dialect.utf8Wire]]) when the scan is a plain projection: an
+  /** A partition sends its statement through the dialect's column wire
+    * ([[Dialect.columnWire]]) when the scan is a plain projection: an
     * aggregate or a pushed ORDER BY must stay the outermost statement,
     * and the catch-all fold reads its columns by remote position. A
     * federated derived table is skipped too: each literal set is a new
@@ -483,17 +553,16 @@ final case class JdbcScan(
     if (aggSelect.nonEmpty || orderBy.nonEmpty || catchAll.isDefined ||
         options.map.contains("derivedalias")) JdbcInputPartition(sql, idx)
     else {
-      val (wire, utf8) = options.dialect.utf8Wire(sql, schema.fieldNames.toSeq, remoteType)
-      JdbcInputPartition(wire, idx, utf8)
+      val (wired, wire) = options.dialect.columnWire(sql, schema.fields.toSeq, remoteType)
+      JdbcInputPartition(wired, idx, wire)
     }
 
-  /** A column's remote type name, for string columns whose rendering
-    * the wire may change: not a ghost pin, not declared by `customschema`.
+  /** A column's remote type name, for columns whose rendering the wire
+    * may change: not a ghost pin, not declared by `customschema`.
     */
   private lazy val remoteTypes: Map[String, String] = JdbcScan.remoteTypeNames(options)
   private def remoteType(name: String): Option[String] =
     if (ghostPins(name.toLowerCase) ||
-      !schema.fields.exists(f => f.name == name && f.dataType == StringType) ||
       options.customSchema.exists(_.fields.exists(_.name.equalsIgnoreCase(name)))) None
     else remoteTypes.get(name.toLowerCase)
 
@@ -506,6 +575,40 @@ final case class JdbcScan(
 }
 
 object JdbcScan extends Logging {
+  /** Rows per range of a split whole-table read: eight columnar
+    * batches, so each range amortizes its statement and connection. */
+  val RangeRows: Int = 8 * JdbcColumnarReader.BatchRows
+
+  /** The session's default parallelism (1 without a session). */
+  private def defaultParallelism: Int = {
+    import org.apache.spark.sql.SparkSession
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.defaultParallelism).getOrElse(1)
+  }
+
+  /** Every row of a size statement as nullable longs; empty on a remote
+    * error, so a failed lookup plans the scan as if nothing were known. */
+  private def remoteLongs(o: JdbcOptions, sql: String): Seq[Seq[Option[Long]]] =
+    try {
+      val c = o.connect()
+      try {
+        val st = c.createStatement()
+        try {
+          val rs = st.executeQuery(sql)
+          val n = rs.getMetaData.getColumnCount
+          val out = scala.collection.mutable.ArrayBuffer.empty[Seq[Option[Long]]]
+          while (rs.next()) out += (1 to n).map { i =>
+            val v = rs.getLong(i); if (rs.wasNull()) None else Some(v)
+          }
+          out.toSeq
+        } finally st.close()
+      } finally c.close()
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        logWarning(s"graft-jdbc: size lookup failed, planning without it: $e")
+        Nil
+    }
+
   /** Driver-side remote COUNT(*) cache: every action plans a fresh scan,
     * so without this each action over the same (connection, FROM, WHERE)
     * re-issues a blocking remote count at planning time (ADVICE r6).
@@ -558,9 +661,9 @@ object JdbcScan extends Logging {
     })
 }
 
-/** One remote statement; `utf8` lists the output positions whose
-  * strings arrive as UTF-8 bytes ([[Dialect.utf8Wire]]). */
-final case class JdbcInputPartition(sql: String, idx: Int, utf8: Set[Int] = Set.empty)
+/** One remote statement; `wire` maps the output positions whose values
+  * travel in another form ([[Dialect.columnWire]]). */
+final case class JdbcInputPartition(sql: String, idx: Int, wire: Map[Int, Wire] = Map.empty)
   extends InputPartition
 
 /** Columnar when every column is in the vector-fill set and no
@@ -575,13 +678,13 @@ final case class JdbcReaderFactory(options: JdbcOptions, schema: StructType,
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[JdbcInputPartition]
-    new JdbcColumnarReader(schema, new JdbcCursor(options, p.sql), p.utf8,
+    new JdbcColumnarReader(schema, new JdbcCursor(options, p.sql), p.wire,
       JdbcColumnarReader.firstBatchRows(limit))
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[JdbcInputPartition]
-    new JdbcPartitionReader(schema, new JdbcCursor(options, p.sql), catchAll, p.utf8)
+    new JdbcPartitionReader(schema, new JdbcCursor(options, p.sql), catchAll, p.wire)
   }
 }
 
@@ -650,7 +753,7 @@ object JdbcCursor {
   * the catch-all reads as SQL NULL.
   */
 final class JdbcPartitionReader(schema: StructType, cursor: JdbcCursor,
-    catchAll: Option[(String, StructType)] = None, utf8: Set[Int] = Set.empty)
+    catchAll: Option[(String, StructType)] = None, wire: Map[Int, Wire] = Map.empty)
   extends PartitionReader[InternalRow] {
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 
@@ -673,7 +776,7 @@ final class JdbcPartitionReader(schema: StructType, cursor: JdbcCursor,
 
   // metadata-aware: TIME columns normalize to the epoch day regardless
   // of the driver's date-component convention
-  private lazy val getters = TypeMapping.getters(physSchema, cursor.rs.getMetaData, utf8)
+  private lazy val getters = TypeMapping.getters(physSchema, cursor.rs.getMetaData, wire)
 
   private def physGet(phys: InternalRow, p: Int): Any =
     if (phys.isNullAt(p)) null else phys.get(p, physTypes(p))

@@ -137,7 +137,7 @@ object TypeMapping {
           ArrayType(arrayElementType(md.getColumnTypeName(i)), containsNull = true)
         case Types.STRUCT => StringType
         case Types.OTHER =>
-          val tn = Option(md.getColumnTypeName(i)).getOrElse("").trim.toLowerCase
+          val tn = typeName(md, i).toLowerCase
           if (tn.endsWith("range")) rangeStruct(rangeElementType(tn))
           // pg point "(x,y)" → struct<x,y> (reference maps it to
           // FixedSizeList[2] of f64, schema.rs:66; a named struct is the
@@ -145,6 +145,13 @@ object TypeMapping {
           else if (tn == "point") StructType(Seq(
             StructField("x", DoubleType), StructField("y", DoubleType)))
           else StringType
+        // DuckDB reports UUID, ENUM and JSON as JAVA_OBJECT; their
+        // `getString` is the exact text. Its other JAVA_OBJECT types
+        // (HUGEINT, UBIGINT, INTERVAL, MAP, UNION) keep the refusal.
+        case Types.JAVA_OBJECT if StringObjects(typeName(md, i)) => StringType
+        // DuckDB's BIT is a bitstring ('101'), not a boolean: `getBoolean`
+        // reads false for every value
+        case Types.BIT if typeName(md, i) == "BIT" => StringType
         case t =>
           try catalystType(t, md.getPrecision(i), md.getScale(i))
           catch {
@@ -156,6 +163,11 @@ object TypeMapping {
       })
       StructField(name, dt, md.isNullable(i) != ResultSetMetaData.columnNoNulls)
     })
+
+  private val StringObjects = Set("UUID", "ENUM", "JSON")
+
+  private def typeName(md: ResultSetMetaData, i: Int): String =
+    Option(md.getColumnTypeName(i)).getOrElse("").trim.toUpperCase
 
   /** Overlay declared column types (`customschema` option) onto an
     * introspected schema by case-insensitive name; undeclared columns
@@ -364,20 +376,23 @@ object TypeMapping {
     * documented §1.2 choice) reads `getTime` and lands on the EPOCH DAY
     * deterministically — JDBC drivers disagree on the date component of
     * `getTimestamp` over TIME (Derby uses the current date). Positions in
-    * `utf8` hold string values that arrive as a Blob of their UTF-8 bytes
-    * ([[Dialect.utf8Wire]]).
+    * `wire` hold values that travel in another form ([[Dialect.columnWire]]).
     */
   def getters(schema: StructType, md: ResultSetMetaData,
-      utf8: Set[Int] = Set.empty): Array[Getter] =
+      wire: Map[Int, Wire] = Map.empty): Array[Getter] =
     schema.fields.zipWithIndex.map { case (f, i) =>
-      f.dataType match {
-        case StringType if utf8(i) =>
+      (f.dataType, wire.get(i)) match {
+        case (StringType, Some(Wire.Utf8)) =>
           (rs: ResultSet, p: Int) => UTF8String.fromBytes(blobBytes(rs, p))
-        case TimestampType | TimestampNTZType if isTime(md, i) => (rs: ResultSet, p: Int) => {
+        case (DateType, Some(Wire.EpochDay)) => (rs: ResultSet, p: Int) => {
+          val d = rs.getInt(p)
+          if (rs.wasNull()) null else d
+        }
+        case (TimestampType | TimestampNTZType, _) if isTime(md, i) => (rs: ResultSet, p: Int) => {
           val v = rs.getTime(p)
           if (v == null) null else microsOfDay(v)
         }
-        case dt => getter(dt)
+        case (dt, _) => getter(dt)
       }
     }
 
@@ -400,17 +415,20 @@ object TypeMapping {
   }
 
   /** Column fills for a vectorizable result schema: the driver getters
-    * of [[getters]] (TIME over timestamp and UTF-8 Blob strings
+    * of [[getters]] (TIME over timestamp and the `wire` forms
     * included), one typed fill per column, so a value reads the same
     * through either reader. Primitive getters test `wasNull`; object
     * getters test the returned reference.
     */
   def fills(schema: StructType, md: ResultSetMetaData,
-      utf8: Set[Int] = Set.empty): Array[Fill] =
+      wire: Map[Int, Wire] = Map.empty): Array[Fill] =
     schema.fields.zipWithIndex.map { case (f, i) =>
       def bytes(read: (ResultSet, Int) => Array[Byte]): Fill = (rs, p, v, r) => {
         val b = read(rs, p)
         if (b == null) v.putNull(r) else v.putByteArray(r, b, 0, b.length)
+      }
+      def int: Fill = (rs, p, v, r) => {
+        val x = rs.getInt(p); if (rs.wasNull()) v.putNull(r) else v.putInt(r, x)
       }
       f.dataType match {
         case BooleanType => (rs, p, v, r) => {
@@ -422,9 +440,7 @@ object TypeMapping {
         case ShortType => (rs, p, v, r) => {
           val x = rs.getShort(p); if (rs.wasNull()) v.putNull(r) else v.putShort(r, x)
         }
-        case IntegerType => (rs, p, v, r) => {
-          val x = rs.getInt(p); if (rs.wasNull()) v.putNull(r) else v.putInt(r, x)
-        }
+        case IntegerType => int
         case LongType => (rs, p, v, r) => {
           val x = rs.getLong(p); if (rs.wasNull()) v.putNull(r) else v.putLong(r, x)
         }
@@ -438,7 +454,7 @@ object TypeMapping {
           val x = rs.getBigDecimal(p)
           if (x == null) v.putNull(r) else v.putDecimal(r, Decimal(x, d.precision, d.scale), d.precision)
         }
-        case StringType if utf8(i) => bytes(blobBytes)
+        case StringType if wire.get(i).contains(Wire.Utf8) => bytes(blobBytes)
         case StringType => bytes((rs, p) => {
           val s = rs.getString(p)
           if (s == null) null else s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -446,6 +462,7 @@ object TypeMapping {
         case BinaryType =>
           val g = new BinaryGetter
           bytes((rs, p) => g(rs, p).asInstanceOf[Array[Byte]])
+        case DateType if wire.get(i).contains(Wire.EpochDay) => int
         case DateType => (rs, p, v, r) => {
           val x = rs.getDate(p)
           if (x == null) v.putNull(r) else v.putInt(r, DateTimeUtils.fromJavaDate(x))

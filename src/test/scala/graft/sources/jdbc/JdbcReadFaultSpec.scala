@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Failure paths of the columnar JDBC read: a satisfied LIMIT never
   * executes the statements of the readers it did not need, and a
-  * ResultSet that throws in the middle of a batch fails the read with
-  * its own error and returns every pooled connection.
+  * ResultSet that throws in the middle of a batch, alone or in one of
+  * the row-id ranges of a split DuckDB read, fails the read with its own
+  * error and returns every pooled connection.
   */
 class JdbcReadFaultSpec extends AnyFunSuite with SparkFixture {
 
@@ -106,5 +107,47 @@ class JdbcReadFaultSpec extends AnyFunSuite with SparkFixture {
     assert(bad.queryExecution.executedPlan.find(_.supportsColumnar).isDefined)
     intercept[ArithmeticException](bad.collect())
     assert(ConnectionPool.checkedOut(opts) == 0)
+  }
+
+  test("a ResultSet throwing in one of k row-id ranges fails the job with its error and frees the pool") {
+    assume(DuckDbWireSpec.driverPresent, "duckdb_jdbc driver not on classpath")
+    RecordingDriver.register
+    val dir = java.nio.file.Files.createTempDirectory("graft_rangefault").toString
+    val url = s"${RecordingDriver.Prefix}duckdb:$dir/f.duckdb"
+    val o = JdbcOptions(Map("url" -> url, "dialect" -> "duckdb"))
+    val c = o.connect()
+    try {
+      val st = c.createStatement()
+      try st.execute("CREATE TABLE t AS SELECT range AS id, 'v' || range AS s FROM range(200000)")
+      finally st.close()
+    } finally c.close()
+    val df = spark.read.format("graft.sources.jdbc.GraftJdbcSource")
+      .option("url", url).option("dialect", "duckdb").option("dbtable", "t").load()
+    val parts = df.queryExecution.sparkPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.get.toBatch.planInputPartitions().map(_.asInstanceOf[JdbcInputPartition])
+    assert(parts.length >= 2 && parts(1).sql.contains("rowid >="), parts.toSeq)
+
+    val ended = new java.util.concurrent.CountDownLatch(parts.length)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        ended.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    RecordingDriver.failOn = Some(RecordingDriver.Fault(parts(1).sql, 5000,
+      new java.sql.SQLException("injected range failure")))
+    try {
+      val e = intercept[Exception](df.collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => t.isInstanceOf[java.sql.SQLException] &&
+        t.getMessage == "injected range failure"), e)
+      // every task, failed or killed, has closed its reader once it ended
+      assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(ConnectionPool.checkedOut(o) == 0)
+    } finally {
+      RecordingDriver.failOn = None
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(df.count() == 200000)
   }
 }

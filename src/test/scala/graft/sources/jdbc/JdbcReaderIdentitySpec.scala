@@ -18,10 +18,11 @@ import scala.jdk.CollectionConverters._
   * statement, return identical values for every vectorizable type on
   * Derby and on DuckDB: NULLs on both sides of the 4096-row batch edge,
   * calendar-switch and year-1 dates, the widest decimals each engine
-  * holds, surrogate pairs. DuckDB's string wire (VARCHAR sent as
-  * `encode(..)` BLOBs) returns the bytes `getString` would, leaves
-  * UUID, ENUM and JSON columns alone, and keeps pushed filters,
-  * range splits and TopN exact.
+  * holds, surrogate pairs. DuckDB's column wire sends VARCHAR as
+  * `encode(..)` BLOBs, which return the bytes `getString` would, and
+  * DATE as proleptic day numbers, which are exact where `getDate`
+  * shifts; it leaves UUID, ENUM and JSON columns alone, and keeps
+  * pushed filters, range splits and TopN exact.
   */
 class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
   import JdbcReaderIdentitySpec._
@@ -40,11 +41,11 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
   /** Read through both readers (and the columnar one with a 3-row first
     * batch), assert they agree and batch as expected, and return the rows. */
   private def bothAgree(o: JdbcOptions, schema: StructType, sql: String,
-      utf8: Set[Int] = Set.empty): Seq[Seq[Any]] = {
-    val rows = viaRows(new JdbcPartitionReader(schema, new JdbcCursor(o, sql), None, utf8), schema)
-    val (cols, sizes) = viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(o, sql), utf8), schema)
+      wire: Map[Int, Wire] = Map.empty): Seq[Seq[Any]] = {
+    val rows = viaRows(new JdbcPartitionReader(schema, new JdbcCursor(o, sql), None, wire), schema)
+    val (cols, sizes) = viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(o, sql), wire), schema)
     val (small, smallSizes) =
-      viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(o, sql), utf8, 3), schema)
+      viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(o, sql), wire, 3), schema)
     assert(rows.length == Rows)
     assert(sizes == Seq(4096, 4096, Rows - 8192))
     assert(smallSizes == Seq(3, 4096, 4096, Rows - 8195))
@@ -165,28 +166,54 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
   private val duckSql = "SELECT \"id\", \"bo\", \"ti\", \"sm\", \"i\", \"l\", \"re\", \"d\", " +
     "\"dec\", \"dsm\", \"s\", \"b\", \"da\", \"ts\", \"ts\" AS \"ntz\", \"tm\" FROM app.v ORDER BY \"id\""
 
+  private def epochDay(iso: String): Int = java.time.LocalDate.parse(iso).toEpochDay.toInt
+
   test("DuckDB: both readers agree on every vectorizable type, plain and over the string wire") {
     duckInit()
     val plain = bothAgree(duck, duckSchema, duckSql)
     assert(plain(1)(8) == new java.math.BigDecimal("1234567890123456789012345678.0123456789"))
     assert(plain(2)(8) == new java.math.BigDecimal("-9999999999999999999999999999.9999999999"))
-    assert(plain(9)(12) == java.time.LocalDate.parse("2000-01-10").toEpochDay.toInt)
-    // the string wire: the dialect wraps the VARCHAR column, and both
-    // readers read the same values through it
+    assert(plain(9)(12) == epochDay("2000-01-10"))
+    // the column wire: the dialect wraps the VARCHAR and DATE columns,
+    // and both readers read the same values through it
     val names = duckSchema.fieldNames.toSeq
-    val (wireSql, utf8) = DuckDbDialect.utf8Wire(duckSql, names,
+    val da = names.indexOf("da")
+    val (wireSql, wire) = DuckDbDialect.columnWire(duckSql, duckSchema.fields.toSeq,
       n => JdbcScan.remoteTypeNames(duck.withTable("app.v")).get(n))
-    assert(utf8 == Set(names.indexOf("s")), wireSql)
+    assert(wire == Map(names.indexOf("s") -> Wire.Utf8, da -> Wire.EpochDay), wireSql)
     assert(wireSql.contains("encode(q.\"s\") AS \"s\""), wireSql)
-    val wired = bothAgree(duck, duckSchema, wireSql, utf8)
-    plain.indices.foreach(r => assert(wired(r) == plain(r), s"row $r over the wire"))
+    val wired = bothAgree(duck, duckSchema, wireSql, wire)
+    // the day numbers are proleptic Gregorian, Spark's own DateType
+    // values; getDate's hybrid calendar shifts the two pre-1582 dates
+    assert(wired(1)(da) == epochDay("1582-10-10") && wired(1)(da) == -141432)
+    assert(wired(2)(da) == epochDay("0001-01-01"))
+    assert(plain(1)(da) != wired(1)(da))
+    plain.indices.foreach { r =>
+      val (w, p) = if (r == 1 || r == 2) (wired(r).patch(da, Nil, 1), plain(r).patch(da, Nil, 1))
+        else (wired(r), plain(r))
+      assert(w == p, s"row $r over the wire")
+    }
+  }
+
+  test("DuckDB date wire: infinity and -infinity read as the extreme day numbers, never NULL") {
+    duckInit()
+    val schema = vectorSchema("id" -> LongType, "da" -> DateType)
+    val sql = "SELECT * FROM (VALUES (0, DATE 'infinity'), (1, DATE '-infinity'), " +
+      "(2, NULL::DATE), (3, DATE '1582-10-10')) AS t(\"id\", \"da\") ORDER BY \"id\""
+    val (wireSql, wire) = DuckDbDialect.columnWire(sql, schema.fields.toSeq, Map("da" -> "DATE").get)
+    assert(wire == Map(1 -> Wire.EpochDay), wireSql)
+    val expected = Seq(Seq(0L, Int.MaxValue), Seq(1L, -Int.MaxValue), Seq(2L, null),
+      Seq(3L, epochDay("1582-10-10")))
+    val (cols, _) = viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(duck, wireSql), wire), schema)
+    val rows = viaRows(new JdbcPartitionReader(schema, new JdbcCursor(duck, wireSql), None, wire), schema)
+    assert(cols == expected && rows == expected)
   }
 
   test("DuckDB string wire: bytes equal getString's for empty, NULL, NUL, 100 kB and 4-byte UTF-8") {
     duckInit()
     val schema = vectorSchema("id" -> LongType, "s" -> StringType)
     val sql = "SELECT \"id\", \"s\" FROM app.v WHERE \"id\" < 10 OR \"id\" IN (4095, 4096) ORDER BY \"id\""
-    val (wireSql, utf8) = DuckDbDialect.utf8Wire(sql, Seq("id", "s"), Map("s" -> "VARCHAR").get)
+    val (wireSql, wire) = DuckDbDialect.columnWire(sql, schema.fields.toSeq, Map("s" -> "VARCHAR").get)
     val expected = {
       val c = duck.connect()
       try {
@@ -197,8 +224,8 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
         out.toSeq
       } finally c.close()
     }
-    val (cols, _) = viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(duck, wireSql), utf8), schema)
-    val rows = viaRows(new JdbcPartitionReader(schema, new JdbcCursor(duck, wireSql), None, utf8), schema)
+    val (cols, _) = viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(duck, wireSql), wire), schema)
+    val rows = viaRows(new JdbcPartitionReader(schema, new JdbcCursor(duck, wireSql), None, wire), schema)
     assert(cols == expected && rows == expected)
     val byId = expected.map(r => r.head -> r(1)).toMap
     assert(byId(2L) == Seq.empty[Byte])
@@ -212,7 +239,7 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
     duckInit()
     spark.conf.set("spark.sql.catalog.did", "graft.sources.jdbc.GraftCatalog")
     spark.conf.set("spark.sql.catalog.did.url", duckUrl)
-    // UUID, ENUM and JSON report JAVA_OBJECT; they read as text
+    // the read-side option leaves the types it reads as text alone
     spark.conf.set("spark.sql.catalog.did.unsupportedtypeaction", "string")
   }
 
@@ -243,26 +270,58 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
       case x => x
     })
 
+  /** UUID, ENUM and JSON columns (DuckDB reports all three as JAVA_OBJECT). */
+  private lazy val oddTable: Unit = exec(duck,
+    "DROP TABLE IF EXISTS app.odd",
+    "DROP TYPE IF EXISTS mood",
+    "CREATE TYPE mood AS ENUM ('sad', 'ok', 'happy')",
+    "CREATE TABLE app.odd (id BIGINT, u UUID, e mood, j JSON, s VARCHAR)",
+    "INSERT INTO app.odd SELECT range, CASE WHEN range % 5 = 0 THEN NULL ELSE " +
+      "('00000000-0000-0000-0000-' || lpad(range::VARCHAR, 12, '0'))::UUID END, " +
+      "(['sad', 'ok', 'happy'])[range % 3 + 1]::mood, " +
+      "CASE WHEN range % 4 = 0 THEN NULL ELSE ('{\"k\":' || range || '}')::JSON END, " +
+      "'s' || range FROM range(50)")
+  private val oddOracle = "SELECT id, u::VARCHAR, e::VARCHAR, j::VARCHAR, s FROM app.odd ORDER BY id"
+
+  /** A catalog over the DuckDB file with default options. */
+  private def defaultCatalog(): Unit = {
+    duckInit()
+    spark.conf.set("spark.sql.catalog.ddef", "graft.sources.jdbc.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.ddef.url", duckUrl)
+  }
+
+  test("UUID, ENUM and JSON columns load with default options; HUGEINT still refuses") {
+    defaultCatalog()
+    oddTable
+    val df = spark.table("ddef.app.odd")
+    assert(df.schema.fields.drop(1).forall(_.dataType == StringType), df.schema)
+    assert(sparkRows(df.orderBy("id")) == oracle(oddOracle))
+    // the other JAVA_OBJECT types keep the refusal
+    exec(duck, "CREATE OR REPLACE TABLE app.huge (id BIGINT, h HUGEINT)")
+    val e = intercept[Exception](spark.table("ddef.app.huge").schema)
+    assert(e.getMessage.contains("unsupported JDBC type 2000"), e.getMessage)
+  }
+
+  test("DuckDB BIT bitstrings read as their text; BOOLEAN still reads as boolean") {
+    defaultCatalog()
+    exec(duck, "CREATE OR REPLACE TABLE app.bits (id INTEGER, b BIT, bo BOOLEAN)",
+      "INSERT INTO app.bits VALUES (1, '101', true), (2, '0', false), (3, NULL, NULL)")
+    val df = spark.table("ddef.app.bits").orderBy("id")
+    assert(df.schema("b").dataType == StringType && df.schema("bo").dataType == BooleanType)
+    assert(df.collect().toSeq.map(_.toSeq) ==
+      Seq(Seq(1, "101", true), Seq(2, "0", false), Seq(3, null, null)))
+  }
+
   test("UUID, ENUM and JSON columns read as strings are not wrapped and still read") {
     duckCatalog()
-    exec(duck,
-      "DROP TABLE IF EXISTS app.odd",
-      "DROP TYPE IF EXISTS mood",
-      "CREATE TYPE mood AS ENUM ('sad', 'ok', 'happy')",
-      "CREATE TABLE app.odd (id BIGINT, u UUID, e mood, j JSON, s VARCHAR)",
-      "INSERT INTO app.odd SELECT range, CASE WHEN range % 5 = 0 THEN NULL ELSE " +
-        "('00000000-0000-0000-0000-' || lpad(range::VARCHAR, 12, '0'))::UUID END, " +
-        "(['sad', 'ok', 'happy'])[range % 3 + 1]::mood, " +
-        "CASE WHEN range % 4 = 0 THEN NULL ELSE ('{\"k\":' || range || '}')::JSON END, " +
-        "'s' || range FROM range(50)")
+    oddTable
     val df = spark.table("did.app.odd")
     val sqls = partitionSql(df)
     assert(sqls.nonEmpty && sqls.forall(_.contains("encode(q.\"s\") AS \"s\"")), sqls)
     Seq("u", "e", "j").foreach(c =>
       assert(!sqls.exists(_.contains(s"encode(q.\"$c\")")), s"$c wrapped: $sqls"))
     assert(df.schema.fields.drop(1).forall(_.dataType == StringType), df.schema)
-    assert(sparkRows(df.orderBy("id")) ==
-      oracle("SELECT id, u::VARCHAR, e::VARCHAR, j::VARCHAR, s FROM app.odd ORDER BY id"))
+    assert(sparkRows(df.orderBy("id")) == oracle(oddOracle))
   }
 
   test("string wire: a pushed string filter, a numpartitions split and a string TopN are exact") {
