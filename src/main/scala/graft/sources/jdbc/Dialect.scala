@@ -298,13 +298,20 @@ trait Dialect extends Serializable {
   def supportsSortedDerivedTable: Boolean = false
 
   /** The statement a plain scan sends for `sql`, whose output columns
-    * are `cols`, and the output positions whose values then travel in
-    * another form ([[Wire]]). `remoteType` gives a column's remote type
-    * name where its value may travel another way (None otherwise).
-    * Default: `sql` unchanged, every value in its plain form.
+    * are `cols`, and the output positions whose string values then
+    * arrive as a Blob of their UTF-8 bytes. `remoteType` gives a
+    * column's remote type name where the value may travel that way
+    * (None otherwise). Default: `sql` unchanged, no byte columns.
     */
-  def columnWire(sql: String, cols: Seq[StructField],
-      remoteType: String => Option[String]): (String, Map[Int, Wire]) = (sql, Map.empty)
+  def utf8Wire(sql: String, cols: Seq[String],
+      remoteType: String => Option[String]): (String, Set[Int]) = (sql, Set.empty)
+
+  /** The Catalyst type of a result column whose JDBC type (`jdbcType`,
+    * upper-cased remote type name `typeName`) this dialect's driver
+    * reports differently from what the value is; None (the default)
+    * keeps the standard JDBC mapping.
+    */
+  def readType(jdbcType: Int, typeName: String): Option[DataType] = None
 
   /** A statement reading the row count of the base table a scan's
     * FROM clause `from` names from the remote catalog, without scanning
@@ -330,17 +337,6 @@ trait Dialect extends Serializable {
     * NULL where it keeps none. None (the default): no such statistics.
     */
   def maxValueBytesSql(from: String, cols: Seq[String]): Option[String] = None
-}
-
-/** How a column's values travel when [[Dialect.columnWire]] rewrites a
-  * scan's statement. */
-sealed trait Wire extends Serializable
-object Wire {
-  /** A string as a Blob of its UTF-8 bytes. */
-  case object Utf8 extends Wire
-  /** A date as its INTEGER day number since 1970-01-01 (proleptic
-    * Gregorian, Spark's own DateType value). */
-  case object EpochDay extends Wire
 }
 
 /** Apache Derby — the live embedded backend for tests and queries. */
@@ -504,36 +500,32 @@ object DuckDbDialect extends Dialect {
     * while a BLOB's bytes copy straight into the column vector (probed
     * live, 250k rows: about 2× faster per string column). Only remote
     * VARCHARs: `encode` has no overload for UUID, ENUM or JSON.
-    *
-    * DATE columns travel as their day number. `getDate` builds a
-    * `java.sql.Date` in the hybrid Julian calendar, which shifts dates
-    * before 1582-10-15 by up to ten days and turns `infinity` into a
-    * garbage date; the day number is exact (`infinity` reads as
-    * 2147483647, `-infinity` as -2147483647) and half the cost.
     */
-  override def columnWire(sql: String, cols: Seq[StructField],
-      remoteType: String => Option[String]): (String, Map[Int, Wire]) = {
-    val wire: Map[Int, Wire] = cols.zipWithIndex.flatMap { case (f, i) =>
-      (remoteType(f.name).map(_.toUpperCase), f.dataType) match {
-        case (Some("VARCHAR"), StringType) => Some(i -> Wire.Utf8)
-        case (Some("DATE"), DateType) => Some(i -> Wire.EpochDay)
-        case _ => None
-      }
-    }.toMap
-    if (wire.isEmpty) (sql, wire)
+  override def utf8Wire(sql: String, cols: Seq[String],
+      remoteType: String => Option[String]): (String, Set[Int]) = {
+    val utf8 = cols.indices
+      .filter(i => remoteType(cols(i)).exists(_.equalsIgnoreCase("VARCHAR"))).toSet
+    if (utf8.isEmpty) (sql, utf8)
     else {
-      val sel = cols.zipWithIndex.map { case (f, i) =>
-        val c = s"q.${quote(f.name)}"
-        wire.get(i) match {
-          case Some(Wire.Utf8) => s"encode($c) AS ${quote(f.name)}"
-          case Some(Wire.EpochDay) =>
-            s"CAST($c - DATE '1970-01-01' AS INTEGER) AS ${quote(f.name)}"
-          case None => c
-        }
+      val sel = cols.zipWithIndex.map { case (c, i) =>
+        if (utf8(i)) s"encode(q.${quote(c)}) AS ${quote(c)}" else s"q.${quote(c)}"
       }
-      (s"SELECT ${sel.mkString(", ")} FROM ($sql) AS q", wire)
+      (s"SELECT ${sel.mkString(", ")} FROM ($sql) AS q", utf8)
     }
   }
+
+  /** DuckDB's driver reports UUID, ENUM and JSON as JAVA_OBJECT; their
+    * `getString` is the exact text. Its other JAVA_OBJECT types
+    * (HUGEINT, UBIGINT, INTERVAL, MAP, UNION) keep the refusal. Its BIT
+    * is a bitstring ('101'), not a boolean: `getBoolean` reads false
+    * for every value, `getString` the exact bits.
+    */
+  override def readType(jdbcType: Int, typeName: String): Option[DataType] =
+    (jdbcType, typeName) match {
+      case (java.sql.Types.JAVA_OBJECT, "UUID" | "ENUM" | "JSON") => Some(StringType)
+      case (java.sql.Types.BIT, "BIT") => Some(StringType)
+      case _ => None
+    }
 
   /** `estimated_size` from `duckdb_tables()`, a catalog lookup where
     * `COUNT(rowid)` would scan the row ids; it counts deleted rows until

@@ -121,7 +121,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val ps = c.prepareStatement(s"SELECT * FROM ${qualified(ident)} WHERE 1=0")
     try {
       JdbcScan.recordTypeNames(options.withTable(qualified(ident)), ps.getMetaData)
-      val base = TypeMapping.schemaOf(ps.getMetaData,
+      val base = TypeMapping.schemaOf(ps.getMetaData, options.dialect,
         unsupportedAsString = options.readUnsupportedAsString)
       // catalog-level `customschema` (column-NAME-keyed, so it overlays
       // every table in the catalog that has a matching column — declare

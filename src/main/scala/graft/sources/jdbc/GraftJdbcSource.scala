@@ -41,7 +41,7 @@ class GraftJdbcSource extends TableProvider {
       val ps = c.prepareStatement(s"SELECT * FROM ${o.fromClause} WHERE 1=0")
       try {
         JdbcScan.recordTypeNames(o, ps.getMetaData)
-        val base = TypeMapping.schemaOf(ps.getMetaData,
+        val base = TypeMapping.schemaOf(ps.getMetaData, o.dialect,
           unsupportedAsString = o.readUnsupportedAsString)
         val merged =
           o.customSchema.map(TypeMapping.applyOverrides(base, _)).getOrElse(base)

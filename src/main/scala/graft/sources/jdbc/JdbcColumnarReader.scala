@@ -22,10 +22,10 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 final class JdbcColumnarReader(
     schema: StructType,
     cursor: JdbcCursor,
-    wire: Map[Int, Wire] = Map.empty,
+    utf8: Set[Int] = Set.empty,
     firstBatchRows: Int = JdbcColumnarReader.BatchRows) extends PartitionReader[ColumnarBatch] {
 
-  private lazy val fills = TypeMapping.fills(schema, cursor.rs.getMetaData, wire)
+  private lazy val fills = TypeMapping.fills(schema, cursor.rs.getMetaData, utf8)
   private var vectors: Array[OnHeapColumnVector] = _
   private var batch: ColumnarBatch = _
   private var capacity = 0

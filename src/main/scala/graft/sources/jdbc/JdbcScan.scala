@@ -194,7 +194,7 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
         val c = options.connect()
         try {
           val ps = c.prepareStatement(probe)
-          try TypeMapping.schemaOf(ps.getMetaData,
+          try TypeMapping.schemaOf(ps.getMetaData, options.dialect,
             unsupportedAsString = options.readUnsupportedAsString)
           finally ps.close()
         } finally c.close()
@@ -368,30 +368,17 @@ final case class JdbcScan(
         rows.fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
     }
     if (aggSelect.nonEmpty) of(None, None)
-    else if (options.remoteStats == "count") try {
+    else if (options.remoteStats == "count") {
       val whereClause =
         if (where.isEmpty) "" else where.mkString(" WHERE ", " AND ", "")
       val countSql = s"SELECT COUNT(*) FROM ${options.fromClause}$whereClause"
       val n = JdbcScan.cachedCount(options.url + "\u0000" + countSql) {
-        val c = options.connect()
-        try {
-          val st = c.createStatement()
-          try {
-            val rs = st.executeQuery(countSql)
-            rs.next()
-            val cnt = rs.getLong(1)
-            logInfo(s"graft-jdbc stats: $countSql -> $cnt rows")
-            cnt
-          } finally st.close()
-        } finally c.close()
+        val cnt = JdbcScan.remoteLongs(options, countSql).headOption.flatMap(_.headOption.flatten)
+        cnt.foreach(c => logInfo(s"graft-jdbc stats: $countSql -> $c rows"))
+        cnt
       }
-      of(Some(n), Some(math.max(1L, n * schema.defaultSize)))
-    } catch {
-      case e: Exception =>
-        logWarning(s"graft-jdbc stats failed, planning without: $e")
-        of(None, None)
-    }
-    else of(tableRows, tableRows.flatMap(n => rowBytes.map(w => math.max(1L, n * w))))
+      of(n, n.map(r => math.max(1L, r * schema.defaultSize)))
+    } else of(tableRows, tableRows.flatMap(n => rowBytes.map(w => math.max(1L, n * w))))
   }
 
   override def estimateStatistics(): Statistics = stats
@@ -497,10 +484,11 @@ final case class JdbcScan(
     * projection pushed at planning time (no WHERE, aggregate, ORDER BY,
     * LIMIT or OFFSET), no catch-all fold, and a base table of at least
     * two [[JdbcScan.RangeRows]] rows. k = min(default parallelism,
-    * rows / RangeRows) ranges; the first and last are open-ended, so
-    * every row id lands in exactly one range even when the count is
-    * stale or deletes left gaps. Each range reads in its own remote
-    * transaction, as an explicit `numpartitions` split does;
+    * `poolmax`, [[JdbcScan.MaxRanges]], rows / RangeRows) ranges, so the
+    * ranges never queue on the connection pool; the first and last are
+    * open-ended, so every row id lands in exactly one range even when
+    * the count is stale or deletes left gaps. Each range reads in its
+    * own remote transaction, as an explicit `numpartitions` split does;
     * `numpartitions=1` keeps one statement, one snapshot.
     */
   private def rowIdRanges: Option[Seq[String]] = {
@@ -508,7 +496,8 @@ final case class JdbcScan(
       where.isEmpty && orderBy.isEmpty && limit.isEmpty && pushedOffset.isEmpty
     if (!plain) None
     else tableRows.filter(_ >= 2L * JdbcScan.RangeRows).flatMap { n =>
-      val k = math.min(JdbcScan.defaultParallelism.toLong, n / JdbcScan.RangeRows).toInt
+      val k = Seq(JdbcScan.defaultParallelism.toLong, options.poolMax.toLong,
+        JdbcScan.MaxRanges.toLong, n / JdbcScan.RangeRows).min.toInt
       val edges = None +: (1 until k).map(i => Some(n * i / k)) :+ None
       if (k < 2) None
       else Some(edges.zip(edges.tail).map { case (lo, hi) => options.dialect.rowIdRange(lo, hi) })
@@ -540,8 +529,8 @@ final case class JdbcScan(
     }
   }
 
-  /** A partition sends its statement through the dialect's column wire
-    * ([[Dialect.columnWire]]) when the scan is a plain projection: an
+  /** A partition sends its statement through the dialect's string wire
+    * ([[Dialect.utf8Wire]]) when the scan is a plain projection: an
     * aggregate or a pushed ORDER BY must stay the outermost statement,
     * and the catch-all fold reads its columns by remote position. A
     * federated derived table is skipped too: each literal set is a new
@@ -553,16 +542,17 @@ final case class JdbcScan(
     if (aggSelect.nonEmpty || orderBy.nonEmpty || catchAll.isDefined ||
         options.map.contains("derivedalias")) JdbcInputPartition(sql, idx)
     else {
-      val (wired, wire) = options.dialect.columnWire(sql, schema.fields.toSeq, remoteType)
-      JdbcInputPartition(wired, idx, wire)
+      val (wire, utf8) = options.dialect.utf8Wire(sql, schema.fieldNames.toSeq, remoteType)
+      JdbcInputPartition(wire, idx, utf8)
     }
 
-  /** A column's remote type name, for columns whose rendering the wire
-    * may change: not a ghost pin, not declared by `customschema`.
+  /** A column's remote type name, for string columns whose rendering
+    * the wire may change: not a ghost pin, not declared by `customschema`.
     */
   private lazy val remoteTypes: Map[String, String] = JdbcScan.remoteTypeNames(options)
   private def remoteType(name: String): Option[String] =
     if (ghostPins(name.toLowerCase) ||
+      !schema.fields.exists(f => f.name == name && f.dataType == StringType) ||
       options.customSchema.exists(_.fields.exists(_.name.equalsIgnoreCase(name)))) None
     else remoteTypes.get(name.toLowerCase)
 
@@ -578,6 +568,14 @@ object JdbcScan extends Logging {
   /** Rows per range of a split whole-table read: eight columnar
     * batches, so each range amortizes its statement and connection. */
   val RangeRows: Int = 8 * JdbcColumnarReader.BatchRows
+
+  /** Most ranges of a split whole-table read. DuckDB 1.0 applies a
+    * `rowid` range as a filter above a full table scan, so each range
+    * reads the whole table remotely and k ranges do k times the remote
+    * scan work. Four ranges are measured (4 vCPUs, 250k rows: a full
+    * scan at 146 against 351 ms in one partition); more are not.
+    */
+  val MaxRanges: Int = 4
 
   /** The session's default parallelism (1 without a session). */
   private def defaultParallelism: Int = {
@@ -613,19 +611,22 @@ object JdbcScan extends Logging {
     * so without this each action over the same (connection, FROM, WHERE)
     * re-issues a blocking remote count at planning time (ADVICE r6).
     * Short TTL keeps estimates fresh for mutating tables; bounded size.
+    * A failed count (None) is not cached.
     */
   private val statsTtlMs = 30000L
   private val statsCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
 
-  private[jdbc] def cachedCount(key: String)(compute: => Long): Long = {
+  private[jdbc] def cachedCount(key: String)(compute: => Option[Long]): Option[Long] = {
     val now = System.currentTimeMillis()
     val hit = statsCache.get(key)
-    if (hit != null && now - hit._2 < statsTtlMs) hit._1
+    if (hit != null && now - hit._2 < statsTtlMs) Some(hit._1)
     else {
       val n = compute
-      if (statsCache.size > 1024) statsCache.clear()
-      statsCache.put(key, (n, now))
+      n.foreach { c =>
+        if (statsCache.size > 1024) statsCache.clear()
+        statsCache.put(key, (c, now))
+      }
       n
     }
   }
@@ -661,9 +662,9 @@ object JdbcScan extends Logging {
     })
 }
 
-/** One remote statement; `wire` maps the output positions whose values
-  * travel in another form ([[Dialect.columnWire]]). */
-final case class JdbcInputPartition(sql: String, idx: Int, wire: Map[Int, Wire] = Map.empty)
+/** One remote statement; `utf8` lists the output positions whose
+  * strings arrive as UTF-8 bytes ([[Dialect.utf8Wire]]). */
+final case class JdbcInputPartition(sql: String, idx: Int, utf8: Set[Int] = Set.empty)
   extends InputPartition
 
 /** Columnar when every column is in the vector-fill set and no
@@ -678,13 +679,13 @@ final case class JdbcReaderFactory(options: JdbcOptions, schema: StructType,
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[JdbcInputPartition]
-    new JdbcColumnarReader(schema, new JdbcCursor(options, p.sql), p.wire,
+    new JdbcColumnarReader(schema, new JdbcCursor(options, p.sql), p.utf8,
       JdbcColumnarReader.firstBatchRows(limit))
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[JdbcInputPartition]
-    new JdbcPartitionReader(schema, new JdbcCursor(options, p.sql), catchAll, p.wire)
+    new JdbcPartitionReader(schema, new JdbcCursor(options, p.sql), catchAll, p.utf8)
   }
 }
 
@@ -753,7 +754,7 @@ object JdbcCursor {
   * the catch-all reads as SQL NULL.
   */
 final class JdbcPartitionReader(schema: StructType, cursor: JdbcCursor,
-    catchAll: Option[(String, StructType)] = None, wire: Map[Int, Wire] = Map.empty)
+    catchAll: Option[(String, StructType)] = None, utf8: Set[Int] = Set.empty)
   extends PartitionReader[InternalRow] {
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 
@@ -776,7 +777,7 @@ final class JdbcPartitionReader(schema: StructType, cursor: JdbcCursor,
 
   // metadata-aware: TIME columns normalize to the epoch day regardless
   // of the driver's date-component convention
-  private lazy val getters = TypeMapping.getters(physSchema, cursor.rs.getMetaData, wire)
+  private lazy val getters = TypeMapping.getters(physSchema, cursor.rs.getMetaData, utf8)
 
   private def physGet(phys: InternalRow, p: Int): Any =
     if (phys.isNullAt(p)) null else phys.get(p, physTypes(p))

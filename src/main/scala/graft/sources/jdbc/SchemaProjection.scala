@@ -50,7 +50,7 @@ object SchemaProjection {
         val c = o.connect()
         try {
           val ps = c.prepareStatement(s"SELECT * FROM ${o.fromClause} WHERE 1=0")
-          try TypeMapping.schemaOf(ps.getMetaData,
+          try TypeMapping.schemaOf(ps.getMetaData, o.dialect,
             unsupportedAsString = o.readUnsupportedAsString)
           finally ps.close()
         } finally c.close()

@@ -74,7 +74,7 @@ class ArrayMappingSpec extends AnyFunSuite {
       case ("getScale", _) => 0
       case ("isNullable", _) => java.sql.ResultSetMetaData.columnNullable
     }
-    val sch = TypeMapping.schemaOf(md)
+    val sch = TypeMapping.schemaOf(md, PostgresDialect)
     assert(sch("ids").dataType == ArrayType(LongType, containsNull = true))
     assert(sch("k").dataType == LongType)
   }

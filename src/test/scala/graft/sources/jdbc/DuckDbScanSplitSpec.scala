@@ -69,12 +69,17 @@ class DuckDbScanSplitSpec extends AnyFunSuite with SparkFixture {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
 
+  /** The ranges a default read of `rows` rows splits into: capped by the
+    * session's parallelism, the default `poolmax` (8) and MaxRanges. */
+  private def ranges(rows: Int): Int = Seq(spark.sparkContext.defaultParallelism, 8,
+    JdbcScan.MaxRanges, rows / JdbcScan.RangeRows).min
+
   private def failed: Seq[String] = RecordingDriver.statements.collect { case (s, true) => s }
 
   test("a default read splits into row-id ranges and reads the rows numpartitions=1 reads") {
     catalogs()
     RecordingDriver.clear()
-    val k = math.min(spark.sparkContext.defaultParallelism, FactRows / JdbcScan.RangeRows)
+    val k = ranges(FactRows)
     assert(k >= 2)
     val split = spark.table("sa.app.fact")
     val parts = partitions(split)
@@ -86,6 +91,10 @@ class DuckDbScanSplitSpec extends AnyFunSuite with SparkFixture {
     val expected = rows(one)
     assert(expected.length == FactRows)
     assert(rows(split) == expected)
+    // no more ranges than the pool holds connections
+    val pooled = spark.read.option("poolmax", "3").table("sa.app.fact")
+    assert(partitions(pooled).map(_.length) == Seq(math.min(k, 3)))
+    assert(rows(pooled) == expected)
     // a projection splits too, and runtime statements carry the wire
     val proj = spark.table("sa.app.fact").select("id", "tag")
     assert(partitions(proj).map(_.length) == Seq(k))
@@ -98,7 +107,7 @@ class DuckDbScanSplitSpec extends AnyFunSuite with SparkFixture {
     catalogs()
     exec(direct("a.duckdb"), "CREATE OR REPLACE TABLE app.gappy AS SELECT * FROM app.fact",
       "DELETE FROM app.gappy WHERE id < 120000 OR id % 3 = 0")
-    val k = math.min(spark.sparkContext.defaultParallelism, FactRows / JdbcScan.RangeRows)
+    val k = ranges(FactRows)
     val split = spark.table("sa.app.gappy")
     assert(partitions(split).map(_.length) == Seq(k))
     val one = rows(spark.read.option("numpartitions", "1").table("sa.app.gappy"))
@@ -141,7 +150,7 @@ class DuckDbScanSplitSpec extends AnyFunSuite with SparkFixture {
       st.execute("CREATE TABLE big AS SELECT range AS id FROM range(140000)")
       st.execute("CHECKPOINT") // a read-only attach cannot replay a WAL
     } finally c.close()
-    val k = math.min(spark.sparkContext.defaultParallelism, 140000 / JdbcScan.RangeRows)
+    val k = ranges(140000)
     def read(table: String) = spark.read.format("graft.sources.jdbc.GraftJdbcSource")
       .option("url", s"${RecordingDriver.Prefix}duckdb:$dir/a.duckdb").option("dialect", "duckdb")
       .option("attach", s"ext=$dir/c.duckdb").option("dbtable", table).load()

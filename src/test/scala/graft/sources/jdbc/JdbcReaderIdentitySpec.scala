@@ -18,11 +18,12 @@ import scala.jdk.CollectionConverters._
   * statement, return identical values for every vectorizable type on
   * Derby and on DuckDB: NULLs on both sides of the 4096-row batch edge,
   * calendar-switch and year-1 dates, the widest decimals each engine
-  * holds, surrogate pairs. DuckDB's column wire sends VARCHAR as
-  * `encode(..)` BLOBs, which return the bytes `getString` would, and
-  * DATE as proleptic day numbers, which are exact where `getDate`
-  * shifts; it leaves UUID, ENUM and JSON columns alone, and keeps
-  * pushed filters, range splits and TopN exact.
+  * holds, surrogate pairs. DuckDB DATE values read through the
+  * driver's `LocalDate` as proleptic day numbers, exact where `getDate`
+  * shifts, in every statement a scan sends. DuckDB's string wire
+  * (VARCHAR sent as `encode(..)` BLOBs) returns the bytes `getString`
+  * would, leaves UUID, ENUM and JSON columns alone, and keeps pushed
+  * filters, range splits and TopN exact.
   */
 class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
   import JdbcReaderIdentitySpec._
@@ -41,11 +42,11 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
   /** Read through both readers (and the columnar one with a 3-row first
     * batch), assert they agree and batch as expected, and return the rows. */
   private def bothAgree(o: JdbcOptions, schema: StructType, sql: String,
-      wire: Map[Int, Wire] = Map.empty): Seq[Seq[Any]] = {
-    val rows = viaRows(new JdbcPartitionReader(schema, new JdbcCursor(o, sql), None, wire), schema)
-    val (cols, sizes) = viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(o, sql), wire), schema)
+      utf8: Set[Int] = Set.empty): Seq[Seq[Any]] = {
+    val rows = viaRows(new JdbcPartitionReader(schema, new JdbcCursor(o, sql), None, utf8), schema)
+    val (cols, sizes) = viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(o, sql), utf8), schema)
     val (small, smallSizes) =
-      viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(o, sql), wire, 3), schema)
+      viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(o, sql), utf8, 3), schema)
     assert(rows.length == Rows)
     assert(sizes == Seq(4096, 4096, Rows - 8192))
     assert(smallSizes == Seq(3, 4096, 4096, Rows - 8195))
@@ -174,38 +175,31 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
     assert(plain(1)(8) == new java.math.BigDecimal("1234567890123456789012345678.0123456789"))
     assert(plain(2)(8) == new java.math.BigDecimal("-9999999999999999999999999999.9999999999"))
     assert(plain(9)(12) == epochDay("2000-01-10"))
-    // the column wire: the dialect wraps the VARCHAR and DATE columns,
-    // and both readers read the same values through it
-    val names = duckSchema.fieldNames.toSeq
-    val da = names.indexOf("da")
-    val (wireSql, wire) = DuckDbDialect.columnWire(duckSql, duckSchema.fields.toSeq,
-      n => JdbcScan.remoteTypeNames(duck.withTable("app.v")).get(n))
-    assert(wire == Map(names.indexOf("s") -> Wire.Utf8, da -> Wire.EpochDay), wireSql)
-    assert(wireSql.contains("encode(q.\"s\") AS \"s\""), wireSql)
-    val wired = bothAgree(duck, duckSchema, wireSql, wire)
     // the day numbers are proleptic Gregorian, Spark's own DateType
-    // values; getDate's hybrid calendar shifts the two pre-1582 dates
-    assert(wired(1)(da) == epochDay("1582-10-10") && wired(1)(da) == -141432)
-    assert(wired(2)(da) == epochDay("0001-01-01"))
-    assert(plain(1)(da) != wired(1)(da))
-    plain.indices.foreach { r =>
-      val (w, p) = if (r == 1 || r == 2) (wired(r).patch(da, Nil, 1), plain(r).patch(da, Nil, 1))
-        else (wired(r), plain(r))
-      assert(w == p, s"row $r over the wire")
-    }
+    // values, where getDate's hybrid calendar shifts pre-1582 dates
+    val da = duckSchema.fieldNames.indexOf("da")
+    assert(plain(1)(da) == epochDay("1582-10-10") && plain(1)(da) == -141432)
+    assert(plain(2)(da) == epochDay("0001-01-01"))
+    // the string wire: the dialect wraps the VARCHAR column, and both
+    // readers read the same values through it
+    val names = duckSchema.fieldNames.toSeq
+    val (wireSql, utf8) = DuckDbDialect.utf8Wire(duckSql, names,
+      n => JdbcScan.remoteTypeNames(duck.withTable("app.v")).get(n))
+    assert(utf8 == Set(names.indexOf("s")), wireSql)
+    assert(wireSql.contains("encode(q.\"s\") AS \"s\""), wireSql)
+    val wired = bothAgree(duck, duckSchema, wireSql, utf8)
+    plain.indices.foreach(r => assert(wired(r) == plain(r), s"row $r over the wire"))
   }
 
-  test("DuckDB date wire: infinity and -infinity read as the extreme day numbers, never NULL") {
+  test("DuckDB dates: infinity and -infinity read as the extreme day numbers, never NULL") {
     duckInit()
     val schema = vectorSchema("id" -> LongType, "da" -> DateType)
     val sql = "SELECT * FROM (VALUES (0, DATE 'infinity'), (1, DATE '-infinity'), " +
       "(2, NULL::DATE), (3, DATE '1582-10-10')) AS t(\"id\", \"da\") ORDER BY \"id\""
-    val (wireSql, wire) = DuckDbDialect.columnWire(sql, schema.fields.toSeq, Map("da" -> "DATE").get)
-    assert(wire == Map(1 -> Wire.EpochDay), wireSql)
     val expected = Seq(Seq(0L, Int.MaxValue), Seq(1L, -Int.MaxValue), Seq(2L, null),
       Seq(3L, epochDay("1582-10-10")))
-    val (cols, _) = viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(duck, wireSql), wire), schema)
-    val rows = viaRows(new JdbcPartitionReader(schema, new JdbcCursor(duck, wireSql), None, wire), schema)
+    val (cols, _) = viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(duck, sql)), schema)
+    val rows = viaRows(new JdbcPartitionReader(schema, new JdbcCursor(duck, sql)), schema)
     assert(cols == expected && rows == expected)
   }
 
@@ -213,7 +207,7 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
     duckInit()
     val schema = vectorSchema("id" -> LongType, "s" -> StringType)
     val sql = "SELECT \"id\", \"s\" FROM app.v WHERE \"id\" < 10 OR \"id\" IN (4095, 4096) ORDER BY \"id\""
-    val (wireSql, wire) = DuckDbDialect.columnWire(sql, schema.fields.toSeq, Map("s" -> "VARCHAR").get)
+    val (wireSql, utf8) = DuckDbDialect.utf8Wire(sql, Seq("id", "s"), Map("s" -> "VARCHAR").get)
     val expected = {
       val c = duck.connect()
       try {
@@ -224,8 +218,8 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
         out.toSeq
       } finally c.close()
     }
-    val (cols, _) = viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(duck, wireSql), wire), schema)
-    val rows = viaRows(new JdbcPartitionReader(schema, new JdbcCursor(duck, wireSql), None, wire), schema)
+    val (cols, _) = viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(duck, wireSql), utf8), schema)
+    val rows = viaRows(new JdbcPartitionReader(schema, new JdbcCursor(duck, wireSql), None, utf8), schema)
     assert(cols == expected && rows == expected)
     val byId = expected.map(r => r.head -> r(1)).toMap
     assert(byId(2L) == Seq.empty[Byte])
@@ -300,6 +294,27 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
     exec(duck, "CREATE OR REPLACE TABLE app.huge (id BIGINT, h HUGEINT)")
     val e = intercept[Exception](spark.table("ddef.app.huge").schema)
     assert(e.getMessage.contains("unsupported JDBC type 2000"), e.getMessage)
+  }
+
+  test("DuckDB dates are exact under a pushed TopN, a pushed aggregate and a pushed filter") {
+    duckCatalog()
+    def days(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      df.queryExecution.toRdd.map(_.getInt(0)).collect().toSeq
+    def pushed(df: org.apache.spark.sql.DataFrame, clause: String): Unit = {
+      val sqls = partitionSql(df)
+      assert(sqls.nonEmpty && sqls.forall(_.contains(clause)), sqls)
+    }
+    val v = spark.table("did.app.v")
+    val top = v.select("da").orderBy(col("da").asc_nulls_last).limit(2)
+    pushed(top, "ORDER BY")
+    assert(days(top) == Seq(epochDay("0001-01-01"), epochDay("1582-10-10")))
+    val agg = v.filter(col("id") === 1).agg(min("da"), max("da"))
+    pushed(agg, "MIN(")
+    assert(days(agg) == Seq(epochDay("1582-10-10")))
+    // a pushed DATE literal (rendered proleptic) matches the value read
+    val eq = v.filter(col("da") === lit("1582-10-10").cast("date")).select("da")
+    pushed(eq, "WHERE")
+    assert(days(eq) == Seq(epochDay("1582-10-10")))
   }
 
   test("DuckDB BIT bitstrings read as their text; BOOLEAN still reads as boolean") {

@@ -137,7 +137,7 @@ class TypeBreadthSpec extends AnyFunSuite with SparkFixture {
       ("addr", java.sql.Types.STRUCT, "addr_t"),            // composite → text by default
       ("pos", java.sql.Types.OTHER, "point"),               // point → struct<x,y>
       ("k", java.sql.Types.BIGINT, "int8"))
-    val base = TypeMapping.schemaOf(md)
+    val base = TypeMapping.schemaOf(md, PostgresDialect)
     assert(base("mood").dataType == StringType)
     assert(base("pos").dataType ==
       StructType(Seq(StructField("x", DoubleType), StructField("y", DoubleType))))
@@ -157,13 +157,28 @@ class TypeBreadthSpec extends AnyFunSuite with SparkFixture {
       declared("addr").dataType)
   }
 
+  test("BIT reads as boolean on every dialect but DuckDB, whose BIT is a bitstring") {
+    // pg bit(1) / MySQL BIT(1) (and TINYINT(1) under Connector/J's
+    // tinyInt1isBit) report Types.BIT; DuckDB's BIT reports it too
+    val md = stubMd(("pg", java.sql.Types.BIT, "bit"), ("my", java.sql.Types.BIT, "BIT"),
+      ("tiny", java.sql.Types.BIT, "TINYINT"), ("u", java.sql.Types.JAVA_OBJECT, "UUID"))
+    Seq(PostgresDialect, MySqlDialect, DerbyDialect, SqliteDialect, ClickHouseDialect).foreach { d =>
+      val e = intercept[IllegalArgumentException](TypeMapping.schemaOf(md, d))
+      assert(e.getMessage.contains("unsupported JDBC type 2000"), s"${d.name}: ${e.getMessage}")
+      val sch = TypeMapping.schemaOf(md, d, unsupportedAsString = true)
+      assert(Seq("pg", "my", "tiny").forall(sch(_).dataType == BooleanType), s"${d.name}: $sch")
+    }
+    val duck = TypeMapping.schemaOf(md, DuckDbDialect)
+    assert(duck.map(_.dataType) == Seq(StringType, StringType, BooleanType, StringType), duck)
+  }
+
   test("decimal wider than 38 rejects by default, reads as text under =string") {
     // pg numeric(76,0) — the Decimal256 case (SURVEY §1.2: reject or
     // string, never a silent clamp that corrupts wide values)
     val md = stubMd(("big", java.sql.Types.NUMERIC, "numeric"))
-    val e = intercept[IllegalArgumentException](TypeMapping.schemaOf(md76(md)))
+    val e = intercept[IllegalArgumentException](TypeMapping.schemaOf(md76(md), PostgresDialect))
     assert(e.getMessage.contains("unsupportedtypeaction=string"))
-    assert(TypeMapping.schemaOf(md76(md), unsupportedAsString = true)("big")
+    assert(TypeMapping.schemaOf(md76(md), PostgresDialect, unsupportedAsString = true)("big")
       .dataType == StringType)
     // the option surfaces on JdbcOptions for both read call sites
     assert(JdbcOptions(Map("url" -> "jdbc:derby:memory:x",
