@@ -1,59 +1,72 @@
 package graft.sources.document
 
+import graft.sources.jdbc.JdbcColumnarReader.BatchRows
+import graft.sources.jdbc.TypeMapping
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Columnar document reader: fills `OnHeapColumnVector`s straight from
-  * the parsed documents, `BatchRows` docs per `ColumnarBatch` — the
-  * DSv2 columnar read path (SURVEY §4.2; the reference streams Arrow
-  * RecordBatches the same way, `sql_provider_datafusion/mod.rs:657-684`,
-  * and chunks its wire reads at 4,000 rows, `postgres/src/conn.rs:443`,
-  * which `BatchRows` mirrors).
+/** The document scan reader, for batch and micro-batch scans: fills
+  * `OnHeapColumnVector`s straight from the parsed documents, `BatchRows`
+  * docs per `ColumnarBatch` — the DSv2 columnar read path (SURVEY §4.2;
+  * the reference streams Arrow RecordBatches the same way,
+  * `sql_provider_datafusion/mod.rs:657-684`, and chunks its wire reads
+  * at 4,000 rows, `postgres/src/conn.rs:443`, which `BatchRows`
+  * mirrors).
   *
-  * Scale: the vectors are reused across batches (allocate once, reset
-  * per fill), so a 100 TB collection scans with per-batch allocation
-  * cost O(1); downstream stages read columns without per-row iterator
-  * overhead and Spark's columnar-to-row boundary vectorizes the handoff.
+  * The vectors are allocated on the first document, so a partition that
+  * yields none allocates nothing, and reused (reset per fill) after
+  * that; the first batch holds at most `firstBatchRows`, the pushed
+  * limit. A declared type that [[DocConverter.toCatalyst]] does not
+  * read comes back NULL.
   */
 final class DocumentColumnarReader(
     schema: StructType,
     options: Map[String, String],
-    cursor: DocumentCursor) extends PartitionReader[ColumnarBatch] {
-
-  import DocumentColumnarReader.BatchRows
+    cursor: DocumentCursor,
+    firstBatchRows: Int = BatchRows) extends PartitionReader[ColumnarBatch] {
 
   private val conv = new DocConverter(schema, options)
-  private val vectors: Array[OnHeapColumnVector] =
-    OnHeapColumnVector.allocateColumns(BatchRows, schema)
-  private val batch = new ColumnarBatch(vectors.map(v =>
-    v: org.apache.spark.sql.vectorized.ColumnVector))
+  private var vectors: Array[OnHeapColumnVector] = _
+  private var batch: ColumnarBatch = _
+  private var capacity = 0
   private var closed = false
 
+  private def allocate(rows: Int): Unit = {
+    if (batch != null) batch.close()
+    capacity = rows
+    vectors = OnHeapColumnVector.allocateColumns(rows, schema)
+    batch = new ColumnarBatch(vectors.map(v =>
+      v: org.apache.spark.sql.vectorized.ColumnVector))
+  }
+
   override def next(): Boolean = {
-    var r = 0
-    var doc = if (r < BatchRows) cursor.nextDoc() else null
+    var doc = cursor.nextDoc()
     if (doc == null) return false
-    vectors.foreach(_.reset())
-    childOffsets.clear() // array children restart at element 0 after reset
+    if (vectors == null) allocate(firstBatchRows)
+    else if (capacity < BatchRows) allocate(BatchRows)
+    else vectors.foreach(_.reset())
+    var r = 0
     while (doc != null) {
       var i = 0
       while (i < schema.length) {
-        put(vectors(i), r, schema.fields(i).dataType, conv.fieldValue(doc, i))
+        put(i, r, conv.fieldValue(doc, i))
         i += 1
       }
       r += 1
-      doc = if (r < BatchRows) cursor.nextDoc() else null
+      doc = if (r < capacity) cursor.nextDoc() else null
     }
     batch.setNumRows(r)
     true
   }
 
-  private def put(v: OnHeapColumnVector, r: Int, dt: DataType, value: Any): Unit = {
-    if (value == null) { v.putNull(r); return }
-    dt match {
+  private def put(i: Int, r: Int, value: Any): Unit = {
+    val v = vectors(i)
+    schema.fields(i).dataType match {
+      case at: ArrayType => TypeMapping.append(v, at, value) // NULL included
+      case _ if value == null => v.putNull(r)
       case BooleanType => v.putBoolean(r, value.asInstanceOf[Boolean])
       case IntegerType => v.putInt(r, value.asInstanceOf[Int])
       case LongType => v.putLong(r, value.asInstanceOf[Long])
@@ -63,52 +76,13 @@ final class DocumentColumnarReader(
       case StringType =>
         val b = value.asInstanceOf[UTF8String].getBytes
         v.putByteArray(r, b, 0, b.length)
-      case ArrayType(StringType, _) =>
-        val arr = value.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        val child = v.arrayData()
-        val start = childOffsets(v)
-        val n = arr.numElements()
-        child.reserve(start + n)
-        var j = 0
-        while (j < n) {
-          val e = arr.getUTF8String(j)
-          if (e == null) child.putNull(start + j)
-          else {
-            val b = e.getBytes
-            child.putByteArray(start + j, b, 0, b.length)
-          }
-          j += 1
-        }
-        childOffsets(v) = start + n
-        v.putArray(r, start, n)
-      case other =>
-        throw new IllegalStateException(s"non-vectorizable type $other") // guarded by vectorizable()
     }
   }
-
-  // per-vector running element count for array children (reset per batch)
-  private val childOffsets = scala.collection.mutable.Map.empty[OnHeapColumnVector, Int]
-    .withDefaultValue(0)
 
   override def get(): ColumnarBatch = batch
 
   override def close(): Unit = if (!closed) {
     closed = true
-    try batch.close() finally cursor.close()
-  }
-}
-
-object DocumentColumnarReader {
-  /** Docs per ColumnarBatch (the reference's 4,000-row wire chunking). */
-  val BatchRows = 4096
-
-  /** The vector-fill set: types [[DocumentColumnarReader]] can write
-    * into a column vector. Schemas with anything else scan row-based.
-    */
-  def vectorizable(dt: DataType): Boolean = dt match {
-    case BooleanType | IntegerType | LongType | DoubleType | StringType => true
-    case _: DecimalType => true
-    case ArrayType(StringType, _) => true
-    case _ => false
+    try { if (batch != null) batch.close() } finally cursor.close()
   }
 }

@@ -2,7 +2,6 @@ package graft.sources.document
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -227,10 +226,7 @@ final case class DocumentScan(
       .map(f => DocumentPartition(f.toString): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    DocumentReaderFactory(schema, options, filter, limit, sort,
-      // batch scans vectorize unless explicitly disabled; micro-batch
-      // streaming stays row-based (its factory below passes no flag)
-      allowColumnar = options.getOrElse("columnar", "true").toBoolean)
+    DocumentReaderFactory(schema, options, filter, limit, sort)
 
   /** Streaming read of an append-only collection directory: each new
     * file is a new micro-batch partition (SURVEY §2.7's extension seam —
@@ -295,42 +291,35 @@ final class DocumentMicroBatchStream(
 
 final case class DocumentPartition(file: String) extends InputPartition
 
+/** Batch and micro-batch scans both read columnar (SURVEY §4.2's
+  * improvement note; reference anchor: Arrow-native RecordBatch
+  * streaming end to end, `sql_provider_datafusion/mod.rs:657-684`): the
+  * document source owns its format, so it fills column vectors directly
+  * instead of emitting one InternalRow per doc.
+  */
 final case class DocumentReaderFactory(
     schema: StructType,
     options: Map[String, String],
     filter: Option[FilterDoc],
     limit: Option[Int],
-    sort: Seq[FilterDoc.SortKey] = Nil,
-    allowColumnar: Boolean = false) extends PartitionReaderFactory {
+    sort: Seq[FilterDoc.SortKey] = Nil) extends PartitionReaderFactory {
 
-  /** Columnar batch scans (SURVEY §4.2's improvement note; reference
-    * anchor: Arrow-native RecordBatch streaming end to end,
-    * `sql_provider_datafusion/mod.rs:657-684`): the document source owns
-    * its format, so it can fill column vectors directly instead of
-    * emitting one InternalRow per doc. Column types outside the
-    * vector-fill set (nested arrays-of-non-string) fall back to rows.
-    */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    allowColumnar && schema.fields.forall(f =>
-      DocumentColumnarReader.vectorizable(f.dataType))
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new DocumentColumnarReader(schema, options,
       new DocumentCursor(options, filter, limit, sort,
-        partition.asInstanceOf[DocumentPartition].file))
+        partition.asInstanceOf[DocumentPartition].file),
+      graft.sources.jdbc.JdbcColumnarReader.firstBatchRows(limit))
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new DocumentPartitionReader(
-      schema, options,
-      new DocumentCursor(options, filter, limit, sort,
-        partition.asInstanceOf[DocumentPartition].file))
+    throw new UnsupportedOperationException("document scans read columnar batches only")
 }
 
 /** Streams one JSONL file and yields the documents that survive the
   * pushed filter/sort/limit — the "server side" of a real document
-  * store's find(filter).sort(doc).limit(n), shared by the row and
-  * columnar readers.
+  * store's find(filter).sort(doc).limit(n).
   */
 final class DocumentCursor(
     options: Map[String, String],
@@ -383,9 +372,7 @@ final class DocumentCursor(
   def close(): Unit = reader.close()
 }
 
-/** Field extraction + JSON→Catalyst conversion per the resolved schema,
-  * shared by the row and columnar readers.
-  */
+/** Field extraction + JSON→Catalyst conversion per the resolved schema. */
 final class DocConverter(schema: StructType, options: Map[String, String]) {
   import DocumentTable.mapper
 
@@ -438,32 +425,4 @@ final class DocConverter(schema: StructType, options: Map[String, String]) {
       case _ => null
     }
   }
-}
-
-/** Row-at-a-time reader (streaming micro-batches, and schemas outside
-  * the vector-fill set).
-  */
-final class DocumentPartitionReader(
-    schema: StructType,
-    options: Map[String, String],
-    cursor: DocumentCursor) extends PartitionReader[InternalRow] {
-
-  private val conv = new DocConverter(schema, options)
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    val doc = cursor.nextDoc()
-    if (doc == null) return false
-    val row = new GenericInternalRow(schema.length)
-    var i = 0
-    while (i < schema.length) {
-      row.update(i, conv.fieldValue(doc, i))
-      i += 1
-    }
-    current = row
-    true
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = cursor.close()
 }

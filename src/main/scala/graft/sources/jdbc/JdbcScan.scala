@@ -557,8 +557,7 @@ final case class JdbcScan(
     else remoteTypes.get(name.toLowerCase)
 
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    if (JdbcReaderFactory.columnar(schema, catchAll)) Scan.ColumnarSupportMode.SUPPORTED
-    else Scan.ColumnarSupportMode.UNSUPPORTED
+    Scan.ColumnarSupportMode.SUPPORTED
 
   override def createReaderFactory(): PartitionReaderFactory =
     JdbcReaderFactory(options, schema, catchAll, limit)
@@ -667,31 +666,23 @@ object JdbcScan extends Logging {
 final case class JdbcInputPartition(sql: String, idx: Int, utf8: Set[Int] = Set.empty)
   extends InputPartition
 
-/** Columnar when every column is in the vector-fill set and no
-  * catch-all folds rows; `limit` caps the first batch's allocation.
+/** Every partition reads columnar ([[JdbcColumnarReader]]); `limit`
+  * caps the first batch's allocation.
   */
 final case class JdbcReaderFactory(options: JdbcOptions, schema: StructType,
     catchAll: Option[(String, StructType)] = None, limit: Option[Int] = None)
   extends PartitionReaderFactory {
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    JdbcReaderFactory.columnar(schema, catchAll)
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[JdbcInputPartition]
     new JdbcColumnarReader(schema, new JdbcCursor(options, p.sql), p.utf8,
-      JdbcColumnarReader.firstBatchRows(limit))
+      JdbcColumnarReader.firstBatchRows(limit), catchAll)
   }
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[JdbcInputPartition]
-    new JdbcPartitionReader(schema, new JdbcCursor(options, p.sql), catchAll, p.utf8)
-  }
-}
-
-object JdbcReaderFactory {
-  def columnar(schema: StructType, catchAll: Option[(String, StructType)]): Boolean =
-    catchAll.isEmpty && schema.fields.forall(f => TypeMapping.vectorizable(f.dataType))
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("JDBC scans read columnar batches only")
 }
 
 /** One partition's remote statement, opened on first use: a reader
@@ -741,71 +732,4 @@ class JdbcCursor(options: JdbcOptions, sql: String) extends Logging {
 object JdbcCursor {
   /** Test hook: scan statements executed in this JVM. */
   private[jdbc] val executed = new java.util.concurrent.atomic.AtomicLong
-}
-
-/** Row reader for the schemas the columnar reader does not fill: a
-  * catch-all projection, array, struct, map and interval columns.
-  *
-  * With a `catchAll` projection the physical cursor carries the pinned
-  * survivors followed by every folded remote column; `get()` re-shapes
-  * each physical row into the output schema, serializing the folded
-  * tail as one sorted-key JSON object string (the reference's
-  * `project_row`, `schema_projection.rs`). No folded columns at all →
-  * the catch-all reads as SQL NULL.
-  */
-final class JdbcPartitionReader(schema: StructType, cursor: JdbcCursor,
-    catchAll: Option[(String, StructType)] = None, utf8: Set[Int] = Set.empty)
-  extends PartitionReader[InternalRow] {
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-
-  // physical result schema (what the rendered SQL actually selects)
-  private val physSchema: StructType = catchAll match {
-    case Some((ca, rest)) =>
-      StructType(schema.fields.filterNot(_.name.equalsIgnoreCase(ca)) ++ rest.fields)
-    case None => schema
-  }
-  private val physTypes = physSchema.fields.map(_.dataType)
-  // output index → physical index, -1 marking the catch-all slot
-  private val outIndex: Option[Array[Int]] = catchAll.map { case (ca, _) =>
-    var p = 0
-    schema.fields.map { f =>
-      if (f.name.equalsIgnoreCase(ca)) -1 else { val i = p; p += 1; i }
-    }
-  }
-  private val rest: StructType = catchAll.fold(new StructType())(_._2)
-  private val pinnedCount = outIndex.fold(0)(_.count(_ >= 0))
-
-  // metadata-aware: TIME columns normalize to the epoch day regardless
-  // of the driver's date-component convention
-  private lazy val getters = TypeMapping.getters(physSchema, cursor.rs.getMetaData, utf8)
-
-  private def physGet(phys: InternalRow, p: Int): Any =
-    if (phys.isNullAt(p)) null else phys.get(p, physTypes(p))
-
-  override def next(): Boolean = cursor.rs.next()
-  override def get(): InternalRow = {
-    val phys = TypeMapping.readRow(cursor.rs, getters)
-    outIndex match {
-      case None => phys
-      case Some(idx) =>
-        val out = new GenericInternalRow(idx.length)
-        var i = 0
-        while (i < idx.length) {
-          if (idx(i) >= 0) out.update(i, physGet(phys, idx(i)))
-          else if (rest.isEmpty) out.update(i, null)
-          else {
-            val restRow = new GenericInternalRow(rest.length)
-            var j = 0
-            while (j < rest.length) {
-              restRow.update(j, physGet(phys, pinnedCount + j)); j += 1
-            }
-            out.update(i, org.apache.spark.unsafe.types.UTF8String.fromString(
-              TypeMapping.toJson(rest, restRow)))
-          }
-          i += 1
-        }
-        out
-    }
-  }
-  override def close(): Unit = cursor.close()
 }

@@ -2,7 +2,7 @@ package graft.sources.jdbc
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.catalyst.util.{ArrayData, DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.execution.vectorized.WritableColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -15,9 +15,10 @@ import java.sql.{PreparedStatement, ResultSet, ResultSetMetaData, Types}
   * `arrow_sql_gen` modules (e.g.
   * `crates/postgres/src/arrow_sql_gen/schema.rs:53-107`,
   * `crates/mysql/src/arrow_sql_gen.rs:703-760`): the reference maps wire
-  * types ⇄ Arrow; we map JDBC ⇄ Catalyst. Values cross the boundary as
-  * `InternalRow`s — Spark's Tungsten-native representation — so the scan
-  * feeds WholeStageCodegen without a row-conversion node.
+  * types ⇄ Arrow; we map JDBC ⇄ Catalyst. Reads fill Spark column
+  * vectors ([[fills]]) that the scan hands over as `ColumnarBatch`es, as
+  * the reference streams Arrow record batches; writes bind from
+  * `InternalRow`s.
   *
   * Unlike the reference's INSERT path, which renders every value to a SQL
   * literal (`statement.rs:186-1055`), writes bind through JDBC
@@ -52,7 +53,7 @@ object TypeMapping {
     case Types.BINARY | Types.VARBINARY | Types.LONGVARBINARY | Types.BLOB => BinaryType
     case Types.DATE => DateType
     // DOCUMENTED CHOICE (SURVEY §1.2): TIME maps to TimestampType on the
-    // epoch day — lossless and orderable; the metadata-aware [[getters]]
+    // epoch day — lossless and orderable; the metadata-aware [[fills]]
     // pins the date component to 1970-01-01 (drivers disagree: Derby's
     // getTimestamp-over-TIME uses the current date). The reference
     // models Time32/Time64 distinctly (statement.rs:327-407); Spark has
@@ -172,58 +173,6 @@ object TypeMapping {
         .map(d => f.copy(dataType = d.dataType)).getOrElse(f)
     })
 
-  /** One column getter: ResultSet position → Catalyst internal value. */
-  type Getter = (ResultSet, Int) => Any
-
-  def getter(dt: DataType): Getter = dt match {
-    case BooleanType => (rs, i) => rs.getBoolean(i)
-    case ByteType => (rs, i) => rs.getByte(i)
-    case ShortType => (rs, i) => rs.getShort(i)
-    case IntegerType => (rs, i) => rs.getInt(i)
-    case LongType => (rs, i) => rs.getLong(i)
-    case FloatType => (rs, i) => rs.getFloat(i)
-    case DoubleType => (rs, i) => rs.getDouble(i)
-    case d: DecimalType => (rs, i) => {
-      val v = rs.getBigDecimal(i)
-      if (v == null) null else Decimal(v, d.precision, d.scale)
-    }
-    case StringType => (rs, i) => UTF8String.fromString(rs.getString(i))
-    case BinaryType => new BinaryGetter
-    case DateType => (rs, i) => {
-      val v = rs.getDate(i)
-      if (v == null) null else DateTimeUtils.fromJavaDate(v)
-    }
-    case TimestampType | TimestampNTZType => (rs, i) => {
-      val v = rs.getTimestamp(i)
-      if (v == null) null else DateTimeUtils.fromJavaTimestamp(v)
-    }
-    // durations live as BIGINT micros remotely (reference maps Duration
-    // to a big-integer column, statement.rs:313-326,1302)
-    case _: DayTimeIntervalType => (rs, i) => rs.getLong(i)
-    // native JDBC ARRAY columns (reference pg arrays -> List,
-    // `arrow_sql_gen/schema.rs:163-190`): java.sql.Array -> Catalyst
-    // array; elements arrive boxed from the driver
-    case ArrayType(et, _) => (rs, i) => {
-      val a = rs.getArray(i)
-      if (a == null) null
-      else {
-        val raw = a.getArray.asInstanceOf[Array[AnyRef]]
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          raw.map(fromBoxed(et, _)).toSeq)
-      }
-    }
-    // composite / range columns arrive as their pg text literal
-    // (JDBC exposes no portable member accessor); parsed here into the
-    // declared struct — the read half of the reference's composite.rs
-    case st: StructType => (rs, i) => {
-      val s = rs.getString(i)
-      if (s == null) null
-      else if (isRangeStruct(st)) parseRange(s, st.fields(0).dataType)
-      else parseComposite(s, st)
-    }
-    case other => throw new IllegalArgumentException(s"unsupported read type $other")
-  }
-
   /** A Blob column's bytes, null for SQL NULL. */
   private def blobBytes(rs: ResultSet, i: Int): Array[Byte] = {
     val b = rs.getBlob(i)
@@ -235,9 +184,9 @@ object TypeMapping {
     * finding). The choice is made on the column's first value and kept,
     * so a BLOB scan does not throw and catch once per value.
     */
-  private final class BinaryGetter extends Getter {
+  private final class BinaryBytes extends ((ResultSet, Int) => Array[Byte]) {
     private var viaBlob = false
-    override def apply(rs: ResultSet, i: Int): Any =
+    override def apply(rs: ResultSet, i: Int): Array[Byte] =
       if (viaBlob) blobBytes(rs, i)
       else
         try rs.getBytes(i)
@@ -364,34 +313,6 @@ object TypeMapping {
   /** TIME on the epoch day: micros since midnight. */
   private def microsOfDay(t: java.sql.Time): Long = t.toLocalTime.toNanoOfDay / 1000L
 
-  /** Column getters for a result schema, refined by the LIVE ResultSet
-    * metadata: a remote TIME column (mapped to TimestampType per the
-    * documented §1.2 choice) reads `getTime` and lands on the EPOCH DAY
-    * deterministically — JDBC drivers disagree on the date component of
-    * `getTimestamp` over TIME (Derby uses the current date). A DATE
-    * column whose driver hands out `java.time.LocalDate` objects reads
-    * that object ([[localDates]]). Positions in `utf8` hold string
-    * values that arrive as a Blob of their UTF-8 bytes
-    * ([[Dialect.utf8Wire]]).
-    */
-  def getters(schema: StructType, md: ResultSetMetaData,
-      utf8: Set[Int] = Set.empty): Array[Getter] =
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      f.dataType match {
-        case StringType if utf8(i) =>
-          (rs: ResultSet, p: Int) => UTF8String.fromBytes(blobBytes(rs, p))
-        case DateType if localDates(md, i) => (rs: ResultSet, p: Int) => {
-          val d = localDate(rs, p)
-          if (d == null) null else d.toEpochDay.toInt
-        }
-        case TimestampType | TimestampNTZType if isTime(md, i) => (rs: ResultSet, p: Int) => {
-          val v = rs.getTime(p)
-          if (v == null) null else microsOfDay(v)
-        }
-        case dt => getter(dt)
-      }
-    }
-
   /** Whether the driver's object for DATE column `i` is a
     * `java.time.LocalDate` (DuckDB's is). Its day number is exact:
     * `getDate` builds a `java.sql.Date` in the hybrid Julian calendar,
@@ -407,17 +328,6 @@ object TypeMapping {
   private def localDate(rs: ResultSet, p: Int): java.time.LocalDate =
     rs.getObject(p).asInstanceOf[java.time.LocalDate]
 
-  /** The vector-fill set: types [[JdbcColumnarReader]] writes straight
-    * into a column vector. Schemas with anything else scan row-based.
-    */
-  def vectorizable(dt: DataType): Boolean = dt match {
-    case BooleanType | ByteType | ShortType | IntegerType | LongType | FloatType |
-         DoubleType | StringType | BinaryType | DateType | TimestampType |
-         TimestampNTZType => true
-    case _: DecimalType => true
-    case _ => false
-  }
-
   /** One column fill: the current ResultSet row's value at position
     * `p` into row `r` of a column vector.
     */
@@ -425,11 +335,18 @@ object TypeMapping {
     def apply(rs: ResultSet, p: Int, v: WritableColumnVector, r: Int): Unit
   }
 
-  /** Column fills for a vectorizable result schema: the driver getters
-    * of [[getters]] (TIME over timestamp, LocalDate dates and UTF-8
-    * Blob strings included), one typed fill per column, so a value reads
-    * the same through either reader. Primitive getters test `wasNull`;
-    * object getters test the returned reference.
+  /** Column fills for a result schema, one typed driver call per
+    * column, refined by the LIVE ResultSet metadata: a remote TIME
+    * column (mapped to TimestampType per the documented §1.2 choice)
+    * reads `getTime` and lands on the EPOCH DAY deterministically —
+    * JDBC drivers disagree on the date component of `getTimestamp` over
+    * TIME (Derby uses the current date). A DATE column whose driver
+    * hands out `java.time.LocalDate` objects reads that object
+    * ([[localDates]]). Positions in `utf8` hold string values that
+    * arrive as a Blob of their UTF-8 bytes ([[Dialect.utf8Wire]]).
+    * Primitive getters test `wasNull`; object getters test the returned
+    * reference. Array and struct values go into their child vectors
+    * through [[append]], so rows are filled in order.
     */
   def fills(schema: StructType, md: ResultSetMetaData,
       utf8: Set[Int] = Set.empty): Array[Fill] =
@@ -451,7 +368,9 @@ object TypeMapping {
         case IntegerType => (rs, p, v, r) => {
           val x = rs.getInt(p); if (rs.wasNull()) v.putNull(r) else v.putInt(r, x)
         }
-        case LongType => (rs, p, v, r) => {
+        // durations live as BIGINT micros remotely (reference maps Duration
+        // to a big-integer column, statement.rs:313-326,1302)
+        case LongType | _: DayTimeIntervalType => (rs, p, v, r) => {
           val x = rs.getLong(p); if (rs.wasNull()) v.putNull(r) else v.putLong(r, x)
         }
         case FloatType => (rs, p, v, r) => {
@@ -469,9 +388,7 @@ object TypeMapping {
           val s = rs.getString(p)
           if (s == null) null else s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         })
-        case BinaryType =>
-          val g = new BinaryGetter
-          bytes((rs, p) => g(rs, p).asInstanceOf[Array[Byte]])
+        case BinaryType => bytes(new BinaryBytes)
         case DateType if localDates(md, i) => (rs, p, v, r) => {
           val x = localDate(rs, p)
           if (x == null) v.putNull(r) else v.putInt(r, x.toEpochDay.toInt)
@@ -488,20 +405,58 @@ object TypeMapping {
           val x = rs.getTimestamp(p)
           if (x == null) v.putNull(r) else v.putLong(r, DateTimeUtils.fromJavaTimestamp(x))
         }
-        case other => throw new IllegalArgumentException(s"non-vectorizable read type $other")
+        // native JDBC ARRAY columns (reference pg arrays -> List,
+        // `arrow_sql_gen/schema.rs:163-190`); elements arrive boxed
+        case at @ ArrayType(et, _) => (rs, p, v, _) => {
+          val a = rs.getArray(p)
+          append(v, at, if (a == null) null
+            else new GenericArrayData(a.getArray.asInstanceOf[Array[AnyRef]].map(fromBoxed(et, _))))
+        }
+        // composite / range / point columns arrive as their pg text
+        // literal (JDBC exposes no portable member accessor), parsed into
+        // the declared struct — the read half of the reference's composite.rs
+        case st: StructType => (rs, p, v, _) => {
+          val x = rs.getString(p)
+          append(v, st, if (x == null) null
+            else if (isRangeStruct(st)) parseRange(x, st.fields(0).dataType)
+            else parseComposite(x, st))
+        }
+        case other => throw new IllegalArgumentException(s"unsupported read type $other")
       }
     }
 
-  /** Materialize the current ResultSet row as an InternalRow. */
-  def readRow(rs: ResultSet, getters: Array[Getter]): InternalRow = {
-    val out = new GenericInternalRow(getters.length)
-    var i = 0
-    while (i < getters.length) {
-      val v = getters(i)(rs, i + 1)
-      out.update(i, if (rs.wasNull()) null else v)
-      i += 1
-    }
-    out
+  /** Appends `value`, a Catalyst value of `dt`, as the next element of
+    * `v`, children included, in the layout Spark's own
+    * `RowToColumnConverter` writes. The nested-value writer of both
+    * scan readers: a vector written through it is written only through
+    * it, so that its next element is the next row.
+    */
+  def append(v: WritableColumnVector, dt: DataType, value: Any): Unit = dt match {
+    case st: StructType =>
+      v.appendStruct(value == null) // a NULL struct appends NULL children itself
+      if (value != null) {
+        val row = value.asInstanceOf[InternalRow]
+        st.fields.indices.foreach { i =>
+          val t = st.fields(i).dataType
+          append(v.getChild(i), t, if (row.isNullAt(i)) null else row.get(i, t))
+        }
+      }
+    case _ if value == null => v.appendNull()
+    case ArrayType(et, _) =>
+      val a = value.asInstanceOf[ArrayData]
+      v.appendArray(a.numElements())
+      (0 until a.numElements()).foreach(j =>
+        append(v.arrayData(), et, if (a.isNullAt(j)) null else a.get(j, et)))
+    case BooleanType => v.appendBoolean(value.asInstanceOf[Boolean])
+    case ShortType => v.appendShort(value.asInstanceOf[Short])
+    case IntegerType | DateType => v.appendInt(value.asInstanceOf[Int])
+    case LongType | TimestampType | TimestampNTZType => v.appendLong(value.asInstanceOf[Long])
+    case FloatType => v.appendFloat(value.asInstanceOf[Float])
+    case DoubleType => v.appendDouble(value.asInstanceOf[Double])
+    case d: DecimalType => v.putDecimal(v.appendNotNull(), value.asInstanceOf[Decimal], d.precision)
+    case StringType =>
+      val b = value.asInstanceOf[UTF8String].getBytes
+      v.appendByteArray(b, 0, b.length)
   }
 
   /** Boxed JDBC element → Catalyst element (null-safe). */

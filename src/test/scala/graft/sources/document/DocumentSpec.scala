@@ -296,30 +296,52 @@ class DocumentSpec extends AnyFunSuite with SparkFixture {
         s""""score": ${i / 4.0}, "tags": $tags, "big": $big}""").append('\n')
     }
     Files.writeString(java.nio.file.Paths.get(s"$dir/part1.jsonl"), sb.toString)
+    // the generator's rows, in the inferred (name-sorted) column order
+    val expected = (1 to 10000).map { i =>
+      List(if (i % 11 == 0) null else new java.math.BigDecimal(s"${i}00000000000000000000"),
+        i, s"doc_$i", i % 2 == 0, i / 4.0,
+        if (i % 7 == 0) null else List(s"t${i % 5}", s"u${i % 3}"))
+    }.sortBy(_.toString)
+    def rowsOf(rows: Array[org.apache.spark.sql.Row]) = rows.map(_.toSeq.map {
+      case s: Seq[_] => s.toList
+      case v => v
+    }.toList).sortBy(_.toString)
 
-    def read(columnar: Boolean) = spark.read
-      .format("graft.sources.document.DocumentSource")
-      .option("path", dir).option("columnar", columnar.toString).load()
-
-    val dfC = read(columnar = true)
+    val dfC = spark.read.format("graft.sources.document.DocumentSource")
+      .option("path", dir).load()
+    assert(dfC.schema.fieldNames.toSeq == Seq("big", "id", "name", "ok", "score", "tags"))
     val scans = dfC.queryExecution.executedPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }
     assert(scans.nonEmpty && scans.forall(_.supportsColumnar),
       s"document batch scan should be columnar:\n${dfC.queryExecution.executedPlan}")
-    val rowsC = dfC.collect().map(_.toSeq.map {
-      case s: Seq[_] => s.toList
-      case v => v
-    }.toList).sortBy(_.toString)
-    val dfR = read(columnar = false)
-    assert(!dfR.queryExecution.executedPlan.collect {
+    val rowsC = rowsOf(dfC.collect())
+    assert(rowsC.length == 10000 && rowsC.sameElements(expected))
+
+    // a micro-batch stream scan reads columnar too, the same rows
+    val q = spark.readStream.format("graft.sources.document.DocumentSource")
+      .option("path", dir).load()
+      .writeStream.format("memory").queryName("doc_col_stream").outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan
+      val streamScans = plan.collect {
+        case m: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec => m
+      }
+      assert(streamScans.nonEmpty && streamScans.forall(_.supportsColumnar), plan)
+      assert(rowsOf(spark.table("doc_col_stream").collect()).sameElements(expected))
+    } finally q.stop()
+
+    // a declared type the converter does not read still reads as NULL
+    val declared = spark.read.format("graft.sources.document.DocumentSource")
+      .option("path", dir).option("declared", "name TIMESTAMP").load()
+    assert(declared.schema("name").dataType == TimestampType)
+    assert(declared.queryExecution.executedPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.exists(_.supportsColumnar))
-    val rowsR = dfR.collect().map(_.toSeq.map {
-      case s: Seq[_] => s.toList
-      case v => v
-    }.toList).sortBy(_.toString)
-    assert(rowsC.length == 10000 && rowsC.sameElements(rowsR))
+    }.forall(_.supportsColumnar))
+    val names = declared.select("id", "name").collect()
+    assert(names.length == 10000 && names.forall(_.isNullAt(1)))
 
     // pushed filter + limit still apply on the columnar path
     val f = dfC.filter(col("ok") === true).limit(17)

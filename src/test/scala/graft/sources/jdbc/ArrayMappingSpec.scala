@@ -2,6 +2,7 @@ package graft.sources.jdbc
 
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -87,8 +88,13 @@ class ArrayMappingSpec extends AnyFunSuite {
       case ("getArray", Array(_: Integer)) => jdbcArray
       case ("wasNull", _) => false
     }
-    val g = TypeMapping.getter(ArrayType(LongType, containsNull = true))
-    val out = g(rs, 1).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val at = ArrayType(LongType, containsNull = true)
+    // an array fill consults no column metadata
+    val md = proxy(classOf[java.sql.ResultSetMetaData])(PartialFunction.empty)
+    val fill = TypeMapping.fills(StructType(Seq(StructField("a", at))), md).head
+    val v = new OnHeapColumnVector(1, at)
+    fill(rs, 1, v, 0)
+    val out = v.getArray(0)
     assert(out.numElements() == 3)
     assert(out.getLong(0) == 7L && out.isNullAt(1) && out.getLong(2) == 9L)
   }

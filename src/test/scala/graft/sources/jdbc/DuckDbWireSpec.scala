@@ -390,7 +390,7 @@ class DuckDbWireSpec extends AnyFunSuite with SparkFixture {
       .map(r => r.getLong(0) -> Option(r.getAs[Array[Byte]](1)).map(_.toSeq)).toMap
     assert(back == in.map { case (k, b) => k -> Option(b).map(_.toSeq) }.toMap)
 
-    // DuckDB's getBytes throws NotSupported: the getter learns that on
+    // DuckDB's getBytes throws NotSupported: the fill learns that on
     // the first value and reads every later one through getBlob
     var getBytesCalls = 0
     val blobOnly = java.lang.reflect.Proxy.newProxyInstance(getClass.getClassLoader,
@@ -402,8 +402,15 @@ class DuckDbWireSpec extends AnyFunSuite with SparkFixture {
         case "getBlob" => new javax.sql.rowset.serial.SerialBlob(Array[Byte](1, 2))
         case other => throw new UnsupportedOperationException(other)
       }).asInstanceOf[java.sql.ResultSet]
-    val g = TypeMapping.getter(org.apache.spark.sql.types.BinaryType)
-    (1 to 5).foreach(_ => assert(g(blobOnly, 1).asInstanceOf[Array[Byte]].toSeq == Seq[Byte](1, 2)))
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("b", org.apache.spark.sql.types.BinaryType)))
+    // a binary fill consults no column metadata
+    val fill = TypeMapping.fills(schema, null).head
+    val v = new org.apache.spark.sql.execution.vectorized.OnHeapColumnVector(5, schema.head.dataType)
+    (0 until 5).foreach { r =>
+      fill(blobOnly, 1, v, r)
+      assert(v.getBinary(r).toSeq == Seq[Byte](1, 2))
+    }
     assert(getBytesCalls == 1)
   }
 

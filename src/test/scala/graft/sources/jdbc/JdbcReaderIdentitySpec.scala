@@ -2,6 +2,7 @@ package graft.sources.jdbc
 
 import graft.SparkFixture
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -14,16 +15,17 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-/** The row reader and the columnar reader, built directly over the same
-  * statement, return identical values for every vectorizable type on
-  * Derby and on DuckDB: NULLs on both sides of the 4096-row batch edge,
-  * calendar-switch and year-1 dates, the widest decimals each engine
-  * holds, surrogate pairs. DuckDB DATE values read through the
-  * driver's `LocalDate` as proleptic day numbers, exact where `getDate`
-  * shifts, in every statement a scan sends. DuckDB's string wire
-  * (VARCHAR sent as `encode(..)` BLOBs) returns the bytes `getString`
-  * would, leaves UUID, ENUM and JSON columns alone, and keeps pushed
-  * filters, range splits and TopN exact.
+/** The columnar reader, built directly over a statement, returns the
+  * values the spec inserted for every flat type on Derby and on DuckDB,
+  * at the default batch size and behind a 3-row first batch: NULLs on
+  * both sides of the 4096-row batch edge, calendar-switch and year-1
+  * dates, the widest decimals each engine holds, surrogate pairs, NaN.
+  * DuckDB DATE values read through the driver's `LocalDate` as
+  * proleptic day numbers, exact where `getDate` shifts, in every
+  * statement a scan sends. DuckDB's string wire (VARCHAR sent as
+  * `encode(..)` BLOBs) returns the bytes `getString` would, leaves UUID,
+  * ENUM and JSON columns alone, and keeps pushed filters, range splits
+  * and TopN exact.
   */
 class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
   import JdbcReaderIdentitySpec._
@@ -39,23 +41,23 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
     } finally c.close()
   }
 
-  /** Read through both readers (and the columnar one with a 3-row first
-    * batch), assert they agree and batch as expected, and return the rows. */
-  private def bothAgree(o: JdbcOptions, schema: StructType, sql: String,
-      utf8: Set[Int] = Set.empty): Seq[Seq[Any]] = {
-    val rows = viaRows(new JdbcPartitionReader(schema, new JdbcCursor(o, sql), None, utf8), schema)
+  /** Read the statement at the default batch size and behind a 3-row
+    * first batch, assert both batch as expected and return the
+    * `expected` rows, and return the rows. */
+  private def readsExpected(o: JdbcOptions, schema: StructType, sql: String,
+      expected: Seq[Seq[Any]], utf8: Set[Int] = Set.empty): Seq[Seq[Any]] = {
     val (cols, sizes) = viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(o, sql), utf8), schema)
     val (small, smallSizes) =
       viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(o, sql), utf8, 3), schema)
-    assert(rows.length == Rows)
+    assert(expected.length == Rows && cols.length == Rows)
     assert(sizes == Seq(4096, 4096, Rows - 8192))
     assert(smallSizes == Seq(3, 4096, 4096, Rows - 8195))
-    rows.indices.foreach { r =>
-      assert(cols(r) == rows(r), s"row $r: columnar ${cols(r)} vs rows ${rows(r)}")
-      assert(small(r) == rows(r), s"row $r (3-row first batch)")
+    expected.indices.foreach { r =>
+      assert(cols(r) == expected(r), s"row $r: read ${cols(r)}, inserted ${expected(r)}")
+      assert(small(r) == expected(r), s"row $r (3-row first batch)")
     }
-    NullRows.foreach(r => assert(rows(r).tail.forall(_ == null), s"row $r: ${rows(r)}"))
-    rows
+    NullRows.foreach(r => assert(cols(r).tail.forall(_ == null), s"row $r: ${cols(r)}"))
+    cols
   }
 
   private def vectorSchema(fields: (String, DataType)*): StructType =
@@ -107,8 +109,28 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
       "ntz" -> TimestampNTZType, "tm" -> TimestampType)
     val sql = "SELECT \"id\", \"bo\", \"ti\", \"sm\", \"i\", \"l\", \"re\", \"d\", \"dec\", " +
       "\"dsm\", \"s\", \"b\", \"da\", \"ts\", \"ts\" AS \"ntz\", \"tm\" FROM \"rid\".\"t\" ORDER BY \"id\""
-    val rows = bothAgree(o, schema, sql)
-    // the values are the remote ones, not two equal misreadings
+    // the inserted values, in the reader's value forms: the bound
+    // java.sql objects go through Spark's own conversions
+    val expected = (0 until Rows).map { r =>
+      if (NullRows(r)) r.toLong +: Seq.fill(schema.length - 1)(null)
+      else {
+        val ts = DateTimeUtils.fromJavaTimestamp(
+          java.sql.Timestamp.valueOf(edgeDate(r).atTime(r % 24, r % 60, 7, r * 1000)))
+        Seq(r.toLong, r % 3 == 0, (r % 256 - 128).toByte, (r * 7 % 65536 - 32768).toShort,
+          if (r == 1) Int.MinValue else r * 2654435,
+          if (r == 2) Long.MaxValue else r.toLong * 1000000007L,
+          java.lang.Float.floatToRawIntBits(r / 7.0f),
+          java.lang.Double.doubleToRawLongBits(if (r == 4) Double.MinPositiveValue else r / 3.0),
+          if (r == 5) new java.math.BigDecimal("9999999999999999999999999.999999")
+          else java.math.BigDecimal.valueOf(r.toLong * 1000003L, 6),
+          java.math.BigDecimal.valueOf(r.toLong - 5000, 2),
+          edgeString(r).getBytes(UTF_8).toSeq,
+          Array.tabulate(r % 64)(j => (j * 37 + r).toByte).toSeq,
+          DateTimeUtils.fromJavaDate(java.sql.Date.valueOf(edgeDate(r))), ts, ts,
+          java.time.LocalTime.of(r % 24, r % 60, r % 60).toNanoOfDay / 1000L)
+      }
+    }
+    val rows = readsExpected(o, schema, sql, expected)
     assert(rows(1)(4) == Int.MinValue && rows(2)(5) == Long.MaxValue)
     assert(rows(8)(6) == java.lang.Float.floatToRawIntBits(8 / 7.0f))
     assert(rows(5)(8) == new java.math.BigDecimal("9999999999999999999999999.999999"))
@@ -151,7 +173,7 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
         "da = DATE '0001-01-01', ts = TIMESTAMP '0001-01-01 00:00:00.000001', s = '' WHERE id = 2",
       "UPDATE app.v SET s = 'nul' || chr(0) || 'inside' WHERE id = 3",
       "UPDATE app.v SET s = repeat('ab😀', 17000) WHERE id = 4",
-      "UPDATE app.v SET re = -0.0, d = 'NaN'::DOUBLE WHERE id = 5")
+      "UPDATE app.v SET re = '-0.0'::REAL, d = 'NaN'::DOUBLE WHERE id = 5")
   }
 
   private def duckInit(): Unit = {
@@ -169,9 +191,53 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
 
   private def epochDay(iso: String): Int = java.time.LocalDate.parse(iso).toEpochDay.toInt
 
+  /** What the SQL that built `app.v` inserted, row by row: the range
+    * formulas, then the edge-row UPDATEs. Timestamps are the local
+    * date-times through Spark's own conversion, as the reader's are. */
+  private lazy val duckExpected: Seq[Seq[Any]] = {
+    def micros(iso: String): Long =
+      DateTimeUtils.fromJavaTimestamp(java.sql.Timestamp.valueOf(java.time.LocalDateTime.parse(iso)))
+    def dec(x: String) = new java.math.BigDecimal(x)
+    val ts0 = micros("2000-01-01T00:00:00")
+    (0 until Rows).map { r =>
+      if (NullRows(r)) r.toLong +: Seq.fill(duckSchema.length - 1)(null)
+      else {
+        val ts = r match {
+          case 1 => micros("1582-10-10T12:34:56.789012")
+          case 2 => micros("0001-01-01T00:00:00.000001")
+          case _ => ts0 + r * 1000003L
+        }
+        Seq(r.toLong, r % 3 == 0, (r % 256 - 128).toByte, (r * 7 % 65536 - 32768).toShort,
+          (r.toLong * 2654435 % 2147483647).toInt, r.toLong * 1000000007L,
+          java.lang.Float.floatToRawIntBits(if (r == 5) -0.0f else (r / 7.0).toFloat),
+          java.lang.Double.doubleToRawLongBits(if (r == 5) Double.NaN else r / 3.0),
+          r match {
+            case 1 => dec("1234567890123456789012345678.0123456789")
+            case 2 => dec("-9999999999999999999999999999.9999999999")
+            case _ => java.math.BigDecimal.valueOf(r.toLong * 1000003L, 6).setScale(10)
+          },
+          java.math.BigDecimal.valueOf(r.toLong - 5000, 2),
+          (r match {
+            case 1 => "x😀😀y中"
+            case 2 => ""
+            case 3 => "nul\u0000inside"
+            case 4 => "ab😀" * 17000
+            case _ => s"v_$r" + (if (r % 3 == 0) "é😀" else "")
+          }).getBytes(UTF_8).toSeq,
+          Seq.fill(r % 64)('b'.toByte),
+          r match {
+            case 1 => epochDay("1582-10-10")
+            case 2 => epochDay("0001-01-01")
+            case _ => epochDay("2000-01-01") + r % 9000
+          },
+          ts, ts, (r % 86400) * 1000000L)
+      }
+    }
+  }
+
   test("DuckDB: both readers agree on every vectorizable type, plain and over the string wire") {
     duckInit()
-    val plain = bothAgree(duck, duckSchema, duckSql)
+    val plain = readsExpected(duck, duckSchema, duckSql, duckExpected)
     assert(plain(1)(8) == new java.math.BigDecimal("1234567890123456789012345678.0123456789"))
     assert(plain(2)(8) == new java.math.BigDecimal("-9999999999999999999999999999.9999999999"))
     assert(plain(9)(12) == epochDay("2000-01-10"))
@@ -180,15 +246,14 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
     val da = duckSchema.fieldNames.indexOf("da")
     assert(plain(1)(da) == epochDay("1582-10-10") && plain(1)(da) == -141432)
     assert(plain(2)(da) == epochDay("0001-01-01"))
-    // the string wire: the dialect wraps the VARCHAR column, and both
-    // readers read the same values through it
+    // the string wire: the dialect wraps the VARCHAR column, and the
+    // reader reads the same values through it
     val names = duckSchema.fieldNames.toSeq
     val (wireSql, utf8) = DuckDbDialect.utf8Wire(duckSql, names,
       n => JdbcScan.remoteTypeNames(duck.withTable("app.v")).get(n))
     assert(utf8 == Set(names.indexOf("s")), wireSql)
     assert(wireSql.contains("encode(q.\"s\") AS \"s\""), wireSql)
-    val wired = bothAgree(duck, duckSchema, wireSql, utf8)
-    plain.indices.foreach(r => assert(wired(r) == plain(r), s"row $r over the wire"))
+    readsExpected(duck, duckSchema, wireSql, duckExpected, utf8)
   }
 
   test("DuckDB dates: infinity and -infinity read as the extreme day numbers, never NULL") {
@@ -199,8 +264,7 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
     val expected = Seq(Seq(0L, Int.MaxValue), Seq(1L, -Int.MaxValue), Seq(2L, null),
       Seq(3L, epochDay("1582-10-10")))
     val (cols, _) = viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(duck, sql)), schema)
-    val rows = viaRows(new JdbcPartitionReader(schema, new JdbcCursor(duck, sql)), schema)
-    assert(cols == expected && rows == expected)
+    assert(cols == expected)
   }
 
   test("DuckDB string wire: bytes equal getString's for empty, NULL, NUL, 100 kB and 4-byte UTF-8") {
@@ -219,8 +283,7 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
       } finally c.close()
     }
     val (cols, _) = viaBatches(new JdbcColumnarReader(schema, new JdbcCursor(duck, wireSql), utf8), schema)
-    val rows = viaRows(new JdbcPartitionReader(schema, new JdbcCursor(duck, wireSql), None, utf8), schema)
-    assert(cols == expected && rows == expected)
+    assert(cols == expected)
     val byId = expected.map(r => r.head -> r(1)).toMap
     assert(byId(2L) == Seq.empty[Byte])
     assert(byId(4095L) == null)
@@ -402,13 +465,6 @@ object JdbcReaderIdentitySpec {
         case x => x
       }
     }
-
-  def viaRows(r: PartitionReader[InternalRow], schema: StructType): Seq[Seq[Any]] =
-    try {
-      val out = ArrayBuffer.empty[Seq[Any]]
-      while (r.next()) out += norm(r.get(), schema)
-      out.toSeq
-    } finally r.close()
 
   def viaBatches(r: PartitionReader[ColumnarBatch], schema: StructType): (Seq[Seq[Any]], Seq[Int]) =
     try {
