@@ -72,6 +72,7 @@ fails = 0
 # against live Docker postgres the same way (core/tests/postgres/
 # mod.rs:204-289). No python pg driver exists here, so statements go
 # through psql with literals inlined; SELECTs come back as json_agg.
+import atexit
 import os
 import shutil
 
@@ -102,6 +103,9 @@ def pg_server_start():
                     f"-o '-p {PG_PORT} -k /tmp' -w start")
         if r.returncode != 0:
             return False
+        # a server this run started stops when it exits, however it
+        # exits; one that was already running is left as it was
+        atexit.register(_pg_run, f"pg_ctl -D {PG_DIR} -m fast -w stop")
     return True
 
 

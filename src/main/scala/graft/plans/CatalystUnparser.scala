@@ -3,17 +3,22 @@ package graft.plans
 import graft.sources.jdbc.{Dialect, Unparser}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
+import org.apache.spark.sql.catalyst.util.V2ExpressionBuilder
 
-/** Catalyst `Expression` → dialect SQL, for the federation rule.
+import scala.util.Try
+
+/** Catalyst `Expression` → dialect SQL, for the federation rule and
+  * [[graft.sources.jdbc.Dml]].
   *
-  * Distinct from [[graft.sources.jdbc.Unparser]] (which renders DSv2
-  * connector expressions fed to the ScanBuilder by
-  * `V2ScanRelationPushDown`): the federation rule runs earlier, inside
-  * the optimizer, where join conditions and filters are still Catalyst
-  * trees. Column references resolve through `attrSql` — the caller's
-  * ExprId → rendered-SQL map — so the same attribute renders as
-  * `"f0"."col"` or a derived-table alias depending on where its leaf
-  * landed in the generated query.
+  * Scalars have one renderer, [[graft.sources.jdbc.Unparser]]: a
+  * Catalyst tree reaches it through Spark's own `V2ExpressionBuilder`,
+  * the converter `V2ScanRelationPushDown` uses to feed the scan
+  * builder, so a federated filter or join condition renders exactly as
+  * a pushed scan filter does. Column references resolve through
+  * `attrSql`, the caller's ExprId → rendered-SQL map, so the same
+  * attribute renders as `"f0"."col"` or a derived-table alias depending
+  * on where its leaf landed in the generated query. Windows have no
+  * DSv2 form and are rendered here around that renderer.
   *
   * All-or-nothing per expression (reference: a filter the dialect cannot
   * render is never partially pushed,
@@ -21,49 +26,31 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
   */
 final class CatalystUnparser(dialect: Dialect, attrSql: Map[ExprId, String]) {
 
-  private val lits = new Unparser(dialect)
+  /** Each attribute's name inside the converted tree: unique per ExprId,
+    * where plain names repeat across join legs. */
+  private def refName(id: ExprId): String = s"#${id.id}"
 
-  def expr(e: Expression): Option[String] = e match {
-    case a: AttributeReference => attrSql.get(a.exprId)
-    case l: Literal =>
-      lits.literal(org.apache.spark.sql.graftx.Bridge.v2Literal(l.value, l.dataType))
-    case And(l, r) => bin("AND", l, r)
-    case Or(l, r) => bin("OR", l, r)
-    case Not(c) => expr(c).map(s => s"(NOT $s)")
-    case EqualTo(l, r) => bin("=", l, r)
-    // Spark `<=>`; Catalyst's INTERSECT/EXCEPT → semi/anti-join rewrite
-    // emits these as the join conditions (set-op equality is null-safe)
-    case EqualNullSafe(l, r) =>
-      for { ls <- expr(l); rs <- expr(r); s <- dialect.nullSafeEqSql(ls, rs) } yield s
-    case LessThan(l, r) => bin("<", l, r)
-    case LessThanOrEqual(l, r) => bin("<=", l, r)
-    case GreaterThan(l, r) => bin(">", l, r)
-    case GreaterThanOrEqual(l, r) => bin(">=", l, r)
-    case IsNull(c) => expr(c).map(s => s"($s IS NULL)")
-    case IsNotNull(c) => expr(c).map(s => s"($s IS NOT NULL)")
-    case In(v, list) if list.nonEmpty && list.forall(_.isInstanceOf[Literal]) =>
-      for { vs <- expr(v); ls <- all(list) }
-        yield s"($vs IN (${ls.mkString(", ")}))"
-    case a: Add => bin("+", a.left, a.right)
-    case a: Subtract => bin("-", a.left, a.right)
-    case a: Multiply => bin("*", a.left, a.right)
-    case a: Remainder =>
-      for (l <- expr(a.left); r <- expr(a.right)) yield dialect.modSql(l, r)
-    // temporal extraction — dialect-routed like the DSv2 unparser's
-    // Extract case (Derby functions / ANSI EXTRACT / SQLite strftime)
-    case Year(c) => expr(c).flatMap(s => dialect.extractSql("YEAR", s))
-    case Quarter(c) => expr(c).flatMap(s => dialect.extractSql("QUARTER", s))
-    case Month(c) => expr(c).flatMap(s => dialect.extractSql("MONTH", s))
-    case DayOfMonth(c) => expr(c).flatMap(s => dialect.extractSql("DAY", s))
-    case Hour(c, _) => expr(c).flatMap(s => dialect.extractSql("HOUR", s))
-    case Minute(c, _) => expr(c).flatMap(s => dialect.extractSql("MINUTE", s))
-    case Second(c, _) => expr(c).flatMap(s => dialect.extractSql("SECOND", s))
-    case c: Cast if c.foldable =>
-      // analyzer-inserted literal widenings fold to plain literals
-      expr(Literal(c.eval(null), c.dataType))
-    case c: Cast if dialect.supportsType(c.dataType) =>
-      expr(c.child).map(s => s"CAST($s AS ${dialect.typeName(c.dataType)})")
-    case _ => None
+  private val unparser = {
+    val byName = attrSql.map { case (id, sql) => refName(id) -> sql }
+    new Unparser(dialect, {
+      case Seq(name) => byName.get(name)
+      case _ => None
+    })
+  }
+
+  /** SQL for `e`, or None when any part of it cannot render: each
+    * attribute is renamed to [[refName]], `V2ExpressionBuilder` converts
+    * the tree, and [[Unparser.expr]] renders it, resolving the names
+    * through `attrSql`. The builder evaluates every foldable subtree to
+    * its literal inside Spark (analyzer-inserted casts included), so a
+    * remote engine never parses Spark's cast text; a fold that throws
+    * keeps `e` local. `isPredicate` spells a bare boolean column as
+    * `(c = TRUE)`.
+    */
+  def expr(e: Expression, isPredicate: Boolean = false): Option[String] = {
+    val named = e.transform { case a: AttributeReference => a.withName(refName(a.exprId)) }
+    Try(new V2ExpressionBuilder(named, isPredicate).build()).toOption.flatten
+      .flatMap(unparser.expr)
   }
 
   /** ORDER BY key with the direction AND null ordering always explicit:
@@ -168,10 +155,7 @@ final class CatalystUnparser(dialect: Dialect, attrSql: Map[ExprId, String]) {
     }
 
   private def all(es: Seq[Expression]): Option[Seq[String]] = {
-    val rendered = es.map(expr)
+    val rendered = es.map(expr(_))
     if (rendered.forall(_.isDefined)) Some(rendered.map(_.get)) else None
   }
-
-  private def bin(op: String, l: Expression, r: Expression): Option[String] =
-    for { ls <- expr(l); rs <- expr(r) } yield s"($ls $op $rs)"
 }

@@ -76,7 +76,21 @@ object FederationRule extends Rule[LogicalPlan] {
       from: String,
       attrs: Map[ExprId, String],
       visible: Seq[Attribute],
-      topAlias: String)
+      topAlias: String) {
+
+    /** `SELECT [DISTINCT] <col> AS "c0", … FROM <from><tail>` over `cols`
+      * (default: the visible columns): position names each output
+      * column, as [[wrap]] expects. With an `alias`, the statement is a
+      * derived table of that correlation name.
+      */
+    def select(cols: Seq[String] = visible.map(a => attrs(a.exprId)), tail: String = "",
+        distinct: Boolean = false, alias: Option[String] = None): String = {
+      val d = opts.dialect
+      val list = cols.zipWithIndex.map { case (s, i) => s"$s AS ${d.quote(s"c$i")}" }
+      val sql = s"SELECT ${if (distinct) "DISTINCT " else ""}${list.mkString(", ")} FROM $from$tail"
+      alias.fold(sql)(a => s"($sql) ${d.quote(a)}")
+    }
+  }
 
   /** `newAlias` allocates correlation names for the leaf's derived
     * tables. The optimizer path uses the global [[fresh]] counter
@@ -149,15 +163,12 @@ object FederationRule extends Rule[LogicalPlan] {
     // for every join type.
     case Filter(cond, child) =>
       leafOf(child, newAlias).flatMap { l =>
-        new CatalystUnparser(l.opts.dialect, l.attrs).expr(cond).map { w =>
+        new CatalystUnparser(l.opts.dialect, l.attrs).expr(cond, isPredicate = true).map { w =>
           val d = l.opts.dialect
           val alias = newAlias()
-          val cols = l.visible.zipWithIndex.map { case (a, i) =>
-            s"${l.attrs(a.exprId)} AS ${d.quote(s"c$i")}"
-          }
           Leaf(
             l.ctx, l.opts,
-            s"(SELECT ${cols.mkString(", ")} FROM ${l.from} WHERE $w) ${d.quote(alias)}",
+            l.select(tail = s" WHERE $w", alias = Some(alias)),
             l.visible.zipWithIndex.map { case (a, i) =>
               a.exprId -> s"${d.quote(alias)}.${d.quote(s"c$i")}"
             }.toMap,
@@ -254,16 +265,10 @@ object FederationRule extends Rule[LogicalPlan] {
         if (u.output.nonEmpty && ls.map(_.ctx).distinct.sizeIs == 1 &&
           ls.forall(_.visible.length == u.output.length)) {
           val opts = ls.head.opts
-          val d = opts.dialect
           val alias = fresh()
-          val branches = ls.map { l =>
-            val proj = l.visible.zipWithIndex.map { case (a, i) =>
-              s"${l.attrs(a.exprId)} AS ${d.quote(s"c$i")}"
-            }
-            s"SELECT ${proj.mkString(", ")} FROM ${l.from}"
-          }
           Some(wrap(u.output, opts,
-            s"(${branches.mkString(" UNION ALL ")}) ${d.quote(alias)}", alias))
+            s"(${ls.map(_.select()).mkString(" UNION ALL ")}) ${opts.dialect.quote(alias)}",
+            alias))
         } else None
       } else None
       collapsed.getOrElse(u)
@@ -292,13 +297,9 @@ object FederationRule extends Rule[LogicalPlan] {
           if (rs.forall(_.isDefined)) Some(rs.map(_.get)) else None
         }
       } yield {
-        val d = l.opts.dialect
         val alias = fresh()
-        val out = l.visible ++ rendered.map(_._1)
-        val proj = (l.visible.map(a => l.attrs(a.exprId)) ++ rendered.map(_._2))
-          .zipWithIndex.map { case (s, i) => s"$s AS ${d.quote(s"c$i")}" }
-        wrap(out, l.opts,
-          s"(SELECT ${proj.mkString(", ")} FROM ${l.from}) ${d.quote(alias)}", alias)
+        val cols = l.visible.map(a => l.attrs(a.exprId)) ++ rendered.map(_._2)
+        wrap(l.visible ++ rendered.map(_._1), l.opts, l.select(cols, alias = Some(alias)), alias)
       }
       collapsed.getOrElse(w)
 
@@ -326,14 +327,9 @@ object FederationRule extends Rule[LogicalPlan] {
         outAttrs = agg.aggregateExpressions.map(_.asInstanceOf[Attribute])
         if outAttrs.forall(a => l.attrs.contains(a.exprId))
       } yield {
-        val d = l.opts.dialect
         val alias = fresh()
-        val proj = outAttrs.zipWithIndex.map { case (a, i) =>
-          s"${l.attrs(a.exprId)} AS ${d.quote(s"c$i")}"
-        }
-        wrap(outAttrs, l.opts,
-          s"(SELECT DISTINCT ${proj.mkString(", ")} FROM ${l.from}) ${d.quote(alias)}",
-          alias)
+        val cols = outAttrs.map(a => l.attrs(a.exprId))
+        wrap(outAttrs, l.opts, l.select(cols, distinct = true, alias = Some(alias)), alias)
       }
       collapsed.getOrElse(agg)
 
@@ -369,14 +365,9 @@ object FederationRule extends Rule[LogicalPlan] {
           if (ks.forall(_.isDefined)) Some(ks.map(_.get)) else None
         }
       } yield {
-        val d = l.opts.dialect
         val alias = fresh()
-        val proj = l.visible.zipWithIndex.map { case (a, i) =>
-          s"${l.attrs(a.exprId)} AS ${d.quote(s"c$i")}"
-        }
         wrap(s.output, l.opts,
-          s"(SELECT ${proj.mkString(", ")} FROM ${l.from} " +
-            s"ORDER BY ${keys.mkString(", ")}) ${d.quote(alias)}", alias)
+          l.select(tail = s" ORDER BY ${keys.mkString(", ")}", alias = Some(alias)), alias)
       }
       collapsed.getOrElse(s)
 
@@ -402,7 +393,8 @@ object FederationRule extends Rule[LogicalPlan] {
               val kw = if (jt == LeftAnti) "NOT EXISTS" else "EXISTS"
               cond match {
                 case Some(c) =>
-                  new CatalystUnparser(l.opts.dialect, l.attrs ++ r.attrs).expr(c)
+                  new CatalystUnparser(l.opts.dialect, l.attrs ++ r.attrs)
+                    .expr(c, isPredicate = true)
                     .map(w => s"${l.from} WHERE $kw (SELECT 1 FROM ${r.from} WHERE $w)")
                 case None =>
                   Some(s"${l.from} WHERE $kw (SELECT 1 FROM ${r.from})")
@@ -412,25 +404,19 @@ object FederationRule extends Rule[LogicalPlan] {
                 kw <- joinKeyword(jt, l.opts)
                 onSql <- cond match {
                   case Some(c) =>
-                    new CatalystUnparser(l.opts.dialect, l.attrs ++ r.attrs).expr(c)
-                      .map(s => s" ON $s")
+                    new CatalystUnparser(l.opts.dialect, l.attrs ++ r.attrs)
+                      .expr(c, isPredicate = true).map(s => s" ON $s")
                   case None if jt == Cross => Some("")
                   case None => None
                 }
               } yield s"${l.from} $kw ${r.from}$onSql"
           }
         } yield {
-          val d = l.opts.dialect
           val alias = fresh()
           // semi/anti output is the left leg only; the combined map
           // still covers every output attribute in all join shapes
-          val out = j.output
-          val combined = l.attrs ++ r.attrs
-          val proj = out.zipWithIndex.map { case (a, i) =>
-            s"${combined(a.exprId)} AS ${d.quote(s"c$i")}"
-          }
-          wrap(out, l.opts,
-            s"(SELECT ${proj.mkString(", ")} FROM $body) ${d.quote(alias)}", alias)
+          val joined = l.copy(from = body, attrs = l.attrs ++ r.attrs, visible = j.output)
+          wrap(j.output, l.opts, joined.select(alias = Some(alias)), alias)
         }
       collapsed.getOrElse(j)
   }
@@ -461,7 +447,7 @@ object FederationRule extends Rule[LogicalPlan] {
   * instead of both full tables — same argument as the join collapse.
   */
 object SetOpAllRule extends Rule[LogicalPlan] {
-  import FederationRule.{Leaf, leafOf, wrap}
+  import FederationRule.{leafOf, wrap}
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case s @ Except(left, right, true) =>
@@ -500,24 +486,17 @@ object SetOpAllRule extends Rule[LogicalPlan] {
       if l.visible.map(_.dataType) == r.visible.map(_.dataType) &&
         l.visible.map(_.dataType) == op.output.map(_.dataType)
     } yield {
-      val d = l.opts.dialect
-      def branch(leaf: Leaf): String = {
-        val proj = leaf.visible.zipWithIndex.map { case (a, i) =>
-          s"${leaf.attrs(a.exprId)} AS ${d.quote(s"c$i")}"
-        }
-        // each branch is its own FROM scope: a self-set-op's duplicate
-        // correlation names are fine (unlike the join arm)
-        s"SELECT ${proj.mkString(", ")} FROM ${leaf.from}"
-      }
       // content-derived outer alias: deterministic for identical
       // programs (cache matching), distinct for distinct set-ops (so
       // an outer join of two different collapsed set-ops keeps
       // distinct topAliases and can itself collapse; two copies of the
       // SAME set-op share the alias and the join arm's self-join guard
       // correctly refuses, exactly like any other self-joined leg)
-      val body = s"${branch(l)} $kw ${branch(r)}"
+      // each branch is its own FROM scope: a self-set-op's duplicate
+      // correlation names are fine (unlike the join arm)
+      val body = s"${l.select()} $kw ${r.select()}"
       val alias = "gs" + java.lang.Integer.toHexString(body.hashCode)
-      wrap(op.output, l.opts, s"($body) ${d.quote(alias)}", alias)
+      wrap(op.output, l.opts, s"($body) ${l.opts.dialect.quote(alias)}", alias)
     }
   }
 }

@@ -65,10 +65,18 @@ object DialectDump {
       "ts_literal" -> u.expr(new Predicate("<",
         Array(col("ts"), lit(820454400000000L, TimestampNTZType)))), // 1996-01-01 UTC micros
       // null-safe equality spelling (gates the INTERSECT/EXCEPT
-      // federation collapse): NULLIF synthesizes a NULL remotely, so a
+      // federation collapse), from Catalyst's `<=>` as the federation
+      // rule renders it: the CASE synthesizes a NULL remotely, so a
       // non-null-safe `=` would count 0 — the live engines prove the
       // IS NOT DISTINCT FROM / IS spellings really match NULL to NULL
-      "nullsafe_eq" -> d.nullSafeEqSql(s"NULLIF(${d.quote("i")}, 3)", "NULL")
+      "nullsafe_eq" -> {
+        import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualNullSafe,
+          EqualTo, If, Literal}
+        val i = AttributeReference("i", IntegerType)()
+        val nullIf3 = If(EqualTo(i, Literal(3)), Literal(null, IntegerType), i)
+        new graft.plans.CatalystUnparser(d, Map(i.exprId -> d.quote("i")))
+          .expr(EqualNullSafe(nullIf3, Literal(null, IntegerType)), isPredicate = true)
+      }
     )
   }
 

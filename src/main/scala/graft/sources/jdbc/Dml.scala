@@ -22,10 +22,10 @@ object Dml {
     */
   def update(spark: SparkSession, name: String,
       assignments: Seq[(String, Column)], where: Column): Long =
-    remote(spark, name) { (t, sqlOf) =>
+    remote(spark, name, where) { (t, sqlOf) =>
       val sets = assignments
         .map { case (col, v) => s"${t.options.dialect.quote(col)} = ${sqlOf(v)}" }.mkString(", ")
-      s"UPDATE ${t.options.table} SET $sets WHERE ${sqlOf(where)}"
+      s"UPDATE ${t.options.table} SET $sets"
     }
 
   /** Execute `DELETE FROM table WHERE where` remotely; returns the
@@ -34,13 +34,13 @@ object Dml {
     * `DELETE FROM` path cannot surface it, this API does).
     */
   def delete(spark: SparkSession, name: String, where: Column): Long =
-    remote(spark, name)((t, sqlOf) => s"DELETE FROM ${t.options.table} WHERE ${sqlOf(where)}")
+    remote(spark, name, where)((t, _) => s"DELETE FROM ${t.options.table}")
 
   /** Resolve catalog table `name` to its graft JDBC table, build one
     * statement with `sqlOf` rendering Columns over that table in its
-    * dialect, and execute it remotely.
+    * dialect, append ` WHERE <where>` and execute it remotely.
     */
-  private def remote(spark: SparkSession, name: String)(
+  private def remote(spark: SparkSession, name: String, where: Column)(
       statement: (GraftJdbcTable, Column => String) => String): Long = {
     val df = spark.table(name)
     val rel = df.queryExecution.analyzed.collectFirst {
@@ -63,10 +63,11 @@ object Dml {
       }.getOrElse(throw new IllegalArgumentException(s"cannot analyze $c"))
 
     val unparser = new CatalystUnparser(d, rel.output.map(a => a.exprId -> d.quote(a.name)).toMap)
-    def sqlOf(c: Column): String =
-      unparser.expr(analyzed(c)).getOrElse(
+    def sqlOf(c: Column, isPredicate: Boolean): String =
+      unparser.expr(analyzed(c), isPredicate).getOrElse(
         throw new IllegalArgumentException(s"expression not unparsable for ${d.name}: $c"))
-    executeUpdate(t.options, statement(t, sqlOf))
+    val head = statement(t, sqlOf(_, isPredicate = false))
+    executeUpdate(t.options, s"$head WHERE ${sqlOf(where, isPredicate = true)}")
   }
 
   /** Run one statement on a pooled connection; returns the affected-row

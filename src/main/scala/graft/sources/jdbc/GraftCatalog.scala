@@ -115,24 +115,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     out.toArray
   }
 
-  /** Introspect the table's schema from prepared-statement metadata —
-    * the reference's `get_schema` (`dbconnection.rs:216-239`). */
-  private def introspect(ident: Identifier): StructType = withConn { c =>
-    val ps = c.prepareStatement(s"SELECT * FROM ${qualified(ident)} WHERE 1=0")
-    try {
-      JdbcScan.recordTypeNames(options.withTable(qualified(ident)), ps.getMetaData)
-      val base = TypeMapping.schemaOf(ps.getMetaData, options.dialect,
-        unsupportedAsString = options.readUnsupportedAsString)
-      // catalog-level `customschema` (column-NAME-keyed, so it overlays
-      // every table in the catalog that has a matching column — declare
-      // only names that are unambiguous across the namespace)
-      val merged =
-        options.customSchema.map(TypeMapping.applyOverrides(base, _)).getOrElse(base)
-      // pincolumns catch-all projection (schema_projection.rs analog)
-      SchemaProjection.project(merged, options)
-    } finally ps.close()
-  }
-
   /** Existence via catalog metadata, not a probe-SELECT: a probe that
     * swallows every SQLException reads a permission error as "table
     * absent". getTables treats `_`/`%` as pattern wildcards, so the
@@ -150,11 +132,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     } finally rs.close()
   }
 
+  /** A catalog-level `customschema` overlays every table with a
+    * matching column name: declare only names that are unambiguous
+    * across the namespace. */
   override def loadTable(ident: Identifier): Table = {
+    val o = options.withTable(qualified(ident))
     val schema =
-      try introspect(ident)
+      try SchemaProjection.exposed(o)
       catch { case _: java.sql.SQLException => throw new NoSuchTableException(ident) }
-    GraftJdbcTable(ident.toString, schema, options.withTable(qualified(ident)))
+    GraftJdbcTable(ident.toString, schema, o)
   }
 
   override def createTable(ident: Identifier, schema: StructType,

@@ -34,22 +34,8 @@ class GraftJdbcSource extends TableProvider {
 
   override def supportsExternalMetadata(): Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val o = JdbcOptions.fromJava(options.asCaseSensitiveMap())
-    val c = o.connect()
-    try {
-      val ps = c.prepareStatement(s"SELECT * FROM ${o.fromClause} WHERE 1=0")
-      try {
-        JdbcScan.recordTypeNames(o, ps.getMetaData)
-        val base = TypeMapping.schemaOf(ps.getMetaData, o.dialect,
-          unsupportedAsString = o.readUnsupportedAsString)
-        val merged =
-          o.customSchema.map(TypeMapping.applyOverrides(base, _)).getOrElse(base)
-        // pincolumns catch-all projection (schema_projection.rs analog)
-        SchemaProjection.project(merged, o)
-      } finally ps.close()
-    } finally c.close()
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    SchemaProjection.exposed(JdbcOptions.fromJava(options.asCaseSensitiveMap()))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {

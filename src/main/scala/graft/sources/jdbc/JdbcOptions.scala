@@ -2,7 +2,6 @@ package graft.sources.jdbc
 
 import java.sql.{Connection, DriverManager}
 import java.util.Properties
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 /** Connection options for an external JDBC-backed table.
@@ -385,10 +384,4 @@ object JdbcOptions {
         new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)),
           java.nio.charset.StandardCharsets.UTF_8).trim))
       .orElse(opts.get("passwordenv").flatMap(sys.env.get))
-
-  /** Per-JVM cache of *schemas*. Connections are pooled separately in
-    * [[ConnectionPool]]: a JDBC connection is never shared between two
-    * concurrent tasks, but idle ones are reused across tasks.
-    */
-  private[jdbc] val schemaCache = TrieMap.empty[(String, String), org.apache.spark.sql.types.StructType]
 }

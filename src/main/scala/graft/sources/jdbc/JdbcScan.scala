@@ -8,8 +8,6 @@ import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 
-import scala.collection.concurrent.TrieMap
-
 /** DSv2 scan over an external JDBC table with projection / predicate /
   * limit / TopK pushdown and optional range-partitioned parallelism.
   *
@@ -50,12 +48,13 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
     * (`schema_projection.rs` `field_for`); the scan renders them as a
     * typed NULL (null-for-missing-field semantics) and they are excluded
     * from every pushdown surface exactly like the catch-all column.
-    * Cheap: `fullRemoteSchema` is cached per compute context + FROM.
+    * Cheap: [[SchemaProjection.remote]] is cached per compute context +
+    * FROM.
     */
   private lazy val ghostPins: Set[String] = options.pinColumns match {
     case None => Set.empty
     case Some(pins) =>
-      val remote = SchemaProjection.fullRemoteSchema(options)
+      val remote = SchemaProjection.remote(options).schema
       pins.filterNot(p => remote.fields.exists(_.name.equalsIgnoreCase(p)))
         .map(_.toLowerCase).toSet
   }
@@ -172,8 +171,9 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
     * the same source of truth Spark's own JDBC v2 uses
     * (`JDBCRDD.getQueryOutputSchema`); `V2ScanRelationPushDown` then
     * casts the scan's columns to the plan's expected types positionally.
-    * Introspection is cached per (url, sql) and a remote failure simply
-    * keeps the aggregate local.
+    * The probe leaves out the pushed WHERE, which cannot change result
+    * types, so one introspection serves every literal set; a remote
+    * failure simply keeps the aggregate local.
     */
   private def translateGeneral(agg: Aggregation,
       aggSqls: Seq[String]): Option[(Seq[String], Seq[String], StructType)] = {
@@ -184,22 +184,10 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
       grpSqls.zipWithIndex.map { case (s, i) => s"${s.get} AS ${d.quote(s"g$i")}" } ++
         aggSqls.zipWithIndex.map { case (s, i) => s"$s AS ${d.quote(s"agg$i")}" }
     val group = grpSqls.map(_.get)
-    val whereClause =
-      if (pushedSql.isEmpty) "" else pushedSql.mkString(" WHERE ", " AND ", "")
     val groupClause = if (group.isEmpty) "" else group.mkString(" GROUP BY ", ", ", "")
-    val probe = d.repairSql(
-      s"SELECT ${sel.mkString(", ")} FROM ${options.fromClause}$whereClause$groupClause")
+    val probe = d.repairSql(s"SELECT ${sel.mkString(", ")} FROM ${options.fromClause}$groupClause")
     try {
-      val sch = JdbcOptions.schemaCache.getOrElseUpdate((options.url, probe), {
-        val c = options.connect()
-        try {
-          val ps = c.prepareStatement(probe)
-          try TypeMapping.schemaOf(ps.getMetaData, options.dialect,
-            unsupportedAsString = options.readUnsupportedAsString)
-          finally ps.close()
-        } finally c.close()
-      })
-      Some((sel, group, sch))
+      Some((sel, group, SchemaProjection.describe(options, probe).schema))
     } catch {
       case e: Exception =>
         logInfo(s"graft-jdbc: expression-aggregate introspection failed, staying local: $e")
@@ -289,7 +277,7 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
       else options.pinColumns.flatMap { pins =>
         schema.fields.find(_.name.equalsIgnoreCase(options.catchAllColumn)).map { _ =>
           (options.catchAllColumn,
-            SchemaProjection.restFields(SchemaProjection.fullRemoteSchema(options), pins))
+            SchemaProjection.restFields(SchemaProjection.remote(options).schema, pins))
         }
       }
     JdbcScan(options, aggSchema.getOrElse(schema), pushedSql, orderBy, limit,
@@ -549,7 +537,13 @@ final case class JdbcScan(
   /** A column's remote type name, for string columns whose rendering
     * the wire may change: not a ghost pin, not declared by `customschema`.
     */
-  private lazy val remoteTypes: Map[String, String] = JdbcScan.remoteTypeNames(options)
+  private lazy val remoteTypes: Map[String, String] =
+    try SchemaProjection.remote(options).typeNames
+    catch {
+      case e: java.sql.SQLException =>
+        logInfo(s"graft-jdbc: type lookup failed, scanning without the string wire: $e")
+        Map.empty
+    }
   private def remoteType(name: String): Option[String] =
     if (ghostPins(name.toLowerCase) ||
       !schema.fields.exists(f => f.name == name && f.dataType == StringType) ||
@@ -633,32 +627,6 @@ object JdbcScan extends Logging {
   /** Test hook. */
   private[jdbc] def clearStatsCache(): Unit = statsCache.clear()
 
-  /** Remote column type names (lower-cased column name → the driver's
-    * type name) per compute context + FROM clause. Every catalog or
-    * source introspection of a table refreshes its entry; a scan of a
-    * table nobody introspected looks once. A failed lookup reads as no
-    * types, so the scan keeps the plain statement.
-    */
-  private val typeNames = TrieMap.empty[(String, String), Map[String, String]]
-
-  private[jdbc] def recordTypeNames(o: JdbcOptions, md: java.sql.ResultSetMetaData): Unit =
-    typeNames.put((o.computeContext, o.fromClause),
-      (1 to md.getColumnCount).map(i =>
-        md.getColumnLabel(i).toLowerCase -> md.getColumnTypeName(i)).toMap)
-
-  private[jdbc] def remoteTypeNames(o: JdbcOptions): Map[String, String] =
-    typeNames.getOrElse((o.computeContext, o.fromClause), try {
-      val c = o.connect()
-      try {
-        val ps = c.prepareStatement(s"SELECT * FROM ${o.fromClause} WHERE 1=0")
-        try recordTypeNames(o, ps.getMetaData) finally ps.close()
-      } finally c.close()
-      typeNames((o.computeContext, o.fromClause))
-    } catch {
-      case e: java.sql.SQLException =>
-        logInfo(s"graft-jdbc: type lookup failed, scanning without the string wire: $e")
-        Map.empty[String, String]
-    })
 }
 
 /** One remote statement; `utf8` lists the output positions whose

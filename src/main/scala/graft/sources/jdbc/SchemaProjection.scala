@@ -2,6 +2,8 @@ package graft.sources.jdbc
 
 import org.apache.spark.sql.types._
 
+import scala.collection.concurrent.TrieMap
+
 /** Connector-agnostic schema projection: pin some remote columns, fold
   * the rest into ONE catch-all JSON string column.
   *
@@ -41,18 +43,46 @@ object SchemaProjection {
       .filterNot(f => pins.exists(_.equalsIgnoreCase(f.name)))
       .sortBy(_.name))
 
-  /** The UNPROJECTED remote schema, from prepared-statement
-    * introspection (cached per compute context + FROM clause).
+  /** A remote statement's columns: their schema and each column's
+    * driver type name (lower-cased label → type name). */
+  final case class Described(schema: StructType, typeNames: Map[String, String])
+
+  private val described = TrieMap.empty[(String, String), Described]
+
+  /** Prepared-statement metadata of `sql` (the reference's `get_schema`,
+    * `dbconnection.rs:216-239`), cached per compute context + statement;
+    * `refresh` prepares it again.
     */
-  def fullRemoteSchema(o: JdbcOptions): StructType =
-    JdbcOptions.schemaCache.getOrElseUpdate(
-      (o.computeContext, "full:" + o.fromClause), {
-        val c = o.connect()
+  def describe(o: JdbcOptions, sql: String, refresh: Boolean = false): Described = {
+    def load(): Described = {
+      val c = o.connect()
+      try {
+        val ps = c.prepareStatement(sql)
         try {
-          val ps = c.prepareStatement(s"SELECT * FROM ${o.fromClause} WHERE 1=0")
-          try TypeMapping.schemaOf(ps.getMetaData, o.dialect,
-            unsupportedAsString = o.readUnsupportedAsString)
-          finally ps.close()
-        } finally c.close()
-      })
+          val md = ps.getMetaData
+          Described(
+            TypeMapping.schemaOf(md, o.dialect, unsupportedAsString = o.readUnsupportedAsString),
+            (1 to md.getColumnCount).map(i =>
+              md.getColumnLabel(i).toLowerCase -> md.getColumnTypeName(i)).toMap)
+        } finally ps.close()
+      } finally c.close()
+    }
+    val key = (o.computeContext, sql)
+    if (!refresh) described.getOrElseUpdate(key, load())
+    else { val d = load(); described.put(key, d); d }
+  }
+
+  /** The UNPROJECTED remote relation behind `o.fromClause`. */
+  def remote(o: JdbcOptions, refresh: Boolean = false): Described =
+    describe(o, s"SELECT * FROM ${o.fromClause} WHERE 1=0", refresh)
+
+  /** The schema a catalog table or a source read exposes, introspected
+    * afresh so a remote ALTER shows on the next load: the remote
+    * columns, the `customschema` overlay (column-NAME-keyed), then the
+    * `pincolumns` projection.
+    */
+  def exposed(o: JdbcOptions): StructType = {
+    val base = remote(o, refresh = true).schema
+    project(o.customSchema.map(TypeMapping.applyOverrides(base, _)).getOrElse(base), o)
+  }
 }

@@ -16,8 +16,22 @@ import java.time.format.DateTimeFormatter
   * IS (NOT) NULL, IN, LIKE-shaped string predicates, CASE WHEN and a few
   * total functions. Anything else returns None and the filter stays in
   * Spark — per-predicate partial pushdown, never a correctness risk.
+  *
+  * It is the only code that maps a scalar operator to SQL: federation
+  * and DML reach it through `V2ExpressionBuilder`
+  * ([[graft.plans.CatalystUnparser]]). `column` renders a reference's
+  * name parts; the default quotes a single-part name.
   */
-final class Unparser(dialect: Dialect) extends Serializable {
+final class Unparser(dialect: Dialect, column: Seq[String] => Option[String])
+    extends Serializable {
+
+  def this(dialect: Dialect) = this(dialect, {
+    // multi-part references are NESTED STRUCT FIELDS (pt.x) — rendering
+    // them as a dotted identifier chain makes the remote parse "pt" as
+    // a table alias; the predicate must stay on the Spark side
+    case Seq(name) => Some(dialect.quoted(Seq(name)))
+    case _ => None
+  })
 
   def sort(o: SortOrder): Option[String] = expr(o.expression).map { e =>
     val dir = if (o.direction == SortDirection.ASCENDING) "ASC" else "DESC"
@@ -40,12 +54,7 @@ final class Unparser(dialect: Dialect) extends Serializable {
   }
 
   def expr(e: Expression): Option[String] = e match {
-    // multi-part references are NESTED STRUCT FIELDS (pt.x) — rendering
-    // them as a dotted identifier chain makes the remote parse "pt" as
-    // a table alias; the predicate must stay on the Spark side
-    case f: NamedReference if f.fieldNames.length == 1 =>
-      Some(dialect.quoted(f.fieldNames.toSeq))
-    case _: NamedReference => None
+    case f: NamedReference => column(f.fieldNames.toSeq)
     case l: Literal[_] => literal(l)
     case c: org.apache.spark.sql.connector.expressions.Cast
         if dialect.supportsType(c.dataType) =>
@@ -70,6 +79,8 @@ final class Unparser(dialect: Dialect) extends Serializable {
 
   private def scalar(g: GeneralScalarExpression): Option[String] = g.name match {
     case "=" | "<>" | "<" | "<=" | ">" | ">=" => binary(g.name, g)
+    // Catalyst `<=>`; INTERSECT/EXCEPT rewrite to semi/anti joins on it
+    case "<=>" => kids(g).collect { case Seq(a, b) => dialect.nullSafeEqSql(a, b) }.flatten
     case "!=" => binary("<>", g)
     case "+" | "-" if g.children.length == 2 => binary(g.name, g)
     case "-" => kids(g).collect { case Seq(a) => s"(- $a)" }

@@ -32,15 +32,36 @@ class FederationPropertySpec extends AnyFunSuite with SparkFixture {
     ordRows.toDF("oid", "ocid", "amount").writeTo(s"$catalog.fp.ord").create()
   }
 
-  /** The same logical leg over either the remote table or its mirror. */
+  /** The same logical leg over either the remote table or its mirror.
+    * Filters past the first three render only through the DSv2
+    * expression renderer: CASE WHEN with unary minus, COALESCE with
+    * division, one-argument math, an 11-literal IN list (Catalyst's
+    * InSet) and, on the string-keyed cust leg, UPPER/LOWER/TRIM/CONCAT/
+    * SUBSTRING under LIKE prefix/suffix/contains. Literals stay off the
+    * values' boundaries wherever a remote engine could round differently.
+    */
   private def leg(base: DataFrame, rnd: Random, numCol: String,
       keep: Seq[String]): DataFrame = {
     var df = base
-    rnd.nextInt(3) match {
+    val num = col(numCol)
+    val key = col(keep.head)
+    val text = keep.find(_ == "cname").map(col)
+    rnd.nextInt(8) match {
       case 0 => ()
-      case 1 => df = df.filter(col(numCol) > lit(rnd.nextInt(200).toDouble))
-      case 2 => df = df.filter(col(numCol) > lit(rnd.nextInt(150).toDouble) ||
-        col(keep.head) % 3 === lit(rnd.nextInt(3)))
+      case 1 => df = df.filter(num > lit(rnd.nextInt(200).toDouble))
+      case 2 => df = df.filter(num > lit(rnd.nextInt(150).toDouble) ||
+        key % 3 === lit(rnd.nextInt(3)))
+      case 3 => df = df.filter(
+        when(num > lit(rnd.nextInt(150).toDouble), key).otherwise(-key) > lit(2))
+      case 4 => df = df.filter(
+        coalesce(num, lit(0.0)) / lit(2.0) > lit(rnd.nextInt(150) / 2.0))
+      case 5 => df = df.filter(sqrt(num) > lit(rnd.nextInt(12) + 0.5) ||
+        abs(num - lit(50.0)) < lit(20.0))
+      case 6 => df = df.filter(key.isin(rnd.shuffle((1L to 30L).toList).take(11): _*))
+      case 7 => df = df.filter(text.fold(-key < lit(-6L)) { t =>
+        upper(t).startsWith("NAME_1") || lower(t).endsWith("_2") ||
+          (trim(concat(lit(" "), t)).contains("e_") && substring(t, 6, 1) =!= lit("3"))
+      })
     }
     if (rnd.nextBoolean()) df = df.select(keep.map(col): _*)
     df
@@ -112,7 +133,7 @@ class FederationPropertySpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     val custLocal = custRows.toDF("cid", "cname", "seg", "bal")
     val ordLocal = ordRows.toDF("oid", "ocid", "amount")
-    for (seed <- 1 to 20) {
+    for (seed <- 1 to 40) {
       val remote = build(seed, spark.table(s"$catalog.fp.cust"), spark.table(s"$catalog.fp.ord"))
       val local = build(seed, custLocal, ordLocal)
       assert(rows(remote) == rows(local), s"seed=$seed diverged")

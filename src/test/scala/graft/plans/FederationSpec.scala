@@ -95,6 +95,69 @@ class FederationSpec extends AnyFunSuite with SparkFixture {
       Seq((1, 3L, 425.0), (2, 1L, 80.0)))
   }
 
+  test("an 11-literal IN list on a leg (Catalyst's InSet) collapses to one remote scan") {
+    setup()
+    import spark.implicits._
+    // OptimizeIn turns an IN list of more than 10 literals into InSet
+    val df = spark.table("ext.fed.orders").filter($"oid".isin(11L to 21L: _*))
+      .join(spark.table("ext.fed.cust"), $"ocid" === $"cid")
+      .select("oid", "cname")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(scanCount(df) == 1, s"InSet leg filter broke the collapse:\n$plan")
+    assert(plan.contains(" IN ("), s"IN list not remote:\n$plan")
+    assert(df.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq ==
+      Seq((11L, "alice"), (12L, "bob"), (13L, "carol")))
+  }
+
+  test("a CASE WHEN leg filter collapses to one remote scan") {
+    setup()
+    import spark.implicits._
+    val df = spark.table("ext.fed.orders")
+      .join(spark.table("ext.fed.cust")
+        .filter(when($"seg" === 1, $"cid").otherwise($"cid" * 10) < 5), $"ocid" === $"cid")
+      .select("oid", "cname")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(scanCount(df) == 1, s"CASE WHEN leg filter broke the collapse:\n$plan")
+    assert(plan.contains("CASE WHEN"), s"CASE WHEN not remote:\n$plan")
+    assert(df.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq ==
+      Seq((10L, "alice"), (11L, "alice"), (13L, "carol")))
+  }
+
+  test("with ANSI mode off an arithmetic leg filter stays local, as Spark's own pushdown does") {
+    setup()
+    import spark.implicits._
+    // non-ANSI `+` wraps on overflow where a remote engine would raise
+    // or widen, so V2ExpressionBuilder translates arithmetic only in
+    // ANSI mode; the leg then keeps its Spark filter and the join stays
+    // two scans, with the same rows
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val df = spark.table("ext.fed.orders")
+        .join(spark.table("ext.fed.cust").filter($"cid" + 1 > 2), $"ocid" === $"cid")
+        .select("oid", "cname")
+      val plan = df.queryExecution.executedPlan.toString
+      // two table scans (dynamic pruning may add a third copy)
+      assert(scanCount(df) >= 2 && !plan.contains(" JOIN "),
+        s"a non-ANSI + must not render remotely:\n$plan")
+      assert(plan.contains("Filter ((cid"), s"the + filter is not local:\n$plan")
+      assert(df.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq ==
+        Seq((12L, "bob"), (13L, "carol")))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
+  test("a constant whose fold throws keeps the expression local instead of failing the rule") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, EqualTo, EvalMode,
+      Literal}
+    import org.apache.spark.sql.types.IntegerType
+    val a = AttributeReference("a", IntegerType)()
+    val u = new CatalystUnparser(graft.sources.jdbc.DerbyDialect, Map(a.exprId -> "\"a\""))
+    def castInt(s: String) = Cast(Literal(s), IntegerType, None, EvalMode.ANSI)
+    assert(u.expr(EqualTo(a, castInt("7")), isPredicate = true).contains("(\"a\" = 7)"))
+    // ANSI CAST('x' AS INT) throws when Spark evaluates it
+    assert(u.expr(EqualTo(a, castInt("x")), isPredicate = true).isEmpty)
+  }
+
   test("three-way join collapses bottom-up into one statement") {
     setup()
     spark.sql("DROP TABLE IF EXISTS ext.fed.seg")

@@ -250,7 +250,7 @@ class JdbcReaderIdentitySpec extends AnyFunSuite with SparkFixture {
     // reader reads the same values through it
     val names = duckSchema.fieldNames.toSeq
     val (wireSql, utf8) = DuckDbDialect.utf8Wire(duckSql, names,
-      n => JdbcScan.remoteTypeNames(duck.withTable("app.v")).get(n))
+      n => SchemaProjection.remote(duck.withTable("app.v")).typeNames.get(n))
     assert(utf8 == Set(names.indexOf("s")), wireSql)
     assert(wireSql.contains("encode(q.\"s\") AS \"s\""), wireSql)
     readsExpected(duck, duckSchema, wireSql, duckExpected, utf8)

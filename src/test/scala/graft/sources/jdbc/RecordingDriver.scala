@@ -39,7 +39,11 @@ object RecordingDriver {
   /** (statement text, failed) for every statement executed or prepared. */
   private val log = new ConcurrentLinkedQueue[(String, Boolean)]()
   def statements: Seq[(String, Boolean)] = log.asScala.toSeq
-  def clear(): Unit = log.clear()
+  /** The text of every statement executed without error, in order; a
+    * statement only prepared (a schema probe) is not in it. */
+  private val ran = new ConcurrentLinkedQueue[String]()
+  def executed: Seq[String] = ran.asScala.toSeq
+  def clear(): Unit = { log.clear(); ran.clear() }
 
   /** A statement whose text contains `marker` returns a ResultSet whose
     * `next()` throws `error` on its `afterRows + 1`-th call. */
@@ -66,6 +70,7 @@ object RecordingDriver {
             throw e.getCause
         }
       text.foreach(t => log.add(t -> false))
+      if (m.getName.startsWith("execute")) text.foreach(ran.add)
       out match {
         case s: java.sql.PreparedStatement if m.getName == "prepareStatement" =>
           val h = new Handler(s); h.sql = a.head.asInstanceOf[String]

@@ -23,7 +23,21 @@ class UnparserSpec extends AnyFunSuite {
   test("comparison operators") {
     assert(u.expr(new Predicate(">", Array(col("a"), i32(5)))).contains("(\"a\" > 5)"))
     assert(u.expr(new Predicate("=", Array(col("a"), i32(5)))).contains("(\"a\" = 5)"))
-    assert(u.expr(new Predicate("<=>", Array(col("a"), i32(5)))).isEmpty)
+    assert(u.expr(new Predicate("<>", Array(col("a"), i32(5)))).contains("(\"a\" <> 5)"))
+  }
+
+  test("null-safe equality renders through the dialect; Derby refuses it") {
+    // V2ExpressionBuilder names Catalyst's EqualNullSafe "<=>"; the
+    // federated INTERSECT/EXCEPT semi/anti joins are built on it
+    def nse(d: Dialect) = new Unparser(d).expr(new Predicate("<=>", Array(col("a"), col("b"))))
+    assert(nse(PostgresDialect).contains("(\"a\" IS NOT DISTINCT FROM \"b\")"))
+    assert(nse(DuckDbDialect).contains("(\"a\" IS NOT DISTINCT FROM \"b\")"))
+    assert(nse(MySqlDialect).contains("(`a` <=> `b`)"))
+    assert(nse(DerbyDialect).isEmpty)
+    // the refusal is whole: a conjunction holding it renders nothing
+    assert(new Unparser(DerbyDialect).expr(new And(
+      new Predicate("<=>", Array(col("a"), col("b"))),
+      new Predicate("=", Array(col("c"), i32(1))))).isEmpty)
   }
 
   test("boolean composition and NOT") {

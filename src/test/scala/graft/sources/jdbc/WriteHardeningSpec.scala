@@ -208,6 +208,21 @@ class WriteHardeningSpec extends AnyFunSuite with SparkFixture {
     assert(spark.table("ext.wh.t6").count() == 7)
   }
 
+  test("Dml refuses an expression it cannot render, names it, and changes no row") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS ext.wh")
+    spark.sql("DROP TABLE IF EXISTS ext.wh.t8")
+    import spark.implicits._
+    (1L to 3L).map(i => (i, i * 10L)).toDF("k", "v").writeTo("ext.wh.t8").create()
+    // Spark's murmur3 `hash` has no remote spelling
+    val e = intercept[IllegalArgumentException] {
+      Dml.update(spark, "ext.wh.t8", Seq("v" -> hash(col("k")).cast("long")), col("k") > lit(1L))
+    }
+    assert(e.getMessage.startsWith("expression not unparsable for derby: "), e.getMessage)
+    assert(e.getMessage.contains("hash"), e.getMessage)
+    assert(spark.table("ext.wh.t8").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .sortBy(_._1).toSeq == Seq((1L, 10L), (2L, 20L), (3L, 30L)))
+  }
+
   test("OnConflict statement generation: target-less, all-key degrade, parse") {
     // do_nothing_all: target-less ON CONFLICT (on_conflict.rs:32)
     val allSql = PostgresDialect.upsertStatement("\"s\".\"t\"", Seq("a", "b"), Nil,
