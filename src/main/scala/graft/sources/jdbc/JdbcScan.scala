@@ -26,9 +26,9 @@ import org.apache.spark.sql.types._
   * (`mod.rs:313`). Here `partitionColumn/lowerBound/upperBound/
   * numPartitions` splits the scan into range predicates executed by N
   * executors concurrently — the improvement SURVEY §4.2 calls out. On a
-  * dialect that counts base tables (DuckDB), a whole-table read splits
-  * by row id without any option, and the count sizes the scan for
-  * Spark's join planning ([[JdbcScan]]).
+  * dialect with table statistics (DuckDB), an unfiltered read splits
+  * by an integer column's range without any option, and the row count
+  * sizes the scan for Spark's join planning ([[JdbcScan]]).
   */
 final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
   extends ScanBuilder
@@ -280,9 +280,16 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
             SchemaProjection.restFields(SchemaProjection.remote(options).schema, pins))
         }
       }
+    // an automatic split: nothing pushed but the projection and IS NOT
+    // NULL conjuncts (Spark infers them on join keys), no explicit split
+    val splittable = aggSchema.isEmpty && orderBy.isEmpty && limit.isEmpty && offset.isEmpty &&
+      catchAll.isEmpty && pushed.forall(_.name == "IS_NOT_NULL") &&
+      !options.map.contains("numpartitions") && options.partitionColumn.isEmpty
     JdbcScan(options, aggSchema.getOrElse(schema), pushedSql, orderBy, limit,
       aggSelect, groupBySql, pushedOffset = offset, catchAll = catchAll,
-      ghostPins = if (aggSchema.isDefined) Set.empty else ghostPins)
+      ghostPins = if (aggSchema.isDefined) Set.empty else ghostPins,
+      splitColumns = tableSchema.fields.toSeq.filter(f => splittable && !ghostPins(f.name.toLowerCase) &&
+        Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType)).map(_.name))
   }
 }
 
@@ -296,7 +303,8 @@ final case class JdbcScan(
     groupBy: Seq[String] = Nil,
     pushedOffset: Option[Int] = None,
     catchAll: Option[(String, StructType)] = None,
-    ghostPins: Set[String] = Set.empty) extends Scan with Batch
+    ghostPins: Set[String] = Set.empty,
+    splitColumns: Seq[String] = Nil) extends Scan with Batch
     with SupportsRuntimeV2Filtering with SupportsReportStatistics with Logging {
 
   override def readSchema(): StructType = schema
@@ -312,28 +320,37 @@ final case class JdbcScan(
   private lazy val tableRows: Option[Long] =
     if (aggSelect.nonEmpty || catchAll.isDefined) None
     else options.dialect.baseTableRowsSql(options.fromClause).flatMap { sql =>
-      JdbcScan.remoteLongs(options, sql).toSeq match {
-        case Seq(Seq(n)) => n
+      JdbcScan.remoteRows(options, sql) match {
+        case Seq(Seq(n)) => n.flatMap(_.toLongOption)
         case _ => None
       }
     }
 
+  private def varying = schema.fields.toSeq.filter(f => (f.dataType == StringType ||
+    f.dataType == BinaryType) && !ghostPins(f.name.toLowerCase) && !catchAll.exists(_._1 == f.name))
+
+  /** Remote statistics ([[Dialect.columnStatsSql]]) of the string
+    * columns [[rowBytes]] sizes and of the split candidates: one
+    * statement, made when first needed; empty where the dialect keeps
+    * none and on a remote error. */
+  private lazy val colStats: Map[String, ColumnStats] = {
+    val cols = (varying.map(_.name) ++ splitColumns ++ options.partitionColumn).distinct
+    options.dialect.columnStatsSql(options.fromClause, cols).filter(_ => cols.nonEmpty).toSeq
+      .flatMap(sql => JdbcScan.remoteRows(options, sql).take(1))
+      .flatMap(row => cols.zip(row).collect { case (c, Some(t)) => c -> options.dialect.columnStats(t) })
+      .toMap
+  }
+
   /** Bytes per row of the output schema over a counted base table:
     * Spark's 8-byte row header, each fixed-width column's default size,
     * and each string or binary column's longest value plus 8 from the
-    * remote statistics ([[Dialect.maxValueBytesSql]]), so a table of
-    * long strings never looks small. None when any string width is
-    * unknown.
+    * remote statistics, so a table of long strings never looks small.
+    * None when any string width is unknown.
     */
   private def rowBytes: Option[Long] = {
-    val varying = schema.fields.filter(f =>
-      (f.dataType == StringType || f.dataType == BinaryType) && !ghostPins(f.name.toLowerCase))
-    val widths: Option[Seq[Long]] =
-      if (varying.isEmpty) Some(Nil)
-      else options.dialect.maxValueBytesSql(options.fromClause, varying.map(_.name).toSeq)
-        .flatMap(sql => JdbcScan.remoteLongs(options, sql).headOption)
-        .flatMap(row => if (row.forall(_.isDefined)) Some(row.flatten) else None)
-    widths.map(w => 8L + w.map(_ + 8L).sum + schema.fields.filterNot(varying.contains)
+    val widths = varying.map(f => colStats.get(f.name).flatMap(_.maxBytes))
+    if (widths.exists(_.isEmpty)) None
+    else Some(8L + widths.flatten.map(_ + 8L).sum + schema.fields.filterNot(varying.contains)
       .map(_.dataType.defaultSize.toLong).sum)
   }
 
@@ -361,7 +378,8 @@ final case class JdbcScan(
         if (where.isEmpty) "" else where.mkString(" WHERE ", " AND ", "")
       val countSql = s"SELECT COUNT(*) FROM ${options.fromClause}$whereClause"
       val n = JdbcScan.cachedCount(options.url + "\u0000" + countSql) {
-        val cnt = JdbcScan.remoteLongs(options, countSql).headOption.flatMap(_.headOption.flatten)
+        val cnt = JdbcScan.remoteRows(options, countSql).headOption
+          .flatMap(_.headOption.flatten).flatMap(_.toLongOption)
         cnt.foreach(c => logInfo(s"graft-jdbc stats: $countSql -> $c rows"))
         cnt
       }
@@ -467,54 +485,33 @@ final case class JdbcScan(
     new JdbcMicroBatchStream(options, schema, where, wcol)
   }
 
-  /** Row-id ranges of a whole-table read ([[Dialect.rowIdRange]]): only
-    * without `numpartitions` or `partitioncolumn`, with nothing but the
-    * projection pushed at planning time (no WHERE, aggregate, ORDER BY,
-    * LIMIT or OFFSET), no catch-all fold, and a base table of at least
-    * two [[JdbcScan.RangeRows]] rows. k = min(default parallelism,
-    * `poolmax`, [[JdbcScan.MaxRanges]], rows / RangeRows) ranges, so the
-    * ranges never queue on the connection pool; the first and last are
-    * open-ended, so every row id lands in exactly one range even when
-    * the count is stale or deletes left gaps. Each range reads in its
-    * own remote transaction, as an explicit `numpartitions` split does;
-    * `numpartitions=1` keeps one statement, one snapshot.
-    */
-  private def rowIdRanges: Option[Seq[String]] = {
-    val plain = !options.map.contains("numpartitions") && options.partitionColumn.isEmpty &&
-      where.isEmpty && orderBy.isEmpty && limit.isEmpty && pushedOffset.isEmpty
-    if (!plain) None
-    else tableRows.filter(_ >= 2L * JdbcScan.RangeRows).flatMap { n =>
-      val k = Seq(JdbcScan.defaultParallelism.toLong, options.poolMax.toLong,
-        JdbcScan.MaxRanges.toLong, n / JdbcScan.RangeRows).min.toInt
-      val edges = None +: (1 until k).map(i => Some(n * i / k)) :+ None
-      if (k < 2) None
-      else Some(edges.zip(edges.tail).map { case (lo, hi) => options.dialect.rowIdRange(lo, hi) })
-    }
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** A split scan's range predicates, each read in its own remote
+    * transaction; empty: one statement. An explicit `partitioncolumn`
+    * split takes its bounds; an automatic one (`splitColumns`, no runtime
+    * filter, a counted table of two [[JdbcScan.RangeRows]] or more) the
+    * stats min/max of the integer column with the most distinct values,
+    * in min(parallelism, `poolmax`, [[JdbcScan.MaxRanges]], rows /
+    * RangeRows) ranges. */
+  private def ranges: Seq[String] =
     (options.partitionColumn, options.lowerBound, options.upperBound) match {
       case (Some(col), Some(lo), Some(hi)) if options.numPartitions > 1 =>
-        val d = options.dialect
-        val q = d.quote(col)
-        val n = options.numPartitions.toLong
-        val width = math.max(1L, (hi - lo) / n + (if ((hi - lo) % n == 0) 0 else 1))
-        (0L until n).map { i =>
-          val lo2 = lo + i * width
-          val hi2 = lo + (i + 1) * width
-          val pred =
-            if (i == 0) s"($q < $hi2 OR $q IS NULL)"
-            else if (i == n - 1) s"($q >= $lo2)"
-            else s"($q >= $lo2 AND $q < $hi2)"
-          partition(sqlFor(Some(pred)), i.toInt): InputPartition
-        }.toArray
-      case _ => rowIdRanges match {
-        case Some(ranges) =>
-          ranges.zipWithIndex.map { case (r, i) => partition(sqlFor(Some(r)), i): InputPartition }
-            .toArray
-        case None => Array(partition(sqlFor(None), 0))
+        JdbcScan.ranges(options.dialect, col, lo, hi, options.numPartitions,
+          colStats.get(col).forall(_.hasNull))
+      case _ if splitColumns.isEmpty || runtimeWhere.nonEmpty => Nil
+      case _ => tableRows.filter(_ >= 2L * JdbcScan.RangeRows).toSeq.flatMap { n =>
+        val k = Seq(JdbcScan.defaultParallelism.toLong, options.poolMax.toLong,
+          JdbcScan.MaxRanges.toLong, n / JdbcScan.RangeRows).min.toInt
+        val ranged = if (k < 2) Nil else splitColumns.flatMap(c => colStats.get(c).collect {
+          case s @ ColumnStats(Some(lo), Some(hi), _, _, _) => (c, lo, hi, s) })
+        ranged.maxByOption(_._4.distinct.getOrElse(0L)).toSeq.flatMap { case (c, lo, hi, s) =>
+          JdbcScan.ranges(options.dialect, c, lo, BigInt(hi) + 1, k, s.hasNull) }
       }
     }
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val preds: Seq[Option[String]] = ranges.map(Some(_))
+    (if (preds.isEmpty) Seq(None) else preds).zipWithIndex
+      .map { case (r, i) => partition(sqlFor(r), i): InputPartition }.toArray
   }
 
   /** A partition sends its statement through the dialect's string wire
@@ -558,17 +555,28 @@ final case class JdbcScan(
 }
 
 object JdbcScan extends Logging {
-  /** Rows per range of a split whole-table read: eight columnar
-    * batches, so each range amortizes its statement and connection. */
+  /** Rows per range of an automatic split: eight columnar batches, so
+    * each range amortizes its statement and connection. */
   val RangeRows: Int = 8 * JdbcColumnarReader.BatchRows
 
-  /** Most ranges of a split whole-table read. DuckDB 1.0 applies a
-    * `rowid` range as a filter above a full table scan, so each range
-    * reads the whole table remotely and k ranges do k times the remote
-    * scan work. Four ranges are measured (4 vCPUs, 250k rows: a full
-    * scan at 146 against 351 ms in one partition); more are not.
-    */
+  /** Most ranges of an automatic split. DuckDB applies a column range
+    * inside its table scan, where a clustered column's range skips the
+    * row groups outside it. Four are measured on 4 vCPUs; more are not. */
   val MaxRanges: Int = 4
+
+  /** `k` predicates splitting `col` at even steps over [lo, hi), exact
+    * so no step overflows. The first is open below and the last above,
+    * so every value lands in one range whatever the bounds; NULL lands in
+    * the first when `nulls` (DuckDB cannot prune by that disjunct). */
+  private def ranges(d: Dialect, col: String, lo: BigInt, hi: BigInt, k: Int,
+      nulls: Boolean): Seq[String] = {
+    val q = d.quote(col)
+    val edges = None +: (1 until k).map(i => Some(lo + (hi - lo).max(0) * i / k)) :+ None
+    edges.zip(edges.tail).zipWithIndex.map { case ((a, b), i) =>
+      val p = (a.map(v => s"$q >= $v") ++ b.map(v => s"$q < $v")).mkString(" AND ")
+      if (i == 0 && nulls) s"($p OR $q IS NULL)" else s"($p)"
+    }
+  }
 
   /** The session's default parallelism (1 without a session). */
   private def defaultParallelism: Int = {
@@ -577,28 +585,18 @@ object JdbcScan extends Logging {
       .map(_.sparkContext.defaultParallelism).getOrElse(1)
   }
 
-  /** Every row of a size statement as nullable longs; empty on a remote
-    * error, so a failed lookup plans the scan as if nothing were known. */
-  private def remoteLongs(o: JdbcOptions, sql: String): Seq[Seq[Option[Long]]] =
-    try {
-      val c = o.connect()
-      try {
-        val st = c.createStatement()
-        try {
-          val rs = st.executeQuery(sql)
-          val n = rs.getMetaData.getColumnCount
-          val out = scala.collection.mutable.ArrayBuffer.empty[Seq[Option[Long]]]
-          while (rs.next()) out += (1 to n).map { i =>
-            val v = rs.getLong(i); if (rs.wasNull()) None else Some(v)
-          }
-          out.toSeq
-        } finally st.close()
-      } finally c.close()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        logWarning(s"graft-jdbc: size lookup failed, planning without it: $e")
-        Nil
-    }
+  /** Every row of a size or statistics statement as nullable texts;
+    * empty on a remote error, so a failed lookup plans the scan as if
+    * nothing were known. */
+  private def remoteRows(o: JdbcOptions, sql: String): Seq[Seq[Option[String]]] =
+    scala.util.Using.Manager { use =>
+      val rs = use(use(o.connect()).createStatement()).executeQuery(sql)
+      val n = rs.getMetaData.getColumnCount
+      Iterator.continually(rs.next()).takeWhile(identity)
+        .map(_ => (1 to n).map(i => Option(rs.getString(i)))).toList
+    }.recover { case e =>
+      logWarning(s"graft-jdbc: size lookup failed, planning without it: $e"); Nil
+    }.get
 
   /** Driver-side remote COUNT(*) cache: every action plans a fresh scan,
     * so without this each action over the same (connection, FROM, WHERE)

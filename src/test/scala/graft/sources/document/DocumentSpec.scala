@@ -285,7 +285,7 @@ class DocumentSpec extends AnyFunSuite with SparkFixture {
     assert(r1.getString(1) == """{"kind":"a","meta":{"x":1},"score":0.5}""")
   }
 
-  test("batch scans are columnar; columnar == row results; streaming stays rows") {
+  test("batch and micro-batch scans are columnar and read the generator's rows") {
     val dir = Files.createTempDirectory("graft_docs_col").toString
     // > 1 batch (BatchRows = 4096) with nulls, arrays, decimals, strings
     val sb = new StringBuilder

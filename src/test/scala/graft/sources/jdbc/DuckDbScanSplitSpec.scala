@@ -6,11 +6,13 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Size-aware DuckDB scans: a whole-table read splits into row-id ranges
-  * with the same rows as one statement, every other scan shape stays one
-  * partition without a failing remote statement, and the catalog row
-  * count lets a small remote table broadcast while a table of long
-  * strings does not. Every statement goes through [[RecordingDriver]].
+/** Size-aware DuckDB scans: a read with nothing pushed but the
+  * projection and IS NOT NULL (a join's fact side too) splits into ranges
+  * of an integer column with the same rows as one statement, every other
+  * scan shape stays one partition without a failing remote statement,
+  * and the catalog row count lets a small remote table broadcast while a
+  * table of long strings does not. Every statement goes through
+  * [[RecordingDriver]].
   */
 class DuckDbScanSplitSpec extends AnyFunSuite with SparkFixture {
 
@@ -69,6 +71,8 @@ class DuckDbScanSplitSpec extends AnyFunSuite with SparkFixture {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
 
+  private def one(table: String): DataFrame = spark.read.option("numpartitions", "1").table(table)
+
   /** The ranges a default read of `rows` rows splits into: capped by the
     * session's parallelism, the default `poolmax` (8) and MaxRanges. */
   private def ranges(rows: Int): Int = Seq(spark.sparkContext.defaultParallelism, 8,
@@ -76,7 +80,7 @@ class DuckDbScanSplitSpec extends AnyFunSuite with SparkFixture {
 
   private def failed: Seq[String] = RecordingDriver.statements.collect { case (s, true) => s }
 
-  test("a default read splits into row-id ranges and reads the rows numpartitions=1 reads") {
+  test("a default read splits into column ranges and reads the rows numpartitions=1 reads") {
     catalogs()
     RecordingDriver.clear()
     val k = ranges(FactRows)
@@ -84,11 +88,13 @@ class DuckDbScanSplitSpec extends AnyFunSuite with SparkFixture {
     val split = spark.table("sa.app.fact")
     val parts = partitions(split)
     assert(parts.map(_.length) == Seq(k), parts)
-    assert(parts.head.head.sql.contains(s"(rowid < ${FactRows / k})"), parts.head.head.sql)
-    assert(parts.head.last.sql.contains(s"(rowid >= ${FactRows.toLong * (k - 1) / k})"))
-    val one = spark.read.option("numpartitions", "1").table("sa.app.fact")
-    assert(partitions(one).map(_.length) == Seq(1))
-    val expected = rows(one)
+    // id has the most distinct values; it holds no NULL, so no range has
+    // the IS NULL disjunct
+    assert(parts.head.head.sql.contains(s"""("id" < ${FactRows / k})"""), parts.head.head.sql)
+    assert(parts.head.last.sql.contains(s"""("id" >= ${FactRows.toLong * (k - 1) / k})"""))
+    assert(!parts.flatten.exists(_.sql.contains("IS NULL")))
+    assert(partitions(one("sa.app.fact")).map(_.length) == Seq(1))
+    val expected = rows(one("sa.app.fact"))
     assert(expected.length == FactRows)
     assert(rows(split) == expected)
     // no more ranges than the pool holds connections
@@ -100,7 +106,97 @@ class DuckDbScanSplitSpec extends AnyFunSuite with SparkFixture {
     assert(partitions(proj).map(_.length) == Seq(k))
     assert(rows(proj) == expected.map(r => Seq(r.head, r(3))))
     assert(RecordingDriver.statements.exists(_._1.contains("duckdb_tables()")))
+    assert(RecordingDriver.statements.exists(_._1.contains("stats(\"id\")")))
     assert(failed.isEmpty, failed)
+  }
+
+  test("a fact JOIN dim across two files splits the fact side despite its inferred IS NOT NULL") {
+    catalogs()
+    def joined(fact: DataFrame) = fact.join(spark.table("sb.app.dim"), "dim_id")
+      .groupBy("region").agg(count(lit(1)).as("n"), sum("id").as("ids"))
+    val join = joined(spark.table("sa.app.fact"))
+    val fact = scans(join).filter(_.options.table == "\"app\".\"fact\"")
+    assert(fact.map(_.where) == Seq(Seq("(\"dim_id\" IS NOT NULL)")), fact.map(_.where))
+    assert(fact.map(_.planInputPartitions().length) == Seq(ranges(FactRows)))
+    val expected = joined(one("sa.app.fact")).collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    assert(expected.map(_(1).asInstanceOf[Long]).sum == FactRows)
+    assert(join.collect().map(_.toSeq).sortBy(_.head.toString).toSeq == expected)
+  }
+
+  test("a split column holding NULLs reads each NULL once, automatic and explicit") {
+    catalogs()
+    exec(direct("a.duckdb"), "CREATE OR REPLACE TABLE app.nulls AS SELECT CASE WHEN range % 10 = 0 " +
+      "THEN NULL ELSE range END AS id, range::DOUBLE AS seq, 'v' || range AS s FROM range(200000)")
+    val k = ranges(200000)
+    val explicit = spark.read.option("partitioncolumn", "id").option("lowerbound", "0")
+      .option("upperbound", "200000").option("numpartitions", k.toString)
+    val expected = one("sa.app.nulls").collect().map(_.toSeq).sortBy(_(1).asInstanceOf[Double].toLong).toSeq
+    assert(expected.count(_.head == null) == 20000)
+    Seq(spark.table("sa.app.nulls"), explicit.table("sa.app.nulls")).foreach { df =>
+      val parts = partitions(df).flatten
+      assert(parts.length == k)
+      assert(parts.head.sql.contains("""OR "id" IS NULL)"""), parts.head.sql)
+      assert(parts.tail.forall(!_.sql.contains("IS NULL")))
+      assert(df.collect().map(_.toSeq).sortBy(_(1).asInstanceOf[Double].toLong).toSeq == expected)
+    }
+    // the explicit split of a column without NULLs leaves the disjunct out
+    assert(!partitions(explicit.table("sa.app.fact")).flatten.exists(_.sql.contains("IS NULL")))
+  }
+
+  test("a shuffled split column reads the rows numpartitions=1 reads; no integer column, one partition") {
+    catalogs()
+    exec(direct("a.duckdb"),
+      "CREATE OR REPLACE TABLE app.shuffled AS SELECT ((range * 7919) % 200000)::BIGINT AS k, " +
+        "'v' || range AS s FROM range(200000)",
+      "CREATE OR REPLACE TABLE app.noint AS SELECT range::DOUBLE AS x, 'v' || range AS s " +
+        "FROM range(200000)")
+    val shuffled = spark.table("sa.app.shuffled")
+    assert(partitions(shuffled).map(_.length) == Seq(ranges(200000)))
+    assert(partitions(shuffled).flatten.head.sql.contains(s"""("k" < ${200000 / ranges(200000)})"""))
+    val expected = rows(one("sa.app.shuffled"))
+    assert(expected.length == 200000 && expected.map(_.head) == (0L until 200000L))
+    assert(rows(shuffled) == expected)
+    val noint = spark.table("sa.app.noint")
+    assert(partitions(noint).map(_.length) == Seq(1))
+    assert(noint.count() == 200000)
+  }
+
+  test("one range over a clustered column is a scan filter over about n/k rows, not n") {
+    catalogs()
+    val k = ranges(FactRows)
+    val range = partitions(spark.table("sa.app.fact")).flatten.apply(1).sql
+    val c = direct("a.duckdb").connect()
+    val plan = try {
+      val rs = c.createStatement().executeQuery("EXPLAIN ANALYZE " + range)
+      Iterator.continually(rs.next()).takeWhile(identity).map(_ => rs.getString(2)).mkString("\n")
+    } finally c.close()
+    // no FILTER operator over the scan; the scan itself emits the range
+    assert("│\\s*FILTER\\s*│".r.findFirstIn(plan).isEmpty, plan)
+    val scanned = "│\\s*(\\d+)\\s*│".r.findFirstMatchIn(plan.substring(plan.indexOf("SEQ_SCAN")))
+      .map(_.group(1).toLong)
+    assert(scanned.contains(FactRows.toLong / k), plan)
+  }
+
+  test("planning round trips: filtered and point scans as many as before, an eligible scan one more") {
+    catalogs()
+    /** Remote statements other than the scan's own, on a second run. */
+    def lookups(df: => DataFrame): Int = {
+      df.collect()
+      RecordingDriver.clear()
+      val before = JdbcCursor.executed.get()
+      df.collect()
+      RecordingDriver.statements.length - (JdbcCursor.executed.get() - before).toInt
+    }
+    def fact = spark.table("sa.app.fact")
+    // the counts the rowid-split build issued: 1, 1, 2 and 5
+    assert(lookups(fact.filter(col("id") >= 10 && col("id") < 30)) == 1)
+    assert(lookups(fact.filter(col("id") === 42)) == 1)
+    assert(lookups(fact.select("id", "tag")) == 2 + 1)
+    assert(lookups(spark.sql("SELECT d.region, SUM(f.id) FROM sa.app.fact f JOIN sb.app.dim d " +
+      "ON f.dim_id = d.dim_id GROUP BY d.region")) == 5 + 1)
+    // an explicit split reads its column's NULL statistics: 1 before
+    assert(lookups(spark.read.option("partitioncolumn", "id").option("lowerbound", "0")
+      .option("upperbound", FactRows.toString).option("numpartitions", "4").table("sa.app.fact")) == 2)
   }
 
   test("after a DELETE leaves row-id gaps, the stale count still reads every row once") {
@@ -110,9 +206,9 @@ class DuckDbScanSplitSpec extends AnyFunSuite with SparkFixture {
     val k = ranges(FactRows)
     val split = spark.table("sa.app.gappy")
     assert(partitions(split).map(_.length) == Seq(k))
-    val one = rows(spark.read.option("numpartitions", "1").table("sa.app.gappy"))
-    assert(one.length == (120000 until FactRows).count(_ % 3 != 0))
-    assert(rows(split) == one)
+    val once = rows(one("sa.app.gappy"))
+    assert(once.length == (120000 until FactRows).count(_ % 3 != 0))
+    assert(rows(split) == once)
   }
 
   test("views, table functions, derived tables and pushed work plan one partition, no failed statement") {
@@ -127,6 +223,7 @@ class DuckDbScanSplitSpec extends AnyFunSuite with SparkFixture {
       "derived table" -> spark.sql("SELECT f.id, v.tag FROM sa.app.fact f " +
         "JOIN sa.app.fact_v v ON f.id = v.id"),
       "pushed filter" -> fact.filter(col("id") >= 10),
+      "point lookup" -> fact.filter(col("id") === 42),
       "limit" -> fact.limit(5),
       "topn" -> fact.orderBy(col("score").desc).limit(5),
       "aggregate" -> fact.groupBy("dim_id").agg(sum("score")),
@@ -134,14 +231,13 @@ class DuckDbScanSplitSpec extends AnyFunSuite with SparkFixture {
     cases.foreach { case (name, df) =>
       val parts = partitions(df)
       assert(parts.nonEmpty && parts.forall(_.length == 1), s"$name: $parts")
-      assert(!parts.flatten.exists(_.sql.contains("rowid")), s"$name: ${parts.flatten}")
       assert(df.count() > 0, name)
     }
     assert(partitions(cases(2)._2).flatten.exists(_.sql.contains("JOIN")), "derived table collapsed")
     assert(failed.isEmpty, failed)
   }
 
-  test("a table reached through an attach catalog counts itself; a real rowid column keeps one partition") {
+  test("a table reached through an attach catalog counts itself; a real rowid column splits") {
     catalogs()
     // only ever attached (read-only), so no other database instance holds the file
     val c = java.sql.DriverManager.getConnection(s"jdbc:duckdb:$dir/c.duckdb")
@@ -160,11 +256,14 @@ class DuckDbScanSplitSpec extends AnyFunSuite with SparkFixture {
       assert(partitions(df).map(_.length) == Seq(k), t)
       assert(df.collect().length == 140000, t)
     }
+    // a real column named rowid shadows DuckDB's row id; ranged by name
     exec(direct("a.duckdb"),
-      "CREATE OR REPLACE TABLE app.shadow AS SELECT range AS id, range * 2 AS rowid FROM range(70000)")
+      "CREATE OR REPLACE TABLE app.shadow AS SELECT range * 2 AS rowid, 'v' || range AS s FROM range(70000)")
     val shadow = spark.table("sa.app.shadow")
-    assert(partitions(shadow).map(_.length) == Seq(1))
-    assert(shadow.collect().length == 70000)
+    val parts = partitions(shadow).flatten
+    assert(parts.length == ranges(70000) && parts.head.sql.contains("\"rowid\" <"), parts)
+    assert(rows(shadow) == rows(one("sa.app.shadow")))
+    assert(rows(shadow).map(_.head) == (0L until 140000L by 2))
     assert(failed.isEmpty, failed)
   }
 

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Failure paths of the columnar JDBC read: a satisfied LIMIT never
   * executes the statements of the readers it did not need, and a
   * ResultSet that throws in the middle of a batch, alone or in one of
-  * the row-id ranges of a split DuckDB read, fails the read with its own
-  * error and returns every pooled connection.
+  * the column ranges of a split DuckDB read, or a range whose statement
+  * fails to execute, fails the read with its own error and returns every
+  * pooled connection.
   */
 class JdbcReadFaultSpec extends AnyFunSuite with SparkFixture {
 
@@ -109,7 +110,10 @@ class JdbcReadFaultSpec extends AnyFunSuite with SparkFixture {
     assert(ConnectionPool.checkedOut(opts) == 0)
   }
 
-  test("a ResultSet throwing in one of k row-id ranges fails the job with its error and frees the pool") {
+  /** A split DuckDB read of 200k rows; `fault` makes its second range
+    * fail, and the job must fail with that error, every task closing its
+    * reader and returning its connection. */
+  private def failOneRange(fault: String => RecordingDriver.Fault): Unit = {
     assume(DuckDbWireSpec.driverPresent, "duckdb_jdbc driver not on classpath")
     RecordingDriver.register
     val dir = java.nio.file.Files.createTempDirectory("graft_rangefault").toString
@@ -126,7 +130,7 @@ class JdbcReadFaultSpec extends AnyFunSuite with SparkFixture {
     val parts = df.queryExecution.sparkPlan.collectFirst {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
     }.get.toBatch.planInputPartitions().map(_.asInstanceOf[JdbcInputPartition])
-    assert(parts.length >= 2 && parts(1).sql.contains("rowid >="), parts.toSeq)
+    assert(parts.length >= 2 && parts(1).sql.contains("(\"id\" >="), parts.toSeq)
 
     val ended = new java.util.concurrent.CountDownLatch(parts.length)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -134,13 +138,13 @@ class JdbcReadFaultSpec extends AnyFunSuite with SparkFixture {
         ended.countDown()
     }
     spark.sparkContext.addSparkListener(listener)
-    RecordingDriver.failOn = Some(RecordingDriver.Fault(parts(1).sql, 5000,
-      new java.sql.SQLException("injected range failure")))
+    val injected = fault(parts(1).sql)
+    RecordingDriver.failOn = Some(injected)
     try {
       val e = intercept[Exception](df.collect())
       val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
       assert(chain.exists(t => t.isInstanceOf[java.sql.SQLException] &&
-        t.getMessage == "injected range failure"), e)
+        t.getMessage == injected.error.getMessage), e)
       // every task, failed or killed, has closed its reader once it ended
       assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS))
       assert(ConnectionPool.checkedOut(o) == 0)
@@ -149,5 +153,13 @@ class JdbcReadFaultSpec extends AnyFunSuite with SparkFixture {
       spark.sparkContext.removeSparkListener(listener)
     }
     assert(df.count() == 200000)
+  }
+
+  test("a ResultSet throwing in one of k column ranges fails the job with its error and frees the pool") {
+    failOneRange(RecordingDriver.Fault(_, 5000, new java.sql.SQLException("injected range failure")))
+  }
+
+  test("executeQuery throwing in one of k column ranges fails the job with its error and frees the pool") {
+    failOneRange(RecordingDriver.Fault(_, -1, new java.sql.SQLException("injected execute failure")))
   }
 }

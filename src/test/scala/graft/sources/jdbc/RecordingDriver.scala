@@ -7,10 +7,10 @@ import scala.jdk.CollectionConverters._
 
 /** A JDBC driver for `jdbc:graft-recording:<url>` that opens `jdbc:<url>`
   * and wraps it: every statement text it executes is recorded with
-  * whether it failed, and a statement matching [[failOn]] gets a
-  * ResultSet whose `next()` throws. Specs use it to see every remote
-  * statement a plan issues and to inject a fetch failure into one
-  * partition of a real Spark job. Options over the URL need
+  * whether it failed, and a statement matching [[failOn]] throws when
+  * executed or gets a ResultSet whose `next()` throws. Specs use it to
+  * see every remote statement a plan issues and to inject a failure into
+  * one partition of a real Spark job. Options over the URL need
   * `dialect=<name>`, since the prefix names no engine.
   */
 final class RecordingDriver extends java.sql.Driver {
@@ -45,8 +45,9 @@ object RecordingDriver {
   def executed: Seq[String] = ran.asScala.toSeq
   def clear(): Unit = { log.clear(); ran.clear() }
 
-  /** A statement whose text contains `marker` returns a ResultSet whose
-    * `next()` throws `error` on its `afterRows + 1`-th call. */
+  /** A statement whose text contains `marker` throws `error` from
+    * `execute*` when `afterRows` is negative, and otherwise returns a
+    * ResultSet whose `next()` throws it on its `afterRows + 1`-th call. */
   final case class Fault(marker: String, afterRows: Int, error: java.sql.SQLException)
   @volatile var failOn: Option[Fault] = None
 
@@ -63,7 +64,11 @@ object RecordingDriver {
         .filter(_ => m.getName.startsWith("execute") || m.getName == "prepareStatement")
         .orElse(Option(sql).filter(_ => m.getName.startsWith("execute")))
       val out =
-        try m.invoke(target, a: _*)
+        try {
+          failOn.filter(f => f.afterRows < 0 && m.getName.startsWith("execute") &&
+            text.exists(_.contains(f.marker))).foreach(f => throw new InvocationTargetException(f.error))
+          m.invoke(target, a: _*)
+        }
         catch {
           case e: InvocationTargetException =>
             text.foreach(t => log.add(t -> true))
@@ -78,7 +83,7 @@ object RecordingDriver {
             Array[Class[_]](classOf[java.sql.PreparedStatement]), h)
         case s: Statement => wrap(s, classOf[Statement])
         case rs: ResultSet =>
-          failOn.filter(f => text.exists(_.contains(f.marker)))
+          failOn.filter(f => f.afterRows >= 0 && text.exists(_.contains(f.marker)))
             .fold(rs)(f => failing(rs, f))
         case other => other
       }
