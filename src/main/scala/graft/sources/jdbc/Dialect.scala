@@ -536,9 +536,10 @@ object DuckDbDialect extends Dialect {
     * renders ~120 internal ones; `duckdb_tables()` alone takes 0.5 ms).
     */
   override def baseTableRowsSql(from: String): Option[String] =
-    nameParts(from).map { parts =>
+    Dialect.nameParts(from).map { parts =>
       def matches(name: String): String = {
-        def eq(col: String, v: String) = s"lower($col) = ${stringLiteral(v)}"
+        // DuckDB matches identifiers case-insensitively, quoted or not
+        def eq(col: String, v: String) = s"lower($col) = ${stringLiteral(v.toLowerCase)}"
         (parts match {
           case Seq(t) => Seq(eq(name, t))
           case Seq(s, t) =>
@@ -556,7 +557,7 @@ object DuckDbDialect extends Dialect {
     * (0.3 ms for four columns; extracting the numbers in SQL took 2 ms).
     * Plain names only: a table function would be read. */
   override def columnStatsSql(from: String, cols: Seq[String]): Option[String] =
-    nameParts(from).map(_ =>
+    Dialect.nameParts(from).map(_ =>
       cols.map(c => s"stats(${quote(c)})").mkString("SELECT ", ", ", s" FROM $from LIMIT 1"))
 
   private val statNumbers = Seq("\\[Min: (-?\\d+),", "Max: (-?\\d+)\\]", "Approx Unique: (\\d+)",
@@ -567,24 +568,6 @@ object DuckDbDialect extends Dialect {
     ColumnStats(min, max, distinct, bytes, hasNull = !text.contains("Has Null: false"))
   }
 
-  /** `t`, `"s"."t"`, `c.s.t`: the lower-cased parts of a one- to
-    * three-part name, or None for anything else (a table function
-    * call, a derived table). DuckDB matches identifiers
-    * case-insensitively, quoted or not.
-    */
-  private[jdbc] def nameParts(from: String): Option[Seq[String]] = {
-    val Part = "\\s*(?:\"((?:[^\"]|\"\")+)\"|([A-Za-z_][A-Za-z0-9_$]*))\\s*(\\.|$)".r
-    @annotation.tailrec
-    def parse(rest: String, acc: Vector[String]): Option[Seq[String]] =
-      Part.findPrefixMatchOf(rest) match {
-        case Some(m) if acc.size < 3 =>
-          val part = Option(m.group(1)).map(_.replace("\"\"", "\""))
-            .getOrElse(m.group(2)).toLowerCase
-          if (m.group(3) == ".") parse(m.after.toString, acc :+ part) else Some(acc :+ part)
-        case _ => None
-      }
-    parse(from, Vector.empty)
-  }
 }
 
 object SqliteDialect extends Dialect {
@@ -748,6 +731,23 @@ object Dialect {
     * only one exists.
     */
   private[jdbc] val TableTypes: Array[String] = Array("TABLE", "BASE TABLE")
+
+  /** `t`, `"s"."t"`, `c.s.t`: the parts of a one- to three-part name
+    * as written (quotes removed, `""` unescaped, case kept), or None for
+    * anything else (a table function call, a derived table).
+    */
+  private[jdbc] def nameParts(from: String): Option[Seq[String]] = {
+    val Part = "\\s*(?:\"((?:[^\"]|\"\")+)\"|([A-Za-z_][A-Za-z0-9_$]*))\\s*(\\.|$)".r
+    @annotation.tailrec
+    def parse(rest: String, acc: Vector[String]): Option[Seq[String]] =
+      Part.findPrefixMatchOf(rest) match {
+        case Some(m) if acc.size < 3 =>
+          val part = Option(m.group(1)).map(_.replace("\"\"", "\"")).getOrElse(m.group(2))
+          if (m.group(3) == ".") parse(m.after.toString, acc :+ part) else Some(acc :+ part)
+        case _ => None
+      }
+    parse(from, Vector.empty)
+  }
 
   /** The ONE whitelist of array element types the native-array dialects
     * declare in DDL, bind via `createArrayOf` (TypeMapping's boxing

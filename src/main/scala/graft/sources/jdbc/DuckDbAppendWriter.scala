@@ -30,13 +30,11 @@ import java.sql.Connection
   * Appender has no method for, and decimals are appended as text that
   * DuckDB casts.
   */
-final class DuckDbAppendWriter(options: JdbcOptions, schema: StructType, taskId: Long)
+final class DuckDbAppendWriter(options: JdbcOptions, schema: StructType, conn: Connection,
+    ns: String, table: String, taskId: Long)
   extends DataWriter[InternalRow] {
 
-  private val conn: Connection = options.connect()
-  private val appender: DuckDbAppender =
-    try DuckDbAppender.open(conn, options.table)
-    catch { case t: Throwable => conn.close(); throw t }
+  private val appender = DuckDbAppender.open(conn, ns, table)
   private val appends = schema.fields.map(f => appender.appendOf(f.dataType))
   private var total = 0L
 
@@ -146,13 +144,8 @@ private[jdbc] object DuckDbAppender {
     try m.invoke(target, arg)
     catch { case e: InvocationTargetException => throw e.getCause }
 
-  /** An Appender on `table` (`"ns"."t"` or a bare name in `main`). */
-  def open(conn: Connection, table: String): DuckDbAppender = {
-    val (ns, t) = table match {
-      case JdbcWrite.QuotedPair(n, t0) => (n, t0)
-      case bare if bare.contains('.') => (bare.take(bare.lastIndexOf('.')), bare.drop(bare.lastIndexOf('.') + 1))
-      case bare => ("main", bare)
-    }
+  /** An Appender on table `t` of schema `ns`. */
+  def open(conn: Connection, ns: String, t: String): DuckDbAppender = {
     val duck = conn.unwrap(methods.unwrapTarget).asInstanceOf[AnyRef]
     val app =
       try methods.create.invoke(duck, ns, t)

@@ -3,7 +3,7 @@ package graft.sources.jdbc
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, SortOrder}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{ArrayType, StructType}
@@ -27,12 +27,17 @@ import java.sql.Connection
   * task failure mid-job leaves the target completely untouched (the
   * round-2 driver-side pre-truncate lost data on mid-job failure).
   *
-  * Upsert correctness is enforced, not assumed (reference
-  * `constraints.rs:28-95`): the Write REQUIRES a hash-clustered
-  * distribution on the upsert keys, so one key lands in exactly one
-  * partition transaction, and each writer validates per-chunk key
-  * uniqueness before executing its batch. DuckDB's staged upserts need
-  * no shuffle: the move checks uniqueness across the whole stage.
+  * Each write is planned once, on the driver ([[JdbcBatchWrite]]):
+  * where task rows land, the statement a task prepares ([[TaskWrite]])
+  * and the conflict target, which is read and checked against the
+  * written columns before any task starts (reference
+  * `constraints.rs:28-95`). The writers only bind, flush and commit.
+  * A keyed upsert REQUIRES a hash-clustered distribution on its keys,
+  * so one key lands in exactly one partition transaction, and Derby's
+  * writer checks key uniqueness per chunk before executing it. DuckDB's
+  * staged upserts need no shuffle: the move checks uniqueness across
+  * the whole stage. Every stage is a plain append, so an overwrite
+  * ignores the upsert options.
   *
   * Scale: rows bind into JDBC `PreparedStatement` batches of
   * `batchSize` (prepared-path throughput is the one performance result
@@ -70,34 +75,75 @@ final class JdbcWriteBuilder(options: JdbcOptions, schema: StructType)
 }
 
 object JdbcWrite {
-  private[jdbc] val QuotedPair = "\"(.*)\"\\.\"(.*)\"".r
-
   /** Stage column holding the Spark task id that appended each row. */
   private[jdbc] val TaskColumn = "__task"
 
-  /** Writes that bulk-load through [[DuckDbAppendWriter]] into a
-    * task-tagged stage, whatever their kind. */
-  private[jdbc] def appenderStaged(o: JdbcOptions): Boolean = o.dialect == DuckDbDialect
+  /** `INSERT INTO table (cols) VALUES (..)`, one bind per column. */
+  private[jdbc] def insertSql(d: Dialect, table: String, schema: StructType): String =
+    s"INSERT INTO $table (${schema.fields.map(f => d.quote(f.name)).mkString(", ")}) " +
+      s"VALUES (${schema.fields.map(f => d.insertPlaceholder(f.dataType)).mkString(", ")})"
 }
 
+/** The Write hands Spark its [[JdbcBatchWrite]]'s distribution rules. */
 final class JdbcWrite(options: JdbcOptions, schema: StructType,
     overwrite: Option[Seq[String]])
   extends Write with RequiresDistributionAndOrdering {
 
+  private val batch = JdbcBatchWrite(options, schema, overwrite)
+
+  override def requiredDistribution(): Distribution = batch.distribution
+  override def requiredNumPartitions(): Int = batch.numPartitions
+  override def requiredOrdering(): Array[SortOrder] = Array.empty
+  override def toBatch: BatchWrite = batch
+}
+
+/** One JDBC write, planned once on the driver. `overwrite`: None =
+  * append, an upsert when the options name one; Some(conds) = atomic
+  * replace of the rows matching `conds` (everything when empty) via the
+  * staged swap. The factory carries a finished [[TaskWrite]], so no
+  * writer decides anything.
+  */
+final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
+    overwrite: Option[Seq[String]])
+  extends BatchWrite with Logging {
+  import JdbcBatchWrite.Upsert
+
+  private val d = options.dialect
+  private val cols = schema.fieldNames.toSeq
+
+  /** The one reading of the upsert options. An overwrite replaces rows
+    * and ignores them on every dialect: its stage is a plain append. */
+  private val upsert: Option[Upsert] =
+    if (overwrite.isDefined || !options.upsertActive) None
+    else Some(Upsert(options.upsertKeys, doNothing = options.upsertMode != "update"))
+  /** DuckDB writes of every kind bulk-load through the Appender
+    * ([[DuckDbAppendWriter]]) into a stage whose rows carry the task id. */
+  private val tagged = d == DuckDbDialect
+  /** Partition writers fill [[stageTable]] instead of the target. */
+  private val staged = overwrite.isDefined || tagged
+
+  /** W5: this overwrite rebuilds the whole database FILE and swaps it
+    * over the live path ([[FileSwap]]) instead of staging a table inside
+    * the live store. Validated by [[JdbcOptions.overwriteMode]] to be
+    * file-backed DuckDB.
+    */
+  private val fileswap = overwrite.isDefined && options.overwriteMode == "fileswap"
+
+  private def clustered(cs: Seq[String]): Distribution =
+    Distributions.clustered(cs.map(c => Expressions.column(c): Expression).toArray)
+
   // One upsert key -> one partition transaction: the precondition the
   // reference's constraint validation protects is guaranteed by Spark's
-  // shuffle instead of hoped for. Appender-staged upserts need no
+  // shuffle instead of hoped for. DuckDB's staged upserts need no
   // shuffle: their move checks key uniqueness across the whole stage.
-  override def requiredDistribution(): Distribution =
-    if (options.upsertKeys.nonEmpty && !JdbcWrite.appenderStaged(options))
-      Distributions.clustered(options.upsertKeys.map(k => Expressions.column(k)).toArray)
-    else if (options.upsertActive && options.dialect.singleWriterUpserts)
-      // do_nothing_all has no explicit keys, but Spark rejects a partition
-      // count over an unspecified distribution — cluster on all columns;
-      // with requiredNumPartitions = 1 everything lands in the one writer.
-      Distributions.clustered(schema.fields.map(f => Expressions.column(f.name): 
-        org.apache.spark.sql.connector.expressions.Expression))
-    else Distributions.unspecified()
+  private[jdbc] def distribution: Distribution = upsert match {
+    case Some(u) if u.keys.nonEmpty && !tagged => clustered(u.keys)
+    // do_nothing_all has no explicit keys, but Spark rejects a partition
+    // count over an unspecified distribution — cluster on all columns;
+    // with numPartitions = 1 everything lands in the one writer.
+    case Some(_) if d.singleWriterUpserts => clustered(cols)
+    case _ => Distributions.unspecified()
+  }
 
   // Embedded Derby serializes concurrent update-else-insert writers on
   // page locks: N upsert writers each spend the lock-wait timeout
@@ -105,36 +151,44 @@ final class JdbcWrite(options: JdbcOptions, schema: StructType,
   // took 20 s vs 0.5 s single-writer — AQE's small-input coalescing had
   // been masking it). Page-lock stores get ONE writer for upserts; true
   // row-lock servers keep key-clustered parallel writers.
-  override def requiredNumPartitions(): Int =
-    if (options.upsertActive && options.dialect.singleWriterUpserts) 1
-    else 0 // 0 = no requirement
+  private[jdbc] def numPartitions: Int =
+    if (upsert.isDefined && d.singleWriterUpserts) 1 else 0 // 0 = no requirement
 
-  override def requiredOrdering(): Array[SortOrder] = Array.empty
+  private def withConn[A](f: Connection => A): A = {
+    val c = options.connect()
+    try f(c) finally c.close()
+  }
 
-  override def toBatch: BatchWrite = JdbcBatchWrite(options, schema, overwrite)
-}
+  private def exec(c: Connection, sql: String): Unit = {
+    val st = c.createStatement()
+    try st.executeUpdate(sql) finally st.close()
+  }
 
-/** `overwrite`: None = append; Some(conds) = atomic replace of the rows
-  * matching `conds` (everything when empty) via the staged swap.
-  * Appender-staged (DuckDB) writes stage every kind, append and upsert
-  * included, and move only the committed tasks' rows.
-  */
-final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
-    overwrite: Option[Seq[String]])
-  extends BatchWrite with Logging {
-  import JdbcWrite.QuotedPair
-
-  private def truncate: Boolean = overwrite.isDefined
-  private def appenderStaged: Boolean = JdbcWrite.appenderStaged(options)
-  /** Partition writers fill [[stageTable]] instead of the target. */
-  private def staged: Boolean = truncate || appenderStaged
-
-  /** W5: this overwrite rebuilds the whole database FILE and swaps it
-    * over the live path ([[FileSwap]]) instead of staging a table inside
-    * the live store. Validated by [[JdbcOptions.overwriteMode]] to be
-    * file-backed DuckDB.
+  /** Schema and name of the target as written (`"ns"."t"`, `ns.t`; a
+    * bare `t` lies in the connection's current schema): the one parse
+    * behind the stage's name, the stale-stage sweep, the primary-key
+    * lookup, ANALYZE and the file swap. None for FROM text that names
+    * no one- or two-part table.
     */
-  private def fileswap: Boolean = truncate && options.overwriteMode == "fileswap"
+  private lazy val target: Option[(String, String)] = Dialect.nameParts(options.table).collect {
+    case Seq(t) => (withConn(_.getSchema), t)
+    case Seq(ns, t) => (ns, t)
+  }
+  private def targetParts: (String, String) = target.getOrElse(throw new IllegalArgumentException(
+    s"cannot stage a write to ${options.table}: not a one- or two-part table name"))
+
+  /** `t__stage_<millisHex>_<nanoHex>` beside the target. The per-write
+    * unique id (reference stages into `__data_<ts>`,
+    * `creator.rs:220-520`) keeps two concurrent writes of the same table
+    * from clobbering each other's stage; it is fixed per BatchWrite
+    * instance so factory, commit and abort all address the same stage.
+    * The leading wall-clock segment is what [[dropStaleStages]] reads to
+    * GC only ABANDONED generations.
+    */
+  private val stageSuffix = s"__stage_${java.lang.Long.toHexString(System.currentTimeMillis())}" +
+    s"_${java.lang.Long.toHexString(System.nanoTime())}"
+  private lazy val (stageNs, stageName) = (targetParts._1, targetParts._2 + stageSuffix)
+  private lazy val stageTable: String = d.quoted(Seq(stageNs, stageName))
 
   private val livePath: String = options.duckdbFile.getOrElse("")
   /** Fresh generation file (`…refresh.<ms>-<seq>.building`) — fixed per
@@ -152,31 +206,6 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
   private def stagingOpts: JdbcOptions =
     JdbcOptions(options.map - "attach" + ("url" -> stagingUrl))
 
-  /** `"ns"."t"` → `"ns"."t__stage_<millisHex>_<nanoHex>"` (suffix inside
-    * the final quote). The per-write unique id (reference stages into
-    * `__data_<ts>`, `creator.rs:220-520`) keeps two concurrent
-    * writes of the same table from clobbering each other's stage;
-    * the id is fixed per BatchWrite instance so factory, commit and
-    * abort all address the same stage. The leading wall-clock segment is
-    * what [[dropStaleStages]] reads to GC only ABANDONED generations.
-    */
-  private val stageTable: String = {
-    val t = options.table
-    val suffix = s"__stage_${java.lang.Long.toHexString(System.currentTimeMillis())}" +
-      s"_${java.lang.Long.toHexString(System.nanoTime())}"
-    if (t.endsWith("\"")) t.dropRight(1) + suffix + "\"" else t + suffix
-  }
-
-  private def withConn[A](f: Connection => A): A = {
-    val c = options.connect()
-    try f(c) finally c.close()
-  }
-
-  private def exec(c: Connection, sql: String): Unit = {
-    val st = c.createStatement()
-    try st.executeUpdate(sql) finally st.close()
-  }
-
   /** GC stage generations left by CRASHED runs (reference GCs previous
     * `__data_<ts>` generations the same way, `creator.rs:220-520`) —
     * but only those older than [[JdbcBatchWrite.StaleStageAgeMs]], read
@@ -187,31 +216,30 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
     * the threshold. Unparseable suffixes (pre-timestamp format) are
     * treated as abandoned.
     */
-  private def dropStaleStages(c: Connection): Unit = options.table match {
-    case QuotedPair(ns, t) =>
-      val rs = c.getMetaData.getTables(null, ns, t + "__stage_%", Dialect.TableTypes)
-      val stale = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (rs.next()) stale += rs.getString("TABLE_NAME")
-      rs.close()
-      val now = System.currentTimeMillis()
-      val d = options.dialect
-      stale.foreach { s =>
-        val bornAt =
-          try java.lang.Long.parseLong(
-            s.stripPrefix(t + "__stage_").takeWhile(_ != '_'), 16)
-          catch { case _: NumberFormatException => 0L }
-        if (now - bornAt > JdbcBatchWrite.StaleStageAgeMs)
-          try exec(c, s"DROP TABLE ${d.quote(ns)}.${d.quote(s)}")
-          catch { case _: java.sql.SQLException => }
-      }
-    case _ => () // non-catalog table string; nothing to sweep
+  private def dropStaleStages(c: Connection): Unit = {
+    val (ns, t) = targetParts
+    val rs = c.getMetaData.getTables(null, ns, t + "__stage_%", Dialect.TableTypes)
+    val stale = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (rs.next()) stale += rs.getString("TABLE_NAME")
+    rs.close()
+    val now = System.currentTimeMillis()
+    stale.foreach { s =>
+      val bornAt =
+        try java.lang.Long.parseLong(s.stripPrefix(t + "__stage_").takeWhile(_ != '_'), 16)
+        catch { case _: NumberFormatException => 0L }
+      if (now - bornAt > JdbcBatchWrite.StaleStageAgeMs)
+        try exec(c, s"DROP TABLE ${d.quoted(Seq(ns, s))}")
+        catch { case _: java.sql.SQLException => }
+    }
   }
 
-  /** Live table's PRIMARY KEY columns (fileswap re-creates it on the
-    * refreshed table — reference's TableManager rebuilds constraints);
-    * best-effort: engines without the metadata call report none.
+  /** The target's PRIMARY KEY columns in key order, from JDBC metadata:
+    * fileswap re-creates them on the refreshed table (the reference's
+    * TableManager rebuilds constraints), and they are Derby's
+    * do_nothing_all conflict target. Best-effort: engines without the
+    * metadata call report none.
     */
-  private def livePrimaryKey(ns: String, t: String): Seq[String] =
+  private def primaryKey: Seq[String] = target.fold(Seq.empty[String]) { case (ns, t) =>
     try withConn { c =>
       val pk = scala.collection.mutable.ArrayBuffer.empty[(Short, String)]
       val rs = c.getMetaData.getPrimaryKeys(null, ns, t)
@@ -219,102 +247,162 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
       rs.close()
       pk.sortBy(_._1).map(_._2).toSeq
     } catch { case _: java.sql.SQLException => Nil }
+  }
+
+  /** The conflict target as written column names, checked before any
+    * task starts: an upsert's explicit keys, or for Derby's
+    * update-else-insert under do_nothing_all the table's PRIMARY KEY
+    * (the remote constraint IS the target of the reference's target-less
+    * `ON CONFLICT DO NOTHING`, `on_conflict.rs:32`, which the other
+    * dialects run as such: no target); and the PRIMARY KEY of a DuckDB
+    * table that a staged overwrite replaces rows of ([[moveStaged]]).
+    */
+  private lazy val conflictKeys: Seq[String] = {
+    val (keys, from) = upsert match {
+      case Some(u) if u.keys.isEmpty && d == DerbyDialect =>
+        val pk = primaryKey
+        if (pk.isEmpty) throw new IllegalArgumentException(
+          s"do_nothing_all needs a PRIMARY KEY on ${options.table} (none found)")
+        (pk, "the table PRIMARY KEY")
+      case Some(u) => (u.keys, "upsertkeys")
+      case None if tagged && overwrite.isDefined && !fileswap =>
+        // a key column the write leaves to its DEFAULT restages no key
+        val pk = primaryKey
+        (if (pk.forall(k => cols.exists(_.equalsIgnoreCase(k)))) pk else Nil, "")
+      case None => (Nil, "")
+    }
+    keys.map(k => cols.find(_.equalsIgnoreCase(k)).getOrElse(throw new IllegalArgumentException(
+      s"key column '$k' (from $from) is not among the written columns " +
+        cols.mkString("[", ", ", "]"))))
+  }
+
+  /** What every task runs, once the conflict target is read and
+    * checked: DuckDB appends to the stage; any other stage and a plain
+    * append INSERT; an upsert runs the dialect's upsert, or on Derby,
+    * which has neither ON CONFLICT nor MERGE over VALUES, an UPDATE by
+    * key and an INSERT of the rows it missed.
+    */
+  private def taskWrite: TaskWrite = {
+    val keys = conflictKeys
+    upsert match {
+      case _ if tagged =>
+        if (cols.exists(_.equalsIgnoreCase(JdbcWrite.TaskColumn)))
+          throw new IllegalArgumentException(
+            s"column name '${JdbcWrite.TaskColumn}' is reserved for DuckDB write staging")
+        TaskWrite.Appender(stageNs, stageName)
+      case None =>
+        TaskWrite.Prepared(JdbcWrite.insertSql(d, if (staged) stageTable else options.table, schema))
+      case Some(u) if d == DerbyDialect =>
+        val keyIdx = keys.map(cols.indexOf)
+        // No non-key column leaves nothing to update: the reference
+        // degrades such an upsert to DO NOTHING (`on_conflict.rs:53-59`).
+        val doNothing = u.doNothing || cols.forall(keys.contains)
+        TaskWrite.UpdateElseInsert(
+          if (doNothing) DerbyDialect.touchStatement(options.table, cols, keys)
+          else DerbyDialect.updateStatement(options.table, cols, keys),
+          (if (doNothing) Nil else cols.indices.filterNot(keyIdx.contains)) ++ keyIdx,
+          JdbcWrite.insertSql(d, options.table, schema), keyIdx)
+      case Some(u) =>
+        TaskWrite.Prepared(d.upsertStatement(options.table, cols, keys, u.doNothing,
+          placeholders = schema.fields.map(f => d.insertPlaceholder(f.dataType)).toSeq))
+    }
+  }
 
   /** Stage DDL. Appender stages add the task column, and keep native
     * LIST columns as the JSON text the move casts
     * ([[Dialect.insertValueSql]]); constraints are left to the target.
     */
   private def createStage(c: Connection): Unit = {
-    val d = options.dialect
-    val cols =
-      if (!appenderStaged) d.columnDefs(schema)
-      else {
-        if (schema.fields.exists(_.name.equalsIgnoreCase(JdbcWrite.TaskColumn)))
-          throw new IllegalArgumentException(
-            s"column name '${JdbcWrite.TaskColumn}' is reserved for DuckDB write staging")
-        (schema.fields.map { f =>
-          val t = f.dataType match {
-            case _: ArrayType => d.stringType
-            case other => d.typeName(other)
-          }
-          s"${d.quote(f.name)} $t"
-        } :+ s"${d.quote(JdbcWrite.TaskColumn)} BIGINT").mkString(", ")
-      }
-    exec(c, s"CREATE TABLE $stageTable ($cols)")
+    val defs =
+      if (!tagged) d.columnDefs(schema)
+      else (schema.fields.map { f =>
+        val t = f.dataType match {
+          case _: ArrayType => d.stringType
+          case other => d.typeName(other)
+        }
+        s"${d.quote(f.name)} $t"
+      } :+ s"${d.quote(JdbcWrite.TaskColumn)} BIGINT").mkString(", ")
+    exec(c, s"CREATE TABLE $stageTable ($defs)")
   }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    // planned first: a bad conflict target fails before anything is created
+    val task = taskWrite
     if (fileswap) {
       // stage into a FRESH database file: namespace + table shell first
-      val d = options.dialect
-      val pk = options.table match {
-        case QuotedPair(ns, t) => livePrimaryKey(ns, t)
-        case _ => Nil
-      }
+      val pk = primaryKey
       val pkClause =
         if (pk.isEmpty) ""
         else pk.map(d.quote).mkString(", PRIMARY KEY (", ", ", ")")
       val c = stagingOpts.connect()
       try {
-        options.table match {
-          case QuotedPair(ns, _) if ns != "main" =>
-            exec(c, s"CREATE SCHEMA IF NOT EXISTS ${d.quote(ns)}")
-          case _ => ()
-        }
+        if (stageNs != "main") exec(c, s"CREATE SCHEMA IF NOT EXISTS ${d.quote(stageNs)}")
         exec(c, s"CREATE TABLE ${options.table} (${d.columnDefs(schema)}$pkClause)")
         createStage(c)
       } finally c.close()
-      return JdbcWriterFactory(stagingOpts.withTable(stageTable), schema)
+      JdbcWriterFactory(stagingOpts, schema, task)
+    } else {
+      if (staged) withConn { c =>
+        dropStaleStages(c)
+        createStage(c)
+      }
+      JdbcWriterFactory(options, schema, task)
     }
-    if (staged) withConn { c =>
-      dropStaleStages(c)
-      createStage(c)
-    }
-    val target = if (staged) options.withTable(stageTable) else options
-    JdbcWriterFactory(target, schema)
   }
 
-  /** The staged commit, inside one remote transaction on `c`: replace
-    * the rows matching `deleteWhere` (when given), move the stage's rows
-    * into `options.table` and drop the stage. An appender stage moves
-    * only the rows of the committed `tasks`, an upsert through the
-    * dialect's ON CONFLICT after a uniqueness check of its keys across
-    * the whole stage.
+  /** The staged commit, inside one remote transaction on `c`: delete
+    * the target's rows matching `replace` (every row when empty), move
+    * the stage's rows into `options.table` and drop the stage. A
+    * task-tagged stage moves only the rows of the committed `tasks`, an
+    * upsert through the dialect's ON CONFLICT after a uniqueness check
+    * of its keys across the whole stage.
+    *
+    * DuckDB 1.0 rejects a key deleted and inserted again in one
+    * transaction (its unique index checks eagerly; probed), so a DuckDB
+    * overwrite of a keyed table keeps the rows whose key is restaged and
+    * updates them through ON CONFLICT, once no such row is found outside
+    * `replace`, where a plain INSERT would have hit the key.
     */
-  private def moveStaged(c: Connection, tasks: Seq[Long], deleteWhere: Option[String]): Unit = {
-    val d = options.dialect
-    val fromStage = s"FROM $stageTable" + (if (!appenderStaged) ""
-      else s" WHERE ${d.quote(JdbcWrite.TaskColumn)} IN ${tasks.mkString("(", ", ", ")")}")
-    val upsert = options.upsertActive && !truncate
+  private def moveStaged(c: Connection, tasks: Seq[Long], replace: Option[Seq[String]]): Unit = {
+    def where(conds: Seq[String]) = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
+    val fromStage = s"FROM $stageTable" +
+      where(if (tagged) Seq(s"${d.quote(JdbcWrite.TaskColumn)} IN ${tasks.mkString("(", ", ", ")")}")
+        else Nil)
+    val ks = conflictKeys.map(d.quote).mkString(", ")
+    val restaged = s"row($ks) IN (SELECT row($ks) $fromStage)"
+    val keyed = replace.isDefined && conflictKeys.nonEmpty && tasks.nonEmpty
     c.setAutoCommit(false)
-    deleteWhere.foreach(w => exec(c, s"DELETE FROM ${options.table}$w"))
-    if (!appenderStaged || tasks.nonEmpty) {
-      if (upsert && options.upsertKeys.nonEmpty) assertUniqueStagedKeys(c, fromStage)
-      val cols = schema.fields.map(f => d.quote(f.name)).mkString(", ")
+    val kept = if (keyed) Seq(s"NOT $restaged") else Nil
+    replace.foreach(conds => exec(c, s"DELETE FROM ${options.table}" + where(conds ++ kept)))
+    if (!tagged || tasks.nonEmpty) {
+      if (upsert.isDefined && conflictKeys.nonEmpty)
+        assertNoKey(c, s"SELECT $ks $fromStage GROUP BY $ks HAVING COUNT(*) > 1 LIMIT 1",
+          k => s"duplicate upsert key $k within one write " +
+            "(reference enforces pre-write uniqueness; fix the input or drop duplicates)")
+      replace.filter(conds => keyed && conds.nonEmpty).foreach(conds =>
+        assertNoKey(c, s"SELECT $ks FROM ${options.table} WHERE " +
+          s"${conds.mkString("(", " AND ", ")")} IS NOT TRUE AND $restaged LIMIT 1",
+          k => s"overwrite row key $k exists outside the overwrite predicate " +
+            s"(violates the PRIMARY KEY of ${options.table})"))
       val values = schema.fields.map(f => d.insertValueSql(f.dataType, d.quote(f.name)))
-      exec(c, s"INSERT INTO ${options.table} ($cols) SELECT ${values.mkString(", ")} $fromStage" +
-        (if (upsert) d.onConflictClause(schema.fields.map(_.name).toSeq, options.upsertKeys,
-          doNothing = options.upsertMode != "update") else ""))
+      exec(c, s"INSERT INTO ${options.table} (${cols.map(d.quote).mkString(", ")}) " +
+        s"SELECT ${values.mkString(", ")} $fromStage" +
+        (if (upsert.isDefined || keyed)
+          d.onConflictClause(cols, conflictKeys, doNothing = upsert.exists(_.doNothing)) else ""))
     }
     exec(c, s"DROP TABLE $stageTable")
     c.commit()
   }
 
-  /** One key per upsert write: duplicates would make the outcome
-    * order-dependent (the reference validates uniqueness before writing,
-    * `constraints.rs:28-95`; the Derby writer checks per chunk). */
-  private def assertUniqueStagedKeys(c: Connection, fromStage: String): Unit = {
-    val keys = options.upsertKeys
-    val ks = keys.map(options.dialect.quote).mkString(", ")
+  /** Fails the move with `message` of the conflict key of the first row
+    * `sql` returns, if it returns any. */
+  private def assertNoKey(c: Connection, sql: String, message: Map[String, AnyRef] => String): Unit = {
     val st = c.createStatement()
     try {
-      val rs = st.executeQuery(s"SELECT $ks $fromStage GROUP BY $ks HAVING COUNT(*) > 1 LIMIT 1")
-      if (rs.next()) {
-        val dup = keys.indices.map(i => keys(i) -> rs.getObject(i + 1)).toMap
+      val rs = st.executeQuery(sql)
+      if (rs.next())
         throw new IllegalStateException(
-          s"duplicate upsert key $dup within one write " +
-            "(reference enforces pre-write uniqueness; fix the input or drop duplicates)")
-      }
+          message(conflictKeys.indices.map(i => conflictKeys(i) -> rs.getObject(i + 1)).toMap))
     } finally st.close()
   }
 
@@ -322,10 +410,6 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
     val rows = messages.collect { case JdbcCommit(n, _) => n }.sum
     val tasks = messages.toSeq.collect { case JdbcCommit(_, Some(t)) => t }
     if (fileswap) {
-      val (ns, t) = options.table match {
-        case QuotedPair(n0, t0) => (n0, t0)
-        case bare => ("main", bare.toString)
-      }
       // the refreshed table takes the committed tasks' staged rows first
       val c = stagingOpts.connect()
       try moveStaged(c, tasks, None) finally c.close()
@@ -340,30 +424,23 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
         case conds => Some(conds.mkString("(", " AND ", ") IS NOT TRUE"))
       }
       // gate→drain→copy→swap in one guarded window: see FileSwap.commitSwap
+      val (ns, t) = targetParts
       FileSwap.commitSwap(stagingOpts, stagingUrl, buildingPath,
         options.url, livePath, liveIdentity, ns, t,
-        preserveWhere = preserve,
-        targetCols = schema.fields.map(f => options.dialect.quote(f.name)).toSeq)
+        preserveWhere = preserve, targetCols = cols.map(d.quote))
     } else if (staged) withConn { c =>
       // the atomic swap: matching rows are replaced in ONE remote txn
-      moveStaged(c, tasks, overwrite.map {
-        case Nil => ""
-        case conds => conds.mkString(" WHERE ", " AND ", "")
-      })
+      moveStaged(c, tasks, overwrite)
     }
     logInfo(s"graft-jdbc write committed: $rows rows into ${options.table}")
     // Post-write statistics refresh (reference duckdb/write.rs:990):
     // opt-in, best-effort — a stats failure never fails a committed write.
     if (options.analyzeAfterWrite)
-      options.table match {
-        case QuotedPair(ns, t) =>
-          options.dialect.analyzeStatement(ns, t).foreach { sql =>
-            try withConn(exec(_, sql))
-            catch { case e: java.sql.SQLException =>
-              logWarning(s"post-write ANALYZE failed for ${options.table}: ${e.getMessage}")
-            }
-          }
-        case _ => ()
+      target.flatMap { case (ns, t) => d.analyzeStatement(ns, t) }.foreach { sql =>
+        try withConn(exec(_, sql))
+        catch { case e: java.sql.SQLException =>
+          logWarning(s"post-write ANALYZE failed for ${options.table}: ${e.getMessage}")
+        }
       }
   }
 
@@ -378,41 +455,53 @@ object JdbcBatchWrite {
   /** Stages older than this are abandoned (no write runs for an
     * hour); younger ones may belong to a live concurrent write. */
   private[jdbc] val StaleStageAgeMs: Long = 60L * 60 * 1000
+
+  /** An upsert's conflict handling; no `keys` = do_nothing_all. */
+  private final case class Upsert(keys: Seq[String], doNothing: Boolean)
 }
 
 /** One task's committed row count; appender-staged tasks also name
   * the task id their staged rows carry. */
 final case class JdbcCommit(rows: Long, taskId: Option[Long] = None) extends WriterCommitMessage
 
-final case class JdbcWriterFactory(options: JdbcOptions, schema: StructType)
+/** What one task does with its rows, as [[JdbcBatchWrite]] planned it. */
+sealed trait TaskWrite extends Serializable
+
+object TaskWrite {
+  /** A batched prepared statement: a plain INSERT or the dialect's upsert. */
+  final case class Prepared(sql: String) extends TaskWrite
+
+  /** Derby's upsert: a batched `update` binding the columns at
+    * `updateBind`, then a batched `insert` of the rows it matched none
+    * of; `keys` are the conflict target's positions. */
+  final case class UpdateElseInsert(update: String, updateBind: Seq[Int], insert: String,
+      keys: Seq[Int]) extends TaskWrite
+
+  /** DuckDB's Appender on `ns`.`table`, each row tagged with the task id. */
+  final case class Appender(ns: String, table: String) extends TaskWrite
+}
+
+final case class JdbcWriterFactory(options: JdbcOptions, schema: StructType, task: TaskWrite)
   extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    if (JdbcWrite.appenderStaged(options)) new DuckDbAppendWriter(options, schema, taskId)
-    else if (options.upsertActive && options.dialect == DerbyDialect)
-      new DerbyUpsertWriter(options, schema)
-    else new JdbcRowWriter(options, schema)
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
+    val conn = options.connect()
+    // Spark closes only a writer it got: one that fails to start returns its connection here
+    try task match {
+      case TaskWrite.Prepared(sql) => new JdbcRowWriter(options, schema, conn, sql)
+      case p: TaskWrite.UpdateElseInsert => new DerbyUpsertWriter(options, schema, conn, p)
+      case TaskWrite.Appender(ns, t) => new DuckDbAppendWriter(options, schema, conn, ns, t, taskId)
+    } catch { case e: Throwable => conn.close(); throw e }
+  }
 }
 
 /** Batched INSERT (or dialect upsert) inside one partition transaction. */
-class JdbcRowWriter(options: JdbcOptions, schema: StructType)
+final class JdbcRowWriter(options: JdbcOptions, schema: StructType, conn: Connection, sql: String)
   extends DataWriter[InternalRow] {
 
-  protected val conn: Connection = options.connect()
   conn.setAutoCommit(false)
-
-  private val d = options.dialect
-  private val cols = schema.fields.map(_.name).toSeq
-  private val insertSql =
-    if (options.upsertActive)
-      d.upsertStatement(options.table, cols, options.upsertKeys,
-        doNothing = options.upsertMode != "update",
-        placeholders = schema.fields.map(f => d.insertPlaceholder(f.dataType)).toSeq)
-    else
-      s"INSERT INTO ${options.table} (${cols.map(d.quote).mkString(", ")}) " +
-        s"VALUES (${schema.fields.map(f => d.insertPlaceholder(f.dataType)).mkString(", ")})"
-  private val ps = conn.prepareStatement(insertSql)
-  private val setters = schema.fields.map(f => TypeMapping.setter(f.dataType, d))
-  private val sqlTypes = schema.fields.map(f => TypeMapping.jdbcType(f.dataType, d))
+  private val ps = conn.prepareStatement(sql)
+  private val setters = schema.fields.map(f => TypeMapping.setter(f.dataType, options.dialect))
+  private val sqlTypes = schema.fields.map(f => TypeMapping.jdbcType(f.dataType, options.dialect))
   private var inBatch = 0
   private var total = 0L
 
@@ -429,7 +518,7 @@ class JdbcRowWriter(options: JdbcOptions, schema: StructType)
     if (inBatch >= options.batchSize) flush()
   }
 
-  protected def flush(): Unit =
+  private def flush(): Unit =
     if (inBatch > 0) { ps.executeBatch(); inBatch = 0 }
 
   override def commit(): WriterCommitMessage = {
@@ -450,75 +539,32 @@ class JdbcRowWriter(options: JdbcOptions, schema: StructType)
   * per `batchSize` chunk instead of two per ROW. Chunk key uniqueness is
   * VALIDATED (reference `constraints.rs:28-95`), not assumed; the
   * cross-partition half of that precondition is enforced by
-  * [[JdbcWrite.requiredDistribution]].
+  * [[JdbcBatchWrite.distribution]].
   *
   * In `upsertmode=do_nothing` the first pass is a value-preserving
   * touch-UPDATE ([[DerbyDialect.touchStatement]]) used purely as a
   * batched existence probe: rows it matched keep their current values,
   * rows it missed INSERT — the reference's do-nothing conflict mode.
   */
-final class DerbyUpsertWriter(options: JdbcOptions, schema: StructType)
-  extends DataWriter[InternalRow] {
+final class DerbyUpsertWriter(options: JdbcOptions, schema: StructType, conn: Connection,
+    plan: TaskWrite.UpdateElseInsert) extends DataWriter[InternalRow] {
 
-  private val conn: Connection = options.connect()
   conn.setAutoCommit(false)
-
-  private val d = DerbyDialect
-  private val cols = schema.fields.map(_.name).toSeq
-  /** `do_nothing_all` carries no explicit target: the probe keys are the
-    * table's PRIMARY KEY, resolved once from JDBC metadata (the remote
-    * constraint IS the conflict target in the reference's target-less
-    * `ON CONFLICT DO NOTHING`, `on_conflict.rs:32`).
-    */
-  private val keys: Seq[String] =
-    if (options.upsertKeys.nonEmpty) options.upsertKeys
-    else {
-      val pk = scala.collection.mutable.ArrayBuffer.empty[(Short, String)]
-      options.table match {
-        case JdbcWrite.QuotedPair(ns, t) =>
-          val rs = conn.getMetaData.getPrimaryKeys(null, ns, t)
-          while (rs.next()) pk += ((rs.getShort("KEY_SEQ"), rs.getString("COLUMN_NAME")))
-          rs.close()
-        case _ => ()
-      }
-      if (pk.isEmpty) throw new IllegalArgumentException(
-        s"do_nothing_all needs a PRIMARY KEY on ${options.table} (none found)")
-      pk.sortBy(_._1).map(_._2).toSeq
-    }
-  // No non-key column leaves nothing to update: the reference degrades
-  // such an upsert to DO NOTHING (`on_conflict.rs:53-59`).
-  private val doNothing = options.upsertMode != "update" ||
-    cols.forall(c => keys.exists(_.equalsIgnoreCase(c)))
-  private val keyIdx = keys.map { k =>
-    val i = cols.indexWhere(_.equalsIgnoreCase(k))
-    if (i < 0) throw new IllegalArgumentException(
-      s"upsert key column '$k' (from ${if (options.upsertKeys.isEmpty) "the table PRIMARY KEY"
-        else "upsertkeys"}) is not among the written columns ${cols.mkString("[", ", ", "]")}")
-    i
-  }.toArray
-  private val colIdx = cols.zipWithIndex.toMap
-  private val setters = schema.fields.map(f => TypeMapping.setter(f.dataType, d))
-  private val sqlTypes = schema.fields.map(f => TypeMapping.jdbcType(f.dataType, d))
-
-  private val updatePs = conn.prepareStatement(
-    if (doNothing) d.touchStatement(options.table, cols, keys)
-    else d.updateStatement(options.table, cols, keys))
-  private val insertPs = conn.prepareStatement(
-    s"INSERT INTO ${options.table} (${cols.map(d.quote).mkString(", ")}) " +
-      s"VALUES (${cols.map(_ => "?").mkString(", ")})")
+  private val setters = schema.fields.map(f => TypeMapping.setter(f.dataType, DerbyDialect))
+  private val sqlTypes = schema.fields.map(f => TypeMapping.jdbcType(f.dataType, DerbyDialect))
+  private val insertPs = conn.prepareStatement(plan.insert)
+  private val updatePs =
+    try conn.prepareStatement(plan.update) catch { case e: Throwable => insertPs.close(); throw e }
 
   // current chunk, buffered as row copies (batchSize-bounded memory)
   private val chunk = new scala.collection.mutable.ArrayBuffer[InternalRow]()
   private var total = 0L
 
-  private def bind(ps: java.sql.PreparedStatement, row: InternalRow,
-      order: Seq[String]): Unit = {
-    order.zipWithIndex.foreach { case (c, p) =>
-      val f = colIdx(c)
+  private def bind(ps: java.sql.PreparedStatement, row: InternalRow, order: Seq[Int]): Unit =
+    order.zipWithIndex.foreach { case (f, p) =>
       if (row.isNullAt(f)) ps.setNull(p + 1, sqlTypes(f))
       else setters(f)(ps, row, f, p + 1)
     }
-  }
 
   override def write(row: InternalRow): Unit = {
     chunk += row.copy()
@@ -526,27 +572,22 @@ final class DerbyUpsertWriter(options: JdbcOptions, schema: StructType)
     if (chunk.length >= options.batchSize) flushChunk()
   }
 
-  private def keyOf(row: InternalRow): Seq[Any] =
-    keyIdx.toSeq.map(i => if (row.isNullAt(i)) null else row.get(i, schema.fields(i).dataType))
-
   private def flushChunk(): Unit = {
     if (chunk.isEmpty) return
     // constraint validation: duplicate keys inside one chunk would make
     // the update-else-insert outcome order-dependent
     val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
     chunk.foreach { row =>
-      val k = keyOf(row)
+      val k = plan.keys.map(i => if (row.isNullAt(i)) null else row.get(i, schema(i).dataType))
       if (!seen.add(k))
         throw new IllegalStateException(
-          s"duplicate upsert key ${keys.zip(k).toMap} within one write batch " +
-            s"(reference enforces pre-write uniqueness; fix the input or drop duplicates)")
+          s"duplicate upsert key ${plan.keys.map(schema(_).name).zip(k).toMap} within one " +
+            "write batch (reference enforces pre-write uniqueness; fix the input or drop duplicates)")
     }
-    val nonKeys = cols.filterNot(c => keys.exists(_.equalsIgnoreCase(c)))
-    val updateBind = if (doNothing) keys else nonKeys ++ keys
-    chunk.foreach { row => bind(updatePs, row, updateBind); updatePs.addBatch() }
+    chunk.foreach { row => bind(updatePs, row, plan.updateBind); updatePs.addBatch() }
     val updated = updatePs.executeBatch()
     chunk.zip(updated).foreach { case (row, n) =>
-      if (n == 0) { bind(insertPs, row, cols); insertPs.addBatch() }
+      if (n == 0) { bind(insertPs, row, schema.indices); insertPs.addBatch() }
     }
     insertPs.executeBatch()
     chunk.clear()

@@ -98,6 +98,38 @@ class DuckDbWireSpec extends AnyFunSuite with SparkFixture {
     assert(afterNothing == Seq((1L, "a"), (2L, "B2"), (3L, "c"), (4L, "d"), (5L, "e")))
   }
 
+  test("staged overwrite of a keyed table re-inserts the keys it replaces, atomically") {
+    init()
+    spark.sql("DROP TABLE IF EXISTS duck.app.t3k")
+    spark.sql("CREATE TABLE duck.app.t3k (k BIGINT NOT NULL, v STRING) " +
+      "TBLPROPERTIES ('primarykeys'='k')")
+    import spark.implicits._
+    def rows = spark.table("duck.app.t3k").orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    (1L to 6L).map(k => (k, s"a$k")).toDF("k", "v").writeTo("duck.app.t3k").append()
+
+    // every key comes back: DuckDB 1.0 rejects a plain DELETE + INSERT
+    // of one key inside a transaction
+    (1L to 5L).map(k => (k, s"b$k")).toDF("k", "v").writeTo("duck.app.t3k").overwrite(lit(true))
+    assert(rows == (1L to 5L).map(k => (k, s"b$k")))
+    // by filter: 2 and 3 come back, 4 goes, 7 is new, 1 and 5 stay
+    Seq((2L, "c2"), (3L, "c3"), (7L, "c7")).toDF("k", "v")
+      .writeTo("duck.app.t3k").overwrite(col("k") >= 2 && col("k") < 5)
+    assert(rows == Seq((1L, "b1"), (2L, "c2"), (3L, "c3"), (5L, "b5"), (7L, "c7")))
+    // a key that lives outside the predicate fails the write, as the
+    // plain INSERT's key violation does, and nothing changes
+    val before = rows
+    val e = intercept[Exception] {
+      Seq((2L, "d2"), (5L, "d5")).toDF("k", "v")
+        .writeTo("duck.app.t3k").overwrite(col("k") < 4)
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("overwrite row key Map(k -> 5) exists outside")),
+      messages.mkString(" | "))
+    assert(rows == before)
+  }
+
   test("DELETE FROM + UPDATE DML push to live DuckDB") {
     init()
     spark.sql("DROP TABLE IF EXISTS duck.app.t4")
@@ -460,8 +492,9 @@ class DuckDbWireSpec extends AnyFunSuite with SparkFixture {
     df.writeTo("duck.app.types_a").create()
     df.limit(0).writeTo("duck.app.types_p").create()
     // the reference: the same rows bound through prepared parameters
-    val w = new JdbcRowWriter(JdbcOptions(Map("url" -> s"jdbc:duckdb:$dbPath",
-      "dbtable" -> "\"app\".\"types_p\"")), schema)
+    val po = JdbcOptions(Map("url" -> s"jdbc:duckdb:$dbPath", "dbtable" -> "\"app\".\"types_p\""))
+    val w = JdbcWriterFactory(po, schema,
+      TaskWrite.Prepared(JdbcWrite.insertSql(po.dialect, po.table, schema))).createWriter(0, 0)
     try {
       df.queryExecution.toRdd.map(_.copy()).collect().foreach(w.write)
       w.commit()

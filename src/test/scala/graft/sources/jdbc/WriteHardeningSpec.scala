@@ -160,13 +160,85 @@ class WriteHardeningSpec extends AnyFunSuite with SparkFixture {
     assert(rows(1000L) == "v1000" && rows(2000L) == "u2000" && rows(4000L) == "u4000")
   }
 
-  test("Constraints.assertUniqueKeys passes unique, throws with sample on dups") {
+  test("a do_nothing_all append without a PRIMARY KEY fails before any task and frees the pool") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS ext.wh")
+    spark.sql("DROP TABLE IF EXISTS ext.wh.t11")
     import spark.implicits._
-    Constraints.assertUniqueKeys(Seq((1, "a"), (2, "b")).toDF("k", "v"), Seq("k"))
-    val e = intercept[IllegalStateException] {
-      Constraints.assertUniqueKeys(Seq((1, "a"), (1, "b"), (2, "c")).toDF("k", "v"), Seq("k"))
+    Seq((1L, "a")).toDF("k", "v").writeTo("ext.wh.t11").create()
+    // thrown by the driver's plan itself: a failed write task would
+    // arrive wrapped in the job's SparkException
+    val e = intercept[IllegalArgumentException] {
+      Seq((1L, "x"), (2L, "b")).toDF("k", "v").writeTo("ext.wh.t11")
+        .option("upsertmode", "do_nothing_all").append()
     }
-    assert(e.getMessage.contains("k=1"))
+    assert(e.getMessage.contains("needs a PRIMARY KEY"), e.getMessage)
+    assert(spark.table("ext.wh.t11").collect().map(r => (r.getLong(0), r.getString(1)))
+      .toSeq == Seq((1L, "a")))
+    assert(ConnectionPool.checkedOut(JdbcOptions(Map("url" -> SparkFixture.derbyUrl))) == 0)
+  }
+
+  test("a writer that fails to start returns its connection: append to a missing table") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS ext.wh")
+    import spark.implicits._
+    val e = intercept[Exception] {
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").repartition(3)
+        .write.format("graft.sources.jdbc.GraftJdbcSource")
+        .option("url", SparkFixture.derbyUrl).option("dbtable", "\"wh\".\"no_such_table\"")
+        .mode("append").save()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    // Derby's own error, raised by prepareStatement in the writer
+    assert(messages.exists(_.contains("'wh.no_such_table' does not exist")),
+      messages.mkString(" | "))
+    assert(ConnectionPool.checkedOut(JdbcOptions(Map("url" -> SparkFixture.derbyUrl))) == 0)
+  }
+
+  test("a quoted table name with a dot and a doubled quote takes a do_nothing_all upsert") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS ext.wp")
+    spark.sql("DROP TABLE IF EXISTS ext.wp.`a.\"b`")
+    spark.sql("CREATE TABLE ext.wp.`a.\"b` (k BIGINT NOT NULL, v STRING) " +
+      "TBLPROPERTIES ('primarykeys'='k')")
+    import spark.implicits._
+    Seq((1L, "a")).toDF("k", "v").writeTo("ext.wp.`a.\"b`").append()
+    // the key lookup must ask for the table a."b in schema wp
+    Seq((1L, "CLOBBER"), (2L, "b")).toDF("k", "v").writeTo("ext.wp.`a.\"b`")
+      .option("upsertmode", "do_nothing_all").append()
+    assert(spark.table("ext.wp.`a.\"b`").collect().map(r => (r.getLong(0), r.getString(1)))
+      .sortBy(_._1).toSeq == Seq((1L, "a"), (2L, "b")))
+  }
+
+  test("a bare table name lies in the connection's schema: key lookup, stage and Appender") {
+    import spark.implicits._
+    def exec(url: String, sql: String*): Unit = {
+      val c = JdbcOptions(Map("url" -> url)).connect()
+      try sql.foreach(q => c.createStatement().executeUpdate(q)) finally c.close()
+    }
+    def save(df: org.apache.spark.sql.DataFrame, url: String, table: String, mode: String,
+        opts: (String, String)*): Unit =
+      df.write.format("graft.sources.jdbc.GraftJdbcSource").option("url", url)
+        .option("dbtable", table).options(opts.toMap).mode(mode).save()
+    def read(url: String, table: String) = spark.read.format("graft.sources.jdbc.GraftJdbcSource")
+      .option("url", url).option("dbtable", table).load().collect()
+      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+
+    // Derby: an unquoted name is stored upper-case in the default schema APP
+    exec(SparkFixture.derbyUrl, "CREATE TABLE WH_BARE (K BIGINT NOT NULL PRIMARY KEY, V VARCHAR(10))",
+      "INSERT INTO WH_BARE VALUES (1, 'a')")
+    try {
+      save(Seq((1L, "CLOBBER"), (2L, "b")).toDF("K", "V"), SparkFixture.derbyUrl, "WH_BARE",
+        "append", "upsertmode" -> "do_nothing_all")
+      assert(read(SparkFixture.derbyUrl, "WH_BARE") == Seq((1L, "a"), (2L, "b")))
+    } finally exec(SparkFixture.derbyUrl, "DROP TABLE WH_BARE")
+
+    // DuckDB: the Appender fills a stage in schema main
+    if (DuckDbWireSpec.driverPresent) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_whbare").toString
+      val url = s"jdbc:duckdb:$dir/bare.duckdb"
+      exec(url, "CREATE TABLE t_bare (k BIGINT, v VARCHAR)", "INSERT INTO t_bare VALUES (1, 'a')")
+      save(Seq((2L, "b")).toDF("k", "v"), url, "t_bare", "append")
+      assert(read(url, "t_bare") == Seq((1L, "a"), (2L, "b")))
+    }
   }
 
   test("Dml.update pushes UPDATE ... SET ... WHERE remotely") {

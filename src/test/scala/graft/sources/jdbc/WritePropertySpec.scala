@@ -7,14 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
 /** Randomized write-path state machine: a sequence of random upserts
-  * (update and do-nothing modes), pushed DELETEs and pushed UPDATEs
-  * applied to a keyed remote table must leave EXACTLY the state an
-  * in-memory model predicts after every step — the cross-operation
-  * interactions (upsert over deleted keys, do-nothing over updated
-  * rows, update of just-upserted values) that the per-operation
-  * goldens in WriteHardeningSpec cannot enumerate. Runs on both live
-  * wires: Derby (MERGE-based conflict handling) and DuckDB (native
-  * ON CONFLICT), whose conflict machinery shares no code.
+  * (update and do-nothing modes), pushed DELETEs, pushed UPDATEs and
+  * overwrites-by-filter that carry upsert options (which an overwrite
+  * ignores) applied to a keyed remote table must leave EXACTLY the
+  * state an in-memory model predicts after every step — the
+  * cross-operation interactions (upsert over deleted keys, do-nothing
+  * over updated rows, update of just-upserted values) that the
+  * per-operation goldens in WriteHardeningSpec cannot enumerate. Runs
+  * on both live wires: Derby (update-else-insert conflict handling) and
+  * DuckDB (native ON CONFLICT), whose conflict machinery shares no code.
   */
 class WritePropertySpec extends AnyFunSuite with SparkFixture {
 
@@ -35,7 +36,7 @@ class WritePropertySpec extends AnyFunSuite with SparkFixture {
 
     val rnd = new Random(2026)
     for (step <- 1 to 36) {
-      rnd.nextInt(6) match {
+      rnd.nextInt(7) match {
         case 0 => // upsert (update mode)
           val batch = (1 to 1 + rnd.nextInt(4)).map { _ =>
             val k = rnd.nextInt(12).toLong
@@ -83,6 +84,17 @@ class WritePropertySpec extends AnyFunSuite with SparkFixture {
           batch.foreach { case (k, v, s) =>
             if (!model.contains(k)) model += k -> (v, s)
           }
+        case 6 => // overwrite-by-filter: a plain replace, whatever the upsert options say
+          val lo = rnd.nextInt(12).toLong
+          val batch = (1 to 1 + rnd.nextInt(3)).map { _ =>
+            val k = lo + rnd.nextInt(3)
+            (k, rnd.nextInt(100).toLong, s"o$step")
+          }.distinctBy(_._1)
+          val w = batch.toDF("k", "v", "s").writeTo(table)
+          (if (rnd.nextBoolean()) w.option("upsertmode", "do_nothing_all")
+           else w.option("upsertkeys", "k")).overwrite(col("k") >= lo && col("k") < lo + 3)
+          model = model.filterNot { case (k, _) => k >= lo && k < lo + 3 } ++
+            batch.map { case (k, v, s) => k -> (v, s) }
       }
       assert(state(table) == model, s"diverged after step $step")
     }
