@@ -24,7 +24,4 @@ object Q {
   def apply(name: String, oracle: String)(
       run: (SparkSession, String) => DataFrame): Q =
     Q(name, Some(oracle), run)
-
-  def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, None, run)
 }

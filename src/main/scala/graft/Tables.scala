@@ -21,10 +21,6 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Register all tables as temp views named by table name. */
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
   /** `events.ts` → exact epoch-MICROSECOND long, tolerant of every
     * parquet reading the harness has shipped: TIMESTAMP(NANOS) read as
     * Long under `spark.sql.legacy.parquet.nanosAsLong` (integer-floor to

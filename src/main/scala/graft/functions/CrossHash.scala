@@ -32,9 +32,6 @@ object CrossHash {
   def h60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** h60 reduced mod P — the shingle-hash fed to MinHash permutations. */
-  def h60modP(c: Column): Column = h60(c) % P
-
   /** DuckDB SQL fragment equivalent to [[h60]] over expression `e`. */
   def h60Sql(e: String): String =
     s"('0x' || substr(md5($e), 1, 15))::BIGINT"
@@ -57,7 +54,4 @@ object MinHashCoefficients {
     894229037L, 1401181151L, 1908133265L, 267601732L, 774553846L,
     1281505960L, 1788458074L, 147926541L, 654878655L, 1161830769L,
     1668782883L)
-
-  /** `[a0,a1,...]` rendered as a DuckDB list literal. */
-  def sqlList(xs: Seq[Long]): String = xs.mkString("[", ",", "]")
 }

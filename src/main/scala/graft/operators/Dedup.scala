@@ -338,14 +338,6 @@ object Dedup {
       .select(col("doc_id"),
         graft.functions.SimHash.simhash60(col("text")).as("simhash"))
 
-  /** (doc_id, simhash, k, cv): the four 15-bit pigeonhole chunks of
-    * each document's SimHash — the banding side of q44/q80.
-    */
-  def simhashChunks(sh: DataFrame): DataFrame =
-    sh.select(col("doc_id"), col("simhash"),
-        explode(expr("sequence(0, 3)")).as("k"))
-      .withColumn("cv", expr("shiftright(simhash, 15 * k) % 32768"))
-
   /** SimHash near-dup pairs: pigeonhole 15-bit chunk equality proposes,
     * exact hamming ≤ `maxHamming` confirms. Output (d1, d2, hamm).
     *

@@ -67,16 +67,7 @@ object Dml {
       unparser.expr(analyzed(c), isPredicate).getOrElse(
         throw new IllegalArgumentException(s"expression not unparsable for ${d.name}: $c"))
     val head = statement(t, sqlOf(_, isPredicate = false))
-    executeUpdate(t.options, s"$head WHERE ${sqlOf(where, isPredicate = true)}")
-  }
-
-  /** Run one statement on a pooled connection; returns the affected-row
-    * count. */
-  private[jdbc] def executeUpdate(o: JdbcOptions, sql: String): Long = {
-    val conn = o.connect()
-    try {
-      val st = conn.createStatement()
-      try st.executeUpdate(sql).toLong finally st.close()
-    } finally conn.close()
+    val sql = s"$head WHERE ${sqlOf(where, isPredicate = true)}"
+    t.options.withConnection(Remote.execute(_, sql)).toLong
   }
 }

@@ -3,7 +3,6 @@ package graft.sources.jdbc
 import org.apache.spark.internal.Logging
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.sql.Connection
 import java.util.concurrent.atomic.AtomicLong
 
 /** Full-refresh database **file swap** for file-backed DuckDB tables —
@@ -128,11 +127,6 @@ object FileSwap extends Logging {
       case _ => false
     }
 
-  private def exec(c: Connection, sql: String): Unit = {
-    val st = c.createStatement()
-    try st.execute(sql) finally st.close()
-  }
-
   private def deleteIfExists(path: String): Boolean =
     Files.deleteIfExists(Paths.get(path))
 
@@ -146,15 +140,15 @@ object FileSwap extends Logging {
       targetNs: String, targetTable: String,
       preserveWhere: Option[String] = None, targetCols: Seq[String] = Nil): Unit = {
     val d = stagingOpts.dialect
-    val c = stagingOpts.connect()
-    try {
-      exec(c, s"ATTACH IF NOT EXISTS ${d.stringLiteral(livePath)} AS \"graft_live\" (READ_ONLY)")
+    stagingOpts.withConnection { c =>
+      Remote.execute(c,
+        s"ATTACH IF NOT EXISTS ${d.stringLiteral(livePath)} AS \"graft_live\" (READ_ONLY)")
       try {
         // overwrite-by-filter under fileswap: non-matching live rows of
         // the TARGET table ride into the refreshed copy
         preserveWhere.foreach { keep =>
           val cols = targetCols.mkString(", ")
-          exec(c, s"INSERT INTO ${d.quoted(Seq(targetNs, targetTable))} ($cols) " +
+          Remote.execute(c, s"INSERT INTO ${d.quoted(Seq(targetNs, targetTable))} ($cols) " +
             s"SELECT $cols FROM ${d.quoted(Seq("graft_live", targetNs, targetTable))} " +
             s"WHERE $keep")
         }
@@ -164,18 +158,15 @@ object FileSwap extends Logging {
         // bare CTAS would silently strip the PK and break later
         // upserts on the sibling) + INSERT-SELECT for the rows
         // (reference file_swap step 2)
-        val st = c.createStatement()
-        val tables = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
-        val rs = st.executeQuery(
+        val tables = Remote.query(c,
           "SELECT schema_name, table_name, sql FROM duckdb_tables() " +
-            "WHERE database_name = 'graft_live' AND NOT internal")
-        while (rs.next()) tables += ((rs.getString(1), rs.getString(2), rs.getString(3)))
-        rs.close()
+            "WHERE database_name = 'graft_live' AND NOT internal")(rs =>
+          (rs.getString(1), rs.getString(2), rs.getString(3)))
         tables.foreach { case (ns, t, ddl) =>
           if (!(ns.equalsIgnoreCase(targetNs) && t.equalsIgnoreCase(targetTable))) {
-            if (ns != "main") exec(c, s"CREATE SCHEMA IF NOT EXISTS ${d.quote(ns)}")
-            exec(c, ddl)
-            exec(c, s"INSERT INTO ${d.quoted(Seq(ns, t))} " +
+            if (ns != "main") Remote.execute(c, s"CREATE SCHEMA IF NOT EXISTS ${d.quote(ns)}")
+            Remote.execute(c, ddl)
+            Remote.execute(c, s"INSERT INTO ${d.quoted(Seq(ns, t))} " +
               s"SELECT * FROM ${d.quoted(Seq("graft_live", ns, t))}")
           }
         }
@@ -183,13 +174,9 @@ object FileSwap extends Logging {
         // copies "every other table, view, and index", file_swap.rs
         // step 2); best-effort like views
         try {
-          val irs = st.executeQuery(
-            "SELECT sql FROM duckdb_indexes() WHERE database_name = 'graft_live'")
-          val idx = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (irs.next()) idx += irs.getString(1)
-          irs.close()
-          idx.filter(_ != null).foreach { ddl =>
-            try exec(c, ddl)
+          Remote.query(c, "SELECT sql FROM duckdb_indexes() " +
+            "WHERE database_name = 'graft_live'")(_.getString(1)).filter(_ != null).foreach { ddl =>
+            try Remote.execute(c, ddl)
             catch { case e: java.sql.SQLException =>
               logWarning(s"file-swap: index did not transfer (${e.getMessage})") }
           }
@@ -198,22 +185,17 @@ object FileSwap extends Logging {
         // views ride over best-effort: their stored SQL references names
         // as originally written, which resolve identically post-swap
         try {
-          val vrs = st.executeQuery(
-            "SELECT sql FROM duckdb_views() WHERE database_name = 'graft_live' AND NOT internal")
-          val views = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (vrs.next()) views += vrs.getString(1)
-          vrs.close()
-          views.foreach { v =>
-            try exec(c, v)
+          Remote.query(c, "SELECT sql FROM duckdb_views() " +
+            "WHERE database_name = 'graft_live' AND NOT internal")(_.getString(1)).foreach { v =>
+            try Remote.execute(c, v)
             catch { case e: java.sql.SQLException =>
               logWarning(s"file-swap: view did not transfer (${e.getMessage}); dropping it") }
           }
         } catch { case e: java.sql.SQLException =>
           logWarning(s"file-swap: view enumeration failed (${e.getMessage})") }
-        st.close()
-      } finally exec(c, "DETACH \"graft_live\"")
-      exec(c, "CHECKPOINT")
-    } finally c.close()
+      } finally Remote.execute(c, "DETACH \"graft_live\"")
+      Remote.execute(c, "CHECKPOINT")
+    }
   }
 
   /** The whole commit sequence: gate → drain → copy → checkpoint →
@@ -292,8 +274,8 @@ object FileSwap extends Logging {
       // WAL. The drained instance checkpoints it away (divergence (a) in
       // the scaladoc); a fresh single connection can always checkpoint.
       if (Files.exists(Paths.get(walOf(livePath)))) {
-        val c = JdbcOptions.physicalConnect(liveUrl, Map.empty)
-        try exec(c, "CHECKPOINT") finally c.close()
+        scala.util.Using.resource(JdbcOptions.physicalConnect(liveUrl, Map.empty))(
+          Remote.execute(_, "CHECKPOINT"))
         ConnectionPool.retireAndDrain(liveUrl)
         if (deleteIfExists(walOf(livePath)))
           logWarning(s"file-swap: removed a live WAL that survived the retiring checkpoint")

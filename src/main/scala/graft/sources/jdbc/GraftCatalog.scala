@@ -6,9 +6,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import java.sql.Connection
 import java.util
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** Catalog plugin exposing a remote JDBC database's schemas and tables,
@@ -51,11 +49,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   override def name(): String = catalogName
 
-  private def withConn[A](f: Connection => A): A = {
-    val c = options.connect()
-    try f(c) finally c.close()
-  }
-
   /** `ns.table` rendered as quoted dialect SQL; Derby folds unquoted
     * identifiers to upper-case, so we quote exactly what the user wrote.
     */
@@ -64,12 +57,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   // ---- namespaces -------------------------------------------------------
 
-  override def listNamespaces(): Array[Array[String]] = withConn { c =>
-    val rs = c.getMetaData.getSchemas
-    val out = ArrayBuffer.empty[Array[String]]
-    while (rs.next()) out += Array(rs.getString("TABLE_SCHEM"))
-    rs.close()
-    out.toArray
+  override def listNamespaces(): Array[Array[String]] = options.withConnection { c =>
+    Remote.rows(c.getMetaData.getSchemas)(rs => Array(rs.getString("TABLE_SCHEM"))).toArray
   }
 
   override def listNamespaces(namespace: Array[String]): Array[Array[String]] =
@@ -86,33 +75,27 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     else throw new NoSuchNamespaceException(namespace)
 
   override def createNamespace(namespace: Array[String],
-      metadata: util.Map[String, String]): Unit = withConn { c =>
-    val st = c.createStatement()
-    try st.executeUpdate(s"CREATE SCHEMA ${dialect.quote(namespace.head)}")
-    finally st.close()
-  }
+      metadata: util.Map[String, String]): Unit =
+    options.withConnection(Remote.execute(_, s"CREATE SCHEMA ${dialect.quote(namespace.head)}"))
 
   override def alterNamespace(namespace: Array[String],
       changes: NamespaceChange*): Unit =
     throw new UnsupportedOperationException("alterNamespace")
 
-  override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean =
-    withConn { c =>
-      val st = c.createStatement()
-      try { st.executeUpdate(s"DROP SCHEMA ${dialect.quote(namespace.head)} RESTRICT"); true }
-      finally st.close()
-    }
+  override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean = {
+    val sql = s"DROP SCHEMA ${dialect.quote(namespace.head)} RESTRICT"
+    options.withConnection(Remote.execute(_, sql))
+    true
+  }
 
   // ---- tables -----------------------------------------------------------
 
-  override def listTables(namespace: Array[String]): Array[Identifier] = withConn { c =>
+  override def listTables(namespace: Array[String]): Array[Identifier] = {
     val schemaPat = if (namespace.isEmpty) null else namespace.head
-    val rs = c.getMetaData.getTables(null, schemaPat, "%", Dialect.TableTypes)
-    val out = ArrayBuffer.empty[Identifier]
-    while (rs.next())
-      out += Identifier.of(Array(rs.getString("TABLE_SCHEM")), rs.getString("TABLE_NAME"))
-    rs.close()
-    out.toArray
+    options.withConnection { c =>
+      Remote.rows(c.getMetaData.getTables(null, schemaPat, "%", Dialect.TableTypes))(rs =>
+        Identifier.of(Array(rs.getString("TABLE_SCHEM")), rs.getString("TABLE_NAME"))).toArray
+    }
   }
 
   /** Existence via catalog metadata, not a probe-SELECT: a probe that
@@ -120,16 +103,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * absent". getTables treats `_`/`%` as pattern wildcards, so the
     * returned names are compared exactly.
     */
-  override def tableExists(ident: Identifier): Boolean = withConn { c =>
+  override def tableExists(ident: Identifier): Boolean = options.withConnection { c =>
     val ns = if (ident.namespace().isEmpty) null else ident.namespace().head
-    val rs = c.getMetaData.getTables(null, ns, ident.name(), Dialect.TableTypes)
-    try {
-      var found = false
-      while (!found && rs.next())
-        found = rs.getString("TABLE_NAME") == ident.name() &&
-          (ns == null || rs.getString("TABLE_SCHEM") == ns)
-      found
-    } finally rs.close()
+    Remote.rows(c.getMetaData.getTables(null, ns, ident.name(), Dialect.TableTypes))(rs =>
+      rs.getString("TABLE_NAME") == ident.name() &&
+        (ns == null || rs.getString("TABLE_SCHEM") == ns)).contains(true)
   }
 
   /** A catalog-level `customschema` overlays every table with a
@@ -180,25 +158,20 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val pk = props.get("primarykeys").orElse(props.get("primaryKeys"))
       .map(_.split(",").map(k => dialect.quote(k.trim)).mkString(", PRIMARY KEY (", ", ", ")"))
       .getOrElse("")
-    withConn { c =>
-      val st = c.createStatement()
-      try {
-        st.executeUpdate(s"CREATE TABLE ${qualified(ident)} ($cols$pk)")
-        // index spec: `cols[:unique];cols…` — the `:unique` suffix is the
-        // reference IndexBuilder's unique flag (statement.rs:1104-1121)
-        props.get("indexes").foreach { ix =>
-          ix.split(";").filter(_.nonEmpty).zipWithIndex.foreach { case (spec, i) =>
-            val (colList, unique) = spec.split(":") match {
-              case Array(cs, m) if m.trim.equalsIgnoreCase("unique") => (cs, true)
-              case _ => (spec, false)
-            }
-            val cs = colList.split(",").map(k => dialect.quote(k.trim)).mkString(", ")
-            st.executeUpdate(
-              s"CREATE ${if (unique) "UNIQUE " else ""}INDEX " +
-                s"${dialect.quote(s"ix_${ident.name}_$i")} ON ${qualified(ident)} ($cs)")
-          }
+    // index spec: `cols[:unique];cols…` — the `:unique` suffix is the
+    // reference IndexBuilder's unique flag (statement.rs:1104-1121)
+    val indexes = props.get("indexes").toSeq.flatMap(_.split(";").filter(_.nonEmpty).zipWithIndex)
+      .map { case (spec, i) =>
+        val (colList, unique) = spec.split(":") match {
+          case Array(cs, m) if m.trim.equalsIgnoreCase("unique") => (cs, true)
+          case _ => (spec, false)
         }
-      } finally st.close()
+        val cs = colList.split(",").map(k => dialect.quote(k.trim)).mkString(", ")
+        s"CREATE ${if (unique) "UNIQUE " else ""}INDEX " +
+          s"${dialect.quote(s"ix_${ident.name}_$i")} ON ${qualified(ident)} ($cs)"
+      }
+    options.withConnection { c =>
+      (s"CREATE TABLE ${qualified(ident)} ($cols$pk)" +: indexes).foreach(Remote.execute(c, _))
     }
     val tblOpts = options.withTable(qualified(ident)).map ++
       props.get("upsertkeys").map("upsertkeys" -> _)
@@ -209,18 +182,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     throw new UnsupportedOperationException("alterTable")
 
   override def dropTable(ident: Identifier): Boolean =
-    try {
-      withConn { c =>
-        val st = c.createStatement()
-        try st.executeUpdate(s"DROP TABLE ${qualified(ident)}") finally st.close()
-      }
-      true
-    } catch { case _: java.sql.SQLException => false }
+    try { options.withConnection(Remote.execute(_, s"DROP TABLE ${qualified(ident)}")); true }
+    catch { case _: java.sql.SQLException => false }
 
-  override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
-    withConn { c =>
-      val st = c.createStatement()
-      try st.executeUpdate(dialect.renameTableSql(qualified(oldIdent), newIdent.name))
-      finally st.close()
-    }
+  override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
+    val sql = dialect.renameTableSql(qualified(oldIdent), newIdent.name)
+    options.withConnection(Remote.execute(_, sql))
+  }
 }

@@ -67,8 +67,8 @@ final case class GraftJdbcTable(
   override def deleteWhere(predicates: Array[Predicate]): Unit = {
     val u = unparser
     val where = predicates.toSeq.map(p => u.expr(p).get)
-    Dml.executeUpdate(options, s"DELETE FROM ${options.table}" +
-      (if (where.isEmpty) "" else where.mkString(" WHERE ", " AND ", "")))
+    options.withConnection(Remote.execute(_, s"DELETE FROM ${options.table}" +
+      (if (where.isEmpty) "" else where.mkString(" WHERE ", " AND ", ""))))
   }
 
   override def truncateTable(): Boolean = {

@@ -344,6 +344,12 @@ final case class JdbcOptions(map: Map[String, String]) extends Serializable {
     ConnectionPool.acquire(this)
   }
 
+  /** `f` on a pooled connection, returned to the pool on every path. */
+  def withConnection[A](f: Connection => A): A = {
+    val c = connect()
+    try f(c) finally c.close()
+  }
+
   /** Credentials never echo into plans, logs, or error messages (the
     * reference wraps every secret option, `util/secrets.rs`). */
   override def toString: String =

@@ -105,9 +105,24 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
     case _ => None
   }
 
-  /** Spark's expected result type for a completely-pushed aggregate —
-    * the scan schema must match what the optimizer substitutes, or it
-    * inserts casts (or worse, mis-types rows read from JDBC).
+  /** The one table of aggregates whose remote value would differ from
+    * Spark's, which therefore stay local on every path. AVG of integers
+    * is integer division in many dialects (Derby included), so AVG pushes
+    * only over a plain DOUBLE column. A FLOAT sum accumulates in single
+    * precision remotely where Spark widens each value to double, so a
+    * SUM over a FLOAT column stays local, and so does one whose remote
+    * result type (`described`, for an expression argument) is FLOAT.
+    */
+  private def agrees(f: AggregateFunc, described: Option[DataType] = None): Boolean = f match {
+    case a: Avg => fieldOf(a.column).exists(_.dataType == DoubleType)
+    case s: Sum => !(fieldOf(s.column).map(_.dataType) ++ described).exists(_ == FloatType)
+    case _ => true
+  }
+
+  /** Spark's expected result type for a completely-pushed aggregate over
+    * a plain column — the scan schema must match what the optimizer
+    * substitutes, or it inserts casts (or worse, mis-types rows read from
+    * JDBC). None sends the aggregate to [[translateGeneral]].
     */
   private def aggResultType(f: AggregateFunc): Option[DataType] = f match {
     case _: CountStar => Some(LongType)
@@ -117,15 +132,11 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
       case DoubleType => Some(DoubleType)
       case d: DecimalType =>
         Some(DecimalType(math.min(DecimalType.MAX_PRECISION, d.precision + 10), d.scale))
-      // Float excluded: remote REAL accumulation differs from Spark's
-      // float-widened-to-double sum.
       case _ => None
     }
     case m: Min => fieldOf(m.column).map(_.dataType)
     case m: Max => fieldOf(m.column).map(_.dataType)
-    // AVG only over doubles: integer AVG is integer division in many
-    // dialects (Derby included) — Spark semantics say double.
-    case a: Avg => fieldOf(a.column).map(_.dataType).collect { case DoubleType => DoubleType }
+    case _: Avg => Some(DoubleType)
     case _ => None
   }
 
@@ -136,10 +147,17 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
     case _ => false
   }
 
+  /** The pushed statement's SELECT items, GROUP BY keys and scan schema,
+    * or None to keep the aggregate local. The [[agrees]] guard applies
+    * first; then GROUP BY keys and aggregate arguments that are all plain
+    * columns take [[aggResultType]]'s types, and anything else goes to
+    * [[translateGeneral]].
+    */
   private def translate(agg: Aggregation): Option[(Seq[String], Seq[String], StructType)] = {
     // catch-all references cannot exist remotely — whole aggregate stays local
     if (agg.groupByExpressions.exists(touchesCatchAll) ||
       agg.aggregateExpressions.exists(touchesCatchAll)) return None
+    if (!agg.aggregateExpressions.forall(agrees(_))) return None
     // Derby cannot evaluate two DISTINCT aggregates in one statement
     // ("Multiple DISTINCT aggregates are not supported") — such plans
     // stay local over the scanned rows. Found by AggPushdownPropertySpec.
@@ -173,7 +191,8 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
     * casts the scan's columns to the plan's expected types positionally.
     * The probe leaves out the pushed WHERE, which cannot change result
     * types, so one introspection serves every literal set; a remote
-    * failure simply keeps the aggregate local.
+    * failure, or a SUM whose described type [[agrees]] refuses, keeps
+    * the aggregate local.
     */
   private def translateGeneral(agg: Aggregation,
       aggSqls: Seq[String]): Option[(Seq[String], Seq[String], StructType)] = {
@@ -187,7 +206,11 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
     val groupClause = if (group.isEmpty) "" else group.mkString(" GROUP BY ", ", ", "")
     val probe = d.repairSql(s"SELECT ${sel.mkString(", ")} FROM ${options.fromClause}$groupClause")
     try {
-      Some((sel, group, SchemaProjection.describe(options, probe).schema))
+      val schema = SchemaProjection.describe(options, probe).schema
+      val aggs = agg.aggregateExpressions.toSeq.zipWithIndex
+      if (aggs.forall { case (f, i) => agrees(f, Some(schema(group.size + i).dataType)) })
+        Some((sel, group, schema))
+      else None
     } catch {
       case e: Exception =>
         logInfo(s"graft-jdbc: expression-aggregate introspection failed, staying local: $e")
@@ -589,14 +612,11 @@ object JdbcScan extends Logging {
     * empty on a remote error, so a failed lookup plans the scan as if
     * nothing were known. */
   private def remoteRows(o: JdbcOptions, sql: String): Seq[Seq[Option[String]]] =
-    scala.util.Using.Manager { use =>
-      val rs = use(use(o.connect()).createStatement()).executeQuery(sql)
-      val n = rs.getMetaData.getColumnCount
-      Iterator.continually(rs.next()).takeWhile(identity)
-        .map(_ => (1 to n).map(i => Option(rs.getString(i)))).toList
-    }.recover { case e =>
+    try o.withConnection(Remote.query(_, sql)(rs =>
+      (1 to rs.getMetaData.getColumnCount).map(i => Option(rs.getString(i)))))
+    catch { case scala.util.control.NonFatal(e) =>
       logWarning(s"graft-jdbc: size lookup failed, planning without it: $e"); Nil
-    }.get
+    }
 
   /** Driver-side remote COUNT(*) cache: every action plans a fresh scan,
     * so without this each action over the same (connection, FROM, WHERE)

@@ -71,22 +71,6 @@ final class JdbcMicroBatchStream(
   private def lowerBound(from: Long): Seq[String] =
     if (from == Long.MinValue) Nil else Seq(s"$q > $from")
 
-  private def queryLong(sql: String): Option[Long] = {
-    val c = options.connect()
-    try {
-      val st = c.createStatement()
-      try {
-        val rs = st.executeQuery(sql)
-        try {
-          if (rs.next()) {
-            val v = rs.getLong(1)
-            if (rs.wasNull()) None else Some(v)
-          } else None
-        } finally rs.close()
-      } finally st.close()
-    } finally c.close()
-  }
-
   private def maxWatermark(from: Long, maxRows: Option[Int]): Long = {
     val sql = maxRows match {
       case Some(n) =>
@@ -98,7 +82,10 @@ final class JdbcMicroBatchStream(
       case None =>
         s"SELECT MAX($q) FROM ${options.fromClause}" + whereClause(lowerBound(from))
     }
-    queryLong(d.repairSql(sql)).getOrElse(from)
+    options.withConnection(Remote.query(_, d.repairSql(sql)) { rs =>
+      val v = rs.getLong(1)
+      if (rs.wasNull()) None else Some(v)
+    }).headOption.flatten.getOrElse(from)
   }
 
   override def getDefaultReadLimit: ReadLimit =

@@ -154,16 +154,6 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
   private[jdbc] def numPartitions: Int =
     if (upsert.isDefined && d.singleWriterUpserts) 1 else 0 // 0 = no requirement
 
-  private def withConn[A](f: Connection => A): A = {
-    val c = options.connect()
-    try f(c) finally c.close()
-  }
-
-  private def exec(c: Connection, sql: String): Unit = {
-    val st = c.createStatement()
-    try st.executeUpdate(sql) finally st.close()
-  }
-
   /** Schema and name of the target as written (`"ns"."t"`, `ns.t`; a
     * bare `t` lies in the connection's current schema): the one parse
     * behind the stage's name, the stale-stage sweep, the primary-key
@@ -171,7 +161,7 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
     * no one- or two-part table.
     */
   private lazy val target: Option[(String, String)] = Dialect.nameParts(options.table).collect {
-    case Seq(t) => (withConn(_.getSchema), t)
+    case Seq(t) => (options.withConnection(_.getSchema), t)
     case Seq(ns, t) => (ns, t)
   }
   private def targetParts: (String, String) = target.getOrElse(throw new IllegalArgumentException(
@@ -218,17 +208,15 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
     */
   private def dropStaleStages(c: Connection): Unit = {
     val (ns, t) = targetParts
-    val rs = c.getMetaData.getTables(null, ns, t + "__stage_%", Dialect.TableTypes)
-    val stale = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (rs.next()) stale += rs.getString("TABLE_NAME")
-    rs.close()
+    val stages = c.getMetaData.getTables(null, ns, t + "__stage_%", Dialect.TableTypes)
+    val stale = Remote.rows(stages)(_.getString("TABLE_NAME"))
     val now = System.currentTimeMillis()
     stale.foreach { s =>
       val bornAt =
         try java.lang.Long.parseLong(s.stripPrefix(t + "__stage_").takeWhile(_ != '_'), 16)
         catch { case _: NumberFormatException => 0L }
       if (now - bornAt > JdbcBatchWrite.StaleStageAgeMs)
-        try exec(c, s"DROP TABLE ${d.quoted(Seq(ns, s))}")
+        try Remote.execute(c, s"DROP TABLE ${d.quoted(Seq(ns, s))}")
         catch { case _: java.sql.SQLException => }
     }
   }
@@ -240,13 +228,9 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
     * metadata call report none.
     */
   private def primaryKey: Seq[String] = target.fold(Seq.empty[String]) { case (ns, t) =>
-    try withConn { c =>
-      val pk = scala.collection.mutable.ArrayBuffer.empty[(Short, String)]
-      val rs = c.getMetaData.getPrimaryKeys(null, ns, t)
-      while (rs.next()) pk += ((rs.getShort("KEY_SEQ"), rs.getString("COLUMN_NAME")))
-      rs.close()
-      pk.sortBy(_._1).map(_._2).toSeq
-    } catch { case _: java.sql.SQLException => Nil }
+    try options.withConnection(c => Remote.rows(c.getMetaData.getPrimaryKeys(null, ns, t))(rs =>
+      (rs.getShort("KEY_SEQ"), rs.getString("COLUMN_NAME"))).sortBy(_._1).map(_._2))
+    catch { case _: java.sql.SQLException => Nil }
   }
 
   /** The conflict target as written column names, checked before any
@@ -322,7 +306,7 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
         }
         s"${d.quote(f.name)} $t"
       } :+ s"${d.quote(JdbcWrite.TaskColumn)} BIGINT").mkString(", ")
-    exec(c, s"CREATE TABLE $stageTable ($defs)")
+    Remote.execute(c, s"CREATE TABLE $stageTable ($defs)")
   }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
@@ -334,15 +318,14 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
       val pkClause =
         if (pk.isEmpty) ""
         else pk.map(d.quote).mkString(", PRIMARY KEY (", ", ", ")")
-      val c = stagingOpts.connect()
-      try {
-        if (stageNs != "main") exec(c, s"CREATE SCHEMA IF NOT EXISTS ${d.quote(stageNs)}")
-        exec(c, s"CREATE TABLE ${options.table} (${d.columnDefs(schema)}$pkClause)")
+      stagingOpts.withConnection { c =>
+        if (stageNs != "main") Remote.execute(c, s"CREATE SCHEMA IF NOT EXISTS ${d.quote(stageNs)}")
+        Remote.execute(c, s"CREATE TABLE ${options.table} (${d.columnDefs(schema)}$pkClause)")
         createStage(c)
-      } finally c.close()
+      }
       JdbcWriterFactory(stagingOpts, schema, task)
     } else {
-      if (staged) withConn { c =>
+      if (staged) options.withConnection { c =>
         dropStaleStages(c)
         createStage(c)
       }
@@ -373,7 +356,8 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
     val keyed = replace.isDefined && conflictKeys.nonEmpty && tasks.nonEmpty
     c.setAutoCommit(false)
     val kept = if (keyed) Seq(s"NOT $restaged") else Nil
-    replace.foreach(conds => exec(c, s"DELETE FROM ${options.table}" + where(conds ++ kept)))
+    replace.foreach(conds =>
+      Remote.execute(c, s"DELETE FROM ${options.table}" + where(conds ++ kept)))
     if (!tagged || tasks.nonEmpty) {
       if (upsert.isDefined && conflictKeys.nonEmpty)
         assertNoKey(c, s"SELECT $ks $fromStage GROUP BY $ks HAVING COUNT(*) > 1 LIMIT 1",
@@ -385,34 +369,28 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
           k => s"overwrite row key $k exists outside the overwrite predicate " +
             s"(violates the PRIMARY KEY of ${options.table})"))
       val values = schema.fields.map(f => d.insertValueSql(f.dataType, d.quote(f.name)))
-      exec(c, s"INSERT INTO ${options.table} (${cols.map(d.quote).mkString(", ")}) " +
+      Remote.execute(c, s"INSERT INTO ${options.table} (${cols.map(d.quote).mkString(", ")}) " +
         s"SELECT ${values.mkString(", ")} $fromStage" +
         (if (upsert.isDefined || keyed)
           d.onConflictClause(cols, conflictKeys, doNothing = upsert.exists(_.doNothing)) else ""))
     }
-    exec(c, s"DROP TABLE $stageTable")
+    Remote.execute(c, s"DROP TABLE $stageTable")
     c.commit()
   }
 
   /** Fails the move with `message` of the conflict key of the first row
     * `sql` returns, if it returns any. */
-  private def assertNoKey(c: Connection, sql: String, message: Map[String, AnyRef] => String): Unit = {
-    val st = c.createStatement()
-    try {
-      val rs = st.executeQuery(sql)
-      if (rs.next())
-        throw new IllegalStateException(
-          message(conflictKeys.indices.map(i => conflictKeys(i) -> rs.getObject(i + 1)).toMap))
-    } finally st.close()
-  }
+  private def assertNoKey(c: Connection, sql: String, message: Map[String, AnyRef] => String): Unit =
+    Remote.query(c, sql)(rs =>
+      conflictKeys.indices.map(i => conflictKeys(i) -> rs.getObject(i + 1)).toMap
+    ).headOption.foreach(k => throw new IllegalStateException(message(k)))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val rows = messages.collect { case JdbcCommit(n, _) => n }.sum
     val tasks = messages.toSeq.collect { case JdbcCommit(_, Some(t)) => t }
     if (fileswap) {
       // the refreshed table takes the committed tasks' staged rows first
-      val c = stagingOpts.connect()
-      try moveStaged(c, tasks, None) finally c.close()
+      stagingOpts.withConnection(moveStaged(_, tasks, None))
       // predicate overwrite under fileswap: the rows the predicate does
       // NOT match ride from the live file into the refreshed table, so
       // the swap is still a complete database. IS NOT TRUE, not NOT(…):
@@ -428,7 +406,7 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
       FileSwap.commitSwap(stagingOpts, stagingUrl, buildingPath,
         options.url, livePath, liveIdentity, ns, t,
         preserveWhere = preserve, targetCols = cols.map(d.quote))
-    } else if (staged) withConn { c =>
+    } else if (staged) options.withConnection { c =>
       // the atomic swap: matching rows are replaced in ONE remote txn
       moveStaged(c, tasks, overwrite)
     }
@@ -437,7 +415,7 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
     // opt-in, best-effort — a stats failure never fails a committed write.
     if (options.analyzeAfterWrite)
       target.flatMap { case (ns, t) => d.analyzeStatement(ns, t) }.foreach { sql =>
-        try withConn(exec(_, sql))
+        try options.withConnection(Remote.execute(_, sql))
         catch { case e: java.sql.SQLException =>
           logWarning(s"post-write ANALYZE failed for ${options.table}: ${e.getMessage}")
         }
@@ -446,8 +424,8 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     if (fileswap) FileSwap.discardStaging(stagingUrl, buildingPath)
-    else if (staged) withConn { c =>
-      try exec(c, s"DROP TABLE $stageTable") catch { case _: java.sql.SQLException => }
+    else if (staged) options.withConnection { c =>
+      try Remote.execute(c, s"DROP TABLE $stageTable") catch { case _: java.sql.SQLException => }
     }
 }
 

@@ -54,18 +54,15 @@ object SchemaProjection {
     * `refresh` prepares it again.
     */
   def describe(o: JdbcOptions, sql: String, refresh: Boolean = false): Described = {
-    def load(): Described = {
-      val c = o.connect()
+    def load(): Described = o.withConnection { c =>
+      val ps = c.prepareStatement(sql)
       try {
-        val ps = c.prepareStatement(sql)
-        try {
-          val md = ps.getMetaData
-          Described(
-            TypeMapping.schemaOf(md, o.dialect, unsupportedAsString = o.readUnsupportedAsString),
-            (1 to md.getColumnCount).map(i =>
-              md.getColumnLabel(i).toLowerCase -> md.getColumnTypeName(i)).toMap)
-        } finally ps.close()
-      } finally c.close()
+        val md = ps.getMetaData
+        Described(
+          TypeMapping.schemaOf(md, o.dialect, unsupportedAsString = o.readUnsupportedAsString),
+          (1 to md.getColumnCount).map(i =>
+            md.getColumnLabel(i).toLowerCase -> md.getColumnTypeName(i)).toMap)
+      } finally ps.close()
     }
     val key = (o.computeContext, sql)
     if (!refresh) described.getOrElseUpdate(key, load())

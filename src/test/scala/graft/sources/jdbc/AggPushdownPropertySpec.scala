@@ -13,23 +13,26 @@ import scala.util.Random
   * mirror — NULL-skipping
   * aggregate semantics, empty groups, filters below the aggregate, and
   * the distinct flavors included. (The single golden is q57; this
-  * sweeps the combinations.)
+  * sweeps the combinations.) AVG over the BIGINT `v` and SUM over the
+  * REAL `f` must stay local: Derby's integer AVG divides as integers and
+  * a remote REAL sum accumulates in single precision.
   */
 class AggPushdownPropertySpec extends AnyFunSuite with SparkFixture {
 
-  private lazy val rows: Seq[(Int, java.lang.Long, java.lang.Double)] =
+  private lazy val rows: Seq[(Int, java.lang.Long, java.lang.Double, java.lang.Float)] =
     (1 to 60).map { i =>
       val g = i % 5
       val v: java.lang.Long = if (i % 7 == 0) null else Long.box((i * 11 % 23).toLong)
       val d: java.lang.Double = if (i % 9 == 0) null else Double.box((i * 13 % 17) * 1.5)
-      (g, v, d)
+      val f: java.lang.Float = if (i % 8 == 0) null else Float.box((i * 7 % 11) * 1.1f)
+      (g, v, d, f)
     }
 
   private def setup(catalog: String): String = {
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $catalog.ap")
     spark.sql(s"DROP TABLE IF EXISTS $catalog.ap.t")
     import spark.implicits._
-    rows.toDF("g", "v", "d").writeTo(s"$catalog.ap.t").create()
+    rows.toDF("g", "v", "d", "f").writeTo(s"$catalog.ap.t").create()
     s"$catalog.ap.t"
   }
 
@@ -42,7 +45,9 @@ class AggPushdownPropertySpec extends AnyFunSuite with SparkFixture {
       () => min(col("d")).as(s"a${rnd.nextInt()}"),
       () => max(col("v")).as(s"a${rnd.nextInt()}"),
       () => avg(col("d")).as(s"a${rnd.nextInt()}"),
-      () => sum_distinct(col("v")).as(s"a${rnd.nextInt()}"))
+      () => sum_distinct(col("v")).as(s"a${rnd.nextInt()}"),
+      () => avg(col("v")).as(s"a${rnd.nextInt()}"),
+      () => sum(col("f")).as(s"a${rnd.nextInt()}"))
     (0 to rnd.nextInt(3)).map(_ => pool(rnd.nextInt(pool.length))())
   }
 
@@ -60,7 +65,7 @@ class AggPushdownPropertySpec extends AnyFunSuite with SparkFixture {
 
   private def sweep(name: String): Unit = {
     import spark.implicits._
-    val local = rows.toDF("g", "v", "d")
+    val local = rows.toDF("g", "v", "d", "f")
     for (seed <- 1 to 25) {
       val got = sortedRows(build(spark.table(name), seed))
       val want = sortedRows(build(local, seed))
