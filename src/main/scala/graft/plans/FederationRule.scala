@@ -1,11 +1,11 @@
 package graft.plans
 
-import graft.sources.jdbc.{GraftJdbcTable, JdbcOptions}
+import graft.sources.jdbc.{GraftJdbcTable, JdbcOptions, JdbcScan}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -25,8 +25,9 @@ import java.util.concurrent.atomic.AtomicInteger
   *
   * Mechanics: the rule runs in the operator-optimization batch, before
   * `V2ScanRelationPushDown`. It recognizes collapsible legs —
-  * `DataSourceV2Relation(GraftJdbcTable)`, optionally under
-  * attribute-only `Project`s and unparsable `Filter`s — and rewrites
+  * `DataSourceV2Relation(GraftJdbcTable)` (or a plain pushed scan of
+  * one, below), optionally under attribute-only `Project`s and
+  * unparsable `Filter`s — and rewrites
   *
   * {{{ Join(legL, legR, jt, cond) }}}
   *
@@ -44,10 +45,25 @@ import java.util.concurrent.atomic.AtomicInteger
   *     SAME collapsed scan (SURVEY §3.2's "remaining plan executes
   *     locally" — here the remainder rides the standard pushdown path).
   *
+  * SQL `EXISTS` and `IN` subqueries reach the rule as a `Filter` over
+  * the outer relation, not as a join: Catalyst's RewriteSubquery batch
+  * (RewritePredicateSubquery) builds the semi or anti join only after
+  * the operator-optimization batch this rule is injected into, and after
+  * "Early Filter and Projection Push-Down". Two earlier batches shape
+  * what the rule sees. "Pullup Correlated Expressions" moves the
+  * correlation (`c.k = n.k`) into the subquery expression's join
+  * condition, and the "Subquery" batch then runs the whole optimizer,
+  * DSv2 pushdown included, over the subquery's plan. So the outer leg is
+  * an unpushed `DataSourceV2Relation`, while the subquery leg is a
+  * pushed `DataSourceV2ScanRelation` whose [[JdbcScan.plainSql]] nests
+  * as a derived table. The Filter arm builds the join Catalyst would
+  * build and collapses it through the semi/anti arm, or leaves the
+  * Filter as it was.
+  *
   * At 100 TB this is the difference between shipping two tables through
   * the cluster and shipping one pre-joined, pre-filtered result set.
   */
-object FederationRule extends Rule[LogicalPlan] {
+object FederationRule extends Rule[LogicalPlan] with PredicateHelper {
 
   private val counter = new AtomicInteger()
   private[plans] def fresh(): String = s"fj${counter.getAndIncrement()}"
@@ -141,6 +157,27 @@ object FederationRule extends Rule[LogicalPlan] {
             r.output,
             alias))
       }
+      }
+
+    // A pushed scan (a subquery's leg, see the scaladoc): its statement
+    // nests as a derived table when it pushed only a projection and a
+    // WHERE; its columns keep their remote names.
+    case s: DataSourceV2ScanRelation if s.relation.table.isInstanceOf[GraftJdbcTable] =>
+      s.scan match {
+        case scan: JdbcScan => scan.plainSql.map { sql =>
+          val d = scan.options.dialect
+          val alias = newAlias()
+          Leaf(
+            scan.options.computeContext,
+            scan.options,
+            s"($sql) ${d.quote(alias)}",
+            s.output.zip(scan.readSchema().fields).map { case (a, f) =>
+              a.exprId -> s"${d.quote(alias)}.${d.quote(f.name)}"
+            }.toMap,
+            s.output,
+            alias)
+        }
+        case _ => None
       }
 
     // Attribute-only projections narrow the visible column set.
@@ -371,54 +408,91 @@ object FederationRule extends Rule[LogicalPlan] {
       }
       collapsed.getOrElse(s)
 
-    case j @ Join(left, right, jt, cond, _) =>
-      val collapsed =
-        for {
-          l <- leafOf(left)
-          r <- leafOf(right)
-          // never merge distinct servers (AllowedFor(context) equality)
-          if l.ctx == r.ctx
-          // a derived table joined with itself would duplicate its
-          // correlation name in one FROM scope (for EXISTS the inner
-          // alias would shadow the outer reference)
-          if l.topAlias != r.topAlias
-          body <- jt match {
-            // Semi/anti joins have no JOIN keyword rendering; they
-            // collapse as (NOT) EXISTS derived tables — the reference
-            // federation collapses any same-server subplan the dialect
-            // can express (federation.rs:62-110), and EXISTS is the
-            // standard SQL spelling of semi-join semantics (null
-            // conditions keep the anti-join row, exactly like Spark).
-            case LeftSemi | LeftAnti =>
-              val kw = if (jt == LeftAnti) "NOT EXISTS" else "EXISTS"
-              cond match {
-                case Some(c) =>
-                  new CatalystUnparser(l.opts.dialect, l.attrs ++ r.attrs)
-                    .expr(c, isPredicate = true)
-                    .map(w => s"${l.from} WHERE $kw (SELECT 1 FROM ${r.from} WHERE $w)")
-                case None =>
-                  Some(s"${l.from} WHERE $kw (SELECT 1 FROM ${r.from})")
-              }
-            case _ =>
-              for {
-                kw <- joinKeyword(jt, l.opts)
-                onSql <- cond match {
-                  case Some(c) =>
-                    new CatalystUnparser(l.opts.dialect, l.attrs ++ r.attrs)
-                      .expr(c, isPredicate = true).map(s => s" ON $s")
-                  case None if jt == Cross => Some("")
-                  case None => None
-                }
-              } yield s"${l.from} $kw ${r.from}$onSql"
+    case j: Join => collapseJoin(j).getOrElse(j)
+
+    // SQL EXISTS / IN subqueries (see the scaladoc for why they arrive
+    // here as a Filter): each subquery conjunct becomes the semi or anti
+    // join RewritePredicateSubquery would build, over the outer leg that
+    // keeps the other conjuncts, and collapses through the join arm. All
+    // of them collapse, or the Filter stays as it was for Catalyst.
+    case f @ Filter(cond, child) if SubqueryExpression.hasSubquery(cond) =>
+      val (subs, rest) = splitConjunctivePredicates(cond).partition(SubqueryExpression.hasSubquery)
+      val outer: LogicalPlan = rest.reduceOption(And).fold(child)(Filter(_, child))
+      subs.foldLeft(Option(outer)) { (acc, c) =>
+        acc.flatMap(subqueryJoin(_, c)).flatMap(collapseJoin)
+      }.getOrElse(f)
+  }
+
+  /** The semi or anti join RewritePredicateSubquery builds for one
+    * subquery conjunct over `outer`, or None for a shape left to it: any
+    * subquery but EXISTS and IN, and a null-aware NOT IN (a NULL value or
+    * column there rejects the row, which no NOT EXISTS says), so NOT IN
+    * only when every value and column is non-nullable. IN becomes EXISTS
+    * with `value = column` conjuncts: exact under a WHERE, where NULL and
+    * FALSE both drop the row.
+    */
+  private def subqueryJoin(outer: LogicalPlan, conjunct: Expression): Option[Join] = {
+    def join(sub: LogicalPlan, jt: JoinType, conds: Seq[Expression]) =
+      Join(outer, sub, jt, conds.reduceOption(And), JoinHint.NONE)
+    def keys(values: Seq[Expression], q: ListQuery) =
+      values.zip(q.childOutputs).map { case (v, c) => EqualTo(v, c) }
+    conjunct match {
+      case Exists(sub, _, _, jc, _) => Some(join(sub, LeftSemi, jc))
+      case Not(Exists(sub, _, _, jc, _)) => Some(join(sub, LeftAnti, jc))
+      case InSubquery(vs, q) => Some(join(q.plan, LeftSemi, keys(vs, q) ++ q.joinCond))
+      case Not(InSubquery(vs, q)) if !(vs ++ q.childOutputs).exists(_.nullable) =>
+        Some(join(q.plan, LeftAnti, keys(vs, q) ++ q.joinCond))
+      case _ => None
+    }
+  }
+
+  private def collapseJoin(j: Join): Option[LogicalPlan] = {
+    val Join(left, right, jt, cond, _) = j
+    for {
+      l <- leafOf(left)
+      r <- leafOf(right)
+      // never merge distinct servers (AllowedFor(context) equality)
+      if l.ctx == r.ctx
+      // a derived table joined with itself would duplicate its
+      // correlation name in one FROM scope (for EXISTS the inner
+      // alias would shadow the outer reference)
+      if l.topAlias != r.topAlias
+      body <- jt match {
+        // Semi/anti joins have no JOIN keyword rendering; they
+        // collapse as (NOT) EXISTS derived tables — the reference
+        // federation collapses any same-server subplan the dialect
+        // can express (federation.rs:62-110), and EXISTS is the
+        // standard SQL spelling of semi-join semantics (null
+        // conditions keep the anti-join row, exactly like Spark).
+        case LeftSemi | LeftAnti =>
+          val kw = if (jt == LeftAnti) "NOT EXISTS" else "EXISTS"
+          cond match {
+            case Some(c) =>
+              new CatalystUnparser(l.opts.dialect, l.attrs ++ r.attrs)
+                .expr(c, isPredicate = true)
+                .map(w => s"${l.from} WHERE $kw (SELECT 1 FROM ${r.from} WHERE $w)")
+            case None =>
+              Some(s"${l.from} WHERE $kw (SELECT 1 FROM ${r.from})")
           }
-        } yield {
-          val alias = fresh()
-          // semi/anti output is the left leg only; the combined map
-          // still covers every output attribute in all join shapes
-          val joined = l.copy(from = body, attrs = l.attrs ++ r.attrs, visible = j.output)
-          wrap(j.output, l.opts, joined.select(alias = Some(alias)), alias)
-        }
-      collapsed.getOrElse(j)
+        case _ =>
+          for {
+            kw <- joinKeyword(jt, l.opts)
+            onSql <- cond match {
+              case Some(c) =>
+                new CatalystUnparser(l.opts.dialect, l.attrs ++ r.attrs)
+                  .expr(c, isPredicate = true).map(s => s" ON $s")
+              case None if jt == Cross => Some("")
+              case None => None
+            }
+          } yield s"${l.from} $kw ${r.from}$onSql"
+      }
+    } yield {
+      val alias = fresh()
+      // semi/anti output is the left leg only; the combined map
+      // still covers every output attribute in all join shapes
+      val joined = l.copy(from = body, attrs = l.attrs ++ r.attrs, visible = j.output)
+      wrap(j.output, l.opts, joined.select(alias = Some(alias)), alias)
+    }
   }
 }
 

@@ -551,6 +551,28 @@ object DuckDbDialect extends Dialect {
         s"UNION ALL SELECT NULL FROM duckdb_views() WHERE ${matches("view_name")}"
     }
 
+  /** One catalog statement listing the unique keys of table `ns`.`t`
+    * as (description, column list) rows, the PRIMARY KEY first and then
+    * each UNIQUE index. A column list is the parenthesized text that
+    * ends the key's DDL ([[keyColumns]]).
+    */
+  def uniqueKeysSql(ns: String, t: String): String = {
+    val of = s"lower(schema_name) = ${stringLiteral(ns.toLowerCase)} AND " +
+      s"lower(table_name) = ${stringLiteral(t.toLowerCase)}"
+    "SELECT 'PRIMARY KEY', '(' || array_to_string(list_transform(constraint_column_names, " +
+      "c -> '\"' || replace(c, '\"', '\"\"') || '\"'), ', ') || ')' FROM duckdb_constraints() " +
+      s"WHERE $of AND constraint_type = 'PRIMARY KEY' UNION ALL " +
+      s"SELECT 'UNIQUE index ' || index_name, sql FROM duckdb_indexes() WHERE $of AND is_unique ORDER BY 1"
+  }
+
+  /** The plain columns of a [[uniqueKeysSql]] column list; None for an
+    * index over expressions. */
+  def keyColumns(text: String): Option[Seq[String]] =
+    "\\(([^()]*)\\)\\s*;?\\s*$".r.findFirstMatchIn(text).flatMap { m =>
+      val cols = m.group(1).split(",").toSeq.map(c => Dialect.nameParts(c.trim).collect { case Seq(n) => n })
+      if (cols.forall(_.isDefined)) Some(cols.flatten) else None
+    }
+
   /** `stats(c)`'s text (`[Min: 0, Max: 9][Has Null: false, Has No Null:
     * true][Approx Unique: 10]`, plus `Max String Length` for strings and
     * blobs), all columns in one `LIMIT 1` statement that scans nothing

@@ -447,6 +447,16 @@ final case class JdbcScan(
   /** The single remote SQL statement, before per-partition range splicing. */
   def sql: String = sqlFor(None)
 
+  /** [[sql]] when the scan pushed only a projection and a WHERE, so its
+    * rows are the statement's rows wherever it is nested (the federation
+    * rule nests a pushed subquery scan as a derived table); None when an
+    * aggregate, ORDER BY, LIMIT, OFFSET, catch-all fold, ghost pin or
+    * runtime filter shapes them. */
+  def plainSql: Option[String] =
+    if (aggSelect.isEmpty && orderBy.isEmpty && limit.isEmpty && pushedOffset.isEmpty &&
+      catchAll.isEmpty && ghostPins.isEmpty && runtimeWhere.isEmpty) Some(sql)
+    else None
+
   private def sqlFor(rangePred: Option[String]): String = {
     val d = options.dialect
     // A ghost pin (declared but absent remotely) renders as a typed NULL

@@ -233,13 +233,27 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
     catch { case _: java.sql.SQLException => Nil }
   }
 
+  /** The key a DuckDB staged overwrite restages rows through
+    * ([[moveStaged]]), as (description, columns): the table's PRIMARY
+    * KEY, or else its first UNIQUE index over plain columns, which
+    * DuckDB 1.0 also takes as an ON CONFLICT target (probed). One
+    * catalog statement; None where the table has no such key, and on a
+    * remote error.
+    */
+  private lazy val restageKey: Option[(String, Seq[String])] = target.flatMap { case (ns, t) =>
+    try options.withConnection(Remote.query(_, DuckDbDialect.uniqueKeysSql(ns, t))(rs =>
+      (rs.getString(1), rs.getString(2))))
+      .collectFirst(Function.unlift { case (what, text) => DuckDbDialect.keyColumns(text).map(what -> _) })
+    catch { case _: java.sql.SQLException => None }
+  }
+
   /** The conflict target as written column names, checked before any
     * task starts: an upsert's explicit keys, or for Derby's
     * update-else-insert under do_nothing_all the table's PRIMARY KEY
     * (the remote constraint IS the target of the reference's target-less
     * `ON CONFLICT DO NOTHING`, `on_conflict.rs:32`, which the other
-    * dialects run as such: no target); and the PRIMARY KEY of a DuckDB
-    * table that a staged overwrite replaces rows of ([[moveStaged]]).
+    * dialects run as such: no target); and the [[restageKey]] of a
+    * DuckDB table that a staged overwrite replaces rows of.
     */
   private lazy val conflictKeys: Seq[String] = {
     val (keys, from) = upsert match {
@@ -251,8 +265,8 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
       case Some(u) => (u.keys, "upsertkeys")
       case None if tagged && overwrite.isDefined && !fileswap =>
         // a key column the write leaves to its DEFAULT restages no key
-        val pk = primaryKey
-        (if (pk.forall(k => cols.exists(_.equalsIgnoreCase(k)))) pk else Nil, "")
+        val key = restageKey.fold(Seq.empty[String])(_._2)
+        (if (key.forall(k => cols.exists(_.equalsIgnoreCase(k)))) key else Nil, "")
       case None => (Nil, "")
     }
     keys.map(k => cols.find(_.equalsIgnoreCase(k)).getOrElse(throw new IllegalArgumentException(
@@ -352,7 +366,10 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
       where(if (tagged) Seq(s"${d.quote(JdbcWrite.TaskColumn)} IN ${tasks.mkString("(", ", ", ")")}")
         else Nil)
     val ks = conflictKeys.map(d.quote).mkString(", ")
-    val restaged = s"row($ks) IN (SELECT row($ks) $fromStage)"
+    // a NULL key never conflicts (a UNIQUE key may hold several), so a
+    // target row with one is replaced, never kept
+    val restaged = conflictKeys.map(k => s"${d.quote(k)} IS NOT NULL AND ").mkString("(", "", "") +
+      s"row($ks) IN (SELECT row($ks) $fromStage))"
     val keyed = replace.isDefined && conflictKeys.nonEmpty && tasks.nonEmpty
     c.setAutoCommit(false)
     val kept = if (keyed) Seq(s"NOT $restaged") else Nil
@@ -367,7 +384,7 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
         assertNoKey(c, s"SELECT $ks FROM ${options.table} WHERE " +
           s"${conds.mkString("(", " AND ", ")")} IS NOT TRUE AND $restaged LIMIT 1",
           k => s"overwrite row key $k exists outside the overwrite predicate " +
-            s"(violates the PRIMARY KEY of ${options.table})"))
+            s"(violates the ${restageKey.fold("key")(_._1)} of ${options.table})"))
       val values = schema.fields.map(f => d.insertValueSql(f.dataType, d.quote(f.name)))
       Remote.execute(c, s"INSERT INTO ${options.table} (${cols.map(d.quote).mkString(", ")}) " +
         s"SELECT ${values.mkString(", ")} $fromStage" +

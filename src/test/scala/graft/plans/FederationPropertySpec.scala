@@ -158,6 +158,78 @@ class FederationPropertySpec extends AnyFunSuite with SparkFixture {
     sweep("fpduck")
   }
 
+  // ---- SQL EXISTS / IN subqueries -----------------------------------
+  // NULL keys on both sides; `id` is NOT NULL (DDL, not CREATE TABLE AS,
+  // which would make it nullable), so NOT IN over it may collapse.
+
+  private lazy val subA =
+    (1L to 14L).map(i => (i, if (i % 5 == 0) None else Some((i % 6).toInt), (i * 7 % 10) * 10.0))
+  private lazy val subB =
+    (1L to 16L).map(i => (i * 3 % 19, if (i % 4 == 0) None else Some((i % 7).toInt), (i * 13 % 9) * 25.0))
+
+  private def setupSub(catalog: String): Unit = {
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $catalog.fp")
+    import spark.implicits._
+    for ((t, rows, num) <- Seq(("sa", subA, "v"), ("sb", subB, "w"))) {
+      spark.sql(s"DROP TABLE IF EXISTS $catalog.fp.$t")
+      spark.sql(s"CREATE TABLE $catalog.fp.$t (id BIGINT NOT NULL, k INT, $num DOUBLE)")
+      rows.toDF("id", "k", num).writeTo(s"$catalog.fp.$t").append()
+    }
+  }
+
+  /** One drawn subquery statement over tables `a` and `b`, and whether
+    * it must collapse: all but a NOT IN over the nullable `k`, or over
+    * an `id` the remote schema reports nullable (`idNullable`). */
+  private def subquery(seed: Int, a: String, b: String, idNullable: Boolean): (String, Boolean) = {
+    val rnd = new Random(seed)
+    val outer = if (rnd.nextBoolean()) s" AND x.v > ${rnd.nextInt(90) + 5}.0" else ""
+    val inner = if (rnd.nextBoolean()) s" AND y.w > ${rnd.nextInt(200) + 5}.0" else ""
+    val corr = Seq("y.k = x.k", "y.id = x.id", "y.k = x.k AND y.w > x.v")(rnd.nextInt(3))
+    val (keys, cols) = Seq(("x.k", "y.k"), ("x.id", "y.id"), ("(x.id, x.k)", "y.id, y.k"))(rnd.nextInt(3))
+    val correlatedIn = if (rnd.nextBoolean()) " AND y.w > x.v" else ""
+    val (pred, collapses) = rnd.nextInt(4) match {
+      case 0 => (s"EXISTS (SELECT 1 FROM $b y WHERE $corr$inner)", true)
+      case 1 => (s"NOT EXISTS (SELECT 1 FROM $b y WHERE $corr$inner)", true)
+      case 2 => (s"$keys IN (SELECT $cols FROM $b y WHERE y.id >= 0$inner$correlatedIn)", true)
+      case _ => (s"$keys NOT IN (SELECT $cols FROM $b y WHERE y.id >= 0$inner)",
+        keys == "x.id" && !idNullable)
+    }
+    (s"SELECT x.id, x.k, x.v FROM $a x WHERE x.id >= 0$outer AND $pred", collapses)
+  }
+
+  private def sweepSub(catalog: String, idNullable: Boolean): Unit = {
+    import spark.implicits._
+    assert(Seq("sa", "sb").map(t => spark.table(s"$catalog.fp.$t").schema("id").nullable)
+      .forall(_ == idNullable))
+    subA.toDF("id", "k", "v").createOrReplaceTempView("fps_a")
+    subB.toDF("id", "k", "w").createOrReplaceTempView("fps_b")
+    for (seed <- 1 to 40) {
+      val (sql, collapses) = subquery(seed, s"$catalog.fp.sa", s"$catalog.fp.sb", idNullable)
+      val remote = spark.sql(sql)
+      val p = remote.queryExecution.executedPlan.toString
+      assert(("GraftJdbcScan".r.findAllIn(p).length == 1) == collapses, s"seed=$seed $sql\n$p")
+      assert(rows(remote) == rows(spark.sql(subquery(seed, "fps_a", "fps_b", idNullable)._1)),
+        s"seed=$seed diverged: $sql")
+    }
+  }
+
+  test("random SQL EXISTS / NOT EXISTS / IN / NOT IN with NULL keys: collapsed == local (Derby)") {
+    setupSub("ext")
+    sweepSub("ext", idNullable = false)
+  }
+
+  test("random SQL EXISTS / NOT EXISTS / IN / NOT IN with NULL keys: collapsed == local (live DuckDB)") {
+    assume(graft.sources.jdbc.DuckDbWireSpec.driverPresent,
+      "duckdb_jdbc driver not on classpath")
+    val dir = java.nio.file.Files.createTempDirectory("graft_fpsub").toString
+    spark.conf.set("spark.sql.catalog.fpsub", "graft.sources.jdbc.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.fpsub.url", s"jdbc:duckdb:$dir/sub.duckdb")
+    setupSub("fpsub")
+    // DuckDB's driver reports a NOT NULL column nullable, so NOT IN
+    // stays local there whatever the key
+    sweepSub("fpsub", idNullable = true)
+  }
+
   test("ORDER BY over a collapsed set-op chain ships remotely and arrives ordered (live DuckDB)") {
     assume(graft.sources.jdbc.DuckDbWireSpec.driverPresent,
       "duckdb_jdbc driver not on classpath")

@@ -218,6 +218,82 @@ class FederationSpec extends AnyFunSuite with SparkFixture {
       Seq((2L, "bob"), (3L, "carol")))
   }
 
+  /** `sql`'s rows in order, after checking its scan count. */
+  private def sqlRows(sql: String, scans: Int): Seq[Seq[Any]] = {
+    val df = spark.sql(sql)
+    assert(scanCount(df) == scans, s"expected $scans scan(s):\n${df.queryExecution.executedPlan}")
+    df.collect().map(_.toSeq).toSeq
+  }
+
+  private def plan(sql: String): String = spark.sql(sql).queryExecution.executedPlan.toString
+
+  test("a correlated SQL EXISTS collapses to one remote EXISTS scan") {
+    setup()
+    val q = "SELECT c.cid, c.cname FROM ext.fed.cust c WHERE c.seg > 0 AND EXISTS " +
+      "(SELECT 1 FROM ext.fed.orders o WHERE o.ocid = c.cid AND o.amount > 50.0) ORDER BY c.cid"
+    val p = plan(q)
+    assert(p.contains("EXISTS (SELECT 1 FROM (SELECT"), p)
+    assert(sqlRows(q, 1) == Seq(Seq(1L, "alice"), Seq(3L, "carol")))
+  }
+
+  test("a correlated SQL NOT EXISTS collapses to one remote NOT EXISTS scan") {
+    setup()
+    val q = "SELECT c.cid, c.cname FROM ext.fed.cust c WHERE NOT EXISTS " +
+      "(SELECT 1 FROM ext.fed.orders o WHERE o.ocid = c.cid AND o.amount > 200.0) ORDER BY c.cid"
+    val p = plan(q)
+    assert(p.contains("NOT EXISTS"), p)
+    assert(sqlRows(q, 1) == Seq(Seq(2L, "bob"), Seq(3L, "carol")))
+  }
+
+  test("a multi-column IN subquery collapses to one remote EXISTS scan") {
+    setup()
+    spark.sql("DROP TABLE IF EXISTS ext.fed.segs")
+    import spark.implicits._
+    Seq((1L, 1), (2L, 1), (3L, 1), (4L, 2)).toDF("scid", "sseg").writeTo("ext.fed.segs").create()
+    // bob (cid 2) matches on cid alone, not on (cid, seg)
+    val q = "SELECT c.cid, c.cname FROM ext.fed.cust c WHERE (c.cid, c.seg) IN " +
+      "(SELECT s.scid, s.sseg FROM ext.fed.segs s WHERE s.scid < 4) ORDER BY c.cid"
+    val p = plan(q)
+    assert(p.contains("WHERE EXISTS") && !p.contains("NOT EXISTS"), p)
+    assert(sqlRows(q, 1) == Seq(Seq(1L, "alice"), Seq(3L, "carol")))
+  }
+
+  test("NOT IN stays local over a nullable value or column and collapses over non-nullable ones") {
+    setup()
+    // CREATE TABLE AS makes every column nullable; DDL keeps NOT NULL
+    spark.sql("DROP TABLE IF EXISTS ext.fed.nk")
+    spark.sql("DROP TABLE IF EXISTS ext.fed.nn")
+    spark.sql("CREATE TABLE ext.fed.nk (nid BIGINT NOT NULL, k BIGINT)")
+    spark.sql("CREATE TABLE ext.fed.nn (mid BIGINT NOT NULL)")
+    spark.sql("INSERT INTO ext.fed.nk VALUES (1, 1), (2, NULL), (3, 3)")
+    spark.sql("INSERT INTO ext.fed.nn VALUES (1), (2)")
+    // a NULL column value rejects every row, and a NULL value rejects
+    // its own row: Spark's null-aware anti join says so, NOT EXISTS not
+    assert(sqlRows("SELECT cid FROM ext.fed.cust WHERE cid NOT IN (SELECT k FROM ext.fed.nk)", 2)
+      .isEmpty)
+    assert(sqlRows("SELECT nid FROM ext.fed.nk WHERE k NOT IN (SELECT mid FROM ext.fed.nn)", 2) ==
+      Seq(Seq(3L)))
+    val q = "SELECT nid FROM ext.fed.nk WHERE nid NOT IN (SELECT mid FROM ext.fed.nn)"
+    val p = plan(q)
+    assert(p.contains("NOT EXISTS"), p)
+    assert(sqlRows(q, 1) == Seq(Seq(3L)))
+  }
+
+  test("a subquery with a pushed LIMIT or aggregate stays local") {
+    setup()
+    val topn = "SELECT cid, cname FROM ext.fed.cust WHERE cid IN " +
+      "(SELECT ocid FROM ext.fed.orders ORDER BY amount DESC LIMIT 3) ORDER BY cid"
+    val grouped = "SELECT cid, cname FROM ext.fed.cust WHERE cid IN " +
+      "(SELECT ocid FROM ext.fed.orders GROUP BY ocid HAVING COUNT(*) > 1)"
+    // the subquery's pushed statement, kept as its own scan under a local semi join
+    for ((q, pushed, ids) <- Seq((topn, "FETCH FIRST 3 ROWS ONLY", Seq(1L, 3L)),
+        (grouped, "GROUP BY", Seq(1L)))) {
+      val p = plan(q)
+      assert(p.contains(pushed) && p.contains("LeftSemi"), p)
+      assert(spark.sql(q).collect().map(_.getLong(0)).toSeq == ids)
+    }
+  }
+
   test("TopN + OFFSET push into the collapsed federation statement") {
     setup()
     import spark.implicits._
@@ -424,9 +500,8 @@ class FederationSpec extends AnyFunSuite with SparkFixture {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "false")
   }
 
-  test("distinct servers are never merged") {
-    setup()
-    // second, separate Derby database = different compute context
+  /** A second, separate Derby database: a different compute context. */
+  private lazy val ext2: Unit = {
     val dir2 = java.nio.file.Files.createTempDirectory("graft_derby2").toString
     spark.conf.set("spark.sql.catalog.ext2", "graft.sources.jdbc.GraftCatalog")
     spark.conf.set("spark.sql.catalog.ext2.url", s"jdbc:derby:$dir2/db;create=true")
@@ -434,6 +509,12 @@ class FederationSpec extends AnyFunSuite with SparkFixture {
     spark.sql("DROP TABLE IF EXISTS ext2.fed.cust")
     import spark.implicits._
     Seq((1L, "zoe")).toDF("cid", "cname").writeTo("ext2.fed.cust").create()
+  }
+
+  test("distinct servers are never merged") {
+    setup()
+    ext2
+    import spark.implicits._
     val df = spark.table("ext.fed.orders")
       .join(spark.table("ext2.fed.cust"), $"ocid" === $"cid")
       .select("oid", "cname")
@@ -441,5 +522,15 @@ class FederationSpec extends AnyFunSuite with SparkFixture {
       s"distinct servers must stay separate scans:\n${df.queryExecution.executedPlan}")
     assert(df.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq ==
       Seq((10L, "zoe"), (11L, "zoe")))
+  }
+
+  test("a cross-server EXISTS stays local") {
+    setup()
+    ext2
+    val q = "SELECT o.oid, o.ocid FROM ext.fed.orders o WHERE EXISTS " +
+      "(SELECT 1 FROM ext2.fed.cust c WHERE c.cid = o.ocid) ORDER BY o.oid"
+    val df = spark.sql(q)
+    assert(scanCount(df) == 2, df.queryExecution.executedPlan.toString)
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((10L, 1L), (11L, 1L)))
   }
 }

@@ -22,10 +22,12 @@ import java.sql.DriverManager
   * aliases come from a JVM-wide counter, so they are renumbered by
   * first appearance.
   *
-  * One statement differs from the parent on purpose, and the spec says
-  * so where it checks it: q58's `NOT (a = 3)` leg filter now renders
-  * as `(a <> 3)`, Spark's own DSv2 spelling, which a pushed scan filter
-  * always had.
+  * Two shapes differ from the parent on purpose, and the spec says so
+  * where it checks them: q58's `NOT (a = 3)` leg filter now renders as
+  * `(a <> 3)`, Spark's own DSv2 spelling, which a pushed scan filter
+  * always had; and derby_exists, which the parent ran as two plain
+  * scans and a local semi join, is now the one EXISTS statement the
+  * federation rule renders for an SQL subquery.
   */
 class RemoteSqlGoldenSpec extends AnyFunSuite with SparkFixture {
 
@@ -196,9 +198,17 @@ class RemoteSqlGoldenSpec extends AnyFunSuite with SparkFixture {
 
   test("federated_lookup: derby_exists with its decimal threshold") {
     derby
+    // the parent's two scans, with the cust scan's pushed statement now
+    // nested as the EXISTS leg of one remote statement
     check("derby_exists", query(
       "SELECT n.nkey, n.name FROM gd.app.nation n WHERE EXISTS (SELECT 1 FROM gd.app.cust c " +
-        "WHERE c.nkey = n.nkey AND c.bal > 9842.17)"))
+        "WHERE c.nkey = n.nkey AND c.bal > 9842.17)"),
+      _ => Seq(
+        """SELECT "c0", "c1" FROM (SELECT "fj0"."nkey" AS "c0", "fj0"."name" AS "c1" FROM """ +
+          """"app"."nation" "fj0" WHERE EXISTS (SELECT 1 FROM (SELECT "nkey" FROM "app"."cust" """ +
+          """WHERE ("bal" IS NOT NULL) AND ("bal" > 9842.17)) "fj1" WHERE ("fj1"."nkey" = """ +
+          """"fj0"."nkey"))) "fj2""""))
+    assert(RecordingDriver.executed.size == 1, RecordingDriver.executed)
   }
 
   test("connector_write: Dml.update(score + 1 WHERE k < n) on Derby") {

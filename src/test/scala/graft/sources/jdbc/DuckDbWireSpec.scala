@@ -130,6 +130,44 @@ class DuckDbWireSpec extends AnyFunSuite with SparkFixture {
     assert(rows == before)
   }
 
+  test("staged overwrite of a table keyed only by a UNIQUE index restages through the index") {
+    init()
+    spark.sql("DROP TABLE IF EXISTS duck.app.t3u")
+    spark.sql("CREATE TABLE duck.app.t3u (k BIGINT, v STRING) TBLPROPERTIES ('indexes'='k:unique')")
+    import spark.implicits._
+    def rows = spark.table("duck.app.t3u").collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1))).toSeq.sortBy(_.toString)
+    ((1L to 4L).map(k => (Option(k), s"a$k")) :+ ((None: Option[Long]) -> "a-null"))
+      .toDF("k", "v").writeTo("duck.app.t3u").append()
+    RecordingDriver.register
+    spark.conf.set("spark.sql.catalog.duckrec", "graft.sources.jdbc.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.duckrec.url", s"${RecordingDriver.Prefix}duckdb:$dbPath")
+    spark.conf.set("spark.sql.catalog.duckrec.dialect", "duckdb")
+    RecordingDriver.clear()
+    // replaced keys come back, and a NULL key (which a UNIQUE index
+    // admits, and which never conflicts) is replaced, not kept
+    (Seq((Option(2L), "b2"), (Option(3L), "b3"), (Option(5L), "b5")) :+ ((None: Option[Long]) -> "b-null"))
+      .toDF("k", "v").writeTo("duckrec.app.t3u").overwrite(lit(true))
+    assert(rows == Seq((Some(2L), "b2"), (Some(3L), "b3"), (Some(5L), "b5"), (None, "b-null"))
+      .sortBy(_.toString))
+    // one catalog statement names the key
+    assert(RecordingDriver.executed.count(_.contains("duckdb_indexes()")) == 1, RecordingDriver.executed)
+    // by filter: 3 comes back, 2 goes, 1 is new, 5 and the NULL stay
+    Seq((Option(1L), "c1"), (Option(3L), "c3")).toDF("k", "v")
+      .writeTo("duck.app.t3u").overwrite(col("k") < 4)
+    assert(rows == Seq((Some(1L), "c1"), (Some(3L), "c3"), (Some(5L), "b5"), (None, "b-null"))
+      .sortBy(_.toString))
+    val before = rows
+    val e = intercept[Exception] {
+      Seq((Option(5L), "d5")).toDF("k", "v").writeTo("duck.app.t3u").overwrite(col("k") < 4)
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("overwrite row key Map(k -> 5) exists outside the overwrite " +
+      "predicate (violates the UNIQUE index ix_t3u_0 of")), messages.mkString(" | "))
+    assert(rows == before)
+  }
+
   test("DELETE FROM + UPDATE DML push to live DuckDB") {
     init()
     spark.sql("DROP TABLE IF EXISTS duck.app.t4")

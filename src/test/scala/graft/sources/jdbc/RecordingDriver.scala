@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 
 /** A JDBC driver for `jdbc:graft-recording:<url>` that opens `jdbc:<url>`
   * and wraps it: every statement text it executes is recorded with
-  * whether it failed, and a statement matching [[failOn]] throws when
+  * whether it failed, at execute or while fetching its rows, and a
+  * statement matching [[failOn]] throws when
   * executed or gets a ResultSet whose `next()` throws. Specs use it to
   * see every remote statement a plan issues and to inject a failure into
   * one partition of a real Spark job. Options over the URL need
@@ -36,7 +37,8 @@ object RecordingDriver {
   /** Registers the driver once per JVM. */
   lazy val register: Unit = DriverManager.registerDriver(new RecordingDriver)
 
-  /** (statement text, failed) for every statement executed or prepared. */
+  /** (statement text, failed) for every statement executed or prepared,
+    * and once more as failed when its ResultSet's `next()` throws. */
   private val log = new ConcurrentLinkedQueue[(String, Boolean)]()
   def statements: Seq[(String, Boolean)] = log.asScala.toSeq
   /** The text of every statement executed without error, in order; a
@@ -83,23 +85,28 @@ object RecordingDriver {
             Array[Class[_]](classOf[java.sql.PreparedStatement]), h)
         case s: Statement => wrap(s, classOf[Statement])
         case rs: ResultSet =>
-          failOn.filter(f => f.afterRows >= 0 && text.exists(_.contains(f.marker)))
-            .fold(rs)(f => failing(rs, f))
+          text.fold(rs)(t => fetching(rs, t, failOn.filter(f => f.afterRows >= 0 && t.contains(f.marker))))
         case other => other
       }
     }
   }
 
-  private def failing(rs: ResultSet, f: Fault): ResultSet = {
+  /** `rs`, logging `sql` as failed when `next()` throws, and throwing the
+    * fault's error on the `afterRows + 1`-th call. */
+  private def fetching(rs: ResultSet, sql: String, fault: Option[Fault]): ResultSet = {
     var calls = 0
     Proxy.newProxyInstance(getClass.getClassLoader, Array[Class[_]](classOf[ResultSet]),
-      (_: AnyRef, m: Method, args: Array[AnyRef]) => {
-        if (m.getName == "next") {
-          calls += 1
-          if (calls > f.afterRows) throw f.error
-        }
-        try m.invoke(rs, (if (args == null) Array.empty[AnyRef] else args): _*)
-        catch { case e: InvocationTargetException => throw e.getCause }
-      }).asInstanceOf[ResultSet]
+      (_: AnyRef, m: Method, args: Array[AnyRef]) =>
+        try {
+          if (m.getName == "next") {
+            calls += 1
+            fault.filter(calls > _.afterRows).foreach(f => throw new InvocationTargetException(f.error))
+          }
+          m.invoke(rs, (if (args == null) Array.empty[AnyRef] else args): _*)
+        } catch {
+          case e: InvocationTargetException =>
+            if (m.getName == "next") log.add(sql -> true)
+            throw e.getCause
+        }).asInstanceOf[ResultSet]
   }
 }
