@@ -21,11 +21,12 @@ import scala.collection.concurrent.TrieMap
   * [[JdbcOptions.connect]] returns a PROXY whose `close()` releases the
   * physical connection back to the pool (after resetting autocommit), so
   * every reader / writer / catalog call site pools transparently and a
-  * leaked proxy can be released exactly once. Liveness is re-checked on
-  * borrow (`isValid`), and when `poolmax` connections are already
-  * checked out, acquisition blocks up to [[AcquireTimeoutSec]] and then
-  * fails with a retriable `SQLTransientConnectionException` (classified
-  * by [[RetriableErrors]]) instead of deadlocking the task.
+  * leaked proxy can be released exactly once. Liveness is checked once
+  * per borrow (`isValid` when an idle connection is taken), and when
+  * `poolmax` connections are already checked out, acquisition blocks up
+  * to [[AcquireTimeoutSec]] and then fails with a retriable
+  * `SQLTransientConnectionException` (classified by [[RetriableErrors]])
+  * instead of deadlocking the task.
   */
 object ConnectionPool {
 
@@ -99,10 +100,12 @@ object ConnectionPool {
       try { if (!retired && reset(c)) idle.offer(c) else closeQuietly(c) }
       finally permits.release()
 
-    /** Back to autocommit, warnings cleared; false → do not reuse. */
+    /** Back to autocommit, warnings cleared; false → do not reuse. Only
+      * `isClosed` is checked here: the next borrow's `isValid` catches a
+      * connection that dies while idle, and DuckDB's `isValid` is a query. */
     private def reset(c: Connection): Boolean =
       try {
-        if (!isLive(c)) false
+        if (c.isClosed) false
         else {
           if (!c.getAutoCommit) { c.rollback(); c.setAutoCommit(true) }
           c.clearWarnings()

@@ -35,4 +35,11 @@ object Bridge {
   def executionName(
       e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd): Option[String] =
     e.executionName
+
+  /** `spark.driver.maxResultSize` as the scheduler reads it; 0 = no cap. */
+  def maxResultSize(sc: org.apache.spark.SparkContext): Long =
+    sc.conf.get(org.apache.spark.internal.config.MAX_RESULT_SIZE)
+
+  /** Spark's rendering of a byte count, as its error messages print it. */
+  def bytesToString(n: Long): String = org.apache.spark.util.Utils.bytesToString(n)
 }

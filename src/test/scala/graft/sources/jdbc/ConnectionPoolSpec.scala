@@ -44,6 +44,25 @@ class ConnectionPoolSpec extends AnyFunSuite with SparkFixture {
     } finally c2.close()
   }
 
+  test("a connection that dies while idle is dropped at the next borrow") {
+    val url = "jdbc:derby:memory:graft_pool_idle;create=true"
+    val o = JdbcOptions(Map("url" -> url))
+    val c = o.connect()
+    c.close() // idle in the pool
+    val before = ConnectionPool.physicalOpens(o)
+    // shutting the database down closes every connection to it, the idle one too
+    val e = intercept[java.sql.SQLException](
+      java.sql.DriverManager.getConnection("jdbc:derby:memory:graft_pool_idle;shutdown=true"))
+    assert(e.getSQLState == "08006", e)
+    val c2 = o.connect()
+    try {
+      val st = c2.createStatement()
+      try st.execute("VALUES 1") finally st.close()
+    } finally c2.close()
+    assert(ConnectionPool.physicalOpens(o) == before + 1)
+    assert(ConnectionPool.checkedOut(o) == 0)
+  }
+
   test("dynamic credentials: passwordfile re-resolves per connect, secrets redact") {
     val f = java.nio.file.Files.createTempFile("graft_pw", ".txt")
     java.nio.file.Files.writeString(f, "s3cret\n")

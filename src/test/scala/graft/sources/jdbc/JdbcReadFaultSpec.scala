@@ -101,12 +101,19 @@ class JdbcReadFaultSpec extends AnyFunSuite with SparkFixture {
     assert(ConnectionPool.checkedOut(opts) == 0)
 
     // end to end: a value that overflows the declared decimal throws
-    // inside a batch fill; the job fails and no connection stays out
+    // inside a batch fill. The collect of this one-partition read runs on
+    // the driver, where the fill's error fails the collect; through
+    // toRdd the same fill throws inside a Spark task and fails the job.
+    // Either way no connection stays out.
     val bad = spark.read.format("graft.sources.jdbc.GraftJdbcSource")
       .option("url", SparkFixture.derbyUrl).option("dbtable", "\"rfault\".\"t\"")
       .option("customschema", "v DECIMAL(2,1)").load()
     assert(bad.queryExecution.executedPlan.find(_.supportsColumnar).isDefined)
     intercept[ArithmeticException](bad.collect())
+    assert(ConnectionPool.checkedOut(opts) == 0)
+    val failed = intercept[Exception](bad.queryExecution.toRdd.count())
+    assert(Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), failed)
     assert(ConnectionPool.checkedOut(opts) == 0)
   }
 
