@@ -10,15 +10,31 @@ its measured latencies in ms) and its result (a JSON line with
 "metrics"). Files pair up in order: parent, change, parent, change.
 
 For each op kind it prints the median of the per-run medians of
-`kind_ms` on each side and each pair's ratio (change / parent); for each
-end-to-end metric, each pair's ratio. A line ends with how many pairs
-moved the better way (lower, or higher for the per-second metrics).
+`kind_ms` on each side, and for each result metric the median of its
+per-run values. Beside each median stands that side's IQR: the distance
+between the quartiles of its runs (inclusive method, as numpy's default
+percentile). The `gap>IQR` column says whether the two medians differ by
+more than the parent's IQR. Then come each pair's ratio (change /
+parent) and how many pairs moved the better way (lower, or higher where
+BENCHMARK.json says so). A claimed gain holds when the change wins at
+least 9 of 10 pairs and the gap exceeds the parent's IQR in the better
+direction.
 """
 import json
+import os
 import statistics
 import sys
 
-HIGHER_IS_BETTER = {"ops_per_s", "rows_per_s"}
+
+def higher_is_better():
+    """Metric names whose `better` is "higher" in BENCHMARK.json."""
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    return {m["name"] for m in spec["end_to_end"] + spec["per_layer"] if m["better"] == "higher"}
+
+
+HIGHER_IS_BETTER = higher_is_better()
+W = 36
 
 
 def load(path):
@@ -46,11 +62,23 @@ def load(path):
     return kinds, metrics
 
 
+def iqr(values):
+    """Upper minus lower quartile; 0 for fewer than two values."""
+    if len(values) < 2:
+        return 0.0
+    q1, _, q3 = statistics.quantiles(values, n=4, method="inclusive")
+    return q3 - q1
+
+
 def row(name, parent, change, better_higher):
     ratios = [c / p for p, c in zip(parent, change) if p]
     wins = sum(1 for r in ratios if (r > 1 if better_higher else r < 1))
-    return (f"{name:<24} {statistics.median(parent):>12.4g} {statistics.median(change):>12.4g}  "
-            + " ".join(f"{r:.3f}" for r in ratios) + f"  [{wins}/{len(ratios)} better]")
+    pm, cm = statistics.median(parent), statistics.median(change)
+    gain = cm - pm if better_higher else pm - cm
+    gap = "better" if gain > iqr(parent) else "worse" if -gain > iqr(parent) else "no"
+    return (f"{name:<{W}} {pm:>12.4g} {iqr(parent):>10.4g} {cm:>12.4g} {iqr(change):>10.4g}"
+            f" {gap:>7}  " + " ".join(f"{r:.3f}" for r in ratios)
+            + f"  [{wins}/{len(ratios)} better]")
 
 
 def main():
@@ -59,7 +87,8 @@ def main():
         sys.exit(__doc__)
     runs = [load(p) for p in paths]
     pairs = list(zip(runs[0::2], runs[1::2]))
-    header = f"{'':<24} {'parent':>12} {'change':>12}  pair ratios (change / parent)"
+    header = (f"{'':<{W}} {'parent':>12} {'IQR':>10} {'change':>12} {'IQR':>10} {'gap>IQR':>7}"
+              "  pair ratios (change / parent)")
 
     print(f"kind_ms medians (ms), {len(pairs)} pairs")
     print(header)
@@ -70,7 +99,7 @@ def main():
             print(row(k, [b[0] for b in both], [b[1] for b in both], False))
 
     print()
-    print("end-to-end metrics")
+    print("metrics (medians of the per-run values)")
     print(header)
     for m in pairs[0][0][1]:
         both = [(p[1][m], c[1][m]) for p, c in pairs if m in p[1] and m in c[1]]

@@ -529,26 +529,32 @@ object DuckDbDialect extends Dialect {
     }
 
   /** `estimated_size` from `duckdb_tables()`: no scan, and an upper
-    * bound (deleted rows count until a checkpoint). Every table and view
-    * `from` may name adds a row, read as DuckDB may resolve it (`a.t` as
-    * schema or catalog `a`), so a view or an ambiguous name has no sole
-    * count. Listing the views is most of the statement's 4 ms (DuckDB
-    * renders ~120 internal ones; `duckdb_tables()` alone takes 0.5 ms).
+    * bound (deleted rows count until a checkpoint). A qualified name
+    * reads only the schema DuckDB resolves it to: `s.t` is schema `s` of
+    * the current database or, failing that, schema `main` of catalog
+    * `s` (a name that is both is a binder error, and the two rows it
+    * counts read as no count). One schema cannot hold a table and a view
+    * of one name, so a qualified view counts nothing. A bare name can
+    * also reach a view or a temporary table on the search path, so it
+    * adds a row for every such view, and a view or an ambiguous name has
+    * no sole count. Listing the views costs about 3 ms whatever its
+    * WHERE (DuckDB renders ~120 internal ones); `duckdb_tables()` alone
+    * takes 0.3 ms.
     */
   override def baseTableRowsSql(from: String): Option[String] =
     Dialect.nameParts(from).map { parts =>
-      def matches(name: String): String = {
-        // DuckDB matches identifiers case-insensitively, quoted or not
-        def eq(col: String, v: String) = s"lower($col) = ${stringLiteral(v.toLowerCase)}"
-        (parts match {
-          case Seq(t) => Seq(eq(name, t))
-          case Seq(s, t) =>
-            Seq(eq(name, t), s"(${eq("schema_name", s)} OR ${eq("database_name", s)})")
-          case Seq(d, s, t) => Seq(eq(name, t), eq("schema_name", s), eq("database_name", d))
-        }).mkString(" AND ")
+      // DuckDB matches identifiers case-insensitively, quoted or not
+      def eq(col: String, v: String) = s"lower($col) = ${stringLiteral(v.toLowerCase)}"
+      val tables = "SELECT estimated_size FROM duckdb_tables() WHERE "
+      parts match {
+        case Seq(t) =>
+          s"$tables${eq("table_name", t)} UNION ALL SELECT NULL FROM duckdb_views() WHERE ${eq("view_name", t)}"
+        case Seq(s, t) =>
+          s"$tables${eq("table_name", t)} AND ((${eq("schema_name", s)} AND " +
+            s"database_name = current_database()) OR (${eq("database_name", s)} AND schema_name = 'main'))"
+        case Seq(d, s, t) =>
+          s"$tables${eq("table_name", t)} AND ${eq("schema_name", s)} AND ${eq("database_name", d)}"
       }
-      s"SELECT estimated_size FROM duckdb_tables() WHERE ${matches("table_name")} " +
-        s"UNION ALL SELECT NULL FROM duckdb_views() WHERE ${matches("view_name")}"
     }
 
   /** One catalog statement listing the unique keys of table `ns`.`t`

@@ -27,13 +27,19 @@ import java.nio.charset.StandardCharsets.UTF_8
   * string into the catch-all vector (the reference's `project_row`,
   * `schema_projection.rs`). No folded columns at all → the catch-all
   * reads as SQL NULL.
+  *
+  * A DuckDB statement's columns read from the driver's fetched chunk
+  * where [[TypeMapping.fills]] allows ([[DuckDbChunk]]); `chunkFills =
+  * false` keeps every column on its getter, the reference read the
+  * identity specs compare the chunk fills against.
   */
 final class JdbcColumnarReader(
     schema: StructType,
     cursor: JdbcCursor,
     utf8: Set[Int] = Set.empty,
     firstBatchRows: Int = JdbcColumnarReader.BatchRows,
-    catchAll: Option[(String, StructType)] = None) extends PartitionReader[ColumnarBatch] {
+    catchAll: Option[(String, StructType)] = None,
+    chunkFills: Boolean = true) extends PartitionReader[ColumnarBatch] {
 
   // output position of the catch-all, and the columns it folds
   private val foldAt = catchAll.fold(-1)(ca => schema.fieldNames.indexWhere(_.equalsIgnoreCase(ca._1)))
@@ -42,7 +48,9 @@ final class JdbcColumnarReader(
   private val physical =
     if (foldAt < 0) schema else StructType(schema.fields.patch(foldAt, Nil, 1) ++ rest.fields)
 
-  private lazy val fills = TypeMapping.fills(physical, cursor.rs.getMetaData, utf8)
+  private lazy val chunk =
+    if (chunkFills && cursor.options.dialect == DuckDbDialect) DuckDbChunk.of(cursor.rs) else None
+  private lazy val fills = TypeMapping.fills(physical, cursor.rs.getMetaData, utf8, chunk)
   private var vectors: Array[OnHeapColumnVector] = _
   private var folded: OnHeapColumnVector = _
   private var restBatch: ColumnarBatch = _
@@ -104,6 +112,9 @@ final class JdbcColumnarReader(
   }
 
   override def get(): ColumnarBatch = batch
+
+  /** The 1-based statement columns read from a DuckDB chunk (a spec hook). */
+  private[jdbc] def chunkColumns: Seq[Int] = chunk.fold(Seq.empty[Int])(_.positions)
 
   private def release(): Unit =
     if (vectors != null) { vectors.foreach(_.close()); if (folded != null) folded.close() }

@@ -686,7 +686,7 @@ final case class JdbcReaderFactory(options: JdbcOptions, schema: StructType,
   * stream from the remote (reference: Postgres 4000-row chunking,
   * `conn.rs:443`).
   */
-class JdbcCursor(options: JdbcOptions, sql: String) extends Logging {
+class JdbcCursor(val options: JdbcOptions, sql: String) extends Logging {
   // per-resource open flags guard close(): forcing the lazies there
   // would EXECUTE the remote query for readers that never produced a
   // row — e.g. the N−1 tasks a satisfied LIMIT kills before their

@@ -347,9 +347,90 @@ object TypeMapping {
     * Primitive getters test `wasNull`; object getters test the returned
     * reference. Array and struct values go into their child vectors
     * through [[append]], so rows are filled in order.
+    *
+    * Over a DuckDB `chunk`, a column whose value is stored in the form
+    * Spark needs reads it from the fetched vectors instead, with no
+    * driver call ([[chunkFill]]). The fills run in column order for every
+    * row, so the first such column positions the chunk for the row.
     */
   def fills(schema: StructType, md: ResultSetMetaData,
-      utf8: Set[Int] = Set.empty): Array[Fill] =
+      utf8: Set[Int] = Set.empty, chunk: Option[DuckDbChunk] = None): Array[Fill] = {
+    val fromChunk = schema.fields.indices.map(i =>
+      chunk.flatMap(chunkFill(_, i + 1, schema(i).dataType, typeName(md, i + 1), utf8(i))))
+    val lead = fromChunk.indexWhere(_.isDefined)
+    getterFills(schema, md, utf8).zipWithIndex.map {
+      case (_, i) if i == lead =>
+        val c = chunk.get
+        val fill = fromChunk(i).get
+        (rs, p, v, r) => { c.sync(); fill(rs, p, v, r) }
+      case (getter, i) => fromChunk(i).getOrElse(getter)
+    }
+  }
+
+  /** DuckDB's TIMESTAMP micros as the getter path reads them: the
+    * driver's `DuckDBTimestamp.toSqlTimestamp` (floor seconds and
+    * nanos, a UTC `LocalDateTime`, `Timestamp.valueOf` in the JVM's
+    * zone), then Spark's `fromJavaTimestamp`. */
+  private def duckTimestamp(micros: Long): Long =
+    DateTimeUtils.fromJavaTimestamp(java.sql.Timestamp.valueOf(java.time.LocalDateTime.ofEpochSecond(
+      Math.floorDiv(micros, 1000000L), (Math.floorMod(micros, 1000000L) * 1000L).toInt,
+      java.time.ZoneOffset.UTC)))
+
+  /** The chunk fill of column `p` when its Catalyst type and its DuckDB
+    * type name agree exactly, each filling what its getter fill would:
+    * fixed-width numbers and DATE days as stored (the `LocalDate` →
+    * `toEpochDay` path gives the stored day), DECIMAL(p <= 18) as its
+    * stored unscaled value, TIMESTAMP through [[duckTimestamp]], and
+    * BLOB bytes (binary, or a string on the wire) copied from the
+    * value's buffer with no `Blob`. Any other pairing, a `customschema`
+    * type change included, keeps its getter fill.
+    */
+  private def chunkFill(c: DuckDbChunk, p: Int, dt: DataType, name: String,
+      wire: Boolean): Option[Fill] = {
+    // each case is its own Fill class over its registered column, so
+    // every call stays monomorphic and no value is boxed
+    def of(fill: c.Column => Fill): Option[Fill] = Some(fill(c.column(p)))
+    (dt, name) match {
+      case (BooleanType, "BOOLEAN") =>
+        of(x => (_, _, v, r) => if (x.isNull) v.putNull(r) else v.putBoolean(r, x.byte == 1))
+      case (ByteType, "TINYINT") =>
+        of(x => (_, _, v, r) => if (x.isNull) v.putNull(r) else v.putByte(r, x.byte))
+      case (ShortType, "TINYINT") =>
+        of(x => (_, _, v, r) => if (x.isNull) v.putNull(r) else v.putShort(r, x.byte.toShort))
+      case (ShortType, "SMALLINT") =>
+        of(x => (_, _, v, r) => if (x.isNull) v.putNull(r) else v.putShort(r, x.short))
+      case (IntegerType, "INTEGER") | (DateType, "DATE") =>
+        of(x => (_, _, v, r) => if (x.isNull) v.putNull(r) else v.putInt(r, x.int))
+      case (LongType, "BIGINT") =>
+        of(x => (_, _, v, r) => if (x.isNull) v.putNull(r) else v.putLong(r, x.long))
+      case (FloatType, "FLOAT") =>
+        of(x => (_, _, v, r) => if (x.isNull) v.putNull(r) else v.putFloat(r, x.float))
+      case (DoubleType, "DOUBLE") =>
+        of(x => (_, _, v, r) => if (x.isNull) v.putNull(r) else v.putDouble(r, x.double))
+      case (TimestampType, "TIMESTAMP") =>
+        of(x => (_, _, v, r) => if (x.isNull) v.putNull(r) else v.putLong(r, duckTimestamp(x.long)))
+      // DuckDB stores DECIMAL(p <= 4) in 2 bytes, (p <= 9) in 4, (p <= 18) in 8;
+      // Spark's vector holds p <= 9 as an int, p <= 18 as a long
+      case (d: DecimalType, _) if d.precision <= 18 && name == s"DECIMAL(${d.precision},${d.scale})" =>
+        if (d.precision <= 4) of(x => (_, _, v, r) => if (x.isNull) v.putNull(r) else v.putInt(r, x.short))
+        else if (d.precision <= 9) of(x => (_, _, v, r) => if (x.isNull) v.putNull(r) else v.putInt(r, x.int))
+        else of(x => (_, _, v, r) => if (x.isNull) v.putNull(r) else v.putLong(r, x.long))
+      case (BinaryType, "BLOB") | (StringType, "BLOB") if dt == BinaryType || wire =>
+        var buf = new Array[Byte](64)
+        of(x => (_, _, v, r) =>
+          if (x.isNull) v.putNull(r)
+          else {
+            val b = x.blob
+            val n = b.capacity
+            if (buf.length < n) buf = new Array[Byte](math.max(n, buf.length * 2))
+            b.get(0, buf, 0, n)
+            v.putByteArray(r, buf, 0, n)
+          })
+      case _ => None
+    }
+  }
+
+  private def getterFills(schema: StructType, md: ResultSetMetaData, utf8: Set[Int]): Array[Fill] =
     schema.fields.zipWithIndex.map { case (f, i) =>
       def bytes(read: (ResultSet, Int) => Array[Byte]): Fill = (rs, p, v, r) => {
         val b = read(rs, p)

@@ -6,7 +6,8 @@ import org.apache.spark.SparkEnv
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{DynamicPruningExpression, Literal}
-import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, SparkPlan, SubqueryExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.ui.SparkListenerDriverAccumUpdates
 import org.apache.spark.sql.functions._
@@ -22,12 +23,14 @@ import scala.jdk.CollectionConverters._
   * plain scan, a collapsed join and a collapsed `EXISTS`, on Derby and
   * DuckDB, start no Spark job and return the rows the task path returns.
   * A split scan, a runtime-filtered scan and a projection that is
-  * nondeterministic or holds a subquery keep the task path. A failing
+  * nondeterministic or holds a subquery keep the task path; a scalar
+  * subquery over one remote statement reads on the driver inside it,
+  * with AQE on and off. A failing
   * fetch and a result over `spark.driver.maxResultSize` fail the collect
   * and return the connection, a satisfied `take` executes one statement,
   * and the plan's metrics read as on the task path.
   */
-class DriverCollectSpec extends AnyFunSuite with SparkFixture {
+class DriverCollectSpec extends AnyFunSuite with SparkFixture with AdaptiveSparkPlanHelper {
 
   private val jobsStarted = new AtomicInteger
   private val driverUpdates = new ConcurrentLinkedQueue[(Long, Long)]()
@@ -170,6 +173,27 @@ class DriverCollectSpec extends AnyFunSuite with SparkFixture {
     assert(!DriverCollect(filtered).isInstanceOf[DriverCollectExec])
     val (rows, n) = jobs(filtered.executeCollect())
     assert(n >= 1 && rows.length == 60)
+  }
+
+  test("a scalar subquery over one remote statement reads on the driver, AQE on and off") {
+    derby
+    val prev = spark.conf.getOption("spark.sql.adaptive.enabled")
+    try Seq("true", "false").foreach { aqe =>
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      val df = spark.sql("SELECT cid, (SELECT MAX(amount) FROM ext.dcol.orders) AS m FROM ext.dcol.cust")
+      // the outer projection holds the subquery, so it keeps its one job;
+      // the subquery's pushed MAX is read without one
+      val (rows, n) = jobs(df.collect())
+      assert(n == 1, s"AQE $aqe")
+      assert(rows.length == 60 && rows.forall(_.getDouble(1) == 300.0))
+      // `Subquery +- DriverCollect`; with AQE on, the subquery's final
+      // plan is `ResultQueryStage +- DriverCollect`
+      val plan = df.queryExecution.executedPlan
+      val subqueries = collectWithSubqueries(plan) { case s: SubqueryExec => stripAQEPlan(s.child) }
+        .map { case q: QueryStageExec => q.plan; case p => p }
+      assert(subqueries.length == 1 && subqueries.forall(_.isInstanceOf[DriverCollectExec]), plan)
+    } finally prev.fold(spark.conf.unset("spark.sql.adaptive.enabled"))(
+      spark.conf.set("spark.sql.adaptive.enabled", _))
   }
 
   test("a failing fetch on the driver path surfaces its error and frees the pool") {

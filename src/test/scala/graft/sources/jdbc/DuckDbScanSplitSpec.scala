@@ -267,6 +267,22 @@ class DuckDbScanSplitSpec extends AnyFunSuite with SparkFixture {
     assert(failed.isEmpty, failed)
   }
 
+  test("a qualified name is counted from duckdb_tables() alone; a bare name still checks the views") {
+    catalogs()
+    RecordingDriver.clear()
+    assert(scans(spark.table("sa.app.fact")).head.estimateStatistics().numRows().getAsLong == FactRows)
+    val counts = RecordingDriver.statements.map(_._1).filter(_.contains("duckdb_tables()"))
+    assert(counts.length == 1 && !counts.head.contains("duckdb_views()"), counts)
+    exec(direct("b.duckdb"), "CREATE OR REPLACE VIEW dim_mv AS SELECT * FROM app.dim")
+    RecordingDriver.clear()
+    val bare = spark.read.format("graft.sources.jdbc.GraftJdbcSource")
+      .option("url", s"${RecordingDriver.Prefix}duckdb:$dir/b.duckdb").option("dialect", "duckdb")
+      .option("dbtable", "dim_mv").load()
+    assert(scans(bare).head.estimateStatistics().numRows().isEmpty)
+    assert(RecordingDriver.statements.exists(_._1.contains("duckdb_views()")))
+    assert(failed.isEmpty, failed)
+  }
+
   test("the catalog count broadcasts a 1,000-row DuckDB dim joined to a fact in another file") {
     catalogs()
     val join = spark.sql("SELECT d.region, COUNT(*) AS n FROM sa.app.fact f " +

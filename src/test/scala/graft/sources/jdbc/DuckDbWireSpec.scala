@@ -484,6 +484,20 @@ class DuckDbWireSpec extends AnyFunSuite with SparkFixture {
     assert(getBytesCalls == 1)
   }
 
+  test("the pinned driver resolves, and a plain scan fills every column from its chunks") {
+    init()
+    assert(DuckDbChunk.resolved)
+    spark.sql("DROP TABLE IF EXISTS duck.app.chunked")
+    import spark.implicits._
+    val in = (0L until 5000L).map(i => (i, i * 0.5, s"s$i"))
+    in.toDF("k", "d", "s").writeTo("duck.app.chunked").create()
+    val before = DuckDbChunk.columnsFilled.get()
+    val back = spark.read.option("numpartitions", "1").table("duck.app.chunked").collect()
+    // k and d as stored, s as its UTF-8 wire BLOB
+    assert(DuckDbChunk.columnsFilled.get() - before == 3)
+    assert(back.map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).sortBy(_._1).toSeq == in)
+  }
+
   test("Appender-staged writes store every type exactly as prepared binds do") {
     init()
     import org.apache.spark.sql.Row
