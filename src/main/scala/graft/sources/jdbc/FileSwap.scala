@@ -172,27 +172,16 @@ object FileSwap extends Logging {
         }
         // secondary indexes ride over from their stored DDL (reference
         // copies "every other table, view, and index", file_swap.rs
-        // step 2); best-effort like views
-        try {
-          Remote.query(c, "SELECT sql FROM duckdb_indexes() " +
-            "WHERE database_name = 'graft_live'")(_.getString(1)).filter(_ != null).foreach { ddl =>
-            try Remote.execute(c, ddl)
-            catch { case e: java.sql.SQLException =>
-              logWarning(s"file-swap: index did not transfer (${e.getMessage})") }
-          }
-        } catch { case e: java.sql.SQLException =>
-          logWarning(s"file-swap: index enumeration failed (${e.getMessage})") }
-        // views ride over best-effort: their stored SQL references names
-        // as originally written, which resolve identically post-swap
-        try {
-          Remote.query(c, "SELECT sql FROM duckdb_views() " +
-            "WHERE database_name = 'graft_live' AND NOT internal")(_.getString(1)).foreach { v =>
-            try Remote.execute(c, v)
-            catch { case e: java.sql.SQLException =>
-              logWarning(s"file-swap: view did not transfer (${e.getMessage}); dropping it") }
-          }
-        } catch { case e: java.sql.SQLException =>
-          logWarning(s"file-swap: view enumeration failed (${e.getMessage})") }
+        // step 2), then the views, whose stored SQL references names as
+        // originally written, which resolve identically post-swap. Both
+        // best-effort: one that fails to list or to transfer is left out.
+        for ((kind, list) <- Seq(
+            "index" -> "SELECT sql FROM duckdb_indexes() WHERE database_name = 'graft_live'",
+            "view" -> ("SELECT sql FROM duckdb_views() WHERE database_name = 'graft_live' " +
+              "AND NOT internal")))
+          Remote.orWarn(s"file-swap $kind listing", Seq.empty[String])(
+            Remote.query(c, list)(_.getString(1))).filter(_ != null).foreach(ddl =>
+            Remote.orWarn(s"file-swap $kind transfer ($ddl)", ())(Remote.execute(c, ddl)))
       } finally Remote.execute(c, "DETACH \"graft_live\"")
       Remote.execute(c, "CHECKPOINT")
     }
@@ -219,8 +208,7 @@ object FileSwap extends Logging {
       drainOrAbort(liveUrl, stagingUrl, buildingPath, drainTimeoutMs)
       copyOthersAndCheckpoint(stagingOpts, livePath, targetNs, targetTable,
         preserveWhere, targetCols)
-      swapIntoLive(stagingUrl, buildingPath, liveUrl, livePath, liveIdentity,
-        alreadyGated = true, drainTimeoutMs = drainTimeoutMs)
+      swapIntoLive(stagingUrl, buildingPath, liveUrl, livePath, liveIdentity, drainTimeoutMs)
     } finally ConnectionPool.ungate(liveUrl)
   }
 
@@ -246,12 +234,13 @@ object FileSwap extends Logging {
     * rename `.building` → complete generation → atomically over the live
     * path. Throws if the live file changed identity since `liveIdentity`
     * was recorded (out-of-band replacement ⇒ the refresh is stale).
-    * `alreadyGated` = the caller ([[commitSwap]]) installed the pool
-    * gate before the sibling copy and still holds it.
+    * The caller holds the live url's pool gate ([[commitSwap]]): a
+    * checkout between drain and rename would re-instantiate the per-path
+    * instance over the old inode and pin later readers to stale data.
     */
   private[jdbc] def swapIntoLive(stagingUrl: String, buildingPath: String,
       liveUrl: String, livePath: String, liveIdentity: Option[FileIdentity],
-      alreadyGated: Boolean = false, drainTimeoutMs: Long = 15000): Unit = {
+      drainTimeoutMs: Long = 15000): Unit = {
     ConnectionPool.retireAndDrain(stagingUrl)
 
     if (!identityMatches(identityOf(livePath), liveIdentity)) {
@@ -261,33 +250,25 @@ object FileSwap extends Logging {
           "(reference file_swap.rs aborts identically); the live file is untouched")
     }
 
-    // Gate fresh checkouts of the live url for the whole swap window: a
-    // checkout BETWEEN drain and rename would re-instantiate the
-    // per-path instance over the old inode and pin later readers to
-    // stale data. Gated checkouts wait (~the swap, sub-second) and then
-    // observe the new file — the reference's atomic pool repoint.
-    if (!alreadyGated) ConnectionPool.gate(liveUrl)
-    try {
-      drainOrAbort(liveUrl, stagingUrl, buildingPath, drainTimeoutMs)
-      // A WAL at the live path belongs to the RETIRING generation; were it
-      // left behind, the next open of the NEW file would replay foreign
-      // WAL. The drained instance checkpoints it away (divergence (a) in
-      // the scaladoc); a fresh single connection can always checkpoint.
-      if (Files.exists(Paths.get(walOf(livePath)))) {
-        scala.util.Using.resource(JdbcOptions.physicalConnect(liveUrl, Map.empty))(
-          Remote.execute(_, "CHECKPOINT"))
-        ConnectionPool.retireAndDrain(liveUrl)
-        if (deleteIfExists(walOf(livePath)))
-          logWarning(s"file-swap: removed a live WAL that survived the retiring checkpoint")
-      }
+    drainOrAbort(liveUrl, stagingUrl, buildingPath, drainTimeoutMs)
+    // A WAL at the live path belongs to the RETIRING generation; were it
+    // left behind, the next open of the NEW file would replay foreign
+    // WAL. The drained instance checkpoints it away (divergence (a) in
+    // the scaladoc); a fresh single connection can always checkpoint.
+    if (Files.exists(Paths.get(walOf(livePath)))) {
+      scala.util.Using.resource(JdbcOptions.physicalConnect(liveUrl, Map.empty))(
+        Remote.execute(_, "CHECKPOINT"))
+      ConnectionPool.retireAndDrain(liveUrl)
+      if (deleteIfExists(walOf(livePath)))
+        logWarning(s"file-swap: removed a live WAL that survived the retiring checkpoint")
+    }
 
-      val completed = buildingPath.stripSuffix(BuildingSuffix)
-      Files.move(Paths.get(buildingPath), Paths.get(completed),
-        StandardCopyOption.ATOMIC_MOVE)
-      deleteIfExists(walOf(buildingPath))
-      Files.move(Paths.get(completed), Paths.get(livePath),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    } finally if (!alreadyGated) ConnectionPool.ungate(liveUrl)
+    val completed = buildingPath.stripSuffix(BuildingSuffix)
+    Files.move(Paths.get(buildingPath), Paths.get(completed),
+      StandardCopyOption.ATOMIC_MOVE)
+    deleteIfExists(walOf(buildingPath))
+    Files.move(Paths.get(completed), Paths.get(livePath),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     logInfo(s"file-swap: $livePath refreshed from generation " +
       buildingPath.stripSuffix(BuildingSuffix).substring(livePath.length))
   }

@@ -112,12 +112,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   /** A catalog-level `customschema` overlays every table with a
     * matching column name: declare only names that are unambiguous
-    * across the namespace. */
+    * across the namespace. A failed introspection reads as "no such
+    * table" only when the catalog metadata says the table is absent; a
+    * lock timeout or a lost connection surfaces as itself. */
   override def loadTable(ident: Identifier): Table = {
     val o = options.withTable(qualified(ident))
     val schema =
       try SchemaProjection.exposed(o)
-      catch { case _: java.sql.SQLException => throw new NoSuchTableException(ident) }
+      catch { case e: java.sql.SQLException =>
+        if (tableExists(ident)) throw e else throw new NoSuchTableException(ident)
+      }
     GraftJdbcTable(ident.toString, schema, o)
   }
 
@@ -131,8 +135,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // renders values); `ignore`/`warn` drop the column; `error` (the
     // default) refuses the DDL.
     val action = props.get("unsupportedtypeaction")
-      .orElse(options.map.get("unsupportedtypeaction"))
-      .getOrElse("error").toLowerCase
+      .fold(options)(a => JdbcOptions(options.map + ("unsupportedtypeaction" -> a)))
+      .unsupportedTypeAction
     val resolved: Seq[(org.apache.spark.sql.types.StructField, String)] =
       schema.fields.toSeq.flatMap { f =>
         if (dialect.supportsType(f.dataType)) Some(f -> dialect.typeName(f.dataType))
@@ -181,9 +185,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def alterTable(ident: Identifier, changes: TableChange*): Table =
     throw new UnsupportedOperationException("alterTable")
 
+  /** False only when the table does not exist: Spark's `DropTableExec`
+    * discards the result, so a failed DROP must throw to be seen. */
   override def dropTable(ident: Identifier): Boolean =
-    try { options.withConnection(Remote.execute(_, s"DROP TABLE ${qualified(ident)}")); true }
-    catch { case _: java.sql.SQLException => false }
+    tableExists(ident) && {
+      options.withConnection(Remote.execute(_, s"DROP TABLE ${qualified(ident)}"))
+      true
+    }
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
     val sql = dialect.renameTableSql(qualified(oldIdent), newIdent.name)

@@ -37,6 +37,15 @@ final case class JdbcOptions(map: Map[String, String]) extends Serializable {
       throw new IllegalArgumentException(s"$k must be true or false, got '$v'"))
   }
 
+  /** An option that takes one of `values`, case-insensitively, the
+    * first by default; checked when the options are parsed. */
+  private def oneOf(k: String, values: String*): String = {
+    val v = map.get(k).fold(values.head)(_.toLowerCase)
+    if (!values.contains(v))
+      throw new IllegalArgumentException(s"$k must be ${values.mkString(" | ")}, got '$v'")
+    v
+  }
+
   val url: String = req("url")
   val table: String = map.getOrElse("dbtable", map.getOrElse("table", ""))
   val dialect: Dialect =
@@ -166,10 +175,7 @@ final case class JdbcOptions(map: Map[String, String]) extends Serializable {
     * `file_swap.rs`). Validated eagerly on the driver.
     */
   val overwriteMode: String = {
-    val v = map.getOrElse("overwritemode", "staged").toLowerCase
-    if (v != "staged" && v != "fileswap")
-      throw new IllegalArgumentException(
-        s"overwritemode must be 'staged' or 'fileswap', got '$v'")
+    val v = oneOf("overwritemode", "staged", "fileswap")
     if (v == "fileswap" && (dialect != DuckDbDialect || duckdbFile.isEmpty))
       throw new IllegalArgumentException(
         "overwritemode=fileswap needs a file-backed DuckDB url " +
@@ -191,21 +197,18 @@ final case class JdbcOptions(map: Map[String, String]) extends Serializable {
     * receives no row counts from its providers); this is a Spark-first
     * planner integration like the range-partitioned scan.
     */
-  val remoteStats: String = {
-    val v = map.getOrElse("remotestats", "none")
-    if (v != "none" && v != "count")
-      throw new IllegalArgumentException(
-        s"remotestats must be 'none' or 'count', got '$v'")
-    v
-  }
+  val remoteStats: String = oneOf("remotestats", "none", "count")
 
-  /** READ-side UnsupportedTypeAction (reference
-    * `crates/common/src/lib.rs:23-30`): `string` reads a column whose
-    * type Spark cannot hold exactly (e.g. pg numeric wider than 38 —
-    * Decimal256) as its exact text form instead of refusing the scan.
+  /** UnsupportedTypeAction (reference `crates/common/src/lib.rs:23-30`):
+    * `error` (default) | `string` | `warn` | `ignore`, validated eagerly.
+    * On reads, `string` reads a column whose type Spark cannot hold
+    * exactly (e.g. pg numeric wider than 38 — Decimal256) as its exact
+    * text form instead of refusing the scan; catalog CREATE TABLE
+    * applies all four ([[GraftCatalog.createTable]]).
     */
-  val readUnsupportedAsString: Boolean =
-    map.get("unsupportedtypeaction").exists(_.equalsIgnoreCase("string"))
+  val unsupportedTypeAction: String =
+    oneOf("unsupportedtypeaction", "error", "string", "warn", "ignore")
+  val readUnsupportedAsString: Boolean = unsupportedTypeAction == "string"
 
   /** Declared column types overlaying schema introspection (DDL
     * string, e.g. `addr STRUCT<street: STRING, zip: INT>`): the

@@ -37,8 +37,7 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
     with SupportsPushDownLimit
     with SupportsPushDownTopN
     with SupportsPushDownOffset
-    with SupportsPushDownAggregates
-    with Logging {
+    with SupportsPushDownAggregates {
 
   private val unparser = new Unparser(options.dialect)
   private var schema: StructType = tableSchema
@@ -180,6 +179,11 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
     Some((sel, grpCols.map(f => d.quote(f.name)), schema))
   }
 
+  /** Probe outcomes by statement: Spark asks [[supportCompletePushDown]]
+    * and then [[pushAggregation]] about one aggregate, and a probe that
+    * fails is made, and warned about, once. */
+  private val probed = scala.collection.mutable.Map.empty[String, Option[StructType]]
+
   /** General-expression aggregate pushdown: GROUP BY keys and aggregate
     * arguments that are rendered EXPRESSIONS (`YEAR(ts)`, `SUM(a * b)`)
     * rather than plain columns. The result types of such expressions
@@ -190,9 +194,9 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
     * (`JDBCRDD.getQueryOutputSchema`); `V2ScanRelationPushDown` then
     * casts the scan's columns to the plan's expected types positionally.
     * The probe leaves out the pushed WHERE, which cannot change result
-    * types, so one introspection serves every literal set; a remote
-    * failure, or a SUM whose described type [[agrees]] refuses, keeps
-    * the aggregate local.
+    * types, so one introspection serves every literal set. A remote
+    * failure (with a WARN), a described type Spark cannot read, or a SUM
+    * whose described type [[agrees]] refuses keeps the aggregate local.
     */
   private def translateGeneral(agg: Aggregation,
       aggSqls: Seq[String]): Option[(Seq[String], Seq[String], StructType)] = {
@@ -205,17 +209,13 @@ final class JdbcScanBuilder(options: JdbcOptions, tableSchema: StructType)
     val group = grpSqls.map(_.get)
     val groupClause = if (group.isEmpty) "" else group.mkString(" GROUP BY ", ", ", "")
     val probe = d.repairSql(s"SELECT ${sel.mkString(", ")} FROM ${options.fromClause}$groupClause")
-    try {
-      val schema = SchemaProjection.describe(options, probe).schema
-      val aggs = agg.aggregateExpressions.toSeq.zipWithIndex
-      if (aggs.forall { case (f, i) => agrees(f, Some(schema(group.size + i).dataType)) })
-        Some((sel, group, schema))
-      else None
-    } catch {
-      case e: Exception =>
-        logInfo(s"graft-jdbc: expression-aggregate introspection failed, staying local: $e")
-        None
-    }
+    val described = probed.getOrElseUpdate(probe,
+      try Remote.orWarn("expression-aggregate type probe", Option.empty[StructType])(
+        Some(SchemaProjection.describe(options, probe).schema))
+      catch { case _: IllegalArgumentException => None })
+    described.filter(schema => agg.aggregateExpressions.toSeq.zipWithIndex.forall {
+      case (f, i) => agrees(f, Some(schema(group.size + i).dataType))
+    }).map((sel, group, _))
   }
 
   // Complete-only pushdown: with one input partition the remote result
@@ -338,7 +338,7 @@ final case class JdbcScan(
     * cached across plans, so a table that grew is never planned on a
     * stale count. None for anything but a plain base table, for an
     * aggregate or catch-all scan (their rows are not the table's), and
-    * on any remote error.
+    * on a remote error.
     */
   private lazy val tableRows: Option[Long] =
     if (aggSelect.nonEmpty || catchAll.isDefined) None
@@ -386,7 +386,7 @@ final case class JdbcScan(
     * table of long strings does not. Unknown (Spark's conservative
     * default) when an aggregate was pushed (base-row counts would
     * overstate the grouped output), for any scan that is not a counted
-    * base table, or on any remote error.
+    * base table, or on a remote error.
     */
   private lazy val stats: Statistics = {
     def of(rows: Option[Long], size: Option[Long]): Statistics = new Statistics {
@@ -566,14 +566,11 @@ final case class JdbcScan(
 
   /** A column's remote type name, for string columns whose rendering
     * the wire may change: not a ghost pin, not declared by `customschema`.
+    * A failed lookup scans without the string wire.
     */
   private lazy val remoteTypes: Map[String, String] =
-    try SchemaProjection.remote(options).typeNames
-    catch {
-      case e: java.sql.SQLException =>
-        logInfo(s"graft-jdbc: type lookup failed, scanning without the string wire: $e")
-        Map.empty
-    }
+    Remote.orWarn("string-wire type lookup", Map.empty[String, String])(
+      SchemaProjection.remote(options).typeNames)
   private def remoteType(name: String): Option[String] =
     if (ghostPins(name.toLowerCase) ||
       !schema.fields.exists(f => f.name == name && f.dataType == StringType) ||
@@ -587,7 +584,7 @@ final case class JdbcScan(
     JdbcReaderFactory(options, schema, catchAll, limit)
 }
 
-object JdbcScan extends Logging {
+object JdbcScan {
   /** Rows per range of an automatic split: eight columnar batches, so
     * each range amortizes its statement and connection. */
   val RangeRows: Int = 8 * JdbcColumnarReader.BatchRows
@@ -622,11 +619,9 @@ object JdbcScan extends Logging {
     * empty on a remote error, so a failed lookup plans the scan as if
     * nothing were known. */
   private def remoteRows(o: JdbcOptions, sql: String): Seq[Seq[Option[String]]] =
-    try o.withConnection(Remote.query(_, sql)(rs =>
-      (1 to rs.getMetaData.getColumnCount).map(i => Option(rs.getString(i)))))
-    catch { case scala.util.control.NonFatal(e) =>
-      logWarning(s"graft-jdbc: size lookup failed, planning without it: $e"); Nil
-    }
+    Remote.orWarn(s"size lookup ($sql)", Seq.empty[Seq[Option[String]]])(
+      o.withConnection(Remote.query(_, sql)(rs =>
+        (1 to rs.getMetaData.getColumnCount).map(i => Option(rs.getString(i))))))
 
   /** Driver-side remote COUNT(*) cache: every action plans a fresh scan,
     * so without this each action over the same (connection, FROM, WHERE)

@@ -3,7 +3,7 @@ package graft.sources.jdbc
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expression, Expressions, SortOrder}
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{ArrayType, StructType}
@@ -34,9 +34,9 @@ import java.sql.Connection
   * `constraints.rs:28-95`). The writers only bind, flush and commit.
   * A keyed upsert REQUIRES a hash-clustered distribution on its keys,
   * so one key lands in exactly one partition transaction, and Derby's
-  * writer checks key uniqueness per chunk before executing it. DuckDB's
-  * staged upserts need no shuffle: the move checks uniqueness across
-  * the whole stage. Every stage is a plain append, so an overwrite
+  * writer, which sees its rows sorted by key, rejects a repeated key.
+  * DuckDB's staged upserts need no shuffle: the move checks uniqueness
+  * across the whole stage. Every stage is a plain append, so an overwrite
   * ignores the upsert options.
   *
   * Scale: rows bind into JDBC `PreparedStatement` batches of
@@ -93,7 +93,7 @@ final class JdbcWrite(options: JdbcOptions, schema: StructType,
 
   override def requiredDistribution(): Distribution = batch.distribution
   override def requiredNumPartitions(): Int = batch.numPartitions
-  override def requiredOrdering(): Array[SortOrder] = Array.empty
+  override def requiredOrdering(): Array[SortOrder] = batch.ordering
   override def toBatch: BatchWrite = batch
 }
 
@@ -153,6 +153,14 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
   // row-lock servers keep key-clustered parallel writers.
   private[jdbc] def numPartitions: Int =
     if (upsert.isDefined && d.singleWriterUpserts) 1 else 0 // 0 = no requirement
+
+  /** Derby's update-else-insert sees its rows sorted by the conflict
+    * target, so a duplicate key arrives next to its twin and
+    * [[DerbyUpsertWriter]] rejects it whatever `batchsize` is. */
+  private[jdbc] def ordering: Array[SortOrder] =
+    if (upsert.isEmpty || d != DerbyDialect) Array.empty
+    else conflictKeys.map(k =>
+      Expressions.sort(Expressions.column(k), SortDirection.ASCENDING)).toArray
 
   /** Schema and name of the target as written (`"ns"."t"`, `ns.t`; a
     * bare `t` lies in the connection's current schema): the one parse
@@ -216,35 +224,35 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
         try java.lang.Long.parseLong(s.stripPrefix(t + "__stage_").takeWhile(_ != '_'), 16)
         catch { case _: NumberFormatException => 0L }
       if (now - bornAt > JdbcBatchWrite.StaleStageAgeMs)
-        try Remote.execute(c, s"DROP TABLE ${d.quoted(Seq(ns, s))}")
-        catch { case _: java.sql.SQLException => }
+        Remote.orWarn(s"stale stage DROP of $s", ())(
+          Remote.execute(c, s"DROP TABLE ${d.quoted(Seq(ns, s))}"))
     }
   }
 
   /** The target's PRIMARY KEY columns in key order, from JDBC metadata:
     * fileswap re-creates them on the refreshed table (the reference's
     * TableManager rebuilds constraints), and they are Derby's
-    * do_nothing_all conflict target. Best-effort: engines without the
-    * metadata call report none.
+    * do_nothing_all conflict target. A driver without the metadata call
+    * reports none; any other remote error fails the write, which must
+    * not rebuild a table without its key.
     */
   private def primaryKey: Seq[String] = target.fold(Seq.empty[String]) { case (ns, t) =>
     try options.withConnection(c => Remote.rows(c.getMetaData.getPrimaryKeys(null, ns, t))(rs =>
       (rs.getShort("KEY_SEQ"), rs.getString("COLUMN_NAME"))).sortBy(_._1).map(_._2))
-    catch { case _: java.sql.SQLException => Nil }
+    catch { case _: java.sql.SQLFeatureNotSupportedException => Nil }
   }
 
   /** The key a DuckDB staged overwrite restages rows through
     * ([[moveStaged]]), as (description, columns): the table's PRIMARY
     * KEY, or else its first UNIQUE index over plain columns, which
     * DuckDB 1.0 also takes as an ON CONFLICT target (probed). One
-    * catalog statement; None where the table has no such key, and on a
-    * remote error.
+    * catalog statement, made before any task starts; None where the
+    * table has no such key. A remote error fails the write.
     */
   private lazy val restageKey: Option[(String, Seq[String])] = target.flatMap { case (ns, t) =>
-    try options.withConnection(Remote.query(_, DuckDbDialect.uniqueKeysSql(ns, t))(rs =>
+    options.withConnection(Remote.query(_, DuckDbDialect.uniqueKeysSql(ns, t))(rs =>
       (rs.getString(1), rs.getString(2))))
       .collectFirst(Function.unlift { case (what, text) => DuckDbDialect.keyColumns(text).map(what -> _) })
-    catch { case _: java.sql.SQLException => None }
   }
 
   /** The conflict target as written column names, checked before any
@@ -432,18 +440,17 @@ final case class JdbcBatchWrite(options: JdbcOptions, schema: StructType,
     // opt-in, best-effort — a stats failure never fails a committed write.
     if (options.analyzeAfterWrite)
       target.flatMap { case (ns, t) => d.analyzeStatement(ns, t) }.foreach { sql =>
-        try options.withConnection(Remote.execute(_, sql))
-        catch { case e: java.sql.SQLException =>
-          logWarning(s"post-write ANALYZE failed for ${options.table}: ${e.getMessage}")
-        }
+        Remote.orWarn(s"post-write ANALYZE of ${options.table}", ())(
+          options.withConnection(Remote.execute(_, sql)))
       }
   }
 
+  /** Drops the stage; a remote failure warns and never replaces the
+    * job's own error. */
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     if (fileswap) FileSwap.discardStaging(stagingUrl, buildingPath)
-    else if (staged) options.withConnection { c =>
-      try Remote.execute(c, s"DROP TABLE $stageTable") catch { case _: java.sql.SQLException => }
-    }
+    else if (staged) Remote.orWarn(s"stage DROP of $stageTable on abort", ())(
+      options.withConnection(Remote.execute(_, s"DROP TABLE $stageTable")))
 }
 
 object JdbcBatchWrite {
@@ -531,10 +538,11 @@ final class JdbcRowWriter(options: JdbcOptions, schema: StructType, conn: Connec
 
 /** Derby has no ON CONFLICT / MERGE-over-VALUES: batched UPDATE by key,
   * then batched INSERT for the rows no UPDATE matched — two round trips
-  * per `batchSize` chunk instead of two per ROW. Chunk key uniqueness is
-  * VALIDATED (reference `constraints.rs:28-95`), not assumed; the
-  * cross-partition half of that precondition is enforced by
-  * [[JdbcBatchWrite.distribution]].
+  * per `batchSize` chunk instead of two per ROW. Key uniqueness is
+  * VALIDATED (reference `constraints.rs:28-95`), not assumed: the rows
+  * arrive sorted by key ([[JdbcBatchWrite.ordering]]), in one partition
+  * ([[JdbcBatchWrite.distribution]]), so each row's key is compared with
+  * the previous row's.
   *
   * In `upsertmode=do_nothing` the first pass is a value-preserving
   * touch-UPDATE ([[DerbyDialect.touchStatement]]) used purely as a
@@ -554,6 +562,7 @@ final class DerbyUpsertWriter(options: JdbcOptions, schema: StructType, conn: Co
   // current chunk, buffered as row copies (batchSize-bounded memory)
   private val chunk = new scala.collection.mutable.ArrayBuffer[InternalRow]()
   private var total = 0L
+  private var lastKey: Option[Seq[Any]] = None
 
   private def bind(ps: java.sql.PreparedStatement, row: InternalRow, order: Seq[Int]): Unit =
     order.zipWithIndex.foreach { case (f, p) =>
@@ -562,23 +571,22 @@ final class DerbyUpsertWriter(options: JdbcOptions, schema: StructType, conn: Co
     }
 
   override def write(row: InternalRow): Unit = {
-    chunk += row.copy()
+    val r = row.copy()
+    // constraint validation: a repeated key would make the
+    // update-else-insert outcome order-dependent (NULL keys compare equal)
+    val k = plan.keys.map(i => if (r.isNullAt(i)) null else r.get(i, schema(i).dataType))
+    if (lastKey.contains(k))
+      throw new IllegalStateException(
+        s"duplicate upsert key ${plan.keys.map(schema(_).name).zip(k).toMap} within one " +
+          "write (reference enforces pre-write uniqueness; fix the input or drop duplicates)")
+    lastKey = Some(k)
+    chunk += r
     total += 1
     if (chunk.length >= options.batchSize) flushChunk()
   }
 
   private def flushChunk(): Unit = {
     if (chunk.isEmpty) return
-    // constraint validation: duplicate keys inside one chunk would make
-    // the update-else-insert outcome order-dependent
-    val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
-    chunk.foreach { row =>
-      val k = plan.keys.map(i => if (row.isNullAt(i)) null else row.get(i, schema(i).dataType))
-      if (!seen.add(k))
-        throw new IllegalStateException(
-          s"duplicate upsert key ${plan.keys.map(schema(_).name).zip(k).toMap} within one " +
-            "write batch (reference enforces pre-write uniqueness; fix the input or drop duplicates)")
-    }
     chunk.foreach { row => bind(updatePs, row, plan.updateBind); updatePs.addBatch() }
     val updated = updatePs.executeBatch()
     chunk.zip(updated).foreach { case (row, n) =>

@@ -49,23 +49,26 @@ object SchemaProjection {
 
   private val described = TrieMap.empty[(String, String), Described]
 
+  /** Test hook: statements cached. */
+  private[jdbc] def cachedCount: Int = described.size
+
   /** Prepared-statement metadata of `sql` (the reference's `get_schema`,
     * `dbconnection.rs:216-239`), cached per compute context + statement;
-    * `refresh` prepares it again.
+    * `refresh` prepares it again. A statement over a federated derived
+    * table (`derivedalias`) is never cached: its FROM carries the
+    * query's fresh correlation names and literals, so no later query
+    * asks for it again.
     */
   def describe(o: JdbcOptions, sql: String, refresh: Boolean = false): Described = {
-    def load(): Described = o.withConnection { c =>
-      val ps = c.prepareStatement(sql)
-      try {
-        val md = ps.getMetaData
-        Described(
-          TypeMapping.schemaOf(md, o.dialect, unsupportedAsString = o.readUnsupportedAsString),
-          (1 to md.getColumnCount).map(i =>
-            md.getColumnLabel(i).toLowerCase -> md.getColumnTypeName(i)).toMap)
-      } finally ps.close()
-    }
+    def load(): Described = o.withConnection(Remote.describe(_, sql) { md =>
+      Described(
+        TypeMapping.schemaOf(md, o.dialect, unsupportedAsString = o.readUnsupportedAsString),
+        (1 to md.getColumnCount).map(i =>
+          md.getColumnLabel(i).toLowerCase -> md.getColumnTypeName(i)).toMap)
+    })
     val key = (o.computeContext, sql)
-    if (!refresh) described.getOrElseUpdate(key, load())
+    if (o.map.contains("derivedalias")) load()
+    else if (!refresh) described.getOrElseUpdate(key, load())
     else { val d = load(); described.put(key, d); d }
   }
 

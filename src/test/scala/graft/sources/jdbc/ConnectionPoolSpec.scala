@@ -197,6 +197,7 @@ class ConnectionPoolSpec extends AnyFunSuite with SparkFixture {
     for ((bad, named) <- Seq(
         Map("analyzeafterwrite" -> "yes") -> "analyzeafterwrite",
         Map("preflight" -> "1") -> "preflight",
+        Map("unsupportedtypeaction" -> "strng") -> "unsupportedtypeaction",
         Map("numpartitions" -> "0") -> "numpartitions",
         (range - "partitioncolumn") -> "partitioncolumn",
         (range - "lowerbound" - "upperbound") -> "lowerbound, upperbound",

@@ -181,10 +181,12 @@ class FileSwapSpec extends AnyFunSuite with SparkFixture {
     sqlOn(building, "CREATE TABLE t AS SELECT 3 AS k", "CHECKPOINT")
     ConnectionPool.retireAndDrain(s"jdbc:duckdb:$building")
 
-    val e = intercept[IllegalStateException] {
+    // the caller holds the live pool's gate, as commitSwap does
+    ConnectionPool.gate(s"jdbc:duckdb:$path")
+    val e = try intercept[IllegalStateException] {
       FileSwap.swapIntoLive(s"jdbc:duckdb:$building", building,
         s"jdbc:duckdb:$path", path, stale)
-    }
+    } finally ConnectionPool.ungate(s"jdbc:duckdb:$path")
     assert(e.getMessage.contains("out-of-band"))
     assert(!Files.exists(Paths.get(building)), "staging not cleaned up")
     val c = DriverManager.getConnection(s"jdbc:duckdb:$path")

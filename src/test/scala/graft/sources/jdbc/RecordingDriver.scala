@@ -1,15 +1,16 @@
 package graft.sources.jdbc
 
 import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, Proxy}
-import java.sql.{Connection, DriverManager, ResultSet, Statement}
+import java.sql.{Connection, DatabaseMetaData, DriverManager, ResultSet, Statement}
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 /** A JDBC driver for `jdbc:graft-recording:<url>` that opens `jdbc:<url>`
-  * and wraps it: every statement text it executes is recorded with
-  * whether it failed, at execute or while fetching its rows, and a
-  * statement matching [[failOn]] throws when
-  * executed or gets a ResultSet whose `next()` throws. Specs use it to
+  * and wraps it: every statement text it executes or prepares, and every
+  * `getPrimaryKeys(catalog, schema, table)` metadata call, is recorded
+  * with whether it failed, at the call or while fetching its rows, and
+  * one matching [[failOn]] throws when called or gets a ResultSet whose
+  * `next()` throws. Specs use it to
   * see every remote statement a plan issues and to inject a failure into
   * one partition of a real Spark job. Options over the URL need
   * `dialect=<name>`, since the prefix names no engine.
@@ -47,10 +48,11 @@ object RecordingDriver {
   def executed: Seq[String] = ran.asScala.toSeq
   def clear(): Unit = { log.clear(); ran.clear() }
 
-  /** A statement whose text contains `marker` throws `error` from
-    * `execute*` when `afterRows` is negative, and otherwise returns a
-    * ResultSet whose `next()` throws it on its `afterRows + 1`-th call. */
-  final case class Fault(marker: String, afterRows: Int, error: java.sql.SQLException)
+  /** A statement or metadata call whose text contains `marker` throws
+    * `error` from `execute*`, `prepareStatement` or `getPrimaryKeys` when
+    * `afterRows` is negative, and otherwise returns a ResultSet whose
+    * `next()` throws it on its `afterRows + 1`-th call. */
+  final case class Fault(marker: String, afterRows: Int, error: Exception)
   @volatile var failOn: Option[Fault] = None
 
   private def wrap[A](target: AnyRef, iface: Class[A]): A =
@@ -62,13 +64,15 @@ object RecordingDriver {
 
     override def invoke(proxy: AnyRef, m: Method, args: Array[AnyRef]): AnyRef = {
       val a = if (args == null) Array.empty[AnyRef] else args
-      val text = a.headOption.collect { case s: String => s }
-        .filter(_ => m.getName.startsWith("execute") || m.getName == "prepareStatement")
-        .orElse(Option(sql).filter(_ => m.getName.startsWith("execute")))
+      val text =
+        if (m.getName == "getPrimaryKeys") Some(a.mkString("getPrimaryKeys(", ", ", ")"))
+        else a.headOption.collect { case s: String => s }
+          .filter(_ => m.getName.startsWith("execute") || m.getName == "prepareStatement")
+          .orElse(Option(sql).filter(_ => m.getName.startsWith("execute")))
       val out =
         try {
-          failOn.filter(f => f.afterRows < 0 && m.getName.startsWith("execute") &&
-            text.exists(_.contains(f.marker))).foreach(f => throw new InvocationTargetException(f.error))
+          failOn.filter(f => f.afterRows < 0 && text.exists(_.contains(f.marker)))
+            .foreach(f => throw new InvocationTargetException(f.error))
           m.invoke(target, a: _*)
         }
         catch {
@@ -84,6 +88,7 @@ object RecordingDriver {
           Proxy.newProxyInstance(getClass.getClassLoader,
             Array[Class[_]](classOf[java.sql.PreparedStatement]), h)
         case s: Statement => wrap(s, classOf[Statement])
+        case md: DatabaseMetaData => wrap(md, classOf[DatabaseMetaData])
         case rs: ResultSet =>
           text.fold(rs)(t => fetching(rs, t, failOn.filter(f => f.afterRows >= 0 && t.contains(f.marker))))
         case other => other

@@ -65,4 +65,26 @@ class RemoteMetadataSpec extends AnyFunSuite with SparkFixture {
     // … and the probe, without the WHERE, was prepared once
     assert(grouped.count(!_.contains("WHERE")) == 1, grouped)
   }
+
+  test("a federated expression aggregate's type probe is not cached per literal set (Derby)") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS ext.meta")
+    Seq("fact", "dim").foreach(t => spark.sql(s"DROP TABLE IF EXISTS ext.meta.$t"))
+    import spark.implicits._
+    (1L to 40L).map(i => (i, i % 20, i * 10L)).toDF("fid", "fdim", "v").writeTo("ext.meta.fact").create()
+    (0L until 20L).map(i => (i, s"d$i")).toDF("dim_id", "name").writeTo("ext.meta.dim").create()
+    def sums(lo: Long) = spark.table("ext.meta.fact").filter(col("v") > lo)
+      .join(spark.table("ext.meta.dim"), col("fdim") === col("dim_id"))
+      .groupBy((col("dim_id") % 10).as("b")).agg(sum("v").as("s"))
+    val first = sums(0L)
+    val plan = first.queryExecution.executedPlan.toString
+    assert("GraftJdbcScan".r.findAllIn(plan).length == 1 && plan.contains("GROUP BY"), plan)
+    assert(first.collect().map(_.getLong(1)).sum == (1L to 40L).map(_ * 10L).sum)
+    // each literal set is a new derived FROM with fresh correlation
+    // names: its probe runs, and nothing is left behind in the cache
+    val cached = SchemaProjection.cachedCount
+    (1 to 20).foreach { i =>
+      assert(sums(i * 10L).collect().map(_.getLong(1)).sum == (i + 1L to 40L).map(_ * 10L).sum)
+    }
+    assert(SchemaProjection.cachedCount == cached)
+  }
 }

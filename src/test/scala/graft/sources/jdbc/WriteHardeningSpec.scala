@@ -79,6 +79,16 @@ class WriteHardeningSpec extends AnyFunSuite with SparkFixture {
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("duplicate upsert key")), messages(e).mkString(" | "))
+    // Derby sorts its rows by key, so a duplicate 3 rows apart is caught
+    // whatever the batch size, before anything commits
+    val apart = Seq((7L, "x"), (3L, "p"), (4L, "q"), (7L, "y")).toDF("k", "v").coalesce(1)
+    val e1 = intercept[Exception] {
+      apart.writeTo("ext.wh.t3").option("upsertkeys", "k").option("batchsize", "2").append()
+    }
+    assert(messages(e1).exists(_.contains("duplicate upsert key")), messages(e1).mkString(" | "))
+    assert(spark.table("ext.wh.t3").collect().map(r => (r.getLong(0), r.getString(1)))
+      .toSeq == Seq((1L, "a")))
+    assert(ConnectionPool.checkedOut(JdbcOptions(Map("url" -> SparkFixture.derbyUrl))) == 0)
 
     // DuckDB checks the keys across the whole stage at the move, so
     // duplicates in DIFFERENT partitions are caught too, and nothing lands
